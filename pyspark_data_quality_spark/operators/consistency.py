@@ -8,13 +8,17 @@ set (NULL FK fails by default — no three-valued NOT IN surprises;
 ``ignore_nulls=True`` treats NULL FKs as out of scope, i.e. passing, with
 completeness left to a completeness rule).
 
-Scale design: the reference key set is deduplicated and (by default)
-broadcast, so the membership test is a broadcast LEFT join — zero shuffle
-of the fact table, stacked into the same stage as the scan and the fused
-aggregate. For reference tables too big to broadcast, pass
-``broadcast=False`` to let AQE pick a shuffle join. The join adds ONE
-boolean marker column consumed by the standard predicate machinery, so FK
-rules compose with every other rule in the single fused pass.
+Scale design: the membership test is an IN-subquery probe against the
+(by default broadcast) reference key set, which Spark plans as a
+broadcast hash EXISTENCE join — zero shuffle of the fact table, stacked
+into the same stage as the scan and the fused aggregate. An existence
+join emits each fact row once however often its key repeats in the
+reference, so the reference is neither deduplicated nor shuffled. For
+reference tables too big to broadcast, pass ``broadcast=False`` to let
+the planner pick (a shuffle join when the reference exceeds
+``spark.sql.autoBroadcastJoinThreshold``). The probe adds ONE boolean
+marker column consumed by the standard predicate machinery, so FK rules
+compose with every other rule in the single fused pass.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ from pyspark.sql.window import Window
 from ..core.enums import Dimension
 from ..core.errors import RuleConfigurationError
 from ..core.models import MetricResult
-from ..plans.compile import and_fold, or_fold, ratio_agg, require_columns
+from ..plans.compile import or_fold, ratio_agg, require_columns
 from .base import Rule, RunContext
 
 
@@ -61,31 +65,25 @@ class ReferentialIntegrityRule(Rule):
         self.broadcast = broadcast
         self.name = kw.get("name") or f"fk({','.join(self.columns)})"
         self._marker = f"_dq_{self.rule_id}_ok"
-        self._key_alias = [f"_dq_{self.rule_id}_k{i}" for i in range(len(self.columns))]
 
     # -- spec surface ------------------------------------------------------
 
     def prepare(self, df: DataFrame) -> DataFrame:
-        """LEFT-join the deduplicated reference key set, leaving one
-        boolean marker column. Dedup on the keys makes the join
-        multiplicity-safe (a non-unique reference key must not fan out
-        fact rows)."""
-        keys = self.ref_df.select(
-            *[
-                F.col(rc).alias(alias)
-                for rc, alias in zip(self.ref_columns, self._key_alias)
-            ]
-        ).dropDuplicates()
-        keys = keys.withColumn(self._marker, F.lit(True))
+        """Add one boolean marker column: an IN-subquery probe of the FK
+        tuple against the reference key set (a struct probe for
+        composite keys). Spark plans it as an existence join, which
+        marks each fact row once whatever the reference's key
+        multiplicity, so no dedup shuffle is needed. ``row_predicate``
+        counts a NULL marker as a failure."""
+        ref = self.ref_df.select(*self.ref_columns)
         if self.broadcast:
-            keys = F.broadcast(keys)
-        cond = and_fold(
-            [
-                F.col(fk) == F.col(alias)
-                for fk, alias in zip(self.columns, self._key_alias)
-            ]
+            ref = F.broadcast(ref)
+        probe = (
+            F.col(self.columns[0])
+            if len(self.columns) == 1
+            else F.struct(*self.columns)
         )
-        return df.join(keys, cond, "left").drop(*self._key_alias)
+        return df.withColumn(self._marker, probe.isin(ref))
 
     def row_predicate(self, df: DataFrame) -> Column:
         ok = F.coalesce(F.col(self._marker), F.lit(False))

@@ -472,7 +472,8 @@ def minhash_signatures(
     calls via ``signatures=`` when only the BANDING differs between
     them (bands re-slice the same signature): the expensive
     shingle+hash kernel then runs once instead of once per
-    configuration — the r16 recall-harness sharing knob. Typically
+    configuration — the r16 recall-harness sharing knob. The ``_sig``
+    column's metadata records ``num_hashes`` for that check. Typically
     ``localCheckpoint(eager=False)``-ed by the caller so concurrent
     consumers read one materialization."""
     from ..functions.vectors import (
@@ -494,7 +495,9 @@ def minhash_signatures(
         if hash_family == "md5"
         else minhash_rehash_np(num_hashes, seed)
     )
-    return hash_base.withColumn("_sig", sig_udf(F.col("_h")))
+    # the width rides in the schema: checkable without running a job
+    sig = sig_udf(F.col("_h")).alias("_sig", metadata={"num_hashes": num_hashes})
+    return hash_base.withColumn("_sig", sig)
 
 
 def minhash_near_dup_pairs(
@@ -559,6 +562,8 @@ def minhash_near_dup_pairs(
     corpus (the dq_neardup_recall harness) pay the shingle+signature
     kernels once instead of once per configuration. Results are
     bit-identical: bands are literal slices of the injected signature.
+    A frame whose ``_sig`` width (stamped in its column metadata by
+    ``minhash_signatures``) is not ``num_hashes`` raises ValueError.
     """
     if hash_family not in ("blake2b", "md5"):
         raise ValueError(
@@ -584,7 +589,8 @@ def minhash_near_dup_pairs(
         # sig-injection (r16): a prebuilt minhash_signatures frame —
         # only the banding below differs between sharing callers, so
         # the kernel cost is paid once. The frame must carry the full
-        # num_hashes-wide signature this call bands over.
+        # num_hashes-wide signature this call bands over, as stamped in
+        # its _sig metadata by minhash_signatures.
         if impl != "np":
             raise ValueError(
                 "minhash_near_dup_pairs: signatures= requires impl='np' "
@@ -596,6 +602,16 @@ def minhash_near_dup_pairs(
                 f"minhash_near_dup_pairs: signatures frame is missing "
                 f"columns {sorted(missing)} — build it with "
                 "minhash_signatures"
+            )
+        width = signatures.schema["_sig"].metadata.get("num_hashes")
+        if width != num_hashes:
+            # bands sliced past a narrower signature come out short or
+            # empty: recall would drop with no error
+            raise ValueError(
+                f"minhash_near_dup_pairs: signatures frame carries "
+                f"{'unknown-width' if width is None else f'{width}-hash'} "
+                f"signatures, the call bands {num_hashes} hashes — build it "
+                "with minhash_signatures(num_hashes=...) to match"
             )
         base = signatures
         verify_col = "_h"

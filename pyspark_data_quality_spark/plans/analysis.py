@@ -1,4 +1,9 @@
-"""Fused analysis runner: ALL rules' metrics in ONE Spark job.
+"""Fused analysis runner: ALL rules' metrics in ONE Spark action.
+
+One action is not one job: under AQE the action first runs each
+broadcast build (one per FK rule) and the aggregate's shuffle map stage
+as jobs of their own, then the final stage — 3 jobs for the seven rules
+of perfbench's ``quarantine_batches`` batch, one of them an FK rule.
 
 The reference ran one-or-more actions per check (one ``.first()`` per
 completeness check ``completeness_col_ratio_check.py:110``, four
@@ -35,7 +40,7 @@ from ..core.models import MetricResult
 
 
 class AnalysisRunner:
-    """Compile rules -> one fused aggregate job -> MetricResult rows."""
+    """Compile rules -> one fused aggregate action -> MetricResult rows."""
 
     @staticmethod
     def compile_aggregates(df: DataFrame, rules: list["Rule"]) -> list:
@@ -51,7 +56,7 @@ class AnalysisRunner:
             rule.validate(df)
         # Rules with join-shaped checks (FK membership) transform the frame
         # first; the fused agg then runs over the prepared plan — broadcast
-        # joins stack into the same stage, so this stays ONE job.
+        # joins stack into the same stage, so this stays ONE action.
         for rule in rules:
             df = rule.prepare(df)
         exprs = AnalysisRunner.compile_aggregates(df, rules)

@@ -40,6 +40,9 @@ site:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame
 
 
@@ -67,3 +70,24 @@ def pin_partitions(df: DataFrame, persist: bool) -> DataFrame:
     if persist:
         return maybe_persist(df, True)
     return df.localCheckpoint(eager=False)
+
+
+@contextmanager
+def checkpointed(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` materialized once (eager ``localCheckpoint``) for the
+    duration of the ``with`` block, its blocks dropped on exit rather
+    than whenever the ContextCleaner collects the frame — a session
+    that loops this over many batches holds one batch's blocks at a
+    time. The checkpoint compiles through AQE, so its partitions keep
+    AQE's coalescing, where a persisted plan can keep the full
+    shuffle-partition count. Lineage is cut, as for
+    :func:`pin_partitions`: a lost executor fails the consumer instead
+    of recomputing, and the frame must not be read after the block."""
+    ck = df.localCheckpoint(eager=True)
+    try:
+        yield ck
+    finally:
+        # SparkContext.unpersistRDD, not RDD.unpersist: the latter logs
+        # a lineage warning for every locally checkpointed RDD
+        rdd_id = ck._jdf.queryExecution().logical().rdd().id()
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, True)

@@ -21,9 +21,10 @@ with upstream joins/aggregations paid those stages twice. The guard
 therefore estimates the partition count from the NON-ADAPTIVE physical
 plan without building any RDD beyond leaf scans (whose RDDs are lazy):
 
-- a stream-side shuffle exchange => the guard stands down entirely
-  (the exchange's width is the session conf / AQE's business, and a
-  round-robin respread of already-shuffled data is pure extra cost);
+- a stream-side shuffle exchange or cartesian product => the guard
+  stands down entirely (the exchange's width is the session conf /
+  AQE's business, and a round-robin respread of already-shuffled data
+  is pure extra cost);
 - broadcast build sides contribute nothing (they do not determine the
   frame's partitioning) and are never descended into (building their
   RDDs would submit the broadcast jobs eagerly);
@@ -54,7 +55,9 @@ def _stream_partition_estimate(plan) -> int | None:
         return _stream_partition_estimate(plan.child())
     if name.startswith("AdaptiveSparkPlan"):
         return _stream_partition_estimate(plan.initialPlan())
-    if "ShuffleExchange" in name:
+    if "ShuffleExchange" in name or name == "CartesianProductExec":
+        # a cartesian product's partitions multiply rather than add;
+        # like an exchange, its width is not the guard's to second-guess
         return None
     if name == "CoalesceExec":
         # coalesce pins its own width — that IS the frame's
@@ -100,6 +103,7 @@ def ensure_min_partitions(
         # sizing is best-effort; an unrecognized plan shape must never
         # break composition — the guard simply stands down
         est = None
-    if est and est * 2 <= target:
+    # est == 0 (an empty scan) boosts too, as the old .rdd probe did
+    if est is not None and est * 2 <= target:
         return df.repartition(target)
     return df

@@ -128,7 +128,9 @@ class ResultObj:
 
     def get_metric_results(self) -> DataFrame:
         """Typed metrics DataFrame (14-field METRIC_SCHEMA): ONE fused agg
-        job for all rules, then a tiny driver-side createDataFrame."""
+        action for all rules (a few jobs under AQE: broadcast builds and
+        the shuffle stage run as their own jobs), then a tiny driver-side
+        createDataFrame."""
         metrics = AnalysisRunner.run(self.df, self.rules, self.ctx)
         rows = [m.as_row() for m in metrics]
         return self.spark.createDataFrame(rows, METRIC_SCHEMA)

@@ -2,10 +2,18 @@
 rows (with their failure reasons) to a quarantine area.
 
 The standard production pattern the reference never closed the loop on:
-its ResultObj exposed the two frames but nothing persisted them. Both
-writes share the same upstream plan; the source is persisted for the
-duration of the two writes, so each sink's complementary filter reads
-the cached batch — one source pass, no UDFs.
+its ResultObj exposed the two frames but nothing persisted them. The
+batch is classified ONCE: the annotated frame (input + ``failed_rules``)
+is materialized with an eager ``localCheckpoint``, and the two sinks are
+complementary filters of that one frame. The source is scanned and every
+rule evaluated once — including a uniqueness rule's window shuffle and
+an FK rule's broadcast probe — and both sides come from the same
+classification by construction, even if the source changes between the
+two writes. The trade is a cut lineage: a lost executor fails the route
+instead of recomputing it (``plans.cache.checkpointed``). A checkpoint,
+not ``persist()``: it keeps AQE's coalesced partitioning, so each side
+writes as few files as the data needs rather than one per shuffle
+partition.
 
 Layout: ``<base>/valid/`` (original schema) and ``<base>/invalid/``
 (original schema + ``failed_rules array<string>``), both parquet so the
@@ -15,9 +23,41 @@ apply to both sides (e.g. an ingest-date column keeps replays pruned).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..result import ResultObj
+from ..plans.cache import checkpointed
+from ..result import FAILED_RULES_COL, ResultObj
+
+
+def _route_classified(
+    result: ResultObj,
+    base_path: str,
+    *,
+    mode: str,
+    partition_by: list[str] | None = None,
+    extra: dict[str, Column] | None = None,
+) -> dict[str, str]:
+    """Checkpoint ``result.annotated_df()`` once, then write its passing
+    rows (``failed_rules`` dropped) to ``<base>/valid`` and its failing
+    rows to ``<base>/invalid``; ``extra`` columns go on both sides.
+    Returns the two paths."""
+    base = base_path.rstrip("/")
+    paths = {"valid": f"{base}/valid", "invalid": f"{base}/invalid"}
+    with checkpointed(result.annotated_df()) as ann:
+        n_failed = F.size(FAILED_RULES_COL)
+        sides = {
+            "valid": ann.filter(n_failed == 0).drop(FAILED_RULES_COL),
+            "invalid": ann.filter(n_failed > 0),
+        }
+        for name, df in sides.items():
+            if extra:
+                df = df.withColumns(extra)
+            w = df.write.mode(mode)
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(paths[name])
+    return paths
 
 
 def quarantine_route(
@@ -29,28 +69,7 @@ def quarantine_route(
 ) -> dict[str, str]:
     """Write ``result``'s valid rows to ``<base>/valid`` and invalid rows
     (with ``failed_rules``) to ``<base>/invalid``. Returns the two paths."""
-    paths = {
-        "valid": f"{base_path.rstrip('/')}/valid",
-        "invalid": f"{base_path.rstrip('/')}/invalid",
-    }
-    # persist the source for the duration of the two write actions: the
-    # valid/invalid accessors each build a fresh plan, so an unpersisted
-    # source would be scanned and rule-evaluated once PER SINK — and a
-    # source that changes between the actions (files landing in the
-    # input path) could route a row into both sides or neither
-    result.df.persist()
-    try:
-        for name, df in (
-            ("valid", result.get_valid_df()),
-            ("invalid", result.get_invalid_df(with_reasons=True)),
-        ):
-            w = df.write.mode(mode)
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(paths[name])
-    finally:
-        result.df.unpersist()
-    return paths
+    return _route_classified(result, base_path, mode=mode, partition_by=partition_by)
 
 
 def read_quarantine(spark: SparkSession, base_path: str) -> DataFrame:

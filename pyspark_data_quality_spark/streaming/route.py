@@ -7,9 +7,12 @@ Closes the streaming loop on the batch sink (sinks/quarantine.py): a
 one rule definition and one classification plan — the batch path is the
 offline rehearsal of the stream. ``foreachBatch`` (rather than two
 filtered ``writeStream`` sinks) because Structured Streaming would
-otherwise run the source once PER SINK; here the micro-batch is
-persisted for the duration of the two writes, so both classification
-plans read the cached batch instead of re-running the source.
+otherwise run the source once PER SINK; here each micro-batch goes
+through the batch sink's own writer, which classifies it ONCE into an
+eagerly checkpointed annotated frame and writes both sides as filters
+of it — one source pass and one rule evaluation per micro-batch. The
+checkpoint cuts lineage: a lost executor fails the micro-batch, and
+``foreachBatch`` retries it from the source.
 
 Exactly-once caveat (documented, standard): ``foreachBatch`` gives
 at-least-once file writes on retry; downstream readers of the quarantine
@@ -23,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..manager import DQManager
+from ..sinks.quarantine import _route_classified
 
 
 def stream_quarantine_route(
@@ -46,30 +50,18 @@ def stream_quarantine_route(
             "stream_quarantine_route: input is a batch frame — use "
             "sinks.quarantine.quarantine_route"
         )
-    base = base_path.rstrip("/")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # persist: the result accessors each build a fresh plan over the
-        # micro-batch source, so without this the source is re-read and
-        # the rules re-evaluated once PER SINK — exactly the double-run
-        # the docstring promises foreachBatch avoids (Spark's documented
-        # multi-sink foreachBatch pattern)
-        batch_df.persist()
-        try:
-            mgr = DQManager(spark, dataset=dataset, run_id=str(batch_id))
-            mgr.set_data(batch_df)
-            for r in rules:
-                mgr.add_rule(r)
-            res = mgr.run()
-            res.get_valid_df().withColumn(
-                batch_id_col, F.lit(batch_id)
-            ).write.mode("append").parquet(f"{base}/valid")
-            res.get_invalid_df(with_reasons=True).withColumn(
-                batch_id_col, F.lit(batch_id)
-            ).write.mode("append").parquet(f"{base}/invalid")
-        finally:
-            batch_df.unpersist()
+        mgr = DQManager(batch_df.sparkSession, dataset=dataset, run_id=str(batch_id))
+        mgr.set_data(batch_df)
+        for r in rules:
+            mgr.add_rule(r)
+        _route_classified(
+            mgr.run(),
+            base_path,
+            mode="append",
+            extra={batch_id_col: F.lit(batch_id)},
+        )
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path

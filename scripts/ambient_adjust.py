@@ -28,9 +28,10 @@ BASELINE.md prose:
 
 Output (JSON to stdout; ``--markdown`` renders the per-query table):
 ambient factor (untouched sum-ratio and geomean), raw + adjusted
-per-query ratios, touched/untouched geomeans, and the >25% movers that
-REMAIN suspicious after adjustment — the short list that still needs
-an interleaved A/B (BASELINE.md protocol) before being believed.
+per-query ratios, touched/untouched geomeans, and the >25% movers (in
+either direction) that REMAIN suspicious after adjustment — the short
+list that still needs an interleaved A/B (BASELINE.md protocol) before
+being believed.
 """
 
 from __future__ import annotations
@@ -89,6 +90,26 @@ def _geomean(ratios: list[float]) -> float | None:
     if not ratios:
         return None
     return math.exp(sum(math.log(r) for r in ratios) / len(ratios))
+
+
+def open_movers(
+    per_query: dict, prev_q: dict[str, float], now_q: dict[str, float],
+    names: list[str], threshold: float, min_delta_s: float = 0.3,
+) -> list[str]:
+    """Entries of ``names`` whose adjusted speedup is below ``threshold``
+    (a slowdown) or above ``1/threshold`` (a speedup), and whose raw time
+    moved by more than ``min_delta_s`` the same way: sub-noise absolute
+    deltas are excluded in both directions."""
+    out = []
+    for n in names:
+        adj = per_query[n]["speedup_adjusted"]
+        if adj is None:
+            continue
+        slower = adj < threshold and now_q[n] - prev_q[n] > min_delta_s
+        faster = adj > 1 / threshold and prev_q[n] - now_q[n] > min_delta_s
+        if slower or faster:
+            out.append(n)
+    return sorted(out)
 
 
 def main() -> None:
@@ -154,12 +175,8 @@ def main() -> None:
             [prev_q[n] / now_q[n] for n in names if now_q[n] > 0]
         )
 
-    lo = args.suspect_threshold
-    open_movers = sorted(
-        n for n in touched_common
-        if per_query[n]["speedup_adjusted"] is not None
-        and per_query[n]["speedup_adjusted"] < lo
-        and now_q[n] - prev_q[n] > 0.3  # sub-noise absolute deltas excluded
+    movers = open_movers(
+        per_query, prev_q, now_q, touched_common, args.suspect_threshold
     )
 
     out = {
@@ -178,7 +195,7 @@ def main() -> None:
         ),
         "suite_prev": round(sum(prev_q[n] for n in common), 2),
         "suite_now": round(sum(now_q[n] for n in common), 2),
-        "open_movers_after_adjustment": open_movers,
+        "open_movers_after_adjustment": movers,
         "per_query": per_query,
     }
     print(json.dumps(out, indent=1))

@@ -47,6 +47,7 @@ def test_fk_metrics_and_split(spark, facts, dim):
 
     valid_ids = sorted(r["id"] for r in res.get_valid_df().collect())
     assert valid_ids == [1, 2, 5]  # join must not duplicate id=2/5 (dup ref key)
+    assert res.annotated_df().count() == 5
     invalid = {r["id"]: r["failed_rules"] for r in res.get_invalid_df().collect()}
     assert set(invalid) == {3, 4}
     assert invalid[3] == ["fk_dim"]
@@ -105,6 +106,98 @@ def test_fk_broadcast_plan(spark, facts, dim):
     )
     plan = rule.prepare(facts)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan  # zero fact-side shuffle
+
+
+def _ids(df):
+    return sorted(r["id"] for r in df.collect())
+
+
+def test_fk_composite_keys(spark):
+    facts = spark.createDataFrame(
+        [(1, 1, "x"), (2, 1, "y"), (3, 2, "x"), (4, None, "x"), (5, 3, "z")],
+        "id int, a int, b string",
+    )
+    # (1, 'y') exists only split across rows: a=1 and b='y' never pair up
+    ref = spark.createDataFrame(
+        [(1, "x"), (1, "x"), (2, "x"), (2, "y"), (3, "z")], "ra int, rb string"
+    )
+    rule = ReferentialIntegrityRule(
+        columns=["a", "b"], ref_df=ref, ref_columns=["ra", "rb"], name="fk_ab"
+    )
+    res = DQManager(spark).set_data(facts).add_rule(rule).run()
+    assert res.get_metric_results().collect()[0]["value_double"] == pytest.approx(3 / 5)
+    assert _ids(res.get_valid_df()) == [1, 3, 5]
+    assert {r["id"]: r["failed_rules"] for r in res.get_invalid_df().collect()} == {
+        2: ["fk_ab"], 4: ["fk_ab"],
+    }
+    orphans = {(r["a"], r["b"], r["count"]) for r in rule.orphan_keys(facts).collect()}
+    assert orphans == {(1, "y", 1), (None, "x", 1)}
+    plan = rule.prepare(facts)._jdf.queryExecution().executedPlan().toString()
+    assert "ExistenceJoin" in plan and "BroadcastHashJoin" in plan
+
+
+def test_fk_null_reference_key(spark, facts):
+    """A NULL among the reference keys matches nothing: an IN-subquery's
+    unknown result for an unmatched key still counts as a failure, and a
+    matched key still passes."""
+    ref = spark.createDataFrame([(10,), (None,), (20,)], "dim_key int")
+    rule = ReferentialIntegrityRule(
+        columns=["dim_id"], ref_df=ref, ref_columns=["dim_key"]
+    )
+    res = DQManager(spark).set_data(facts).add_rule(rule).run()
+    assert res.get_metric_results().collect()[0]["value_double"] == pytest.approx(3 / 5)
+    assert _ids(res.get_valid_df()) == [1, 2, 5]
+    assert _ids(res.get_invalid_df()) == [3, 4]
+    orphans = {(r["dim_id"], r["count"]) for r in rule.orphan_keys(facts).collect()}
+    assert orphans == {(99, 1), (None, 1)}
+
+    lenient = ReferentialIntegrityRule(
+        columns=["dim_id"], ref_df=ref, ref_columns=["dim_key"], ignore_nulls=True
+    )
+    res = DQManager(spark).set_data(facts).add_rule(lenient).run()
+    assert _ids(res.get_valid_df()) == [1, 2, 4, 5]
+
+
+def test_fk_int_against_long_reference(spark):
+    facts = spark.createDataFrame([(1, 7), (2, 8), (3, None)], "id int, fk int")
+    ref = spark.createDataFrame([(7,), (2**40,)], "key bigint")
+    rule = ReferentialIntegrityRule(columns=["fk"], ref_df=ref, ref_columns=["key"])
+    res = DQManager(spark).set_data(facts).add_rule(rule).run()
+    assert _ids(res.get_valid_df()) == [1]
+    assert _ids(res.get_invalid_df()) == [2, 3]
+
+
+def _fk_plan(spark, facts, dim, broadcast, threshold):
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    try:
+        rule = ReferentialIntegrityRule(
+            columns=["dim_id"], ref_df=dim, ref_columns=["dim_key"],
+            broadcast=broadcast,
+        )
+        prepared = rule.prepare(facts)
+        plan = prepared._jdf.queryExecution().executedPlan().toString()
+        ok = {r["id"] for r in prepared.filter(F.col(rule._marker)).collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert ok == {1, 2, 5}
+    assert "ExistenceJoin" in plan
+    return plan
+
+
+def test_fk_broadcast_hint_overrides_disabled_threshold(spark, facts, dim):
+    plan = _fk_plan(spark, facts, dim, broadcast=True, threshold="-1")
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan and "hashpartitioning" not in plan
+
+
+def test_fk_no_broadcast_leaves_join_to_planner(spark, facts):
+    # a Range reference carries size statistics the planner can act on
+    dim = spark.range(0, 40, 10).toDF("dim_key")
+    shuffled = _fk_plan(spark, facts, dim, broadcast=False, threshold="-1")
+    assert "SortMergeJoin" in shuffled and "BroadcastHashJoin" not in shuffled
+    small = _fk_plan(spark, facts, dim, broadcast=False, threshold="10MB")
+    assert "BroadcastHashJoin" in small
 
 
 def test_fd_violations(spark):

@@ -72,6 +72,139 @@ def test_quarantine_route(spark, tmp_path):
     assert len(bad["failed_rules"]) == 1  # the completeness rule name
 
 
+def _route_inputs(spark, tmp_path):
+    """A one-file parquet batch (one input partition): ids 0-59 with keys
+    (k1, k2) unique except ids 58/59, FK ``fk`` in 0-19 with 15-19
+    orphans; and a reference whose keys 0-14 each appear three times, so
+    a fan-out would duplicate rows."""
+    rows = [(i, i, i % 3, i % 20) for i in range(58)]
+    rows += [(58, 100, 0, 3), (59, 100, 0, 4)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, "id int, k1 int, k2 int, fk int").coalesce(
+        1
+    ).write.parquet(src)
+    ref = spark.createDataFrame([(i,) for i in range(15)] * 3, "rk long")
+    return src, ref
+
+
+def _route_rules(ref):
+    from pyspark_data_quality_spark.operators import (
+        ReferentialIntegrityRule,
+        UniqueRule,
+    )
+
+    return [
+        UniqueRule(columns=["k1", "k2"]),
+        ReferentialIntegrityRule(columns=["fk"], ref_df=ref, ref_columns=["rk"]),
+    ]
+
+
+def _route_shape(spark, run):
+    """Run ``run()`` and read back what it executed: the shuffle-write
+    record count of every shuffle stage of its jobs and the
+    hash-partitioning keys of every exchange in its SQL plans. Both come
+    from the status stores behind ``statusTracker`` (which itself exposes
+    no shuffle metrics), read after the listener bus drains."""
+    import re
+
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+    sql = spark._jsparkSession.sharedState().statusStore()
+
+    def last_ids():
+        # ids only grow; the stores may have evicted older entries
+        jobs, execs = store.jobsList(None), sql.executionsList()
+        return (
+            max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1),
+            max((execs.apply(i).executionId() for i in range(execs.size())), default=-1),
+        )
+
+    sc.listenerBus().waitUntilEmpty()
+    last_job, last_exec = last_ids()
+    run()
+    sc.listenerBus().waitUntilEmpty()
+    shuffles, jobs = [], store.jobsList(None)
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobId() <= last_job:
+            continue
+        ids = job.stageIds()
+        for k in range(ids.size()):
+            attempts = store.stageData(ids.apply(k), False, None, False, None)
+            for a in range(attempts.size()):
+                st = attempts.apply(a)
+                if st.status().toString() == "COMPLETE" and st.shuffleWriteRecords():
+                    shuffles.append(st.shuffleWriteRecords())
+    keys, execs = set(), sql.executionsList()
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() > last_exec:
+            for args in re.findall(r"hashpartitioning\((.*?), \d+\)", e.physicalPlanDescription()):
+                keys.add(tuple(re.sub(r"#\d+L?", "", a) for a in args.split(", ")))
+    return shuffles, keys
+
+
+def _assert_route_split(spark, base, n_rows):
+    """One parquet file per side; the two sides partition the input."""
+    import glob
+
+    for side in ("valid", "invalid"):
+        assert len(glob.glob(f"{base}/{side}/*.parquet")) == 1, side
+    valid = [r["id"] for r in spark.read.parquet(f"{base}/valid").collect()]
+    invalid = spark.read.parquet(f"{base}/invalid").collect()
+    bad = {r["id"]: set(r["failed_rules"]) for r in invalid}
+    assert len(valid) == len(set(valid)) and len(invalid) == len(bad)
+    assert not set(valid) & set(bad)
+    assert set(valid) | set(bad) == set(range(n_rows))
+    assert set(bad) == {15, 16, 17, 18, 19, 35, 36, 37, 38, 39, 55, 56, 57, 58, 59}
+    assert bad[58] == bad[59] == {"unique_ratio(k1,k2)"}
+    assert bad[15] == {"fk(fk)"}
+
+
+def test_quarantine_route_classifies_once(spark, tmp_path):
+    """The route evaluates the rules ONCE for both sinks: the uniqueness
+    window's shuffle runs a single time (keyed on the uniqueness
+    columns, carrying each input row once), the FK reference is probed
+    through a broadcast with no shuffle of its own (no dedup, no
+    fan-out), and each side is one file (the checkpoint keeps AQE's
+    coalesced partitioning)."""
+    from pyspark_data_quality_spark.sinks import quarantine_route
+
+    src, ref = _route_inputs(spark, tmp_path)
+    res = DQManager(spark).set_data(spark.read.parquet(src))
+    for rule in _route_rules(ref):
+        res.add_rule(rule)
+    res = res.run()
+    base = str(tmp_path / "routed")
+    shuffles, keys = _route_shape(spark, lambda: quarantine_route(res, base))
+    assert shuffles == [60]
+    assert keys == {("k1", "k2")}
+    _assert_route_split(spark, base, 60)
+
+
+def test_stream_quarantine_route_classifies_once(spark, tmp_path):
+    """The streaming writer goes through the same classify-once path."""
+    from pyspark_data_quality_spark.streaming import stream_quarantine_route
+
+    src, ref = _route_inputs(spark, tmp_path)
+    stream = spark.readStream.schema("id int, k1 int, k2 int, fk int").parquet(src)
+    base = str(tmp_path / "routed")
+
+    def run():
+        q = stream_quarantine_route(
+            stream, _route_rules(ref), base,
+            checkpoint_path=str(tmp_path / "ckpt"),
+            trigger_available_now=True,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    shuffles, keys = _route_shape(spark, run)
+    assert shuffles == [60]
+    assert keys == {("k1", "k2")}
+    _assert_route_split(spark, base, 60)
+
+
 def test_skew_report(spark):
     from pyspark_data_quality_spark.plans.skew import skew_report
 
@@ -145,6 +278,44 @@ def test_ensure_min_partitions_never_executes_upstream(spark):
     assert n_jobs() == before, "guard scheduled Spark jobs while sizing"
     assert boosted is not joined  # 1-split stream side -> still boosts
     assert boosted.rdd.getNumPartitions() == 8
+
+
+def test_ensure_min_partitions_boosts_empty_scan(spark):
+    """An estimate of 0 partitions (an empty scan) is a low estimate, not
+    an unknown one: the guard boosts it."""
+    from pyspark_data_quality_spark.plans.parallelism import (
+        _stream_partition_estimate,
+        ensure_min_partitions,
+    )
+
+    empty = spark.sql("SELECT id FROM range(10) WHERE false")
+    plan = empty._jdf.queryExecution().executedPlan()
+    assert _stream_partition_estimate(plan) == 0
+    boosted = ensure_min_partitions(empty, 8)
+    assert boosted is not empty
+    assert boosted.count() == 0
+
+
+def test_ensure_min_partitions_stands_down_on_cartesian(spark, sf_dir):
+    """A cartesian product's partitions multiply, so summing its children
+    would misjudge it: the estimate is unknown and the guard stands down."""
+    from pyspark_data_quality_spark.plans.parallelism import (
+        _stream_partition_estimate,
+        ensure_min_partitions,
+    )
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        region = spark.read.parquet(f"{sf_dir}/region.parquet")
+        nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+        cross = region.select("r_regionkey").crossJoin(nation.select("n_nationkey"))
+        plan = cross._jdf.queryExecution().executedPlan()
+        assert "CartesianProduct" in plan.toString()
+        assert _stream_partition_estimate(plan) is None
+        assert ensure_min_partitions(cross, 8) is cross
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def _rows_set(df):

@@ -2170,3 +2170,39 @@ def test_minhash_banding_divisibility_guard(spark):
         minhash_near_dup_pairs(
             df, "text", "doc_id", num_hashes=100, num_bands=32
         )
+
+
+def test_minhash_injected_signature_width_guard(spark):
+    """signatures= refuses a frame whose signature width is not the
+    call's num_hashes (checked from the schema, before any job), and
+    bands a matching one exactly like the built-in path."""
+    from pyspark_data_quality_spark.operators.dedup import (
+        minhash_near_dup_pairs,
+        minhash_signatures,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    df = spark.createDataFrame(
+        [(0, base), (1, base + "!"), (2, "something else entirely here")],
+        ["doc_id", "text"],
+    )
+    kw = dict(num_bands=8, threshold=0.5)
+    sig32 = minhash_signatures(df, "text", "doc_id", num_hashes=32)
+    with pytest.raises(ValueError, match="32-hash signatures, the call bands 64"):
+        minhash_near_dup_pairs(df, "text", "doc_id", num_hashes=64,
+                               signatures=sig32, **kw)
+    # a hand-built frame carries no width: refused, not banded blindly
+    unstamped = sig32.withColumn("_sig", F.slice("_sig", 1, 16))
+    with pytest.raises(ValueError, match="unknown-width"):
+        minhash_near_dup_pairs(df, "text", "doc_id", num_hashes=16,
+                               signatures=unstamped, **kw)
+
+    def pairs(**extra):
+        return {
+            (r["id_a"], r["id_b"])
+            for r in minhash_near_dup_pairs(
+                df, "text", "doc_id", num_hashes=32, **kw, **extra
+            ).collect()
+        }
+
+    assert pairs(signatures=sig32) == pairs() == {(0, 1)}
