@@ -73,7 +73,9 @@ class ReferentialIntegrityRule(Rule):
         tuple against the reference key set (a struct probe for
         composite keys). Spark plans it as an existence join, which
         marks each fact row once whatever the reference's key
-        multiplicity, so no dedup shuffle is needed. ``row_predicate``
+        multiplicity, so no dedup shuffle is needed. The struct is split
+        into per-column join keys, so a NULL in any part of a key never
+        matches, as with a column-wise ``=`` join. ``row_predicate``
         counts a NULL marker as a failure."""
         ref = self.ref_df.select(*self.ref_columns)
         if self.broadcast:

@@ -82,7 +82,9 @@ def checkpointed(df: DataFrame) -> Iterator[DataFrame]:
     AQE's coalescing, where a persisted plan can keep the full
     shuffle-partition count. Lineage is cut, as for
     :func:`pin_partitions`: a lost executor fails the consumer instead
-    of recomputing, and the frame must not be read after the block."""
+    of recomputing, so a consumer that writes twice from the frame can
+    fail after its first write has committed. The frame must not be
+    read after the block."""
     ck = df.localCheckpoint(eager=True)
     try:
         yield ck

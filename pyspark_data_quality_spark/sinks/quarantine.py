@@ -10,7 +10,10 @@ rule evaluated once — including a uniqueness rule's window shuffle and
 an FK rule's broadcast probe — and both sides come from the same
 classification by construction, even if the source changes between the
 two writes. The trade is a cut lineage: a lost executor fails the route
-instead of recomputing it (``plans.cache.checkpointed``). A checkpoint,
+instead of recomputing it (``plans.cache.checkpointed``). If that
+happens after the valid write has committed, the batch is half routed;
+in append mode a caller that retries the route appends the valid rows a
+second time. A checkpoint,
 not ``persist()``: it keeps AQE's coalesced partitioning, so each side
 writes as few files as the data needs rather than one per shuffle
 partition.
@@ -41,7 +44,8 @@ def _route_classified(
     """Checkpoint ``result.annotated_df()`` once, then write its passing
     rows (``failed_rules`` dropped) to ``<base>/valid`` and its failing
     rows to ``<base>/invalid``; ``extra`` columns go on both sides.
-    Returns the two paths."""
+    The valid side is written first: a failure before the invalid write
+    commits leaves the batch half routed. Returns the two paths."""
     base = base_path.rstrip("/")
     paths = {"valid": f"{base}/valid", "invalid": f"{base}/invalid"}
     with checkpointed(result.annotated_df()) as ann:
@@ -68,7 +72,10 @@ def quarantine_route(
     mode: str = "append",
 ) -> dict[str, str]:
     """Write ``result``'s valid rows to ``<base>/valid`` and invalid rows
-    (with ``failed_rules``) to ``<base>/invalid``. Returns the two paths."""
+    (with ``failed_rules``) to ``<base>/invalid``. Both sides come from
+    one checkpointed classification; a failure between the two writes
+    leaves a half-routed batch, and with ``mode="append"`` retrying the
+    route appends the valid rows twice. Returns the two paths."""
     return _route_classified(result, base_path, mode=mode, partition_by=partition_by)
 
 

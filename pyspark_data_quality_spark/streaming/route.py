@@ -11,8 +11,12 @@ otherwise run the source once PER SINK; here each micro-batch goes
 through the batch sink's own writer, which classifies it ONCE into an
 eagerly checkpointed annotated frame and writes both sides as filters
 of it — one source pass and one rule evaluation per micro-batch. The
-checkpoint cuts lineage: a lost executor fails the micro-batch, and
-``foreachBatch`` retries it from the source.
+checkpoint cuts lineage: a lost executor fails the micro-batch and
+stops the query with the exception (``foreachBatch`` does not retry);
+the micro-batch is replayed from the source only when the query is
+restarted from its checkpoint. A failure between the valid and the
+invalid write leaves that micro-batch half routed, and the replay
+appends its valid rows a second time.
 
 Exactly-once caveat (documented, standard): ``foreachBatch`` gives
 at-least-once file writes on retry; downstream readers of the quarantine

@@ -92,21 +92,24 @@ def _geomean(ratios: list[float]) -> float | None:
     return math.exp(sum(math.log(r) for r in ratios) / len(ratios))
 
 
+_MIN_DELTA_S = 0.3  # sub-noise absolute deltas are excluded
+
+
 def open_movers(
     per_query: dict, prev_q: dict[str, float], now_q: dict[str, float],
-    names: list[str], threshold: float, min_delta_s: float = 0.3,
+    names: list[str], threshold: float,
 ) -> list[str]:
     """Entries of ``names`` whose adjusted speedup is below ``threshold``
     (a slowdown) or above ``1/threshold`` (a speedup), and whose raw time
-    moved by more than ``min_delta_s`` the same way: sub-noise absolute
-    deltas are excluded in both directions."""
+    moved by more than ``_MIN_DELTA_S`` seconds the same way: sub-noise
+    absolute deltas are excluded in both directions."""
     out = []
     for n in names:
         adj = per_query[n]["speedup_adjusted"]
         if adj is None:
             continue
-        slower = adj < threshold and now_q[n] - prev_q[n] > min_delta_s
-        faster = adj > 1 / threshold and prev_q[n] - now_q[n] > min_delta_s
+        slower = adj < threshold and now_q[n] - prev_q[n] > _MIN_DELTA_S
+        faster = adj > 1 / threshold and prev_q[n] - now_q[n] > _MIN_DELTA_S
         if slower or faster:
             out.append(n)
     return sorted(out)

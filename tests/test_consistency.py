@@ -2,6 +2,8 @@
 semantics, orphan diagnostics, and composition with other rules in the
 fused pass."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -117,9 +119,13 @@ def test_fk_composite_keys(spark):
         [(1, 1, "x"), (2, 1, "y"), (3, 2, "x"), (4, None, "x"), (5, 3, "z")],
         "id int, a int, b string",
     )
-    # (1, 'y') exists only split across rows: a=1 and b='y' never pair up
+    # (1, 'y') exists only split across rows: a=1 and b='y' never pair up.
+    # (NULL, 'x') is in the reference too, yet fact 4 (NULL, 'x') must
+    # still fail: the struct probe compares per column, and NULL = NULL
+    # is not a match
     ref = spark.createDataFrame(
-        [(1, "x"), (1, "x"), (2, "x"), (2, "y"), (3, "z")], "ra int, rb string"
+        [(1, "x"), (1, "x"), (2, "x"), (2, "y"), (3, "z"), (None, "x")],
+        "ra int, rb string",
     )
     rule = ReferentialIntegrityRule(
         columns=["a", "b"], ref_df=ref, ref_columns=["ra", "rb"], name="fk_ab"
@@ -134,6 +140,7 @@ def test_fk_composite_keys(spark):
     assert orphans == {(1, "y", 1), (None, "x", 1)}
     plan = rule.prepare(facts)._jdf.queryExecution().executedPlan().toString()
     assert "ExistenceJoin" in plan and "BroadcastHashJoin" in plan
+    assert re.search(r"BroadcastHashJoin \[a#\d+, b#\d+\], \[ra#\d+, rb#\d+\]", plan)
 
 
 def test_fk_null_reference_key(spark, facts):
