@@ -59,16 +59,27 @@ def _latest_bench_round(repo_dir: str) -> int:
     return best
 
 
-def _bench_full_name(sf: float) -> str:
-    """Per-sf artifact name: sf renders as in the testdata dir (0.1 ->
-    'sf0.1'), so runs at different scale factors never overwrite each
-    other's complete map."""
-    return f"bench_full_sf{sf:g}.json"
+#: the standard bench core count (bench.py's default); artifacts
+#: without a ``cpus`` stamp (written before it existed) were measured at it
+_DEFAULT_CPUS = 32
 
 
-def _prev_bench(repo_dir: str, sf: float) -> tuple[str, dict] | None:
-    """Latest prior BENCH_r{N}.json with parseable per-query timings at the
-    same sf — the regression baseline (VERDICT r2 item 6).
+def _bench_full_name(sf: float, cpus: int = _DEFAULT_CPUS) -> str:
+    """Per-sf, per-cpus artifact name: sf renders as in the testdata dir
+    (0.1 -> 'sf0.1'), and a non-default core count is suffixed (8 ->
+    'sf0.1_c8'), so runs at different scale factors or core counts never
+    overwrite each other's complete map."""
+    suffix = "" if cpus == _DEFAULT_CPUS else f"_c{cpus}"
+    return f"bench_full_sf{sf:g}{suffix}.json"
+
+
+def _prev_bench(
+    repo_dir: str, sf: float, cpus: int = _DEFAULT_CPUS
+) -> tuple[str, dict] | None:
+    """Latest prior BENCH_r{N}.json (or its BENCH_r{N}_c{cpus}.json sibling
+    from a non-32-core run) with parseable per-query timings at the same sf AND cpus —
+    the regression baseline (VERDICT r2 item 6). Timings at another core
+    count are a different machine shape, never a baseline.
 
     The driver's tail buffer truncates the suite line past ~108 entries
     (suite_line drops sub-threshold timings), so BENCH_r{N} alone loses a
@@ -87,7 +98,7 @@ def _prev_bench(repo_dir: str, sf: float) -> tuple[str, dict] | None:
 
     best: tuple[int, str, dict] | None = None
     for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
+        m = re.search(r"BENCH_r(\d+)(?:_c\d+)?\.json$", path)
         if not m:
             continue
         try:
@@ -96,6 +107,8 @@ def _prev_bench(repo_dir: str, sf: float) -> tuple[str, dict] | None:
             data = raw.get("parsed", raw) or {}
             queries = data.get("queries")
             if not queries or data.get("sf") != sf:
+                continue
+            if int(raw.get("cpus", _DEFAULT_CPUS)) != cpus:
                 continue
             # round-5+ suite lines drop the dq_ prefix; normalize back so
             # cross-round keys line up with the registry names
@@ -111,11 +124,15 @@ def _prev_bench(repo_dir: str, sf: float) -> tuple[str, dict] | None:
     if best is None:
         return None
     n, label, queries = best
-    full_name = _bench_full_name(sf)
+    full_name = _bench_full_name(sf, cpus)
     try:
         with open(os.path.join(repo_dir, "docs", full_name)) as f:
             full = json.load(f)
-        if full.get("round") == n and full.get("sf") == sf:
+        if (
+            full.get("round") == n
+            and full.get("sf") == sf
+            and full.get("cpus", _DEFAULT_CPUS) == cpus
+        ):
             # fill ONLY the keys the truncated suite map dropped —
             # BENCH_r{N} (the round-close run) stays authoritative
             queries = {**full.get("queries", {}), **queries}
@@ -123,6 +140,39 @@ def _prev_bench(repo_dir: str, sf: float) -> tuple[str, dict] | None:
     except (OSError, ValueError):
         pass
     return label, queries
+
+
+def _write_full_artifact(
+    repo_dir: str, sf: float, cpus: int, timings: dict[str, float], pop: str
+) -> str | None:
+    """Write the full per-query map to ``docs/`` and return its path.
+
+    The ~2000-char tail capture of the bench output truncates both the
+    stderr map and the suite line's per-query detail past ~108 entries,
+    so this committed artifact is the only place ALL 150 timings survive
+    a round (r13 verdict item 7). It is tagged with the round being measured (latest recorded BENCH
+    round + 1), the sf and the core count, so _prev_bench can tell whether
+    it describes the same code and machine shape as BENCH_r{N}.json. The
+    name is per-sf and per-cpus: neither a quick sf0.01 sanity run nor an
+    8-core run can overwrite the standard 32-core sf0.1 map."""
+    full_art = {
+        "metric": "dq_queries_full",
+        "round": _latest_bench_round(repo_dir) + 1,
+        "sf": sf,
+        "cpus": cpus,
+        "pop": pop,
+        "value": round(sum(timings.values()), 3),
+        "queries": {k: timings[k] for k in sorted(timings)},
+    }
+    path = os.path.join(repo_dir, "docs", _bench_full_name(sf, cpus))
+    try:
+        with open(path, "w") as f:
+            json.dump(full_art, f, indent=1, sort_keys=True)
+            f.write("\n")
+    except OSError as e:  # read-only checkout must not kill the bench
+        print(f"bench full artifact not written: {e}", file=sys.stderr)
+        return None
+    return path
 
 
 def suite_line(total: float, timings: dict[str, float], sf: float,
@@ -284,7 +334,8 @@ def main() -> None:
     # tail-captures only the last ~2000 chars of output, and round 3 proved
     # that anything appended after the suite line pushes the line head
     # (metric/value) out of the buffer, leaving nothing parseable.
-    prev = _prev_bench(os.path.dirname(os.path.abspath(__file__)), sf)
+    prev = _prev_bench(os.path.dirname(os.path.abspath(__file__)), sf,
+                       int(cpus))
     if prev:
         prev_file, prev_q = prev
         regressions = {
@@ -317,33 +368,14 @@ def main() -> None:
         else f"{len(timings)}/{registry_n}"
     )
 
-    # ... and to docs/bench_full_sf{sf}.json: the driver's tail buffer
-    # truncates both the stderr map and the suite line's per-query detail
-    # past ~108 entries, so this committed artifact is the only place ALL
-    # 150 timings survive a round (r13 verdict item 7). Tagged with the
-    # round being measured (latest recorded BENCH round + 1) so
-    # _prev_bench can tell whether it describes the same code as
-    # BENCH_r{N}.json. Only a full-registry run may overwrite it (a
-    # SPARK_GRAFT_BENCH_ONLY subset must not clobber the complete map),
-    # and the name is per-sf (a quick sf0.01 sanity run must not destroy
-    # the sf0.1 map the round comparison needs).
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
+    # ... and to docs/bench_full_sf{sf}[_c{cpus}].json (see
+    # _write_full_artifact). Only a full-registry run may overwrite it: a
+    # SPARK_GRAFT_BENCH_ONLY subset must not clobber the complete map.
     if len(timings) == registry_n and not only_env:
-        full_art = {
-            "metric": "dq_queries_full",
-            "round": _latest_bench_round(repo_dir) + 1,
-            "sf": sf,
-            "pop": pop,
-            "value": round(sum(timings.values()), 3),
-            "queries": {k: timings[k] for k in sorted(timings)},
-        }
-        try:
-            with open(os.path.join(repo_dir, "docs", _bench_full_name(sf)),
-                      "w") as f:
-                json.dump(full_art, f, indent=1, sort_keys=True)
-                f.write("\n")
-        except OSError as e:  # read-only checkout must not kill the bench
-            print(f"bench full artifact not written: {e}", file=sys.stderr)
+        _write_full_artifact(
+            os.path.dirname(os.path.abspath(__file__)), sf, int(cpus),
+            timings, pop,
+        )
     line = suite_line(sum(timings.values()), timings, sf, pop=pop)
     if len(line) > 1900:
         print(f"WARNING: suite line {len(line)} chars — the driver tail "

@@ -473,9 +473,12 @@ def minhash_signatures(
     them (bands re-slice the same signature): the expensive
     shingle+hash kernel then runs once instead of once per
     configuration — the r16 recall-harness sharing knob. The ``_sig``
-    column's metadata records ``num_hashes`` for that check. Typically
-    ``localCheckpoint(eager=False)``-ed by the caller so concurrent
-    consumers read one materialization."""
+    column's metadata records ``num_hashes`` for that check. The
+    operator bands over ``_sig`` and verifies candidate pairs by
+    joining back to ``_h``, so every call reads this frame at least
+    twice: the caller pins it (``localCheckpoint(eager=False)`` or a
+    persist) so all consumers read one materialization; the operator
+    pins the frame it builds itself."""
     from ..functions.vectors import (
         minhash_md5_np,
         minhash_rehash_np,
@@ -515,6 +518,7 @@ def minhash_near_dup_pairs(
     impl: str = "np",
     hash_family: str = "blake2b",
     signatures: DataFrame | None = None,
+    persist: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, exact jaccard >= threshold) via
     MinHash banding.
@@ -524,11 +528,16 @@ def minhash_near_dup_pairs(
     shingles (the classic Broder config, ~token-count shingles/doc — ~6x
     fewer hash ops on prose, the scale default for document dedup).
 
-    Plan shape: project shingles+signature (no shuffle) -> explode bands ->
-    groupBy on (band, key) with the hash set riding along as bucket payload
-    (shuffle keyed by band-bucket, NOT all-pairs) -> distinct pairs ->
-    exact-Jaccard verify on the payloads — no join back to the corpus, so
-    the shingle/signature computation executes exactly once.
+    Plan shape: project shingles+signature (no shuffle) into a signature
+    frame pinned once -> explode bands -> groupBy on (band, key) carrying
+    ids only (shuffle keyed by band-bucket, NOT all-pairs; ~num_bands x
+    18 B per document) -> distinct (id_a, id_b) pairs (ids-only hash
+    aggregate) -> join each side back to the pinned frame's hash set ->
+    exact-Jaccard verify. Banding and verify read the one materialization,
+    so the shingle/signature kernel executes once; the hash set crosses
+    the network at most once per verified side instead of once per band
+    (AQE broadcasts the sets when they are small and sort-merge-joins
+    them at scale). ``id_col`` must be unique.
     With b bands of r rows the candidate recall at similarity s is
     1-(1-s^r)^b — 32 bands x 4 rows catches s>=0.7 with >99.9% probability;
     :func:`lsh_plan` picks (num_hashes, num_bands) for a target
@@ -564,6 +573,14 @@ def minhash_near_dup_pairs(
     bit-identical: bands are literal slices of the injected signature.
     A frame whose ``_sig`` width (stamped in its column metadata by
     ``minhash_signatures``) is not ``num_hashes`` raises ValueError.
+    An injected frame is read as given — banding and verify are two
+    consumers of it, so pin it (persist or checkpoint) before the call.
+
+    ``persist`` (default on) pins the signature frame this call builds
+    with ``MEMORY_AND_DISK`` (plans/cache.py contract): released by
+    ``spark.catalog.clearCache()`` or session end. ``persist=False``
+    leaves no CacheManager entry and may re-run the shingle kernel once
+    per consumer (banding plus each verify side); results are equal.
     """
     if hash_family not in ("blake2b", "md5"):
         raise ValueError(
@@ -584,6 +601,8 @@ def minhash_near_dup_pairs(
             f"divisible by num_bands={num_bands} (use lsh_plan to pick "
             "a consistent configuration)"
         )
+    from ..plans.cache import maybe_persist
+
     rows_per_band = num_hashes // num_bands
     if signatures is not None:
         # sig-injection (r16): a prebuilt minhash_signatures frame —
@@ -638,34 +657,35 @@ def minhash_near_dup_pairs(
         ).filter(F.col("_sig").isNotNull())
         verify_col = "_shingles"
 
-    # The shingle/hash sets ride along as bucket payloads: one extra
-    # ~num_shingles×8B per (doc, band) through the ONE bucket shuffle,
-    # in exchange for dropping two verify joins that would each re-scan
-    # the corpus and re-run the shingle/signature computation (the
-    # upstream plan executes once per DataFrame branch — three full
-    # passes in the join formulation, one here).
+    # Ids-only banding: the bucket shuffle carries (_id, _band, _key),
+    # ~18 B per (doc, band), never the hash set. The distinct candidate
+    # pairs join back to the signature frame once per side for the
+    # exact-Jaccard verify; the frame this call builds is pinned, so
+    # banding and verify read ONE materialization and the shingle
+    # kernel still runs once. An injected frame is the caller's to pin.
+    if signatures is None:
+        base = maybe_persist(base, persist)
     buckets = base.select(
         "_id",
-        F.col(verify_col).alias("_vp"),
         F.explode(_bands(F.col("_sig"), num_bands, rows_per_band)).alias("_b"),
-    ).select(
-        "_id", "_vp", F.col("_b.band").alias("_band"), F.col("_b.key").alias("_key")
-    )
+    ).select("_id", F.col("_b.band").alias("_band"), F.col("_b.key").alias("_key"))
     candidates = _bucket_pairs(
-        buckets,
-        ["_band", "_key"],
-        payload_col="_vp",
-        max_bucket_size=max_bucket_size,
+        buckets, ["_band", "_key"], max_bucket_size=max_bucket_size
     )
-
-    verified = (
-        candidates.withColumn(
-            "jaccard", F.round(jaccard(F.col("_pa"), F.col("_pb")), 6)
+    sets = base.select("_id", F.col(verify_col).alias("_v"))
+    return (
+        candidates.join(
+            sets.select(F.col("_id").alias("id_a"), F.col("_v").alias("_pa")),
+            "id_a",
         )
+        .join(
+            sets.select(F.col("_id").alias("id_b"), F.col("_v").alias("_pb")),
+            "id_b",
+        )
+        .withColumn("jaccard", F.round(jaccard(F.col("_pa"), F.col("_pb")), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return verified
 
 
 def minhash_dedup(
@@ -695,7 +715,13 @@ def minhash_dedup(
             .distinct()
         )
     else:
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+        # a semi join of the input's ids, not pairs.distinct(): its
+        # static size estimate is the input's, where the verified pairs
+        # carry their join's product estimate (curate_corpus does the
+        # same for its near-dup drop list)
+        losers = df.select(id_col).join(
+            pairs.select(F.col("id_b").alias(id_col)), id_col, "left_semi"
+        )
     return df.join(losers, on=id_col, how="anti")
 
 

@@ -130,7 +130,10 @@ def curate_corpus(
     plan). MEMORY_AND_DISK, so an executor under memory pressure spills
     instead of failing; call ``.unpersist()`` on the returned frame's
     source when the downstream actions are done, or pass
-    ``persist=False`` to keep the plan fully lazy.
+    ``persist=False`` to keep the plan fully lazy. ``persist`` also
+    reaches :func:`..operators.dedup.minhash_near_dup_pairs`, which
+    pins its signature frame so banding and verify share one kernel
+    pass (with ``persist=False`` the kernel runs once per consumer).
     """
     from ..operators.dedup import minhash_near_dup_pairs
     from ..operators.split import split_assignment
@@ -313,9 +316,18 @@ def curate_corpus(
         shingle=shingle, shingle_n=shingle_n,
         threshold=near_dup_threshold,
         hash_family=hash_family,
+        persist=persist,
     )
+    # A semi join of passed's ids, not pairs.select(greatest).distinct():
+    # without CBO the verify joins' static size estimate is the product
+    # of their sides (terabytes for kilobytes of pairs), and a list
+    # carrying that estimate plans the final annotate join as a sort-
+    # merge join that shuffles the whole annotated corpus. A semi
+    # join's estimate is its left side, so the list stays broadcastable.
     _drop_stage(
-        pairs.select(F.greatest("id_a", "id_b").alias(id_col)).distinct(),
+        passed.select(id_col).join(
+            pairs.select(F.col("id_b").alias(id_col)), id_col, "left_semi"
+        ),
         "near_dup",
     )
 

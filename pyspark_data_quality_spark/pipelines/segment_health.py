@@ -208,7 +208,9 @@ def segment_health_report(
             )
         if unique_keys:
             # same arithmetic as operators/uniqueness.dup_rate_by_group
-            # (pinned by test_segment_health_constituent_parity), read
+            # (pinned by test_segment_health_constituent_parity, NULL
+            # keys and the NULL segment included: a struct of NULL keys
+            # is one distinct non-NULL value, as in that groupBy), read
             # off the shared base instead of a second two-level
             # aggregation pass over the source
             dup = F.round(

@@ -34,6 +34,7 @@ from pyspark_data_quality_spark.operators.drift import (
     quantile_drift,
     wasserstein_1d,
 )
+from pyspark_data_quality_spark.operators.dedup import minhash_near_dup_pairs
 from pyspark_data_quality_spark.operators.fuzzy import fuzzy_match_pairs
 from pyspark_data_quality_spark.operators.profile import (
     profile_columns,
@@ -137,6 +138,12 @@ CASES = [
             ).alias("s"),
         ),
         "s", "doc_id", **kw
+    )),
+    # pins its signature frame: banding and the verify join-back read
+    # one materialization of the shingle kernel
+    ("minhash_near_dup_pairs", lambda d, **kw: minhash_near_dup_pairs(
+        d, "text", "doc_id", num_hashes=32, num_bands=8, shingle="word",
+        threshold=0.5, **kw
     )),
     ("dedup_against_bloom", lambda d, **kw: dedup_against_bloom(
         d.filter("doc_id % 2 = 0"), d.filter("doc_id % 3 = 0"),

@@ -348,7 +348,10 @@ def test_segment_health_constituent_parity(spark):
     per-segment sums/maxes) must equal the standalone oracle-certified
     operators row-for-row — the 'certified via constituents' claim is
     a delegation again, not an algebraic argument (r10 verdict weak
-    finding). NULL segment and NULL values included deliberately."""
+    finding). NULL segment and NULL values included deliberately —
+    NULL key values too: the uniqueness fold counts distinct key
+    STRUCTS, and a struct of NULLs is a non-NULL value that groups like
+    dup_rate_by_group's NULL group key."""
     import datetime
 
     from pyspark_data_quality_spark.operators.freshness import (
@@ -356,6 +359,9 @@ def test_segment_health_constituent_parity(spark):
     )
     from pyspark_data_quality_spark.operators.profile import (
         completeness_by_group,
+    )
+    from pyspark_data_quality_spark.operators.uniqueness import (
+        dup_rate_by_group,
     )
     from pyspark_data_quality_spark.pipelines.segment_health import (
         segment_health_report,
@@ -372,14 +378,17 @@ def test_segment_health_constituent_parity(spark):
                 None if i % 3 == 0 else f"v{i % 5}",
                 None if i % 7 == 0 else float(i),
                 None if i % 11 == 0 else t0 + (i % 13) * hour,
+                # repeated keys, and NULL keys (several per segment)
+                None if i % 5 == 0 else i % 9,
             )
         )
     cur = spark.createDataFrame(
-        rows, "seg string, payload string, v double, ts timestamp"
+        rows, "seg string, payload string, v double, ts timestamp, k int"
     )
 
     rep = segment_health_report(
-        cur, "seg", completeness_cols=["payload", "v"], ts_col="ts"
+        cur, "seg", completeness_cols=["payload", "v"], ts_col="ts",
+        unique_keys=["k", "payload"],
     ).collect()
 
     comp = {
@@ -406,6 +415,18 @@ def test_segment_health_constituent_parity(spark):
         assert got_comp[(g, c)] == lift, (g, c)
     for g, lag in fresh.items():
         assert got_fresh[g] == lag, g
+
+    dup = {
+        r["seg"]: r["dup_ratio"]
+        for r in dup_rate_by_group(cur, ["k", "payload"], ["seg"]).collect()
+    }
+    got_dup = {
+        r["segment"]: r["value"] for r in rep if r["check"] == "uniqueness"
+    }
+    assert len(got_dup) == len(dup) == 4
+    assert any(v > 0 for v in dup.values())  # the keys do repeat
+    for g, rate in dup.items():
+        assert got_dup[g] == rate, g
 
 
 def test_corpus_report_card(spark, sf_dir):

@@ -152,8 +152,11 @@ _COMPOSITE_BUDGETS = {
     # here means someone made schema introspection read data
     "dq_schema_report": (1, 1),      # audited r15: 0 / 0
     # r15 md5-oracle face: shingle/sig Arrow stages ride the pushed
-    # doc_id<500 scan; ONE bucket shuffle + pair-dedup agg
-    "dq_minhash_pairs": (4, 2),      # audited r15: 3 / 1
+    # doc_id<500 scan; ONE bucket shuffle + pair-dedup agg. r17 re-audit
+    # after the ids-only band shuffle: still 3 / 1 — the two verify
+    # joins back to the pinned signature frame plan as broadcasts at
+    # this bounded size, adding no exchange, so the ceiling stays
+    "dq_minhash_pairs": (4, 2),      # audited r17: 3 / 1
     # r15 md5-oracle faces for the remaining approximate ops: each is
     # ONE bucket/candidate shuffle (+dedup agg) over a pushed bounded
     # scan; ivf is a broadcast probe join with zero corpus shuffle
@@ -209,3 +212,106 @@ def test_kernel_not_duplicated_around_pushed_filters(spark, docs):
     )
     arrow_nodes = set(re.findall(r"\((\d+)\) ArrowEvalPython", plan))
     assert len(arrow_nodes) == 1, plan
+
+
+def _nodes(plan):
+    """Every node of a JVM plan tree, pre-order (does not descend into
+    cached relations: their plans are not children)."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        it = node.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+    return out
+
+
+def _has_array(schema_json: str) -> bool:
+    import json
+
+    def walk(t):
+        if isinstance(t, dict):
+            return t.get("type") == "array" or any(
+                walk(v) for v in t.values()
+            )
+        if isinstance(t, list):
+            return any(walk(v) for v in t)
+        return False
+
+    return walk(json.loads(schema_json))
+
+
+def test_minhash_band_shuffle_carries_ids_only(spark, docs):
+    """The (_band, _key) bucket exchange and the pair-dedup exchange see
+    ids only: no array column (hash set, shingle set) reaches either, so
+    the band shuffle costs ~18 B per (document, band), and the pair dedup
+    is a HashAggregate, not a SortAggregate dragging two arrays per
+    pair. The sets join back to the pinned signature frame instead."""
+    from pyspark_data_quality_spark.operators.dedup import (
+        minhash_near_dup_pairs,
+    )
+
+    for impl in ("np", "expr"):
+        pairs = minhash_near_dup_pairs(
+            docs.limit(200), "text", "doc_id", num_hashes=32, num_bands=8,
+            shingle="word", impl=impl,
+        )
+        plan = pairs._jdf.queryExecution().executedPlan().executedPlan()
+        exchanges = {}
+        for node in _nodes(plan):
+            if node.nodeName() != "Exchange":
+                continue
+            part = node.outputPartitioning().toString()
+            for key in ("_band", "id_a"):
+                if f"hashpartitioning({key}" in part:
+                    exchanges[key] = node
+        assert set(exchanges) == {"_band", "id_a"}, (impl, plan.toString())
+        for key, ex in exchanges.items():
+            # below the exchange: the map-side partial aggregate, then
+            # the rows it combines — neither may carry an array
+            feed = ex.child()
+            assert "Aggregate" in feed.nodeName(), (impl, key, feed.nodeName())
+            if key == "id_a":
+                assert feed.nodeName() == "HashAggregate", (impl, feed.nodeName())
+            assert not _has_array(feed.child().schema().json()), (
+                impl, key, feed.child().schema().simpleString()
+            )
+        spark.catalog.clearCache()
+
+
+def test_curation_drop_list_union_plans_broadcast(spark, docs):
+    """Without CBO a join's static size estimate multiplies its sides, so
+    a drop list derived from the verified pairs would carry a terabyte
+    estimate and plan the final annotate join as a sort-merge join that
+    shuffles the whole annotated corpus. The near-dup list is a semi join
+    of the corpus ids (estimate: its left side), so the drop-list union
+    stays under the broadcast threshold and the annotate join plans as a
+    BroadcastHashJoin before any pinned list has been materialized."""
+    from pyspark_data_quality_spark.pipelines.curation import curate_corpus
+
+    spark.catalog.clearCache()
+    curated = curate_corpus(docs, text_col="text", id_col="doc_id")
+    qe = curated._jdf.queryExecution()
+    threshold = spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+
+    def has_union(node):
+        return any(n.nodeName() == "Union" for n in _nodes(node))
+
+    unions = [
+        n.right() for n in _nodes(qe.optimizedPlan())
+        if n.nodeName() == "Join" and has_union(n.right())
+    ]
+    assert len(unions) == 1, qe.optimizedPlan().toString()
+    size = int(str(unions[0].stats().sizeInBytes()))
+    assert 0 < size <= threshold, size
+
+    joins = [
+        n for n in _nodes(qe.executedPlan().executedPlan())
+        if "Join" in n.nodeName() and has_union(n.right())
+    ]
+    assert [j.nodeName() for j in joins] == ["BroadcastHashJoin"], [
+        j.simpleString(200) for j in joins
+    ]
+    spark.catalog.clearCache()

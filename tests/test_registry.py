@@ -239,6 +239,59 @@ def test_prev_bench_fills_from_full_artifact(tmp_path):
     assert label == "BENCH_r13.json" and "dq_dropped_fast" not in q
 
 
+def test_bench_full_artifact_is_per_cpus(tmp_path):
+    """An 8-core full run must neither overwrite the 32-core map nor
+    serve as the 32-core baseline (and vice versa): the artifact name
+    carries a non-default core count, the artifact is stamped with it,
+    and _prev_bench matches cpus as well as round and sf."""
+    from bench import _bench_full_name, _prev_bench, _write_full_artifact
+
+    (tmp_path / "docs").mkdir()
+    for name, cpus, t in (("BENCH_r16.json", 32, 2.0),
+                          ("BENCH_r16_c8.json", 8, 1.0)):
+        (tmp_path / name).write_text(json.dumps({
+            "cpus": cpus, "sf": 0.1,
+            "parsed": {"sf": 0.1, "queries": {"slow": t}},
+        }))
+    p32 = _write_full_artifact(str(tmp_path), 0.1, 32,
+                               {"dq_slow": 2.01, "dq_fast": 0.32}, "all")
+    p8 = _write_full_artifact(str(tmp_path), 0.1, 8,
+                              {"dq_slow": 1.01, "dq_fast": 0.18}, "all")
+    assert p32 == str(tmp_path / "docs" / "bench_full_sf0.1.json")
+    assert p8 == str(tmp_path / "docs" / _bench_full_name(0.1, 8))
+    assert p8.endswith("bench_full_sf0.1_c8.json")
+    art32 = json.loads(open(p32).read())
+    assert art32["cpus"] == 32 and art32["queries"]["dq_fast"] == 0.32
+    assert json.loads(open(p8).read())["cpus"] == 8
+    # a live run tags the round it measures (latest BENCH round + 1);
+    # retag both maps as the r16 runs so they line up with BENCH_r16*
+    for p in (p32, p8):
+        art = json.loads(open(p).read())
+        assert art["round"] == 17
+        art["round"] = 16
+        open(p, "w").write(json.dumps(art))
+
+    label, q = _prev_bench(str(tmp_path), 0.1)
+    assert label == "BENCH_r16.json+docs/bench_full_sf0.1.json"
+    assert q == {"dq_slow": 2.0, "dq_fast": 0.32}
+    label, q = _prev_bench(str(tmp_path), 0.1, 8)
+    assert label == "BENCH_r16_c8.json+docs/bench_full_sf0.1_c8.json"
+    assert q == {"dq_slow": 1.0, "dq_fast": 0.18}
+    # a core count with no recorded run has no baseline at all
+    assert _prev_bench(str(tmp_path), 0.1, 4) is None
+
+    # a legacy map without a cpus stamp was a 32-core run: it fills the
+    # 32-core baseline only
+    legacy = json.loads(open(p32).read())
+    del legacy["cpus"]
+    open(p32, "w").write(json.dumps(legacy))
+    assert _prev_bench(str(tmp_path), 0.1)[1]["dq_fast"] == 0.32
+    art8 = json.loads(open(p8).read())
+    art8["cpus"] = 32
+    open(p8, "w").write(json.dumps(art8))
+    assert "dq_fast" not in _prev_bench(str(tmp_path), 0.1, 8)[1]
+
+
 def test_ann_recall_entry_meets_floors(spark, sf_dir):
     """dq_ann_recall is the driver-visible ANN quality gate; every
     configured (method, config) row must clear its documented floor on

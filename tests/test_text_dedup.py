@@ -2206,3 +2206,113 @@ def test_minhash_injected_signature_width_guard(spark):
         }
 
     assert pairs(signatures=sig32) == pairs() == {(0, 1)}
+
+
+def _payload_minhash_pairs(base, verify_col, *, num_bands, rows_per_band,
+                           threshold, max_bucket_size):
+    """The payload-carrying formulation the ids-only operator replaced:
+    every member's set rides the (band, key) shuffle and the pair
+    dedup, and the verify reads the payloads with no join back."""
+    from pyspark_data_quality_spark.operators.dedup import (
+        _bands,
+        _bucket_pairs,
+    )
+
+    buckets = base.select(
+        "_id",
+        F.col(verify_col).alias("_vp"),
+        F.explode(_bands(F.col("_sig"), num_bands, rows_per_band)).alias("_b"),
+    ).select("_id", "_vp", F.col("_b.band").alias("_band"),
+             F.col("_b.key").alias("_key"))
+    cands = _bucket_pairs(buckets, ["_band", "_key"], payload_col="_vp",
+                          max_bucket_size=max_bucket_size)
+    return (
+        cands.withColumn("jaccard",
+                         F.round(jaccard(F.col("_pa"), F.col("_pb")), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+@pytest.fixture(scope="module")
+def lsh_corpus(spark):
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(40)]
+    texts = [" ".join(rng.choice(vocab) for _ in range(rng.randint(8, 30)))
+             for _ in range(24)]
+    rows = list(enumerate(texts))
+    for j, i in enumerate(range(0, 12, 2)):  # near copies: one word swapped
+        words = texts[i].split()
+        words[len(words) // 2] = f"salt{j}"
+        rows.append((100 + j, " ".join(words)))
+    rows += [(200 + j, texts[1]) for j in range(5)]  # a 6-member dup cluster
+    rows += [(300, None), (301, ""), (302, "w1 w2")]  # NULL, empty, short
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize(
+    "impl,shingle,family,inject,cap",
+    [
+        ("np", "char", "blake2b", False, 1000),
+        ("np", "word", "md5", False, 1000),
+        ("expr", "word", "blake2b", False, 1000),
+        ("expr", "char", "blake2b", False, 1000),
+        ("np", "word", "blake2b", True, 1000),
+        ("np", "word", "blake2b", False, 3),
+    ],
+    ids=["np-blake2b-char", "np-md5-word", "expr-word", "expr-char",
+         "injected-signatures", "hot-bucket-cap"],
+)
+def test_minhash_ids_only_equals_payload_formulation(
+    spark, lsh_corpus, impl, shingle, family, inject, cap
+):
+    """Differential: the ids-only band shuffle + verify join-back returns
+    exactly the (id_a, id_b, jaccard) rows of the payload formulation,
+    order ignored, across kernels, hash families, an injected signature
+    frame, a bucket cap that drops the hot cluster's buckets, and
+    NULL/empty texts."""
+    from pyspark_data_quality_spark.operators.dedup import (
+        minhash_signature,
+        minhash_signatures,
+    )
+
+    nh, nb, thr, seed = 32, 8, 0.5, 11
+    df = lsh_corpus
+    if impl == "np":
+        base = minhash_signatures(df, "text", "doc_id", num_hashes=nh,
+                                  shingle=shingle, shingle_n=3, seed=seed,
+                                  hash_family=family)
+        verify_col = "_h"
+    else:
+        sh = (word_shingles("text", 3) if shingle == "word"
+              else char_ngrams("text", 3))
+        base = (
+            df.select(F.col("doc_id").alias("_id"), sh.alias("_shingles"))
+            .withColumn("_sig", minhash_signature(F.col("_shingles"), nh, seed))
+            .filter(F.col("_sig").isNotNull())
+        )
+        verify_col = "_shingles"
+    want = sorted(map(tuple, _payload_minhash_pairs(
+        base, verify_col, num_bands=nb, rows_per_band=nh // nb,
+        threshold=thr, max_bucket_size=cap,
+    ).collect()))
+    call = dict(num_hashes=nh, num_bands=nb, shingle=shingle, shingle_n=3,
+                threshold=thr, seed=seed, impl=impl, hash_family=family,
+                max_bucket_size=cap)
+    if inject:
+        call["signatures"] = base
+    got = sorted(map(tuple, minhash_near_dup_pairs(
+        df, "text", "doc_id", **call).collect()))
+    spark.catalog.clearCache()
+    assert got == want
+    ids = {i for p in got for i in p[:2]}
+    assert not ids & {300, 301, 302}  # NULL/empty/short texts never pair
+    near = [p for p in got if p[1] in range(100, 106)]
+    assert len(near) >= 4  # the one-word near copies pair
+    # the 6-member exact cluster shares all 8 buckets: its 15 pairs all
+    # surface, unless the cap (3 < 6) drops every one of its buckets
+    cluster = {1, 200, 201, 202, 203, 204}
+    n_cluster = sum(1 for a, b, _ in got if a in cluster and b in cluster)
+    assert n_cluster == (0 if cap == 3 else 15)
