@@ -19,10 +19,11 @@ BASELINE.md prose:
   JSON carries ``{"parsed": {"queries": {...}}}`` or a bare
   ``{"queries": {...}}``). Suite-line maps are 1-decimal and truncated
   past the driver's ~1900-char budget; when a sibling
-  ``docs/bench_full_sf{sf}.json`` carries the same round tag, its
-  full-precision map fills the truncated tail (the BENCH file stays
-  authoritative for shared keys — same contract as bench.py's
-  _prev_bench).
+  ``docs/bench_full_sf{sf}.json`` (``..._c{cpus}.json`` for a
+  non-32-core run, named as bench.py's _bench_full_name does) carries
+  the same round tag, sf and core count, its full-precision map fills
+  the truncated tail (the BENCH file stays authoritative for shared
+  keys — same contract as bench.py's _prev_bench).
 - ``--touched``: newline-separated entry names (dq_ prefix optional)
   the round's diff touched; everything else is the control group.
 
@@ -48,8 +49,22 @@ def _norm(name: str) -> str:
     return name if name.startswith("dq_") else f"dq_{name}"
 
 
-def _load_queries(path: str) -> tuple[dict[str, float], float | None, int | None]:
-    """(queries, sf, round) from a BENCH_r{N}.json / bench_full /
+#: bench.py's standard core count; artifacts without a ``cpus`` stamp
+#: were measured at it
+_DEFAULT_CPUS = 32
+
+
+def _bench_full_name(sf: float, cpus: int) -> str:
+    """bench.py's full-map artifact name: a non-default core count is
+    suffixed (sf0.1, 8 cpus -> 'bench_full_sf0.1_c8.json')."""
+    suffix = "" if cpus == _DEFAULT_CPUS else f"_c{cpus}"
+    return f"bench_full_sf{sf:g}{suffix}.json"
+
+
+def _load_queries(
+    path: str,
+) -> tuple[dict[str, float], float | None, int | None, int]:
+    """(queries, sf, round, cpus) from a BENCH_r{N}.json / bench_full /
     raw-suite-line file; query keys normalized to the dq_ prefix."""
     with open(path) as f:
         raw = json.load(f)
@@ -58,27 +73,35 @@ def _load_queries(path: str) -> tuple[dict[str, float], float | None, int | None
     sf = data.get("sf")
     rnd = data.get("round")
     if rnd is None:
-        m = re.search(r"BENCH_r(\d+)\.json$", os.path.basename(path))
+        m = re.search(
+            r"BENCH_r(\d+)(?:_c\d+)?\.json$", os.path.basename(path)
+        )
         if m:
             rnd = int(m.group(1))
-    return ({_norm(k): float(v) for k, v in queries.items()}, sf, rnd)
+    cpus = int(raw.get("cpus", _DEFAULT_CPUS))
+    return ({_norm(k): float(v) for k, v in queries.items()}, sf, rnd, cpus)
 
 
 def _fill_from_full(
     queries: dict[str, float], sf: float | None, rnd: int | None,
-    repo_dir: str,
+    repo_dir: str, cpus: int = _DEFAULT_CPUS,
 ) -> dict[str, float]:
-    """Restore the driver-truncated tail from docs/bench_full_sf{sf}.json
-    when the round tags line up; shared keys keep the BENCH values."""
+    """Restore the driver-truncated tail from the docs/ full map of the
+    same sf and core count when its round, sf and cpus tags line up;
+    shared keys keep the BENCH values."""
     if sf is None or rnd is None:
         return queries
-    path = os.path.join(repo_dir, "docs", f"bench_full_sf{sf:g}.json")
+    path = os.path.join(repo_dir, "docs", _bench_full_name(sf, cpus))
     try:
         with open(path) as f:
             full = json.load(f)
     except (OSError, ValueError):
         return queries
-    if full.get("round") != rnd or full.get("sf") != sf:
+    if (
+        full.get("round") != rnd
+        or full.get("sf") != sf
+        or full.get("cpus", _DEFAULT_CPUS) != cpus
+    ):
         return queries
     filled = {_norm(k): float(v) for k, v in full.get("queries", {}).items()}
     filled.update(queries)
@@ -129,10 +152,10 @@ def main() -> None:
     args = ap.parse_args()
 
     repo_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    now_q, now_sf, now_r = _load_queries(args.now)
-    prev_q, prev_sf, prev_r = _load_queries(args.prev)
-    now_q = _fill_from_full(now_q, now_sf, now_r, repo_dir)
-    prev_q = _fill_from_full(prev_q, prev_sf, prev_r, repo_dir)
+    now_q, now_sf, now_r, now_c = _load_queries(args.now)
+    prev_q, prev_sf, prev_r, prev_c = _load_queries(args.prev)
+    now_q = _fill_from_full(now_q, now_sf, now_r, repo_dir, now_c)
+    prev_q = _fill_from_full(prev_q, prev_sf, prev_r, repo_dir, prev_c)
     if now_sf is not None and prev_sf is not None and now_sf != prev_sf:
         print(f"ERROR: sf mismatch now={now_sf} prev={prev_sf}",
               file=sys.stderr)

@@ -27,3 +27,40 @@ def test_open_movers_flags_both_directions():
     assert ambient_adjust.open_movers(
         {"x": {"speedup_adjusted": 1.3}}, {"x": 2.6}, {"x": 2.0}, ["x"], 0.75
     ) == []
+
+
+def test_fill_from_full_picks_the_core_count_map(tmp_path):
+    import json
+
+    docs = tmp_path / "docs"
+    docs.mkdir()
+    # no cpus stamp: measured at the standard 32 cores
+    (docs / "bench_full_sf0.1.json").write_text(json.dumps({
+        "round": 16, "sf": 0.1, "queries": {"dq_a": 9.0, "dq_b": 32.0},
+    }))
+    (docs / "bench_full_sf0.1_c8.json").write_text(json.dumps({
+        "round": 16, "sf": 0.1, "cpus": 8,
+        "queries": {"dq_a": 9.0, "dq_b": 8.0},
+    }))
+    bench = tmp_path / "BENCH_r16_c8.json"
+    bench.write_text(json.dumps({
+        "cpus": 8, "parsed": {"sf": 0.1, "queries": {"a": 1.0}},
+    }))
+    queries, sf, rnd, cpus = ambient_adjust._load_queries(str(bench))
+    assert (queries, sf, rnd, cpus) == ({"dq_a": 1.0}, 0.1, 16, 8)
+
+    def fill(c):
+        return ambient_adjust._fill_from_full(
+            {"dq_a": 1.0}, 0.1, 16, str(tmp_path), c
+        )
+
+    # the BENCH value stays authoritative; the tail comes from the map
+    # measured at the same core count
+    assert fill(8) == {"dq_a": 1.0, "dq_b": 8.0}
+    assert fill(32) == {"dq_a": 1.0, "dq_b": 32.0}
+    assert fill(16) == {"dq_a": 1.0}  # no map at that core count
+    # a map whose cpus stamp disagrees with its name is not used
+    (docs / "bench_full_sf0.1_c8.json").write_text(json.dumps({
+        "round": 16, "sf": 0.1, "queries": {"dq_b": 8.0},
+    }))
+    assert fill(8) == {"dq_a": 1.0}

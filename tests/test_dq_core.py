@@ -155,8 +155,8 @@ def test_env_config(spark, monkeypatch):
 
 
 def test_unique_rule_hll_default(spark):
-    # default estimator is HLL (approx_count_distinct): scale-safe, no
-    # Expand; value must land within the configured rsd of the exact ratio
+    # default estimator is an HLL sketch: scale-safe, no Expand; value
+    # must land within the configured rsd of the exact ratio
     from pyspark_data_quality_spark.operators import UniqueRule
 
     df = spark.range(20000).selectExpr("id % 5000 AS k")
@@ -174,6 +174,68 @@ def test_unique_rule_hll_default(spark):
         .get_metric_results().collect()[0]
     )
     assert m_exact["value_double"] == exact
+
+
+def test_unique_rule_sketch_matches_exact(spark):
+    """The HLL-sketch path counts what COUNT(DISTINCT a, b, c) counts:
+    scoped multi-column keys where out-of-scope rows and NULL-bearing
+    keys are skipped, a double key part whose 0.0 / -0.0 and NaN rows
+    collapse as in grouping, real duplicates, at ~10 / 5,000 / 200,000
+    distinct keys. Exact equality while the sketch is still a coupon
+    list; within 3 x rsd once it is in HLL mode."""
+    from pyspark_data_quality_spark.functions.expr import hll_lg_k
+
+    rsd = 0.01
+    df = spark.range(400_000).selectExpr(
+        "id % 10 AS k10",
+        "id % 5000 AS k5000",
+        "id % 200000 AS k200000",
+        # 4 raw values, 3 after -0.0 -> 0.0: the k10 keys vary over
+        # them, the larger keys are duplicated with the same value
+        "CASE (id DIV 10) % 4 WHEN 0 THEN 0.0D WHEN 1 THEN -0.0D "
+        "WHEN 2 THEN CAST('NaN' AS DOUBLE) ELSE 1.5D END AS d",
+        "CASE WHEN id % 13 = 0 THEN NULL ELSE 'x' END AS s",
+        "id % 11 <> 0 AS in_scope",
+    )
+    mgr = DQManager(spark).set_data(df)
+    for n in (10, 5000, 200_000):
+        for exact in (False, True):
+            mgr.add_rule(
+                UniqueRule(
+                    columns=[f"k{n}", "d", "s"], condition="in_scope",
+                    exact=exact, rsd=rsd,
+                    name=f"u{n}_{'exact' if exact else 'approx'}",
+                )
+            )
+    rows = mgr.run().get_metric_results().collect()
+    got = {
+        (r["column"], r["extra_info"]["estimator"] == "exact"): r
+        for r in rows
+    }
+    for n in (10, 5000, 200_000):
+        col = f"k{n},d,s"
+        approx, exact = got[(col, False)], got[(col, True)]
+        assert approx["extra_info"]["total"] == exact["extra_info"]["total"]
+        a = int(approx["extra_info"]["distinct"])
+        e = int(exact["extra_info"]["distinct"])
+        if n == 10:
+            assert e == 30  # 10 keys x {0.0, NaN, 1.5}
+            assert a == e
+        else:
+            # a few keys lose every row to the scope or a NULL part
+            assert 0.95 * n < e <= n
+            assert abs(a - e) <= 3 * rsd * e
+        assert approx["extra_info"]["estimator"] == (
+            f"hll_sketch(lgk=14,rsd={rsd})"
+        )
+
+    assert [hll_lg_k(r) for r in (0.3, 0.05, 0.02, 0.01, 0.001)] == [
+        4, 9, 12, 14, 21
+    ]
+    for bad in (0.5, 0.0005, 0.0, float("nan")):
+        with pytest.raises(ValueError, match="lgConfigK"):
+            UniqueRule(columns=["k10"], rsd=bad)
+    UniqueRule(columns=["k10"], rsd=0.5, exact=True)  # rsd unused
 
 
 def test_rules_from_config_end_to_end(spark):

@@ -315,3 +315,34 @@ def test_curation_drop_list_union_plans_broadcast(spark, docs):
         j.simpleString(200) for j in joins
     ]
     spark.catalog.clearCache()
+
+
+def test_distinct_keys_plan_hll_sketch_not_hll_plus_plus(spark, orders):
+    """Approximate distinct counting compiles to one DataSketches
+    ``hll_sketch_agg`` buffer, never HLL++: at rsd 0.01 HLL++ carries
+    1,639 long buffer attributes and costs a fixed ~0.3 s of CPU per map
+    task. Guards the fused metrics pass of a UniqueRule (next to the
+    other rules' aggregates) and candidate_keys' approx plan."""
+    from pyspark_data_quality_spark.operators import (
+        CompletenessColRatioRule,
+        UniqueRule,
+    )
+    from pyspark_data_quality_spark.operators.schema import candidate_keys
+    from pyspark_data_quality_spark.plans.analysis import AnalysisRunner
+
+    rules = [
+        CompletenessColRatioRule(columns=["o_custkey"], threshold=0.9),
+        UniqueRule(
+            columns=["o_custkey", "o_orderdate"],
+            condition="o_orderstatus = 'F'",
+        ),
+    ]
+    fused = orders.agg(*AnalysisRunner.compile_aggregates(orders, rules))
+    keys = candidate_keys(
+        orders, ["o_orderkey", "o_custkey", "o_orderstatus"], max_width=2
+    )
+    for name, df in (("fused", fused), ("candidate_keys", keys)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "hll_sketch_agg" in plan, (name, plan)
+        for banned in ("HyperLogLogPlusPlus", "approx_count_distinct"):
+            assert banned not in plan, (name, banned, plan[:2000])
