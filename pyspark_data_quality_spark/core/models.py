@@ -79,7 +79,7 @@ class MetricResult:
     extra_info: dict[str, str] = field(default_factory=dict)
 
     def as_row(self) -> tuple:
-        """Tuple in METRIC_SCHEMA field order (for createDataFrame)."""
+        """Tuple in METRIC_SCHEMA field order (for ``plans/local.local_frame``)."""
         return (
             self.dataset,
             self.run_id,

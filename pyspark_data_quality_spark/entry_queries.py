@@ -35,6 +35,7 @@ from .operators import (
 )
 from .operators.dedup import exact_dedup
 from .operators.text import quality_summary, text_profile
+from .plans.local import local_frame
 from .sources.tables import load_table
 
 ENTRY_QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -933,7 +934,8 @@ def dq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=len(configs)) as pool:
         rows = list(pool.map(_one, configs))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "method string, config string, n_exact long, n_hit long, "
         "recall double, floor double, meets_floor boolean",
@@ -1162,7 +1164,8 @@ def dq_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
          )),
     ]
     rows = _eval_configs_concurrently(configs, prec_floor)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "method string, config string, n_exact long, n_approx long, "
         "n_hit long, precision double, recall double, recall_floor double, "
@@ -1284,7 +1287,8 @@ def dq_curation_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         0.9,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "method string, config string, n_exact long, n_approx long, "
         "n_hit long, precision double, recall double, recall_floor double, "
@@ -2627,7 +2631,8 @@ def dq_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.range_join import range_join
 
     events = load_table(spark, "events", sf_dir).select("event_id", "value")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [(0.0, 2.0, "low"), (2.0, 5.0, "mid"), (5.0, 10.5, "high")],
         "lo double, hi double, band string",
     )
@@ -4937,7 +4942,8 @@ def dq_semantic_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
          ).select("id_a", "id_b")),
     ]
     rows = _eval_configs_concurrently(configs, prec_floor)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "method string, config string, n_exact long, n_approx long, "
         "n_hit long, precision double, recall double, recall_floor double, "
@@ -10386,7 +10392,8 @@ def dq_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     sl = orders.withColumn(
         "_g", F.ntile(16).over(_W.orderBy(F.col("a")))
     )
-    glob = spark.createDataFrame(
+    glob = local_frame(
+        spark,
         [(ext["mxa"] - ext["mna"], ext["mxb"] - ext["mnb"])],
         "_ga double, _gb double",
     )

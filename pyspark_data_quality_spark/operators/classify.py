@@ -39,6 +39,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.text import tokenize
+from ..plans.local import local_frame
 
 __all__ = [
     "NBModel",
@@ -492,8 +493,10 @@ def crossval_nb(
         model.unpersist()
         n, c = stats["n_docs"], stats["n_correct"] or 0
         out.append((i, n, c, round(c / n, 6) if n else None))
-    return df.sparkSession.createDataFrame(
-        out, "fold int, n_docs long, n_correct long, accuracy double"
+    return local_frame(
+        df.sparkSession,
+        out,
+        "fold int, n_docs long, n_correct long, accuracy double",
     )
 
 
@@ -598,8 +601,8 @@ def calibration_report(
     spark = df.sparkSession
     rows = [(r["bin"], r["n"], r["_ms"], r["_pr"])
             for r in per_bin.collect()]
-    local = spark.createDataFrame(
-        rows, "bin long, n long, _ms double, _pr double"
+    local = local_frame(
+        spark, rows, "bin long, n long, _ms double, _pr double"
     )
     binned = local.select(
         "bin", "n", "_ms", "_pr",

@@ -31,6 +31,7 @@ from ..core.enums import Dimension
 from ..core.errors import RuleConfigurationError
 from ..core.models import MetricResult
 from ..plans.compile import or_fold, ratio_agg, require_columns
+from ..plans.local import local_frame
 from .base import Rule, RunContext
 
 
@@ -866,14 +867,17 @@ def fd_confidence(
             round_to,
         ).alias("confidence"),
     )
-    spine = df.sparkSession.createDataFrame(
+    spine = local_frame(
+        df.sparkSession,
         [(i, a, b) for i, (a, b) in enumerate(pairs)],
         "_pid int, determinant string, dependent string",
     )
     # broadcast the RIGHT side: a left-outer BroadcastHashJoin can only
     # build right, so the old hint on the spine was unusable and the
     # planner fell back to a SortMergeJoin of two one-row-per-pair
-    # frames (r15-opt). per_pair is <= len(pairs) aggregated rows.
+    # frames (r15-opt). per_pair is <= len(pairs) aggregated rows, but
+    # its size estimate is its input's (data-scale), so it needs the
+    # hint; the spine is a local relation with exact stats.
     return (
         spine
         .join(F.broadcast(per_pair), "_pid", "left")

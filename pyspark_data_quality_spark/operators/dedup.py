@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 import threading
 
 from ..functions.expr import let_bind as _let
+from ..plans.local import local_frame
 
 from ..functions.text import (
     char_ngrams,
@@ -1709,8 +1710,8 @@ def near_dup_eval(
         if prec is not None and rec is not None and (prec + rec) > 0
         else None
     )
-    spark = approx_pairs.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        approx_pairs.sparkSession,
         [(
             n_a, n_e, n_h,
             round(prec, round_to) if prec is not None else None,

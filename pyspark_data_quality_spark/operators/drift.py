@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.local import local_frame
+
 DEFAULT_EPS = 1e-6
 
 
@@ -511,10 +513,10 @@ def wasserstein_1d(
             persist,
         )
     else:
-        from pyspark.sql import Row
-
-        b = cur.sparkSession.createDataFrame(
-            [Row(_blo=float(lo), _bhi=float(hi))]
+        b = local_frame(
+            cur.sparkSession,
+            [(float(lo), float(hi))],
+            "_blo double, _bhi double",
         )
     h_cur = _hist_with_bounds(cur, col, bins, b)
     h_ref = _hist_with_bounds(ref, col, bins, b)
@@ -1491,12 +1493,15 @@ def drift_screen(
     # and would silently vanish from the report — exactly the column a
     # drift monitor most needs to surface. Re-seat it with zero counts
     # so it reports (ks 0, psi 0, p 1, drifted False) instead.
-    spine = cur.sparkSession.createDataFrame(
-        [(c,) for c in columns], "column string"
+    spine = local_frame(
+        cur.sparkSession, [(c,) for c in columns], "column string"
     )
-    # broadcast the aggregated side (one row per column): the planner
-    # can't size a local-relation spine and planned a SortMergeJoin —
-    # 2 exchanges + 2 sorts for a len(columns)-row join (r15-opt)
+    # broadcast the aggregated side (one row per column): a left-outer
+    # join can only build its RIGHT side, and an aggregate's size
+    # estimate is its input's (data-scale), so the planner would pick
+    # a SortMergeJoin — 2 exchanges + 2 sorts for a len(columns)-row
+    # join (r15-opt). The spine itself is a local relation with exact
+    # stats.
     per_col = spine.join(F.broadcast(per_col), "column", "left").select(
         "column",
         F.coalesce("n_cur", F.lit(0)).cast("long").alias("n_cur"),

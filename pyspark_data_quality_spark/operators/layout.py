@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.local import local_frame
+
 
 def _list_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """(absolute uri, bytes) for every data file under ``path``,
@@ -107,7 +109,8 @@ def file_layout_report(
         )
 
     if row_source == "footer":
-        uris = spark.createDataFrame(
+        uris = local_frame(
+            spark,
             [(u, u.removeprefix("file:")) for u, _ in listing],
             "_uri string, _local string",
         )
@@ -129,7 +132,8 @@ def file_layout_report(
     rows = rows.withColumn(
         "file", F.element_at(F.split(F.col("_uri"), "/"), -1)
     )
-    sizes = spark.createDataFrame(
+    sizes = local_frame(
+        spark,
         [(uri.rsplit("/", 1)[-1], b) for uri, b in listing],
         "file string, bytes bigint",
     )

@@ -41,6 +41,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.local import local_frame
+
 __all__ = [
     "bottom_k_sketch",
     "corpus_overlap",
@@ -177,7 +179,8 @@ def overlap_from_sketches(
             "a sketch only supports comparison at k' <= its build k "
             "(re-sketch the corpora with the larger k instead)"
         )
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [_estimate(sa, sb, k)],
         "n_a_est double, n_b_est double, n_union_est double, "
         "jaccard_est double, intersection_est double, "
@@ -235,7 +238,8 @@ def joinability_report(
             )
             rows.append((a, b, d_a, d_b, jac, c_a))
             rows.append((b, a, d_b, d_a, jac, c_b))
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         rows,
         "a string, b string, n_a_est double, n_b_est double, "
         "jaccard_est double, containment double",

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 from pyspark.sql.window import Window
 
+from ..plans.local import local_frame
+
 #: Stats emitted for every profiled column.
 _COMMON_STATS = ("completeness", "distinct_count")
 #: Extra stats for numeric columns.
@@ -347,13 +349,14 @@ def value_histogram_stats(
     # Spine join: a column whose values are ALL null (or an empty input)
     # has no histogram rows at all — it must still report
     # distinct_count=0 (+ null quantiles), like the fused plan does.
-    spine = df.sparkSession.createDataFrame(
-        [(c,) for c in cols], "column string"
+    spine = local_frame(
+        df.sparkSession, [(c,) for c in cols], "column string"
     )
-    # broadcast: both sides are tiny (one row per column) but the
-    # planner can't size a local-relation spine vs an aggregate and
-    # planned a SortMergeJoin — 2 exchanges + 2 sorts for a
-    # len(columns)-row join (r15-opt)
+    # broadcast the aggregate: a left-outer join can only build its
+    # RIGHT side, and an aggregate's size estimate is its input's
+    # (data-scale), so the planner would pick a SortMergeJoin — 2
+    # exchanges + 2 sorts for a len(columns)-row join (r15-opt). The
+    # spine itself is a local relation with exact stats.
     per_col = spine.join(
         F.broadcast(h.groupBy("column").agg(*q_aggs)), "column", "left"
     )

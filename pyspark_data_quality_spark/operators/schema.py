@@ -4,8 +4,9 @@ The reference validated schemas only implicitly (``_pre_check`` raising on
 a missing rule column); real pipelines assert a full contract — every
 expected column present with the expected type, nothing unexpected
 appearing. This is driver-side metadata work (no Spark job reads data):
-the report is a ``createDataFrame`` over the comparison of
-``df.schema`` with the declared contract.
+the report is a driver-built local relation (``plans/local.py``) over
+the comparison of ``df.schema`` with the declared contract, so
+collecting it runs no Spark job either.
 
 Type names use Spark's ``simpleString`` vocabulary (``bigint``,
 ``double``, ``string``, ``timestamp`` …) — engine-neutral enough that the
@@ -16,6 +17,8 @@ mapping.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..plans.local import local_frame
 
 #: status values, in report order
 OK = "ok"
@@ -59,7 +62,7 @@ def schema_report(
             if name not in expected:
                 rows.append((name, None, atype, UNEXPECTED))
     rows.sort(key=lambda r: r[0])
-    return spark.createDataFrame(rows, _REPORT_SCHEMA)
+    return local_frame(spark, rows, _REPORT_SCHEMA)
 
 
 def schema_ok(df: DataFrame, expected: dict[str, str], **kw) -> bool:
@@ -301,7 +304,8 @@ def schema_compat(
             "full": back_ok and fwd_ok,
         }[mode]
         rows.append((name, o, n, change, ok))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "column string, old_type string, new_type string,"
         " change string, compatible boolean",

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .local import local_frame
+
 
 def salted_agg_counts(
     df: DataFrame,
@@ -127,8 +129,8 @@ def salted_join(
             tuple(k) if isinstance(k, (tuple, list)) else (k,)
             for k in hot_keys
         ]
-        hot = fact.sparkSession.createDataFrame(
-            rows, fact.select(*keys).schema
+        hot = local_frame(
+            fact.sparkSession, rows, fact.select(*keys).schema
         ).distinct()
     else:
         hot = (

@@ -18,7 +18,10 @@ Execution shape: the whole classification is ONE ``withColumn`` over a
 predicate array — Catalyst collapses it with downstream filters and pushes
 scan-level predicates into parquet. Uniqueness row-classification needs
 per-key multiplicities, i.e. one hash-partition shuffle per distinct key
-set (window count); rules that don't need it add zero shuffles.
+set (window count); rules that don't need it add zero shuffles. The
+metrics DataFrame is the fused aggregate's result re-emitted as a
+driver-built local relation (``plans/local.py``): collecting it runs no
+Spark job, and writing it runs no Python-worker task.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from pyspark.sql import functions as F
 from .core.models import METRIC_SCHEMA
 from .operators.base import MARKER_PREFIX, Rule, RunContext
 from .plans.analysis import AnalysisRunner
+from .plans.local import local_frame
 
 FAILED_RULES_COL = "failed_rules"
 
@@ -129,11 +133,13 @@ class ResultObj:
     def get_metric_results(self) -> DataFrame:
         """Typed metrics DataFrame (14-field METRIC_SCHEMA): ONE fused agg
         action for all rules (a few jobs under AQE: broadcast builds and
-        the shuffle stage run as their own jobs), then a tiny driver-side
-        createDataFrame."""
+        the shuffle stage run as their own jobs), then the metric rows as
+        a driver-built local relation (``plans/local.py``): collecting
+        it runs no Spark job, and no action on it runs a Python task."""
         metrics = AnalysisRunner.run(self.df, self.rules, self.ctx)
-        rows = [m.as_row() for m in metrics]
-        return self.spark.createDataFrame(rows, METRIC_SCHEMA)
+        return local_frame(
+            self.spark, [m.as_row() for m in metrics], METRIC_SCHEMA
+        )
 
     def get_deduplicated_df(self) -> DataFrame:
         """Reference-style `valid` for uniqueness rules: one survivor per

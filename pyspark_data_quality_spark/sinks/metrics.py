@@ -17,9 +17,16 @@ from ..operators.anomaly import metrics_regression
 
 
 def write_metrics(metrics: DataFrame, path: str) -> None:
-    """Append one run's metric rows, partitioned for pruned reads."""
+    """Append one run's metric rows, partitioned for pruned reads.
+
+    One run writes ONE file per ``(dataset, run_date)`` partition: a
+    metrics frame holds rules x columns rows, so it is coalesced to a
+    single task first — otherwise each slice of the driver-built frame
+    appends its own tiny file and the history's file count grows by the
+    core count per run."""
     (
         metrics.withColumn("run_date", F.to_date("run_ts"))
+        .coalesce(1)
         .write.mode("append")
         .partitionBy("dataset", "run_date")
         .parquet(path)

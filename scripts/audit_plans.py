@@ -14,6 +14,12 @@ Smells checked per plan:
   expected ONLY in the documented brute-force baselines);
 - more than one row-at-a-time ``BatchEvalPython`` (non-Arrow Python UDF
   — everything Python should be ``ArrowEvalPython`` / ``MapInPandas``);
+- any Python-fed ``Scan ExistingRDD`` (driver rows handed over by
+  ``spark.createDataFrame(<list>)``: every action on it runs Python-
+  worker tasks, and the planner sizes it at Long.MaxValue — driver-built
+  frames go through ``plans/local.local_frame`` as local relations).
+  Checkpointed frames also plan as ``Scan ExistingRDD`` but run no
+  Python, so only scans of an ``applySchemaToPythonRDD`` RDD count;
 - ``Exchange`` count (shuffles) for eyeballing round-over-round drift.
 """
 
@@ -63,7 +69,6 @@ NESTED_LOOP_OK = {
     "dq_vocab_richness",         # 1-row totals broadcast
     "dq_zipf",                   # 1-row totals broadcast
     "dq_diversity",              # 1-row totals broadcast
-    "dq_metrics_report",         # driver-built result table
     "dq_corpus_kl",              # 1-row group-total broadcast
     "dq_matched_sample",         # 1-row limiting-stratum scale broadcast
     "dq_emb_drift",              # two 1-row mean vectors joined
@@ -82,6 +87,20 @@ NESTED_LOOP_OK = {
     "dq_privacy",                # 1-row suppression totals x 1-row
                                  # surviving-class stats broadcast
 }
+
+
+def python_rdd_scans(plan: str) -> int:
+    """Distinct ``Scan ExistingRDD`` operators of a formatted plan whose
+    RDD came from Python rows (its details block names the
+    ``applySchemaToPythonRDD`` call site)."""
+    return len(
+        {
+            m.group(1)
+            for block in plan.split("\n\n")
+            if (m := re.match(r"\((\d+)\) Scan ExistingRDD", block.strip()))
+            and "applySchemaToPythonRDD" in block
+        }
+    )
 
 
 def main() -> None:
@@ -127,6 +146,7 @@ def main() -> None:
         pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
         nested = ops("BroadcastNestedLoopJoin|CartesianProduct")
         py_row = ops("BatchEvalPython")
+        py_rdd = python_rdd_scans(plan)
         py_arrow = ops("ArrowEvalPython|MapInPandas")
         wsc = len(set(re.findall(r"codegen id : (\d+)", plan)))
         flags = []
@@ -137,9 +157,13 @@ def main() -> None:
         if py_row:
             flags.append(f"ROW_PYTHON_UDF x{py_row}")
             violations.append(f"{name}: row-at-a-time Python UDF")
+        if py_rdd:
+            flags.append(f"PYTHON_RDD_SCAN x{py_rdd}")
+            violations.append(f"{name}: Python-fed RDD scan")
         print(
             f"{name:32s} shuffles={n_exchange:2d} scans={n_scan} "
-            f"pushed={pushed} arrow_udf={py_arrow} codegen={wsc:2d} "
+            f"pushed={pushed} arrow_udf={py_arrow} py_rdd={py_rdd} "
+            f"codegen={wsc:2d} "
             f"{' '.join(flags)}"
         )
     spark.stop()

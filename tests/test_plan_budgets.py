@@ -13,10 +13,17 @@ exchange), not exact counts — the goal is catching +5-shuffle
 regressions, not blocking a ±1 replan.
 """
 
+import importlib.util
 import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+
+_AUDIT = Path(__file__).resolve().parents[1] / "scripts" / "audit_plans.py"
+_spec = importlib.util.spec_from_file_location("audit_plans", _AUDIT)
+audit_plans = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(audit_plans)
 
 
 def _counts(df):
@@ -35,6 +42,8 @@ def _counts(df):
         "shuffles": ops("Exchange"),
         "scans": ops("Scan parquet"),
         "row_python": ops("BatchEvalPython"),
+        # driver rows that bypassed plans/local.local_frame
+        "python_rdd": audit_plans.python_rdd_scans(plan),
     }
 
 
@@ -68,6 +77,7 @@ def test_segment_health_shuffle_budget(spark, orders):
     c = _counts(report)
     assert c["shuffles"] <= 13, c  # audited r11: 12
     assert c["row_python"] == 0, c
+    assert c["python_rdd"] == 0, c
     # the prune+persist contract: each side contributes ONE logical scan
     # however many sections consume it
     assert c["scans"] <= 2, c
@@ -82,6 +92,7 @@ def test_corpus_card_shuffle_budget(spark, docs):
     c = _counts(card)
     assert c["shuffles"] <= 10, c  # audited r11: 9
     assert c["row_python"] == 0, c
+    assert c["python_rdd"] == 0, c
     assert card.count() > 0
     spark.catalog.clearCache()
 
@@ -93,6 +104,7 @@ def test_curation_shuffle_budget(spark, docs):
     c = _counts(curated)
     assert c["shuffles"] <= 17, c  # audited r11: 16
     assert c["row_python"] == 0, c
+    assert c["python_rdd"] == 0, c
     assert curated.count() >= 0
     spark.catalog.clearCache()
 
@@ -179,6 +191,7 @@ def test_composite_entry_plan_budgets(spark, sf_dir, name):
     assert c["shuffles"] <= max_shuffles, (name, c)
     assert c["scans"] <= max_scans, (name, c)
     assert c["row_python"] == 0, (name, c)
+    assert c["python_rdd"] == 0, (name, c)
     spark.catalog.clearCache()
 
 
@@ -346,3 +359,17 @@ def test_distinct_keys_plan_hll_sketch_not_hll_plus_plus(spark, orders):
         assert "hll_sketch_agg" in plan, (name, plan)
         for banned in ("HyperLogLogPlusPlus", "approx_count_distinct"):
             assert banned not in plan, (name, banned, plan[:2000])
+
+
+def test_python_rdd_gate_counts_python_rows_only(spark):
+    """The gate counts scans of driver rows handed to Spark through
+    Python (``createDataFrame(<list>)``), not checkpointed frames, which
+    plan as ``Scan ExistingRDD`` too but run no Python."""
+    from pyspark_data_quality_spark.plans.local import local_frame
+
+    py = spark.createDataFrame([(1, "a")], "k bigint, v string")
+    assert _counts(py)["python_rdd"] == 1
+    assert _counts(py.join(py.select("k"), "k"))["python_rdd"] == 2
+    local = local_frame(spark, [(1, "a")], "k bigint, v string")
+    assert _counts(local.join(local.select("k"), "k"))["python_rdd"] == 0
+    assert _counts(spark.range(3).localCheckpoint())["python_rdd"] == 0

@@ -28,6 +28,35 @@ def test_metrics_sink_roundtrip(spark, tmp_path):
     assert (tmp_path / "metrics" / "dataset=t1").exists()
 
 
+def test_write_metrics_adds_one_file_per_partition(spark, tmp_path):
+    """Each ``write_metrics`` call appends exactly ONE parquet file per
+    ``(dataset, run_date)`` partition, however many slices the metrics
+    frame has."""
+    from datetime import datetime, timezone
+
+    from pyspark_data_quality_spark.core.models import METRIC_SCHEMA, MetricResult
+    from pyspark_data_quality_spark.plans.local import local_frame
+
+    def day(d):
+        return datetime(2024, 5, d, 12, tzinfo=timezone.utc)
+
+    rows = [
+        MetricResult(dataset=ds, run_id="r", run_ts=day(d), metric_name=f"m{i}").as_row()
+        for ds in ("a", "b")
+        for d in (1, 2)
+        for i in range(5)
+    ]
+    metrics = local_frame(spark, rows, METRIC_SCHEMA).repartition(4)
+    path = tmp_path / "metrics"
+    parts = [f"dataset={ds}/run_date=2024-05-0{d}" for ds in "ab" for d in (1, 2)]
+    for n in (1, 2):
+        write_metrics(metrics, str(path))
+        assert {p: len(list((path / p).glob("*.parquet"))) for p in parts} == {
+            p: n for p in parts
+        }
+    assert read_metrics(spark, str(path)).count() == 2 * len(rows)
+
+
 def test_salted_agg_matches_direct(spark):
     rows = [(i % 3, float(i)) for i in range(300)]  # key 0/1/2, skewless base
     rows += [(0, 1.0)] * 200                        # make key 0 hot
