@@ -680,7 +680,7 @@ def dq_exact_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
                   THEN 1 ELSE 0 END AS bit
       FROM emb e CROSS JOIN pl
     ), keys AS (
-      -- MSB-first packing, matching hyperplane_bucket_keys' acc*2+bit
+      -- MSB-first packing, matching hyperplane_keys_seq_np's acc*2+bit
       SELECT vec_id, t,
              CAST(sum(bit * CAST(power(2, 7 - p) AS BIGINT)) AS BIGINT)
                AS k
@@ -712,12 +712,11 @@ def dq_embedding_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign-bit bucket keys, the bucket-size guard, ordered candidate
     pairs, and the exact-cosine verify at round-6 (the cosine alignment
     Spark-vs-DuckDB is separately certified by dq_exact_similarity on
-    the same 500-vector subset). ``impl='seq'`` (r15) keeps the
-    sign-bit dot products sequential like the oracle's accumulation —
-    bit-identical to the previous ``impl='expr'`` fold (asserted in
-    tests/test_text_dedup.py) but as one Arrow kernel instead of a
-    tables*planes*dim literal tree the driver re-optimized every run; a
-    sign disagreement would need |dot| under ~1e-13 — the same accepted
+    the same 500-vector subset). md5 planes select the dim-sequential
+    Arrow kernel (``hyperplane_keys_seq_np``, r15), which keeps the
+    sign-bit dot products sequential like the oracle's accumulation
+    (replayed in pure Python by tests/test_text_dedup.py); a sign
+    disagreement would need |dot| under ~1e-13 — the same accepted
     float-boundary hazard class as dq_mmd (BASELINE.md round 15).
     Banding recall (vs the exact pair set) stays measured in
     dq_sem_recall/dq_ann_recall; the rng scale path is the production
@@ -727,8 +726,7 @@ def dq_embedding_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb_double(spark, sf_dir).filter(F.col("vec_id") < 500)
     return embedding_near_dup_pairs(
         emb, "embedding", "vec_id", threshold=0.4, dim=64,
-        num_planes=8, num_tables=8, seed=42,
-        planes="md5", impl="seq",
+        num_planes=8, num_tables=8, seed=42, planes="md5",
     )
 
 
@@ -796,23 +794,22 @@ def dq_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query bucket keys, the hot-bucket guard, the distinct candidate
     probe join, the round-6 cosine scoring, and the deterministic
     (cosine DESC, neighbor_id) top-10 ranking. Corpus bounded at
-    vec_id<1000 and the plane budget trimmed to 4x8 (the interpreted
-    expr fold is ~tables*planes*dim ops/row — the 6x12 default
-    measured 5.5 s at sf0.1 for zero extra certification value; the
-    oracle replays whatever config runs); recall of the rng production
-    config vs brute force stays measured in dq_ann_recall."""
+    vec_id<1000 and the plane budget trimmed to 4x8 (the key kernel is
+    ~tables*planes*dim ops/row and the 6x12 default adds no
+    certification value; the oracle replays whatever config runs);
+    recall of the rng production config vs brute force stays measured
+    in dq_ann_recall."""
     from .operators.similarity import lsh_topk
 
     emb = _emb_double(spark, sf_dir).filter(F.col("vec_id") < 1000)
     queries_df = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    # impl='seq' (r15): sequential sign-bit dots, bit-exact vs the
-    # oracle's accumulation (the np matmul's BLAS order is
-    # luck-of-the-build) — the Arrow kernel form of the old 'expr'
-    # fold, minus its fixed ~1s/action plan-optimization cost
+    # md5 planes key with the dim-sequential kernel: sign-bit dots
+    # bit-exact vs the oracle's accumulation (the rng matmul's BLAS
+    # order is luck-of-the-build)
     return lsh_topk(
-        emb, queries_df, k=10, dim=64, seed=42, planes="md5", impl="seq",
+        emb, queries_df, k=10, dim=64, seed=42, planes="md5",
         num_planes=8, num_tables=4,
     )
 
@@ -887,7 +884,8 @@ def dq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     configs = [
         ("lsh", "planes=12,tables=6 (default)", 0.05,
          lsh_topk(emb, queries_df, k=10, dim=64)),
-        # the dq_lsh_topk certification face (r15: md5 planes, 4x8) —
+        # the dq_lsh_topk certification face (r15: md5 planes, 4x8),
+        # keyed by the same dim-sequential kernel the entry runs —
         # measured 0.13/0.16/0.16 @ sf0.001/0.01/0.1, same slack
         # pattern as the default row (uniform-random fixture = the
         # adversarial case for ANN)
@@ -2922,10 +2920,9 @@ def dq_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_pairs(
         docs.filter(F.col("doc_id") >= 5),
         docs.filter(F.col("doc_id") < 5),
-        "text", "doc_id", n=8, threshold=0.2,
-        # np impl: containment is hash-invariant (set sizes), and the
+        # containment is hash-invariant (set sizes), and the gram
         # kernel's re.ASCII normalization matches the oracle's RE2 \s+
-        impl="np",
+        "text", "doc_id", n=8, threshold=0.2,
     )
 
 

@@ -1,5 +1,5 @@
 """Column-level text functions: tokenization, shingles, fingerprints,
-quality signals, language ID.
+language ID, PII and Gopher signals.
 
 Everything here returns ``Column`` expressions built from
 ``pyspark.sql.functions`` — JVM-side, whole-stage-codegen friendly, no
@@ -87,18 +87,6 @@ def alnum_tokens(col: Column | str) -> Column:
     )
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """Cheap BPE-like token estimate: count word pieces + digits + punct
-    (regex segmentation, the standard pre-tokenizer shape) entirely JVM-side.
-
-    regexp_count(text, pattern) counts contiguous letter runs, digit runs,
-    and single non-space punctuation — a deterministic stand-in for a real
-    tokenizer's token count, good enough for length filtering at scale.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(c, F.lit(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]")).cast("long")
-
-
 def char_ngrams(col: Column | str, n: int = 3) -> Column:
     """Array of character n-grams (shingles) of the normalized text.
 
@@ -130,45 +118,6 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     return F.when(F.size(toks) >= k, shingles).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Fraction of tokens that are stopwords (quality signal; ~0 for
-    gibberish/boilerplate, higher for natural prose)."""
-    sw = F.array(*[F.lit(w) for w in (stopwords or STOPWORDS_EN)])
-    toks = tokenize(col)
-    in_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return F.when(F.size(toks) > 0, in_sw / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def punct_ratio(col: Column | str) -> Column:
-    """Punctuation chars / total chars of normalized text."""
-    c = normalize_text(col)
-    n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    return F.when(F.length(c) > 0, n_punct / F.length(c)).otherwise(F.lit(0.0))
-
-
-def mean_word_length(col: Column | str) -> Column:
-    toks = tokenize(col)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def quality_score(col: Column | str) -> Column:
-    """Composite [0,1] doc-quality heuristic (Gopher/C4-style signals,
-    all vectorized): token count in range, stopword presence, sane mean
-    word length, low punctuation density."""
-    tc = token_count(col)
-    score = (
-        F.when((tc >= 10) & (tc <= 100000), F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(stopword_ratio(col) >= 0.05, F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(
-            (mean_word_length(col) >= 2.0) & (mean_word_length(col) <= 12.0),
-            F.lit(0.25),
-        ).otherwise(F.lit(0.0))
-        + F.when(punct_ratio(col) <= 0.2, F.lit(0.25)).otherwise(F.lit(0.0))
-    )
-    return score
 
 
 def lang_id(col: Column | str, markers: dict[str, list[str]] | None = None) -> Column:
@@ -410,8 +359,8 @@ def clean_lines(
 def gopher_signals(col: Column | str) -> Column:
     """The Gopher (Rae et al. 2021, public) static quality signals as
     one struct of pure expressions — the document-shape rules that
-    complement :func:`quality_score`'s length/stopword gates and the
-    repetition signals in ``operators/text.py``:
+    complement ``text_profile``'s ``quality_score`` length/stopword gates
+    and the repetition signals in ``operators/text.py``:
 
     - ``alpha_word_ratio``: fraction of tokens containing at least one
       alphabetic character (low = tables/code/serial numbers);
@@ -462,8 +411,9 @@ def gopher_pass(
     max_symbol_word_ratio: float = 0.1,
 ) -> Column:
     """Boolean Gopher-rules gate at the paper's published thresholds
-    (override per corpus). Compose with ``quality_score`` /
-    ``repetition_signals`` for the full Gopher filter."""
+    (override per corpus). Compose with ``text_profile``'s
+    ``quality_score`` / ``repetition_signals`` for the full Gopher
+    filter."""
     s = gopher_signals(col)
     return (
         (s["alpha_word_ratio"] >= min_alpha_word_ratio)

@@ -1,8 +1,13 @@
-"""Vector column functions over ``array<float|double>`` embeddings.
+"""Vector column functions over ``array<float|double>`` embeddings, and
+the Arrow kernels of the LSH/dedup operators.
 
-All JVM-side higher-order functions (``zip_with`` / ``aggregate``) — no
-Python UDF, no Arrow hop — so similarity math stays inside whole-stage
-codegen and scales linearly with rows.
+Pair-level similarity math (:func:`dot`, :func:`norm`,
+:func:`cosine_similarity`, :func:`l2_distance`) is JVM-side
+higher-order functions (``zip_with`` / ``aggregate``) — no Arrow hop —
+so verify scoring stays in the plan and scales linearly with rows.
+The per-row kernels (hyperplane keys, shingle hashes, MinHash and
+SimHash signatures) are Arrow-vectorized pandas UDFs: one numpy pass
+per batch instead of interpreted per-element lambdas.
 """
 
 from __future__ import annotations
@@ -26,15 +31,17 @@ def vector_dim(df: DataFrame, vec_col: str, dim: int | None = None) -> int | Non
 
 def hyperplane_keys_np(tables: list[list[list[float]]]):
     """Arrow-vectorized hyperplane LSH keys: a pandas_udf mapping a vector
-    column to ``array<long>`` (one bucket key per table).
+    column to ``array<long>`` (one bucket key per table; bit p of a key
+    is the sign of the dot with plane p, LSB-first).
 
     Why a UDF here: higher-order-function expressions (zip_with/aggregate)
     are evaluated per-element INTERPRETED — tables x planes x dim ops/row
     (4608 at 6x12x64) made key computation the measured bottleneck of the
     LSH operators. One batched matrix multiply (rows x dim @ dim x T*P)
     replaces all of it; the Arrow hop transfers only the vector column.
-    The expression path (:func:`hyperplane_bucket_keys`) remains for
-    UDF-free deployments.
+
+    A NULL vector, or one whose length is not the planes' width, gets a
+    NULL key array: it lands in no bucket instead of failing the batch.
     """
     import numpy as np
     import pandas as pd
@@ -42,14 +49,15 @@ def hyperplane_keys_np(tables: list[list[list[float]]]):
 
     num_tables = len(tables)
     num_planes = len(tables[0])
+    dim = len(tables[0][0])
     planes = np.asarray(tables, dtype=np.float64).reshape(
-        num_tables * num_planes, -1
+        num_tables * num_planes, dim
     )
     weights = (1 << np.arange(num_planes, dtype=np.int64))
 
     def keys(v):
         out = [None] * len(v)
-        valid = [i for i, x in enumerate(v) if x is not None and len(x) > 0]
+        valid = [i for i, x in enumerate(v) if x is not None and len(x) == dim]
         if valid:
             mat = np.vstack([np.asarray(v.iloc[i], dtype=np.float64) for i in valid])
             bits = (mat @ planes.T) > 0  # (n, tables*planes)
@@ -74,30 +82,25 @@ def hyperplane_keys_np(tables: list[list[list[float]]]):
 
 def hyperplane_keys_seq_np(tables: list[list[list[float]]]):
     """Arrow-vectorized hyperplane LSH keys with DIM-SEQUENTIAL
-    accumulation — bit-identical to the interpreted expression fold
-    (:func:`hyperplane_bucket_keys`) and to a SQL engine's left-to-right
+    accumulation — bit-identical to a SQL engine's left-to-right
     ``list_dot_product``, but vectorized over rows.
 
-    Why it exists (r15): the certification faces need the fold's exact
+    Why it exists (r15): the certification faces need the oracle's exact
     accumulation order (``((0+x0*w0)+x1*w1)+...``) so a DuckDB oracle
-    replays the sign bits value-for-value, but the expression fold costs
-    a FIXED ~1s per action in driver-side plan work (tables x planes x
-    dim literal tree re-optimized every run) regardless of row count.
-    Here the planes live in the kernel closure — no plan bloat — and
-    ``acc += M[:, j] * w[p, j]`` accumulates over dims in the identical
-    IEEE order for every row at once. The batched-matmul kernel
-    (:func:`hyperplane_keys_np`) stays the production path; its BLAS
-    accumulation order is unspecified, which is fine when no oracle
-    replays the bits.
+    replays the sign bits value-for-value. The planes live in the kernel
+    closure — no plan bloat — and ``acc += M[:, j] * w[p, j]``
+    accumulates over dims in that IEEE order for every row at once. The
+    batched-matmul kernel (:func:`hyperplane_keys_np`) stays the
+    production path; its BLAS accumulation order is unspecified, which
+    is fine when no oracle replays the bits.
 
-    Output matches the expression path's shape AND semantics exactly:
-    ``array<struct<t:int, k:bigint>>``, MSB-first packing (``acc*2 +
-    bit``), and ``k=0`` for a NULL vector, a wrong-width vector, or a
-    vector with NULL elements — in the fold every such dot degenerates
-    to NULL (NULL array / NULL-padded or NULL-propagated products), and
-    ``when(NULL > 0, 1).otherwise(0)`` yields bit 0 on every plane.
-    Here a NULL element becomes NaN, NaN poisons the accumulator, and
-    ``NaN > 0`` is likewise false on every plane — same key 0.
+    Output: ``array<long>``, one key per table, MSB-first packing (plane
+    0 is the highest bit, ``acc*2 + bit``), and key 0 in every table for
+    a NULL vector, a wrong-width vector, or a vector with NULL elements —
+    the oracle's ``list_dot_product`` is NULL there and ``CASE WHEN NULL
+    > 0`` yields bit 0 on every plane. Here a NULL element becomes NaN,
+    NaN poisons the accumulator, and ``NaN > 0`` is likewise false on
+    every plane — same key 0.
     """
     import numpy as np
     import pandas as pd
@@ -113,38 +116,26 @@ def hyperplane_keys_seq_np(tables: list[list[list[float]]]):
     msb_weights = 1 << np.arange(num_planes - 1, -1, -1, dtype=np.int64)
 
     def keys(v):
-        out = [None] * len(v)
-        valid = []
-        for i, x in enumerate(v):
-            if x is None or len(x) != dim:
-                # the fold's NULL dot -> bit 0 on every plane -> key 0
-                out[i] = [(t, 0) for t in range(num_tables)]
-            else:
-                valid.append(i)
+        out = [[0] * num_tables] * len(v)
+        valid = [i for i, x in enumerate(v) if x is not None and len(x) == dim]
         if valid:
-            mat = np.vstack(
-                [
-                    np.asarray(
-                        v.iloc[i], dtype=np.float64
-                    )  # NULL element -> NaN -> poisons acc -> key 0
-                    for i in valid
-                ]
-            )
+            # NULL element -> NaN -> poisons acc -> key 0
+            mat = np.vstack([np.asarray(v.iloc[i], dtype=np.float64) for i in valid])
             acc = np.zeros((len(valid), num_tables * num_planes))
             for j in range(dim):
                 # one elementwise multiply-add per dim: every row/plane
                 # accumulates in the same left-to-right IEEE order as
-                # the expression fold and the oracle's list_dot_product
+                # the oracle's list_dot_product
                 acc += mat[:, j : j + 1] * planes[:, j]
             bits = (acc > 0).reshape(len(valid), num_tables, num_planes)
             ks = (bits * msb_weights).sum(axis=2).astype(np.int64)
             for row, i in enumerate(valid):
-                out[i] = [(t, int(k)) for t, k in enumerate(ks[row])]
+                out[i] = ks[row].tolist()
         return pd.Series(out)
 
     keys.__annotations__ = {"v": pd.Series, "return": pd.Series}
     # deterministic in fact; see hyperplane_keys_np for why it's marked
-    return pandas_udf(keys, "array<struct<t:int,k:bigint>>").asNondeterministic()
+    return pandas_udf(keys, "array<long>").asNondeterministic()
 
 
 def shingle_hashes_np(
@@ -276,10 +267,9 @@ def simhash_np(seed: int = 42, hash_family: str = "blake2b"):
     """Arrow-vectorized 64-bit SimHash of the token multiset: a pandas_udf
     mapping text to BIGINT (NULL for token-less text).
 
-    Same construction as :func:`..operators.dedup.simhash` (bit j set iff
-    the +1/-1 vote sum over token-hash bit j is positive) with a salted
-    blake2b-8 token hash; the 64 x tokens vote matrix is one numpy
-    broadcast instead of 64 interpreted aggregate passes per row.
+    Bit j is set iff the +1/-1 vote sum over token-hash bit j is
+    positive; the token hash is a salted blake2b-8. The 64 x tokens vote
+    matrix is one numpy broadcast per row.
 
     ``hash_family='md5'``: the engine-portable certification family —
     token hash = first 16 hex chars of ``md5("{seed}:" + tok)`` as
@@ -343,8 +333,8 @@ def simhash_np(seed: int = 42, hash_family: str = "blake2b"):
 
 def minhash_rehash_np(num_hashes: int = 64, seed: int = 42):
     """Arrow-vectorized MinHash from pre-hashed shingles: a pandas_udf
-    mapping ``array<bigint>`` (one xxhash64 per shingle, computed JVM-side
-    where string hashing is cheap) to the ``array<bigint>`` signature.
+    mapping ``array<bigint>`` (one 64-bit hash per shingle, from
+    :func:`shingle_hashes_np`) to the ``array<bigint>`` signature.
 
     Hash family: h_i = a_i * h + b_i over Z_2^64 (odd a_i), the standard
     multiply-shift rehash — one hash of the string, num_hashes integer
@@ -373,50 +363,6 @@ def minhash_rehash_np(num_hashes: int = 64, seed: int = 42):
     sig.__annotations__ = {"hashes": pd.Series, "return": pd.Series}
     # deterministic in fact; see hyperplane_keys_np for why it's marked
     return pandas_udf(sig, "array<long>").asNondeterministic()
-
-
-def hyperplane_bucket_keys(vec: Column, tables: list[list[list[float]]]) -> Column:
-    """Random-hyperplane LSH bucket keys: ``array<struct<t:int, k:bigint>>``,
-    one entry per table; key bit i = sign of dot(vec, plane_i).
-
-    The hyperplanes are ONE nested array literal (constant-folded by
-    Catalyst) traversed with zip_with/aggregate lambdas — a single folded
-    expression regardless of tables x planes, instead of one aggregate tree
-    per plane (72 trees at 6x12 made codegen the bottleneck, not the math).
-    """
-    tbls = F.array(
-        *[
-            F.array(
-                *[F.array(*[F.lit(float(w)) for w in plane]) for plane in planes]
-            )
-            for planes in tables
-        ]
-    )
-    return F.zip_with(
-        tbls,
-        F.sequence(F.lit(0), F.lit(len(tables) - 1)),
-        lambda planes, t: F.struct(
-            t.cast("int").alias("t"),
-            F.aggregate(
-                planes,
-                F.lit(0).cast("long"),
-                # MSB-first bit packing: acc*2 + sign-bit. num_planes <= 62
-                # so the long never overflows.
-                lambda acc, plane: acc * 2
-                + F.when(
-                    F.aggregate(
-                        F.zip_with(vec, plane, lambda x, w: x * w),
-                        F.lit(0.0).cast("double"),
-                        lambda a, v: a + v,
-                    )
-                    > 0,
-                    F.lit(1),
-                )
-                .otherwise(F.lit(0))
-                .cast("long"),
-            ).alias("k"),
-        ),
-    )
 
 
 def md5_uniform(tag: str) -> float:

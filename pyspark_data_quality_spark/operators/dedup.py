@@ -14,11 +14,10 @@ Scale design (the point of every function here):
   This is the standard LSH shape: shuffle cost ~ O(n · bands), pair cost
   ~ O(sum of bucket²) which stays small when bands/rows are tuned.
 - Hot per-element kernels (shingle hashing, signature minima, simhash
-  votes, hyperplane keys) default to Arrow-vectorized pandas UDFs —
-  Spark's higher-order-function lambdas evaluate interpreted, and the
-  numpy kernels measured 3-8x faster; every operator keeps a pure-
-  expression ``impl='expr'`` variant for UDF-free deployments. Joins,
-  scalar hashing, and verify math stay JVM-side.
+  votes, hyperplane keys) are Arrow-vectorized pandas UDFs — Spark's
+  higher-order-function lambdas evaluate interpreted, and the numpy
+  kernels measured 3-8x faster than the same math as expressions.
+  Joins, scalar hashing, and verify math stay JVM-side.
 """
 
 from __future__ import annotations
@@ -35,9 +34,7 @@ from ..plans.local import local_frame
 from ..functions.text import (
     char_ngrams,
     doc_fingerprint,
-    normalize_text,
     tokenize,
-    word_shingles,
 )
 
 
@@ -309,24 +306,6 @@ def exact_dup_groups(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(
-    shingles: Column, num_hashes: int = 128, seed: int = 42
-) -> Column:
-    """MinHash signature as array<bigint>: element i = min over shingles of
-    xxhash64(shingle, seed+i). Empty shingle sets -> NULL signature.
-
-    Pure expression tree (transform over hash indices, array_min inside):
-    one projection, no UDF, no shuffle.
-    """
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed) + i))
-        ),
-    )
-    return F.when(F.size(shingles) > 0, sig)
-
-
 def _bands(sig: Column, num_bands: int, rows_per_band: int) -> Column:
     """array<struct<band:int, key:bigint>> — one LSH bucket key per band
     (hash of the band's signature slice)."""
@@ -467,7 +446,7 @@ def minhash_signatures(
 ) -> DataFrame:
     """``(_id, _h, _sig)`` MinHash signature frame — the shingle-hash
     set and ``num_hashes``-wide signature per document, exactly as
-    :func:`minhash_near_dup_pairs` (``impl='np'``) builds internally.
+    :func:`minhash_near_dup_pairs` builds internally.
 
     Build it ONCE and pass it to several ``minhash_near_dup_pairs``
     calls via ``signatures=`` when only the BANDING differs between
@@ -516,7 +495,6 @@ def minhash_near_dup_pairs(
     threshold: float = 0.7,
     seed: int = 42,
     max_bucket_size: int | None = 1000,
-    impl: str = "np",
     hash_family: str = "blake2b",
     signatures: DataFrame | None = None,
     persist: bool = True,
@@ -547,17 +525,17 @@ def minhash_near_dup_pairs(
     :func:`cap_buckets`) — run :func:`exact_dedup` first so identical-text
     clusters never reach the LSH stage.
 
-    ``impl='np'`` (default): shingling + hashing happen in ONE
-    Arrow-vectorized pass (:func:`..functions.vectors.shingle_hashes_np` —
-    shingle strings never materialize in the plan), the signature is a
-    numpy multiply-shift rehash over the hash set, and the exact-Jaccard
+    Shingling + hashing happen in ONE Arrow-vectorized pass
+    (:func:`..functions.vectors.shingle_hashes_np` — shingle strings
+    never materialize in the plan), the signature is a numpy
+    multiply-shift rehash over the hash set, and the exact-Jaccard
     verify runs on the 64-bit hash arrays (codegen ``array_intersect``).
-    Measured ~4x over ``impl='expr'`` (pure expressions, kept for UDF-free
-    deployments): higher-order-function expressions evaluate INTERPRETED,
-    so building ~70 shingle strings and 64 hash minima per doc as
-    expression trees dominated the whole pipeline.
+    A pure-expression form measured ~4x slower: higher-order-function
+    expressions evaluate INTERPRETED, so building ~70 shingle strings
+    and 64 hash minima per doc as expression trees dominated the whole
+    pipeline.
 
-    ``hash_family='md5'`` (``impl='np'`` only) swaps both hash kernels
+    ``hash_family='md5'`` swaps both hash kernels
     for the engine-portable md5 family
     (:func:`..functions.vectors.minhash_md5_np`) so a DuckDB oracle can
     replay the ENTIRE pipeline — signature, banding, bucket cap,
@@ -588,11 +566,6 @@ def minhash_near_dup_pairs(
             f"minhash_near_dup_pairs: hash_family must be 'blake2b' or "
             f"'md5', got {hash_family!r}"
         )
-    if hash_family == "md5" and impl != "np":
-        raise ValueError(
-            "minhash_near_dup_pairs: hash_family='md5' requires impl='np' "
-            "(the expression path hashes with engine-specific xxhash64)"
-        )
     if num_hashes % num_bands:
         # a remainder silently drops hashes from every signature: the
         # user computed a recall curve for num_hashes but is running
@@ -611,11 +584,6 @@ def minhash_near_dup_pairs(
         # the kernel cost is paid once. The frame must carry the full
         # num_hashes-wide signature this call bands over, as stamped in
         # its _sig metadata by minhash_signatures.
-        if impl != "np":
-            raise ValueError(
-                "minhash_near_dup_pairs: signatures= requires impl='np' "
-                "(the expression path carries shingle sets, not hash sets)"
-            )
         missing = {"_id", "_h", "_sig"} - set(signatures.columns)
         if missing:
             raise ValueError(
@@ -634,29 +602,12 @@ def minhash_near_dup_pairs(
                 "with minhash_signatures(num_hashes=...) to match"
             )
         base = signatures
-        verify_col = "_h"
-    elif impl == "np":
+    else:
         base = minhash_signatures(
             df, text_col, id_col,
             num_hashes=num_hashes, shingle_n=shingle_n, shingle=shingle,
             seed=seed, hash_family=hash_family,
         )
-        verify_col = "_h"
-    else:
-        from ..plans.parallelism import ensure_min_partitions
-
-        df = ensure_min_partitions(df)
-        shingle_expr = (
-            word_shingles(text_col, shingle_n)
-            if shingle == "word"
-            else char_ngrams(text_col, shingle_n)
-        )
-        base = df.select(
-            F.col(id_col).alias("_id"), shingle_expr.alias("_shingles")
-        ).withColumn(
-            "_sig", minhash_signature(F.col("_shingles"), num_hashes, seed)
-        ).filter(F.col("_sig").isNotNull())
-        verify_col = "_shingles"
 
     # Ids-only banding: the bucket shuffle carries (_id, _band, _key),
     # ~18 B per (doc, band), never the hash set. The distinct candidate
@@ -673,14 +624,13 @@ def minhash_near_dup_pairs(
     candidates = _bucket_pairs(
         buckets, ["_band", "_key"], max_bucket_size=max_bucket_size
     )
-    sets = base.select("_id", F.col(verify_col).alias("_v"))
     return (
         candidates.join(
-            sets.select(F.col("_id").alias("id_a"), F.col("_v").alias("_pa")),
+            base.select(F.col("_id").alias("id_a"), F.col("_h").alias("_pa")),
             "id_a",
         )
         .join(
-            sets.select(F.col("_id").alias("id_b"), F.col("_v").alias("_pb")),
+            base.select(F.col("_id").alias("id_b"), F.col("_h").alias("_pb")),
             "id_b",
         )
         .withColumn("jaccard", F.round(jaccard(F.col("_pa"), F.col("_pb")), 6))
@@ -731,45 +681,6 @@ def minhash_dedup(
 # ---------------------------------------------------------------------------
 
 
-def _signed64(v: int) -> int:
-    """Two's-complement view of an unsigned 64-bit value (bit 63 -> sign)."""
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def simhash(col: Column | str, bits: int = 64, seed: int = 42) -> Column:
-    """SimHash of the token multiset as a BIGINT: bit j set iff the sum of
-    (+1/-1) over tokens' hash-bit-j is positive.
-
-    Implementation: per bit j, aggregate tokens with
-    sign = 2*getbit(xxhash64(tok,seed), j) - 1 (``getbit`` accepts a Column
-    bit position, unlike shiftright's int-only numBits — the round-1 crash);
-    pack sign sums into bits via a literal mask array (mask[63] is the
-    two's-complement sign bit, so no shiftleft-by-Column is needed).
-    Pure expressions; ~bits x tokens ops per row, all codegen.
-    """
-    toks = tokenize(col)
-    bit_votes = F.transform(
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        lambda j: F.aggregate(
-            toks,
-            F.lit(0).cast("long"),
-            lambda acc, t: acc
-            + (F.getbit(F.xxhash64(t, F.lit(seed)), j) * 2 - 1).cast("long"),
-        ),
-    )
-    masks = F.array(*[F.lit(_signed64(1 << j)).cast("long") for j in range(bits)])
-    packed = F.aggregate(
-        F.zip_with(
-            bit_votes,
-            masks,
-            lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-    return F.when(F.size(toks) > 0, packed)
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit hashes (bit_count of xor)."""
     return F.bit_count(a.bitwiseXOR(b))
@@ -782,7 +693,6 @@ def simhash_signatures(
     *,
     seed: int = 42,
     hash_family: str = "blake2b",
-    impl: str = "np",
 ) -> DataFrame:
     """``(_id, _sh)`` SimHash signature frame, exactly as
     :func:`simhash_near_dup_pairs` builds internally. Build once and
@@ -790,17 +700,13 @@ def simhash_signatures(
     (or an exact-hamming ground truth, dq_neardup_recall's shape) read
     the same signatures — the banding is a bit-slice of ``_sh``, so
     results are bit-identical."""
+    from ..functions.vectors import simhash_np
     from ..plans.parallelism import ensure_min_partitions
 
     df = ensure_min_partitions(df)
-    if impl == "np":
-        from ..functions.vectors import simhash_np
-
-        sh_col = simhash_np(seed, hash_family)(F.col(text_col))
-    else:
-        sh_col = simhash(text_col, seed=seed)
     return df.select(
-        F.col(id_col).alias("_id"), sh_col.alias("_sh")
+        F.col(id_col).alias("_id"),
+        simhash_np(seed, hash_family)(F.col(text_col)).alias("_sh"),
     ).filter(F.col("_sh").isNotNull())
 
 
@@ -813,7 +719,6 @@ def simhash_near_dup_pairs(
     num_bands: int = 4,
     seed: int = 42,
     max_bucket_size: int | None = 1000,
-    impl: str = "np",
     allow_probabilistic: bool = False,
     hash_family: str = "blake2b",
     signatures: DataFrame | None = None,
@@ -821,9 +726,8 @@ def simhash_near_dup_pairs(
     """Near-dup pairs by SimHash: candidates from 16-bit band buckets
     (a pair within hamming<=3 of 64 bits shares at least one of 4 bands by
     pigeonhole), verified by exact hamming distance. Oversized buckets are
-    dropped per :func:`_bucket_pairs`. ``impl='np'`` computes the simhash
-    with one Arrow pass (:func:`..functions.vectors.simhash_np`);
-    ``'expr'`` keeps the UDF-free expression simhash.
+    dropped per :func:`_bucket_pairs`. The simhash is one Arrow pass
+    (:func:`..functions.vectors.simhash_np`).
 
     The pigeonhole recall GUARANTEE holds only while ``num_bands >=
     max_hamming + 1``. Configs beyond that (e.g. the registry's
@@ -834,7 +738,7 @@ def simhash_near_dup_pairs(
     than assuming completeness. Without the flag the call refuses
     loudly instead of silently losing pairs.
 
-    ``hash_family='md5'`` (``impl='np'`` only) swaps the token hash for
+    ``hash_family='md5'`` swaps the token hash for
     the engine-portable md5 family so a DuckDB oracle can replay the
     whole simhash→banding→cap→hamming pipeline value-for-value
     (dq_simhash_pairs); banding/verify code is shared across families.
@@ -843,11 +747,6 @@ def simhash_near_dup_pairs(
         raise ValueError(
             f"simhash_near_dup_pairs: hash_family must be 'blake2b' or "
             f"'md5', got {hash_family!r}"
-        )
-    if hash_family == "md5" and impl != "np":
-        raise ValueError(
-            "simhash_near_dup_pairs: hash_family='md5' requires impl='np' "
-            "(the expression path hashes with engine-specific xxhash64)"
         )
     if num_bands <= max_hamming and not allow_probabilistic:
         raise ValueError(
@@ -876,7 +775,7 @@ def simhash_near_dup_pairs(
     else:
         base = simhash_signatures(
             df, text_col, id_col,
-            seed=seed, hash_family=hash_family, impl=impl,
+            seed=seed, hash_family=hash_family,
         )
 
     mask = (1 << bits_per_band) - 1
@@ -977,40 +876,22 @@ def _explode_hyperplane_buckets(
     df: DataFrame,
     vec_col: str,
     tables: list[list[list[float]]],
-    impl: str,
+    sequential: bool,
     keep_cols: list[str],
 ) -> DataFrame:
-    """(keep_cols..., _t, _k): one row per (row, LSH table). ``impl='np'``
-    computes keys with the Arrow-vectorized matrix multiply
-    (:func:`..functions.vectors.hyperplane_keys_np`); ``'seq'`` with the
-    dim-sequential Arrow kernel (bit-identical to the fold/an oracle's
-    sequential dot, r15 — the fast certification-face path); ``'expr'``
-    stays UDF-free via the folded expression."""
-    if impl == "np":
-        from ..functions.vectors import hyperplane_keys_np
+    """(keep_cols..., _t, _k): one row per (row, LSH table).
+    ``sequential`` picks the dim-sequential kernel
+    (:func:`..functions.vectors.hyperplane_keys_seq_np`), whose sign bits
+    a DuckDB oracle replays value-for-value — the md5-plane
+    certification faces use it. Otherwise the batched matrix multiply
+    (:func:`..functions.vectors.hyperplane_keys_np`), the production
+    path."""
+    from ..functions.vectors import hyperplane_keys_np, hyperplane_keys_seq_np
 
-        keys_udf = hyperplane_keys_np(tables)
-        return df.select(
-            *keep_cols, F.posexplode(keys_udf(F.col(vec_col))).alias("_t", "_k")
-        )
-    if impl == "seq":
-        from ..functions.vectors import hyperplane_keys_seq_np
-
-        bucket_col = hyperplane_keys_seq_np(tables)(F.col(vec_col))
-    elif impl == "expr":
-        from ..functions.vectors import hyperplane_bucket_keys
-
-        bucket_col = hyperplane_bucket_keys(F.col(vec_col), tables)
-    else:
-        # loud: a typo'd impl used to silently fall through to the
-        # slow interpreted fold (r15-opt review)
-        raise ValueError(
-            f"hyperplane impl must be 'np', 'seq' or 'expr', got {impl!r}"
-        )
+    kernel = hyperplane_keys_seq_np if sequential else hyperplane_keys_np
     return df.select(
-        *keep_cols,
-        F.explode(bucket_col).alias("_b"),
-    ).select(*keep_cols, F.col("_b.t").alias("_t"), F.col("_b.k").alias("_k"))
+        *keep_cols, F.posexplode(kernel(tables)(F.col(vec_col))).alias("_t", "_k")
+    )
 
 
 def embedding_near_dup_pairs(
@@ -1025,7 +906,6 @@ def embedding_near_dup_pairs(
     brute_force: bool = False,
     dim: int | None = None,
     max_bucket_size: int | None = 1000,
-    impl: str = "np",
     planes: str = "rng",
 ) -> DataFrame:
     """Pairs with cosine similarity >= threshold.
@@ -1043,17 +923,15 @@ def embedding_near_dup_pairs(
     (:func:`..functions.vectors.md5_hyperplanes`) instead of
     ``random.Random`` — same gaussian geometry, but every weight is
     reproducible in SQL, which lets a DuckDB oracle replay the whole
-    bucketing+verify pipeline (dq_embedding_pairs_lsh); pair it with
-    ``impl='seq'`` (the dim-sequential Arrow kernel, r15) so the
-    sign-bit dot products accumulate sequentially like the oracle's —
-    ``impl='expr'`` computes the identical bits as a pure expression
-    fold but pays a fixed ~1 s/action of driver-side plan work.
+    bucketing+verify pipeline (dq_embedding_pairs_lsh). md5 planes key
+    with the dim-sequential kernel, so the sign-bit dot products
+    accumulate in the oracle's order; ``'rng'`` planes key with the
+    batched matrix multiply. A vector whose length is not ``dim`` lands
+    in no bucket under ``'rng'``; under ``'md5'`` it keys 0 in every
+    table, as in the oracle (see
+    :func:`..functions.vectors.hyperplane_keys_seq_np`).
     """
-    from ..functions.vectors import (
-        cosine_similarity,
-        hyperplane_bucket_keys,
-        vector_dim,
-    )
+    from ..functions.vectors import cosine_similarity, vector_dim
 
     if planes not in ("rng", "md5"):
         raise ValueError(
@@ -1113,17 +991,12 @@ def embedding_near_dup_pairs(
             for _ in range(num_tables)
         ]
 
-    # impl='np': no ensure_min_partitions — the hyperplane kernel is one
-    # batched matmul per Arrow batch, measured cheaper on few partitions
-    # than paying the repartition shuffle of the vectors. impl='expr' is
-    # the opposite (r15): the sign-bit folds evaluate INTERPRETED per
-    # row x table x plane x dim, so a single-file corpus serializes the
-    # whole certification face onto one task — spread it first.
-    if impl == "expr":
-        from ..plans.parallelism import ensure_min_partitions
-
-        base = ensure_min_partitions(base)
-    buckets = _explode_hyperplane_buckets(base, "_v", tables, impl, ["_id", "_v"])
+    # no ensure_min_partitions: the hyperplane kernels run one batched
+    # pass per Arrow batch, measured cheaper on few partitions than
+    # paying the repartition shuffle of the vectors
+    buckets = _explode_hyperplane_buckets(
+        base, "_v", tables, planes == "md5", ["_id", "_v"]
+    )
     # vectors ride through the pair expansion as payloads (dim*8 bytes per
     # member, bounded by max_bucket_size) — exact-cosine verify without a
     # join back to the corpus.

@@ -16,9 +16,8 @@ Three paths:
   The standard shape when the corpus can be pre-partitioned by list.
 
 Exact verify scoring is JVM-side (``zip_with``/``aggregate`` dot
-products); bucket/centroid assignment defaults to Arrow-vectorized numpy
-(one batched matrix multiply — the interpreted higher-order-function path
-is kept behind ``impl='expr'``). Hyperplanes/centroids are deterministic
+products); bucket/centroid assignment is Arrow-vectorized numpy (one
+batched pass per Arrow batch). Hyperplanes/centroids are deterministic
 (fixed seed).
 """
 
@@ -138,7 +137,6 @@ def lsh_topk(
     seed: int = 42,
     dim: int | None = None,
     max_bucket_size: int | None = 10000,
-    impl: str = "np",
     planes: str = "rng",
 ) -> DataFrame:
     """Approximate top-k: score only corpus vectors sharing at least one
@@ -146,8 +144,11 @@ def lsh_topk(
 
     ``planes='md5'`` draws the hyperplanes via md5 Box–Muller
     (:func:`..functions.vectors.md5_hyperplanes`) so a DuckDB oracle
-    can replay the whole probe pipeline (dq_lsh_topk); ``'rng'`` is the
-    production default.
+    can replay the whole probe pipeline (dq_lsh_topk) and keys with the
+    dim-sequential kernel the oracle's accumulation order needs;
+    ``'rng'`` is the production default and keys with the batched
+    matrix multiply. Vector-width handling follows
+    :func:`..operators.dedup.embedding_near_dup_pairs`.
 
     Recall rises with tables, candidate count with 1/planes; 6x12 at
     64-dim gives ~0.9+ recall@10 on uniform data. Output schema matches
@@ -197,19 +198,12 @@ def lsh_topk(
             for _ in range(num_tables)
         ]
 
-    cb_in = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    if impl == "expr":
-        # the sign-bit folds evaluate INTERPRETED per row x table x
-        # plane x dim — spread a single-file corpus first (no-op when
-        # the scan already has real parallelism; the np matmul path is
-        # measured cheaper without the repartition, r15)
-        from ..plans.parallelism import ensure_min_partitions
-
-        cb_in = ensure_min_partitions(cb_in)
+    sequential = planes == "md5"
     cb = _explode_hyperplane_buckets(
-        cb_in, "_cv", tables, impl, ["neighbor_id", "_cv"],
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+        ),
+        "_cv", tables, sequential, ["neighbor_id", "_cv"],
     )
     cb = cap_buckets(cb, ["_t", "_k"], max_bucket_size)
 
@@ -218,7 +212,7 @@ def lsh_topk(
             F.col(query_id_col).alias("query_id"),
             F.col(query_vec_col).alias("_qv"),
         ),
-        "_qv", tables, impl, ["query_id", "_qv"],
+        "_qv", tables, sequential, ["query_id", "_qv"],
     )
 
     candidates = (

@@ -1,10 +1,9 @@
 """Text-analysis operators over a document table (north-star extension).
 
-One projection pass computes every per-document signal — token counts,
-quality signals, language ID, fingerprints — as pure column expressions
-(:mod:`..functions.text`): zero shuffles, zero UDFs, linear scan that
-Catalyst fuses with any downstream filter/aggregate. At 100 TB this runs
-at parquet-scan speed.
+One pass computes every per-document signal — token counts, quality
+signals, language ID, fingerprints — in a single Arrow-batched
+``mapInPandas`` stage plus JVM-side hashing: zero shuffles, a linear
+scan that Catalyst fuses with any downstream filter/aggregate.
 """
 
 from __future__ import annotations
@@ -12,47 +11,23 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    bpe_ish_token_count,
-    doc_fingerprint,
-    doc_md5,
-    lang_id,
-    mean_word_length,
-    punct_ratio,
-    quality_score,
-    stopword_ratio,
-    token_count,
-)
+from ..functions.text import doc_fingerprint, doc_md5
 
 
-def text_profile(df: DataFrame, text_col: str = "text", impl: str = "np") -> DataFrame:
+def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append the standard text-analysis columns to ``df``.
 
-    ``impl='np'`` (default) computes the token-level signals in ONE
-    Arrow-batched ``mapInPandas`` pass: the expression path builds every
-    signal from higher-order functions (filter/aggregate/transform over
-    the token array), which Spark evaluates INTERPRETED per element — the
-    measured bottleneck at fixture scale. Hashing (xxhash64/md5 of the
-    normalized text) and the round(,6) stay JVM-side: native string
-    expressions are codegen-fast, and Spark's HALF_UP rounding must not be
-    replaced by Python's banker's rounding (oracle parity). Both impls
-    produce identical values; ``impl='expr'`` keeps the UDF-free plan.
+    The token-level signals come from ONE Arrow-batched ``mapInPandas``
+    pass (:func:`_profile_signals_np`): as higher-order functions over
+    the token array they evaluated INTERPRETED per element — the measured
+    bottleneck at fixture scale. Hashing (xxhash64/md5 of the normalized
+    text) and the round(,6) stay JVM-side: native string expressions are
+    codegen-fast, and Spark's HALF_UP rounding must not be replaced by
+    Python's banker's rounding (oracle parity).
     """
     from ..plans.parallelism import ensure_min_partitions
 
     df = ensure_min_partitions(df)
-    if impl == "expr":
-        return (
-            df.withColumn("token_count", token_count(text_col))
-            .withColumn("bpe_token_count", bpe_ish_token_count(text_col))
-            .withColumn("stopword_ratio", F.round(stopword_ratio(text_col), 6))
-            .withColumn("punct_ratio", F.round(punct_ratio(text_col), 6))
-            .withColumn("mean_word_len", F.round(mean_word_length(text_col), 6))
-            .withColumn("quality_score", quality_score(text_col))
-            .withColumn("lang_pred", lang_id(text_col))
-            .withColumn("fingerprint", doc_fingerprint(text_col))
-            .withColumn("fingerprint_md5", doc_md5(text_col))
-        )
     return (
         _profile_signals_np(df, text_col)
         .withColumn("stopword_ratio", F.round(F.col("_sw_raw"), 6))
@@ -66,10 +41,11 @@ def text_profile(df: DataFrame, text_col: str = "text", impl: str = "np") -> Dat
 
 def _profile_signals_np(df: DataFrame, text_col: str) -> DataFrame:
     """mapInPandas pass computing the token-level profile signals with the
-    SAME semantics as the expression builders in :mod:`..functions.text`:
-    ASCII regex classes (Java regex \\s and \\w are ASCII; Python's default
-    is unicode, hence ``re.ASCII``), float division of exact integer
-    counts (IEEE-identical across engines), raw un-rounded ratios."""
+    SAME semantics as dq_text_profile's oracle SQL
+    (``entry_queries._SQL_PROFILE_CTE``): ASCII regex classes (Java regex
+    and RE2 \\s/\\w are ASCII; Python's default is unicode, hence
+    ``re.ASCII``), float division of exact integer counts (IEEE-identical
+    across engines), raw un-rounded ratios."""
     import re
 
     from pyspark.sql import types as T
@@ -98,7 +74,7 @@ def _profile_signals_np(df: DataFrame, text_col: str) -> DataFrame:
         for pdf in batches:
             tc, bpe, sw, punct, mwl, qual, lang = [], [], [], [], [], [], []
             for text in pdf[text_col]:
-                # null text: counts stay NULL (expr path: size(null)=null),
+                # null text: counts stay NULL (SQL: len(NULL) is NULL),
                 # ratio/quality/lang fall through the same as empty text
                 raw = text if text is not None else ""
                 norm = ws_re.sub(" ", raw.lower()).strip()
@@ -209,7 +185,6 @@ def contamination_pairs(
     n: int = 8,
     threshold: float = 0.2,
     round_to: int = 6,
-    impl: str = "np",
     prefilter: str = "auto",
     broadcast: bool | None = None,
 ) -> DataFrame:
@@ -234,14 +209,10 @@ def contamination_pairs(
     the only exact path when ``threshold <= 0`` (a zero-overlap pair then
     belongs in the output, which the index join cannot produce).
 
-    Grams are 64-bit hashes in BOTH impls — set sizes (hence containment)
-    are hash-invariant. ``impl='np'`` (default): one Arrow pass builds the
-    hash sets (:func:`..functions.vectors.shingle_hashes_np`); with
-    ``prefilter='cross'`` a numpy kernel scores pairs. ``impl='expr'``:
-    xxhash64'd grams + array ops — UDF-free and Java-regex-normalized, but
-    the crossJoin variant recomputes the inlined gram expression per probe
-    (CollapseProject treats once-referenced exprs as free) — use it only
-    when UDFs are banned.
+    Grams are 64-bit hashes — set sizes (hence containment) are
+    hash-invariant. One Arrow pass builds the hash sets
+    (:func:`..functions.vectors.shingle_hashes_np`); with
+    ``prefilter='cross'`` a numpy kernel scores pairs.
 
     ``broadcast`` controls how the probe side reaches the join. Default
     (``None``): broadcast — right for benchmark eval sets (thousands of
@@ -252,69 +223,9 @@ def contamination_pairs(
 
     Output: (doc_id, probe_id, containment >= threshold).
     """
-    from ..functions.expr import let_bind as _let
-    from ..functions.text import char_ngrams
+    from ..functions.vectors import shingle_hashes_np
     from ..plans.parallelism import ensure_min_partitions
 
-    docs = ensure_min_partitions(docs)
-    if impl == "np":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        from ..functions.vectors import shingle_hashes_np
-
-        h = shingle_hashes_np("char", n, seed=77)
-        d = docs.select(
-            F.col(id_col).alias("doc_id"), h(F.col(text_col)).alias("_dg")
-        ).filter(F.col("_dg").isNotNull())
-        p = probes.select(
-            F.col(id_col).alias("probe_id"), h(F.col(text_col)).alias("_pg")
-        ).filter(F.col("_pg").isNotNull())
-
-        def score(dgs, pgs):
-            out = np.empty(len(dgs))
-            for i in range(len(dgs)):
-                dg, pg = dgs.iloc[i], pgs.iloc[i]
-                if dg is None or pg is None or len(pg) == 0:
-                    out[i] = -1.0  # undefined -> below any threshold
-                    continue
-                out[i] = np.intersect1d(dg, pg, assume_unique=True).size / len(pg)
-            return pd.Series(out)
-
-        score.__annotations__ = {
-            "dgs": pd.Series, "pgs": pd.Series, "return": pd.Series
-        }
-        # nondeterministic marking: the containment threshold filter
-        # above would otherwise duplicate the score kernel (guide-§4.4
-        # shape; see vectors.hyperplane_keys_np)
-        cont = F.round(
-            pandas_udf(score, "double").asNondeterministic()(
-                F.col("_dg"), F.col("_pg")
-            ),
-            round_to,
-        )
-    else:
-        def hashed_grams(col: str) -> F.Column:
-            return F.transform(
-                F.array_distinct(char_ngrams(col, n)), lambda s: F.xxhash64(s)
-            )
-
-        d = docs.select(
-            F.col(id_col).alias("doc_id"), hashed_grams(text_col).alias("_dg")
-        )
-        p = probes.select(
-            F.col(id_col).alias("probe_id"), hashed_grams(text_col).alias("_pg")
-        )
-        cont = F.round(
-            _let(
-                F.size(F.array_intersect(F.col("_dg"), F.col("_pg"))),
-                lambda i: F.try_divide(
-                    i.cast("double"), F.size(F.col("_pg"))
-                ),
-            ),
-            round_to,
-        )
     if prefilter not in ("auto", "index", "cross"):
         raise ValueError(f"contamination_pairs: unknown prefilter {prefilter!r}")
     use_index = prefilter == "index" or (prefilter == "auto" and threshold > 0)
@@ -328,6 +239,14 @@ def contamination_pairs(
             "contamination_pairs: broadcast=False requires the index join "
             "(prefilter='index'); the crossJoin path is broadcast-only"
         )
+    docs = ensure_min_partitions(docs)
+    h = shingle_hashes_np("char", n, seed=77)
+    d = docs.select(
+        F.col(id_col).alias("doc_id"), h(F.col(text_col)).alias("_dg")
+    ).filter(F.col("_dg").isNotNull())
+    p = probes.select(
+        F.col(id_col).alias("probe_id"), h(F.col(text_col)).alias("_pg")
+    ).filter(F.col("_pg").isNotNull())
     if use_index:
         p_idx = p.select(
             "probe_id",
@@ -338,6 +257,33 @@ def contamination_pairs(
             d.select("doc_id", F.explode("_dg").alias("_g")),
             p_idx, broadcast, threshold, round_to,
         )
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def score(dgs, pgs):
+        out = np.empty(len(dgs))
+        for i in range(len(dgs)):
+            dg, pg = dgs.iloc[i], pgs.iloc[i]
+            if dg is None or pg is None or len(pg) == 0:
+                out[i] = -1.0  # undefined -> below any threshold
+                continue
+            out[i] = np.intersect1d(dg, pg, assume_unique=True).size / len(pg)
+        return pd.Series(out)
+
+    score.__annotations__ = {
+        "dgs": pd.Series, "pgs": pd.Series, "return": pd.Series
+    }
+    # nondeterministic marking: the containment threshold filter below
+    # would otherwise duplicate the score kernel (guide-§4.4 shape; see
+    # vectors.hyperplane_keys_np)
+    cont = F.round(
+        pandas_udf(score, "double").asNondeterministic()(
+            F.col("_dg"), F.col("_pg")
+        ),
+        round_to,
+    )
     return (
         d.crossJoin(F.broadcast(p))
         .select("doc_id", "probe_id", cont.alias("containment"))
@@ -399,9 +345,8 @@ def contamination_bloom(
     """:func:`contamination_pairs` for probe sets too big to index-join
     comfortably — decontaminating against ANOTHER CORPUS (millions of
     probe documents, billions of grams) rather than a benchmark suite.
-    Row-identical output to ``contamination_pairs(impl='np',
-    prefilter='index')`` at the same ``n``/``threshold``; only the scale
-    shape differs:
+    Row-identical output to ``contamination_pairs(prefilter='index')``
+    at the same ``n``/``threshold``; only the scale shape differs:
 
     a Bloom bitmap of every probe gram (built distributed,
     ``operators/bloom.py``) broadcasts in KBs-MBs; each corpus gram is

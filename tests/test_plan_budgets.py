@@ -257,7 +257,7 @@ def _has_array(schema_json: str) -> bool:
 
 def test_minhash_band_shuffle_carries_ids_only(spark, docs):
     """The (_band, _key) bucket exchange and the pair-dedup exchange see
-    ids only: no array column (hash set, shingle set) reaches either, so
+    ids only: no array column (the shingle-hash set) reaches either, so
     the band shuffle costs ~18 B per (document, band), and the pair dedup
     is a HashAggregate, not a SortAggregate dragging two arrays per
     pair. The sets join back to the pinned signature frame instead."""
@@ -265,32 +265,31 @@ def test_minhash_band_shuffle_carries_ids_only(spark, docs):
         minhash_near_dup_pairs,
     )
 
-    for impl in ("np", "expr"):
-        pairs = minhash_near_dup_pairs(
-            docs.limit(200), "text", "doc_id", num_hashes=32, num_bands=8,
-            shingle="word", impl=impl,
+    pairs = minhash_near_dup_pairs(
+        docs.limit(200), "text", "doc_id", num_hashes=32, num_bands=8,
+        shingle="word",
+    )
+    plan = pairs._jdf.queryExecution().executedPlan().executedPlan()
+    exchanges = {}
+    for node in _nodes(plan):
+        if node.nodeName() != "Exchange":
+            continue
+        part = node.outputPartitioning().toString()
+        for key in ("_band", "id_a"):
+            if f"hashpartitioning({key}" in part:
+                exchanges[key] = node
+    assert set(exchanges) == {"_band", "id_a"}, plan.toString()
+    for key, ex in exchanges.items():
+        # below the exchange: the map-side partial aggregate, then
+        # the rows it combines — neither may carry an array
+        feed = ex.child()
+        assert "Aggregate" in feed.nodeName(), (key, feed.nodeName())
+        if key == "id_a":
+            assert feed.nodeName() == "HashAggregate", feed.nodeName()
+        assert not _has_array(feed.child().schema().json()), (
+            key, feed.child().schema().simpleString()
         )
-        plan = pairs._jdf.queryExecution().executedPlan().executedPlan()
-        exchanges = {}
-        for node in _nodes(plan):
-            if node.nodeName() != "Exchange":
-                continue
-            part = node.outputPartitioning().toString()
-            for key in ("_band", "id_a"):
-                if f"hashpartitioning({key}" in part:
-                    exchanges[key] = node
-        assert set(exchanges) == {"_band", "id_a"}, (impl, plan.toString())
-        for key, ex in exchanges.items():
-            # below the exchange: the map-side partial aggregate, then
-            # the rows it combines — neither may carry an array
-            feed = ex.child()
-            assert "Aggregate" in feed.nodeName(), (impl, key, feed.nodeName())
-            if key == "id_a":
-                assert feed.nodeName() == "HashAggregate", (impl, feed.nodeName())
-            assert not _has_array(feed.child().schema().json()), (
-                impl, key, feed.child().schema().simpleString()
-            )
-        spark.catalog.clearCache()
+    spark.catalog.clearCache()
 
 
 def test_curation_drop_list_union_plans_broadcast(spark, docs):

@@ -19,8 +19,8 @@ from pyspark_data_quality_spark.operators.dedup import (
     minhash_near_dup_pairs,
     minhash_dedup,
     ngram_jaccard_pairs,
-    simhash,
     simhash_near_dup_pairs,
+    simhash_signatures,
 )
 from pyspark_data_quality_spark.operators.similarity import (
     brute_force_topk,
@@ -163,10 +163,6 @@ def test_minhash_md5_family_matches_python_model(spark):
 
     with pytest.raises(ValueError, match="hash_family"):
         minhash_near_dup_pairs(df, "text", "doc_id", hash_family="sha1")
-    with pytest.raises(ValueError, match="impl='np'"):
-        minhash_near_dup_pairs(
-            df, "text", "doc_id", hash_family="md5", impl="expr"
-        )
 
 
 def test_simhash_md5_family_matches_python_model(spark):
@@ -232,17 +228,12 @@ def test_simhash_md5_family_matches_python_model(spark):
 
     with pytest.raises(ValueError, match="hash_family"):
         simhash_near_dup_pairs(df, "text", "doc_id", hash_family="sha1")
-    with pytest.raises(ValueError, match="impl='np'"):
-        simhash_near_dup_pairs(
-            df, "text", "doc_id", hash_family="md5", impl="expr"
-        )
 
 
 def test_embedding_lsh_md5_planes_match_python_model(spark):
-    """planes='md5' + impl='expr' (the dq_embedding_pairs_lsh
-    certification face): operator pairs == an independent python replay
-    of the Box-Muller planes, MSB-first sign-bit keys, bucketing, and
-    cosine verify."""
+    """planes='md5' (the dq_embedding_pairs_lsh certification face):
+    operator pairs == an independent python replay of the Box-Muller
+    planes, MSB-first sign-bit keys, bucketing, and cosine verify."""
     import hashlib
     import itertools
     import math
@@ -266,8 +257,7 @@ def test_embedding_lsh_md5_planes_match_python_model(spark):
         (r["id_a"], r["id_b"]): r["cosine"]
         for r in embedding_near_dup_pairs(
             df, "embedding", "vec_id", threshold=THR, dim=D,
-            num_planes=P, num_tables=T, seed=SEED,
-            planes="md5", impl="expr",
+            num_planes=P, num_tables=T, seed=SEED, planes="md5",
         ).collect()
     }
 
@@ -315,31 +305,40 @@ def test_embedding_lsh_md5_planes_match_python_model(spark):
         )
 
 
-def test_hyperplane_seq_kernel_bit_identical_to_expr_fold(spark):
-    """impl='seq' (the r15 Arrow certification-face kernel) must emit
-    BIT-IDENTICAL bucket keys to the interpreted expression fold for
-    every row — same dim-sequential IEEE accumulation order, same
-    MSB-first packing, same NULL (key NULL) and wrong-width (key 0)
-    semantics. The DuckDB oracles replay the fold's exact sign bits, so
-    any divergence here is a certification break, not a perf detail."""
+def _md5_unit_vectors(n, dim, tag="v"):
+    """Deterministic awkward floats: md5-uniforms in (-0.5, 0.5)."""
     import hashlib
 
-    from pyspark_data_quality_spark.functions.vectors import md5_hyperplanes
+    def u(t):
+        return (
+            int(hashlib.md5(t.encode()).hexdigest()[:6], 16) + 0.5
+        ) / 16777216.0 - 0.5
+
+    return [[u(f"{tag}|{i}|{j}") for j in range(dim)] for i in range(n)]
+
+
+def _hyperplane_keys(df, tables, sequential):
     from pyspark_data_quality_spark.operators.dedup import (
         _explode_hyperplane_buckets,
     )
 
+    out = _explode_hyperplane_buckets(df, "v", tables, sequential, ["vec_id"])
+    return {(r["vec_id"], r["_t"]): r["_k"] for r in out.collect()}
+
+
+def test_hyperplane_seq_kernel_matches_python_replay(spark):
+    """The dim-sequential kernel (the md5-plane certification faces)
+    must emit exactly the keys of a pure-Python left-to-right replay:
+    dot = ((0 + x0*w0) + x1*w1) + ..., sign bit per plane, MSB-first
+    packing (acc*2 + bit), and key 0 in every table for NULL,
+    wrong-width and NULL-element rows. The DuckDB oracles replay the
+    same sign bits, so any divergence here is a certification break,
+    not a perf detail."""
+    from pyspark_data_quality_spark.functions.vectors import md5_hyperplanes
+
     T, P, D, SEED = 4, 8, 16, 7
     tables = md5_hyperplanes(T, P, D, SEED)
-
-    # deterministic awkward floats: md5-uniforms in (-0.5, 0.5), plus
-    # NULL and wrong-width rows to pin the guard semantics
-    def u(tag):
-        return (
-            int(hashlib.md5(tag.encode()).hexdigest()[:6], 16) + 0.5
-        ) / 16777216.0 - 0.5
-
-    rows = [(i, [u(f"v|{i}|{j}") for j in range(D)]) for i in range(40)]
+    rows = list(enumerate(_md5_unit_vectors(40, D)))
     rows += [
         (100, None),                              # NULL vector
         (101, [1.0, 2.0]),                        # wrong width
@@ -348,20 +347,118 @@ def test_hyperplane_seq_kernel_bit_identical_to_expr_fold(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, v array<double>")
 
-    def keys(impl):
-        out = _explode_hyperplane_buckets(df, "v", tables, impl, ["vec_id"])
-        return {
-            (r["vec_id"], r["_t"]): r["_k"] for r in out.collect()
-        }
+    def replay(v):
+        if v is None or len(v) != D or None in v:
+            return [0] * T
+        keys = []
+        for planes in tables:
+            k = 0
+            for w in planes:
+                acc = 0.0
+                for x, wj in zip(v, w):
+                    acc += x * wj
+                k = k * 2 + (1 if acc > 0 else 0)
+            keys.append(k)
+        return keys
 
-    k_expr = keys("expr")
-    k_seq = keys("seq")
-    assert k_seq == k_expr
-    # degenerate rows all fold to key 0 (NULL dot -> bit 0 every plane)
+    want = {
+        (vid, t): k for vid, v in rows for t, k in enumerate(replay(v))
+    }
+    got = _hyperplane_keys(df, tables, sequential=True)
+    assert got == want
     for vid in (100, 101, 102, 103):
-        assert k_expr[(vid, 0)] == 0
+        assert all(got[(vid, t)] == 0 for t in range(T))
     # non-degenerate: the 40 real rows spread over many buckets
-    assert len({v for (i, _), v in k_seq.items() if i < 100}) > 8
+    assert len({k for (i, _), k in got.items() if i < 100}) > 8
+
+
+def test_hyperplane_np_and_seq_kernels_bucket_alike(spark, sf_dir):
+    """Differential, order ignored: for the same md5 tables the matmul
+    kernel (rng faces) and the dim-sequential kernel (md5 faces) split
+    the rows into the same buckets in every table. Keys differ — np
+    packs LSB-first, seq MSB-first — so buckets compare as sets of ids.
+    Only rows whose every plane dot is at least 1e-9 away from 0 take
+    part: there the summation order cannot flip a sign bit. NULL, NaN,
+    zero and wrong-width vectors are checked separately against each
+    kernel's documented keys."""
+    from collections import defaultdict
+
+    import numpy as np
+
+    from pyspark_data_quality_spark.functions.vectors import md5_hyperplanes
+    from pyspark_data_quality_spark.sources.tables import load_table
+
+    T, P, D, SEED = 4, 8, 64, 42
+    tables = md5_hyperplanes(T, P, D, SEED)
+    flat = np.asarray(tables).reshape(T * P, D)
+    emb = load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < 300)
+    fixture = [
+        (r["vec_id"], [float(x) for x in r["embedding"]])
+        for r in emb.collect()
+    ]
+    rows = fixture + [
+        (1000 + i, v) for i, v in enumerate(_md5_unit_vectors(100, D))
+    ]
+    safe = [
+        (vid, v) for vid, v in rows
+        if np.all(np.abs(flat @ np.asarray(v)) >= 1e-9)
+    ]
+    assert len(safe) >= 350
+    df = spark.createDataFrame(safe, "vec_id long, v array<double>")
+
+    def buckets(keys):
+        by = defaultdict(set)
+        for (vid, t), k in keys.items():
+            by[(t, k)].add(vid)
+        return {t: {frozenset(ids) for (tt, _), ids in by.items() if tt == t}
+                for t in range(T)}
+
+    got_np = buckets(_hyperplane_keys(df, tables, sequential=False))
+    got_seq = buckets(_hyperplane_keys(df, tables, sequential=True))
+    assert got_np == got_seq
+    assert all(len(got_np[t]) > 16 for t in range(T))
+
+    nan = float("nan")
+    degenerate = spark.createDataFrame(
+        [
+            (1, None),                  # NULL vector
+            (2, [nan] + [1.0] * (D - 1)),  # NaN element
+            (3, [0.0] * D),             # zero vector
+            (4, [1.0, 2.0]),            # wrong width
+        ],
+        "vec_id long, v array<double>",
+    )
+    # matmul kernel: NaN and zero dots are never > 0, so key 0 in every
+    # table; NULL and wrong-width vectors land in no bucket at all
+    assert _hyperplane_keys(degenerate, tables, sequential=False) == {
+        (vid, t): 0 for vid in (2, 3) for t in range(T)
+    }
+    # sequential kernel: key 0 in every table for all four, as the
+    # oracle's NULL list_dot_product
+    assert _hyperplane_keys(degenerate, tables, sequential=True) == {
+        (vid, t): 0 for vid in (1, 2, 3, 4) for t in range(T)
+    }
+
+
+def test_hyperplane_rng_planes_skip_wrong_width_vectors(spark):
+    """Under the default rng planes a vector whose length is not the
+    planes' width lands in no bucket, like a NULL vector, instead of
+    failing the job — on the corpus side and on the query side."""
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0]), (2, [1.0, 2.0, 3.0]), (3, [1.0, 2.0])],
+        "vec_id long, embedding array<double>",
+    )
+    pairs = embedding_near_dup_pairs(corpus, "embedding", "vec_id", dim=3)
+    assert [tuple(r) for r in pairs.collect()] == [(1, 2, 1.0)]
+
+    queries = spark.createDataFrame(
+        [(10, [1.0, 2.0, 3.0]), (11, [1.0])],
+        "query_id long, query_vec array<double>",
+    )
+    top = lsh_topk(corpus, queries, k=3, dim=3)
+    assert {(r["query_id"], r["neighbor_id"]) for r in top.collect()} == {
+        (10, 1), (10, 2),
+    }
 
 
 def test_ngram_jaccard_bruteforce_matches_lsh(spark, docs):
@@ -385,9 +482,14 @@ def test_ngram_jaccard_bruteforce_matches_lsh(spark, docs):
 
 
 def test_simhash(spark, docs):
-    sh = {r["doc_id"]: r["sh"] for r in docs.select("doc_id", simhash("text").alias("sh")).collect()}
+    # the operator's own signatures: the exact-hamming ground truth
+    # below must use the same token hash the operator bands over
+    sh = {
+        r["_id"]: r["_sh"]
+        for r in simhash_signatures(docs, "text", "doc_id").collect()
+    }
     assert sh[1] == sh[2]  # same tokens after normalization
-    assert sh[5] is None   # empty text -> NULL
+    assert 5 not in sh     # empty text -> NULL signature, dropped
     pairs = simhash_near_dup_pairs(
         docs, "text", "doc_id", max_hamming=16, allow_probabilistic=True
     )
@@ -398,15 +500,14 @@ def test_simhash(spark, docs):
     # entry is rows-only, so this assertion keeps the approximation honest).
     # 4 x 16-bit bands pigeonhole-guarantee recall 1.0 for hamming <= 3;
     # measure there (above 3 the banding is honestly approximate).
-    hams = {k: v for k, v in sh.items() if v is not None}
-    ids = sorted(hams)
+    ids = sorted(sh)
 
     def exact_pairs(h):
         return {
             (a, b)
             for i, a in enumerate(ids)
             for b in ids[i + 1 :]
-            if bin((hams[a] ^ hams[b]) & ((1 << 64) - 1)).count("1") <= h
+            if bin((sh[a] ^ sh[b]) & ((1 << 64) - 1)).count("1") <= h
         }
 
     exact3 = exact_pairs(3)
@@ -544,18 +645,38 @@ def test_embedding_pairs_dim_param_and_empty(spark, vecs):
     ).count() == 0
 
 
-def test_text_profile_np_matches_expr(spark, docs):
+def test_text_profile_matches_oracle_sql(spark, docs):
+    """text_profile == a DuckDB replay of dq_text_profile's oracle SQL
+    (``_SQL_PROFILE_CTE``) on the fixture plus a NULL-text row."""
+    import duckdb
+    import pandas as pd
+
+    from pyspark_data_quality_spark.entry_queries import ORACLE_SQL
+
     cols = ["doc_id", "token_count", "bpe_token_count", "stopword_ratio",
             "punct_ratio", "mean_word_len", "quality_score", "lang_pred",
-            "fingerprint", "fingerprint_md5"]
+            "fingerprint_md5"]
     docs = docs.union(
         spark.createDataFrame([(99, None)], docs.schema)  # null text row
     )
-    a = {tuple(r) for r in text_profile(docs, impl="np").select(*cols).collect()}
-    b = {tuple(r) for r in text_profile(docs, impl="expr").select(*cols).collect()}
-    assert a == b  # the Arrow path must be value-identical to expressions
-    null_row = next(r for r in a if r[0] == 99)
-    assert null_row[1] is None  # null text -> NULL count, not 0
+    got = {r[0]: tuple(r) for r in text_profile(docs).select(*cols).collect()}
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(
+        [(r["doc_id"], "src", r["text"]) for r in docs.collect()],
+        columns=["doc_id", "source", "text"],
+    ))
+    want = {
+        r[0]: tuple(r)
+        for r in con.execute(ORACLE_SQL["dq_text_profile"]).fetchall()
+    }
+    # NULL text: the oracle's greatest() over NULL marker hits falls
+    # through to its ELSE branch ('de'); the operator reports 'und' as
+    # for empty text. The fixture tables hold no NULL text.
+    assert want[99][7] == "de"
+    want[99] = want[99][:7] + ("und",) + want[99][8:]
+    assert got == want
+    assert got[99][1] is None  # null text -> NULL count, not 0
 
 
 def test_ivf_topk_recall(spark, vecs):
@@ -775,16 +896,15 @@ def test_contamination_index_matches_cross(spark, docs):
     # the candidate structure is non-trivial
     probes = docs.limit(6)
     kw = dict(n=8, threshold=0.1)
-    for impl in ("np", "expr"):
-        idx = contamination_pairs(
-            docs, probes, "text", "doc_id", impl=impl, prefilter="index", **kw
-        )
-        cross = contamination_pairs(
-            docs, probes, "text", "doc_id", impl=impl, prefilter="cross", **kw
-        )
-        assert sorted(map(tuple, idx.collect())) == sorted(
-            map(tuple, cross.collect())
-        ), impl
+    idx = contamination_pairs(
+        docs, probes, "text", "doc_id", prefilter="index", **kw
+    )
+    cross = contamination_pairs(
+        docs, probes, "text", "doc_id", prefilter="cross", **kw
+    )
+    assert sorted(map(tuple, idx.collect())) == sorted(
+        map(tuple, cross.collect())
+    )
 
     # the index path never crossJoins: its plan joins on the gram hash
     plan = contamination_pairs(
@@ -2208,10 +2328,10 @@ def test_minhash_injected_signature_width_guard(spark):
     assert pairs(signatures=sig32) == pairs() == {(0, 1)}
 
 
-def _payload_minhash_pairs(base, verify_col, *, num_bands, rows_per_band,
+def _payload_minhash_pairs(base, *, num_bands, rows_per_band,
                            threshold, max_bucket_size):
     """The payload-carrying formulation the ids-only operator replaced:
-    every member's set rides the (band, key) shuffle and the pair
+    every member's hash set rides the (band, key) shuffle and the pair
     dedup, and the verify reads the payloads with no join back."""
     from pyspark_data_quality_spark.operators.dedup import (
         _bands,
@@ -2220,7 +2340,7 @@ def _payload_minhash_pairs(base, verify_col, *, num_bands, rows_per_band,
 
     buckets = base.select(
         "_id",
-        F.col(verify_col).alias("_vp"),
+        F.col("_h").alias("_vp"),
         F.explode(_bands(F.col("_sig"), num_bands, rows_per_band)).alias("_b"),
     ).select("_id", "_vp", F.col("_b.band").alias("_band"),
              F.col("_b.key").alias("_key"))
@@ -2253,53 +2373,39 @@ def lsh_corpus(spark):
 
 
 @pytest.mark.parametrize(
-    "impl,shingle,family,inject,cap",
+    "shingle,family,inject,cap",
     [
-        ("np", "char", "blake2b", False, 1000),
-        ("np", "word", "md5", False, 1000),
-        ("expr", "word", "blake2b", False, 1000),
-        ("expr", "char", "blake2b", False, 1000),
-        ("np", "word", "blake2b", True, 1000),
-        ("np", "word", "blake2b", False, 3),
+        ("char", "blake2b", False, 1000),
+        ("word", "md5", False, 1000),
+        ("word", "blake2b", False, 1000),
+        ("char", "md5", False, 1000),
+        ("word", "blake2b", True, 1000),
+        ("word", "blake2b", False, 3),
     ],
-    ids=["np-blake2b-char", "np-md5-word", "expr-word", "expr-char",
+    ids=["np-blake2b-char", "np-md5-word", "np-blake2b-word", "np-md5-char",
          "injected-signatures", "hot-bucket-cap"],
 )
 def test_minhash_ids_only_equals_payload_formulation(
-    spark, lsh_corpus, impl, shingle, family, inject, cap
+    spark, lsh_corpus, shingle, family, inject, cap
 ):
     """Differential: the ids-only band shuffle + verify join-back returns
     exactly the (id_a, id_b, jaccard) rows of the payload formulation,
-    order ignored, across kernels, hash families, an injected signature
-    frame, a bucket cap that drops the hot cluster's buckets, and
-    NULL/empty texts."""
-    from pyspark_data_quality_spark.operators.dedup import (
-        minhash_signature,
-        minhash_signatures,
-    )
+    order ignored, across shingle kinds, hash families, an injected
+    signature frame, a bucket cap that drops the hot cluster's buckets,
+    and NULL/empty texts."""
+    from pyspark_data_quality_spark.operators.dedup import minhash_signatures
 
     nh, nb, thr, seed = 32, 8, 0.5, 11
     df = lsh_corpus
-    if impl == "np":
-        base = minhash_signatures(df, "text", "doc_id", num_hashes=nh,
-                                  shingle=shingle, shingle_n=3, seed=seed,
-                                  hash_family=family)
-        verify_col = "_h"
-    else:
-        sh = (word_shingles("text", 3) if shingle == "word"
-              else char_ngrams("text", 3))
-        base = (
-            df.select(F.col("doc_id").alias("_id"), sh.alias("_shingles"))
-            .withColumn("_sig", minhash_signature(F.col("_shingles"), nh, seed))
-            .filter(F.col("_sig").isNotNull())
-        )
-        verify_col = "_shingles"
+    base = minhash_signatures(df, "text", "doc_id", num_hashes=nh,
+                              shingle=shingle, shingle_n=3, seed=seed,
+                              hash_family=family)
     want = sorted(map(tuple, _payload_minhash_pairs(
-        base, verify_col, num_bands=nb, rows_per_band=nh // nb,
+        base, num_bands=nb, rows_per_band=nh // nb,
         threshold=thr, max_bucket_size=cap,
     ).collect()))
     call = dict(num_hashes=nh, num_bands=nb, shingle=shingle, shingle_n=3,
-                threshold=thr, seed=seed, impl=impl, hash_family=family,
+                threshold=thr, seed=seed, hash_family=family,
                 max_bucket_size=cap)
     if inject:
         call["signatures"] = base
