@@ -5,6 +5,7 @@ Usage::
     python bench.py                     # sf0.1 (driver default), local[32]
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python bench.py
     SPARK_GRAFT_CPUS=8 python bench.py
+    SPARK_GRAFT_BENCH_PASSES=4 SPARK_GRAFT_BENCH_ONLY=winsorize python bench.py
 
 Prints ONE JSON line on stdout::
 
@@ -14,13 +15,16 @@ Prints ONE JSON line on stdout::
 Suite-line keys drop the uniform ``dq_`` prefix (3 bytes x 80+ entries
 matters: the driver tail-captures only the last ~2000 chars of output and
 the line must fit WHOLE to parse). Everything else — the full-precision
-full-name map (``dq_queries_full``), the round-over-round regression
+full-name map (``dq_queries_full``), per entry every pass's seconds and
+the last pass's jobs/stages/tasks (``dq_entry_runs``, read after each
+timed region), the round-over-round regression
 check (``dq_vs_prev``), and any per-query errors — goes to STDERR before
 the suite line, so stdout ends with exactly one parseable JSON line.
 Each query's plan is
 executed end-to-end with a ``noop``-format write — full physical
 execution (scans, shuffles, joins) with zero driver-side collection, so
-the timing measures the engine, not result transfer.
+the timing measures the engine, not result transfer. The session,
+warm-up, entry selection and artifact format come from scripts/harness.py.
 """
 
 from __future__ import annotations
@@ -30,11 +34,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-from pyspark.sql import SparkSession  # noqa: E402
+import harness  # noqa: E402
 
-import __spark_entry__ as entry_mod  # noqa: E402
+from pyspark_data_quality_spark.plans.telemetry import jobs_during  # noqa: E402
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -59,22 +64,8 @@ def _latest_bench_round(repo_dir: str) -> int:
     return best
 
 
-#: the standard bench core count (bench.py's default); artifacts
-#: without a ``cpus`` stamp (written before it existed) were measured at it
-_DEFAULT_CPUS = 32
-
-
-def _bench_full_name(sf: float, cpus: int = _DEFAULT_CPUS) -> str:
-    """Per-sf, per-cpus artifact name: sf renders as in the testdata dir
-    (0.1 -> 'sf0.1'), and a non-default core count is suffixed (8 ->
-    'sf0.1_c8'), so runs at different scale factors or core counts never
-    overwrite each other's complete map."""
-    suffix = "" if cpus == _DEFAULT_CPUS else f"_c{cpus}"
-    return f"bench_full_sf{sf:g}{suffix}.json"
-
-
 def _prev_bench(
-    repo_dir: str, sf: float, cpus: int = _DEFAULT_CPUS
+    repo_dir: str, sf: float, cpus: int = harness.DEFAULT_CPUS
 ) -> tuple[str, dict] | None:
     """Latest prior BENCH_r{N}.json (or its BENCH_r{N}_c{cpus}.json sibling
     from a non-32-core run) with parseable per-query timings at the same sf AND cpus —
@@ -88,62 +79,32 @@ def _prev_bench(
     full names, full precision, per-sf so a quick run at another sf can
     never clobber the standard sf0.1 map, tagged with the round it
     measured — and the baseline here FILLS the keys the BENCH map
-    dropped when the round tags line up. BENCH_r{N} stays authoritative
-    for keys present in both: a same-round tag does not mean the same
-    run (a mid-round full bench shares the tag with the driver's
-    round-close run), so only the truncated tail is restored, never the
-    round-close readings replaced."""
+    dropped when the round tags line up (``harness.fill_from_full``)."""
     import glob
-    import re
 
     best: tuple[int, str, dict] | None = None
     for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)(?:_c\d+)?\.json$", path)
-        if not m:
-            continue
         try:
-            with open(path) as f:
-                raw = json.load(f)
-            data = raw.get("parsed", raw) or {}
-            queries = data.get("queries")
-            if not queries or data.get("sf") != sf:
-                continue
-            if int(raw.get("cpus", _DEFAULT_CPUS)) != cpus:
-                continue
-            # round-5+ suite lines drop the dq_ prefix; normalize back so
-            # cross-round keys line up with the registry names
-            queries = {
-                (k if k.startswith("dq_") else f"dq_{k}"): v
-                for k, v in queries.items()
-            }
-        except Exception:
+            queries, b_sf, n, b_cpus = harness.load_bench(path)
+        except Exception:  # one unreadable artifact must not kill the bench
             continue
-        n = int(m.group(1))
+        if not queries or b_sf != sf or b_cpus != cpus or n is None:
+            continue
         if best is None or n > best[0]:
             best = (n, os.path.basename(path), queries)
     if best is None:
         return None
     n, label, queries = best
-    full_name = _bench_full_name(sf, cpus)
-    try:
-        with open(os.path.join(repo_dir, "docs", full_name)) as f:
-            full = json.load(f)
-        if (
-            full.get("round") == n
-            and full.get("sf") == sf
-            and full.get("cpus", _DEFAULT_CPUS) == cpus
-        ):
-            # fill ONLY the keys the truncated suite map dropped —
-            # BENCH_r{N} (the round-close run) stays authoritative
-            queries = {**full.get("queries", {}), **queries}
-            label += f"+docs/{full_name}"
-    except (OSError, ValueError):
-        pass
+    filled = harness.fill_from_full(queries, sf, n, cpus, repo_dir)
+    if filled is not None:
+        queries = filled
+        label += f"+docs/{harness.bench_full_name(sf, cpus)}"
     return label, queries
 
 
 def _write_full_artifact(
-    repo_dir: str, sf: float, cpus: int, timings: dict[str, float], pop: str
+    repo_dir: str, sf: float, cpus: int, timings: dict[str, float],
+    runs: dict[str, dict], pop: str,
 ) -> str | None:
     """Write the full per-query map to ``docs/`` and return its path.
 
@@ -163,8 +124,9 @@ def _write_full_artifact(
         "pop": pop,
         "value": round(sum(timings.values()), 3),
         "queries": {k: timings[k] for k in sorted(timings)},
+        "runs": runs,
     }
-    path = os.path.join(repo_dir, "docs", _bench_full_name(sf, cpus))
+    path = os.path.join(repo_dir, "docs", harness.bench_full_name(sf, cpus))
     try:
         with open(path, "w") as f:
             json.dump(full_art, f, indent=1, sort_keys=True)
@@ -228,52 +190,16 @@ def suite_line(total: float, timings: dict[str, float], sf: float,
         dropped += 1
 
 
+def _run_once(spark, fn, sf_dir: str) -> float:
+    """Seconds to build one entry's plan and execute it into a noop sink."""
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return round(time.perf_counter() - t0, 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("pyspark-data-quality-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        # even with the UI off, AppStatusListener/SQLAppStatusListener
-        # retain execution graphs for up to 1000 queries — at 110
-        # entries x 2 passes x multi-job plans that's real heap growth,
-        # and late-suite queries were measuring 2-3x their isolated
-        # time under the accumulated GC pressure. Keep only a handful.
-        .config("spark.sql.ui.retainedExecutions", "10")
-        .config("spark.ui.retainedJobs", "50")
-        .config("spark.ui.retainedStages", "50")
-        .config("spark.ui.retainedTasks", "500")
-        .config("spark.ui.retainedDeadExecutors", "1")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm-up: JVM/codegen, the parquet datasource, and the Python UDF
-    # workers + Arrow channel, so the first measured query isn't charged
-    # for one-time session startup.
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.read.parquet(f"{sf_dir}/region.parquet").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import col, pandas_udf
-
-    def _identity(s):
-        return s
-
-    _identity.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    warm_udf = pandas_udf(_identity, "long")
-    spark.range(1000).select(warm_udf(col("id"))).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", harness.DEFAULT_CPUS))
     # min-of-N passes: the first execution of each plan pays Catalyst
     # analysis + codegen + Python-worker spin-up, which measured ±2x
     # run-to-run — the min is the stable engine number the round-over-
@@ -283,40 +209,29 @@ def main() -> None:
     # subset (dq_ prefix optional). The driver never sets it, so official
     # runs always cover the full registry.
     only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").strip()
-    queries = entry_mod.queries()
-    if only_env:
-        want = {
-            n if n.startswith("dq_") else f"dq_{n}"
-            for n in only_env.replace(" ", "").split(",") if n
-        }
-        unknown = want - set(queries)
-        if unknown:
-            print(f"SPARK_GRAFT_BENCH_ONLY: unknown queries {sorted(unknown)}",
-                  file=sys.stderr)
-        queries = {n: f for n, f in queries.items() if n in want}
-    timings: dict[str, float] = {}
+    queries = harness.entries(only_env.replace(" ", "").split(","))
+
+    spark = harness.session("pyspark-data-quality-spark-bench", cpus)
+    harness.warm_up(spark, sf_dir)
+
+    runs: dict[str, dict] = {}
     errors: dict[str, str] = {}
-    for i in range(passes):
+    for _ in range(passes):
         for name, fn in queries.items():
             if name in errors:
                 continue
-            t0 = time.perf_counter()
             try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                t = round(time.perf_counter() - t0, 3)
-                timings[name] = min(timings.get(name, t), t)
+                t, job_ids = jobs_during(
+                    spark, lambda: _run_once(spark, fn, sf_dir)
+                )
+                run = runs.setdefault(name, {"s": []})
+                run["s"].append(t)
+                run.update(harness.job_counts(spark, job_ids))
             except Exception as e:  # one broken query must not kill the bench
                 errors[name] = f"{type(e).__name__}: {e}"[:200]
-                timings.pop(name, None)
+                runs.pop(name, None)
             finally:
-                # isolate queries: a pipeline entry that persists (e.g.
-                # dq_curation) must not leave cache pressure that inflates
-                # every subsequent measurement
-                try:
-                    spark.catalog.clearCache()
-                except Exception:
-                    pass
+                harness.clear_cache(spark)
         # between passes: drop accumulated JVM garbage (finished plans,
         # listener state, Arrow allocations) so pass 2 measures the
         # engine, not pass 1's heap debris
@@ -325,6 +240,7 @@ def main() -> None:
         except Exception:
             pass
 
+    timings = {name: min(run["s"]) for name, run in runs.items()}
     sf = _sf_from_dir(sf_dir)
 
     # Regression gate: compare per-query against the latest recorded round
@@ -334,8 +250,7 @@ def main() -> None:
     # tail-captures only the last ~2000 chars of output, and round 3 proved
     # that anything appended after the suite line pushes the line head
     # (metric/value) out of the buffer, leaving nothing parseable.
-    prev = _prev_bench(os.path.dirname(os.path.abspath(__file__)), sf,
-                       int(cpus))
+    prev = _prev_bench(REPO, sf, cpus)
     if prev:
         prev_file, prev_q = prev
         regressions = {
@@ -361,8 +276,10 @@ def main() -> None:
     # line).
     print(json.dumps({"metric": "dq_queries_full", "queries": timings}),
           file=sys.stderr)
+    print(json.dumps({"metric": "dq_entry_runs", "runs": runs}),
+          file=sys.stderr)
 
-    registry_n = len(entry_mod.queries())
+    registry_n = len(harness.entries([]))
     pop = (
         "all" if len(timings) == registry_n
         else f"{len(timings)}/{registry_n}"
@@ -372,10 +289,7 @@ def main() -> None:
     # _write_full_artifact). Only a full-registry run may overwrite it: a
     # SPARK_GRAFT_BENCH_ONLY subset must not clobber the complete map.
     if len(timings) == registry_n and not only_env:
-        _write_full_artifact(
-            os.path.dirname(os.path.abspath(__file__)), sf, int(cpus),
-            timings, pop,
-        )
+        _write_full_artifact(REPO, sf, cpus, timings, runs, pop)
     line = suite_line(sum(timings.values()), timings, sf, pop=pop)
     if len(line) > 1900:
         print(f"WARNING: suite line {len(line)} chars — the driver tail "

@@ -18,15 +18,50 @@ are SQLMetric accumulators attached to the reused physical plan, so
 harvest AFTER an action on the SAME DataFrame object; values accumulate
 across repeated actions on that object (re-create the frame for a fresh
 count).
+
+:func:`jobs_during` counts the Spark jobs an action starts — the fixed
+per-job cost is what dominates at small scale, so tests pin job counts
+with it.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from collections.abc import Callable
+from typing import Any, TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["measured_collect", "harvest_plan_metrics", "summarize_metrics"]
+_T = TypeVar("_T")
+
+__all__ = [
+    "measured_collect",
+    "harvest_plan_metrics",
+    "summarize_metrics",
+    "jobs_during",
+]
+
+
+def jobs_during(
+    spark: SparkSession, action: Callable[[], _T]
+) -> tuple[_T, set[int]]:
+    """``(action(), ids of the Spark jobs it started)``.
+
+    Job ids are sequential, so the ids are the range between the newest
+    job before and after the action: exact in any job group, and even
+    when the status store's retention (``spark.ui.retainedJobs``) has
+    already dropped some of them. The asynchronous listener bus is
+    drained on both sides first — an undrained read can miss jobs that
+    already ran."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def newest() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    before = newest()
+    out = action()
+    return out, set(range(before + 1, newest() + 1))
 
 
 def harvest_plan_metrics(df: DataFrame) -> list[dict[str, Any]]:

@@ -20,10 +20,10 @@ BASELINE.md prose:
   ``{"queries": {...}}``). Suite-line maps are 1-decimal and truncated
   past the driver's ~1900-char budget; when a sibling
   ``docs/bench_full_sf{sf}.json`` (``..._c{cpus}.json`` for a
-  non-32-core run, named as bench.py's _bench_full_name does) carries
-  the same round tag, sf and core count, its full-precision map fills
-  the truncated tail (the BENCH file stays authoritative for shared
-  keys — same contract as bench.py's _prev_bench).
+  non-32-core run) carries the same round tag, sf and core count, its
+  full-precision map fills the truncated tail (the BENCH file stays
+  authoritative for shared keys — ``harness.fill_from_full``, the same
+  reader as bench.py's _prev_bench).
 - ``--touched``: newline-separated entry names (dq_ prefix optional)
   the round's diff touched; everything else is the control group.
 
@@ -40,72 +40,9 @@ from __future__ import annotations
 import argparse
 import json
 import math
-import os
-import re
 import sys
 
-
-def _norm(name: str) -> str:
-    return name if name.startswith("dq_") else f"dq_{name}"
-
-
-#: bench.py's standard core count; artifacts without a ``cpus`` stamp
-#: were measured at it
-_DEFAULT_CPUS = 32
-
-
-def _bench_full_name(sf: float, cpus: int) -> str:
-    """bench.py's full-map artifact name: a non-default core count is
-    suffixed (sf0.1, 8 cpus -> 'bench_full_sf0.1_c8.json')."""
-    suffix = "" if cpus == _DEFAULT_CPUS else f"_c{cpus}"
-    return f"bench_full_sf{sf:g}{suffix}.json"
-
-
-def _load_queries(
-    path: str,
-) -> tuple[dict[str, float], float | None, int | None, int]:
-    """(queries, sf, round, cpus) from a BENCH_r{N}.json / bench_full /
-    raw-suite-line file; query keys normalized to the dq_ prefix."""
-    with open(path) as f:
-        raw = json.load(f)
-    data = raw.get("parsed", raw) or {}
-    queries = data.get("queries") or {}
-    sf = data.get("sf")
-    rnd = data.get("round")
-    if rnd is None:
-        m = re.search(
-            r"BENCH_r(\d+)(?:_c\d+)?\.json$", os.path.basename(path)
-        )
-        if m:
-            rnd = int(m.group(1))
-    cpus = int(raw.get("cpus", _DEFAULT_CPUS))
-    return ({_norm(k): float(v) for k, v in queries.items()}, sf, rnd, cpus)
-
-
-def _fill_from_full(
-    queries: dict[str, float], sf: float | None, rnd: int | None,
-    repo_dir: str, cpus: int = _DEFAULT_CPUS,
-) -> dict[str, float]:
-    """Restore the driver-truncated tail from the docs/ full map of the
-    same sf and core count when its round, sf and cpus tags line up;
-    shared keys keep the BENCH values."""
-    if sf is None or rnd is None:
-        return queries
-    path = os.path.join(repo_dir, "docs", _bench_full_name(sf, cpus))
-    try:
-        with open(path) as f:
-            full = json.load(f)
-    except (OSError, ValueError):
-        return queries
-    if (
-        full.get("round") != rnd
-        or full.get("sf") != sf
-        or full.get("cpus", _DEFAULT_CPUS) != cpus
-    ):
-        return queries
-    filled = {_norm(k): float(v) for k, v in full.get("queries", {}).items()}
-    filled.update(queries)
-    return filled
+import harness
 
 
 def _geomean(ratios: list[float]) -> float | None:
@@ -151,11 +88,14 @@ def main() -> None:
                          "listed as still-open (default 0.75 = >25%% mover)")
     args = ap.parse_args()
 
-    repo_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    now_q, now_sf, now_r, now_c = _load_queries(args.now)
-    prev_q, prev_sf, prev_r, prev_c = _load_queries(args.prev)
-    now_q = _fill_from_full(now_q, now_sf, now_r, repo_dir, now_c)
-    prev_q = _fill_from_full(prev_q, prev_sf, prev_r, repo_dir, prev_c)
+    now_q, now_sf, now_r, now_c = harness.load_bench(args.now)
+    prev_q, prev_sf, prev_r, prev_c = harness.load_bench(args.prev)
+    now_q = harness.fill_from_full(
+        now_q, now_sf, now_r, now_c, harness.REPO
+    ) or now_q
+    prev_q = harness.fill_from_full(
+        prev_q, prev_sf, prev_r, prev_c, harness.REPO
+    ) or prev_q
     if now_sf is not None and prev_sf is not None and now_sf != prev_sf:
         print(f"ERROR: sf mismatch now={now_sf} prev={prev_sf}",
               file=sys.stderr)
@@ -163,7 +103,7 @@ def main() -> None:
 
     with open(args.touched) as f:
         touched = {
-            _norm(ln.strip()) for ln in f
+            harness.dq_name(ln.strip()) for ln in f
             if ln.strip() and not ln.lstrip().startswith("#")
         }
 

@@ -29,11 +29,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import SparkSession  # noqa: E402
-
-import __spark_entry__ as entry_mod  # noqa: E402
+import harness
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -103,67 +99,58 @@ def python_rdd_scans(plan: str) -> int:
     )
 
 
+def plan_counts(plan: str) -> dict[str, int]:
+    """The scale-relevant operator counts of a formatted plan. Formatted
+    explain lists each operator in the tree AND in the details section,
+    so operators count by distinct operator id."""
+
+    def ops(pattern: str) -> int:
+        return len(set(re.findall(rf"\((\d+)\) (?:{pattern})", plan)))
+
+    return {
+        "shuffles": ops("Exchange"),
+        "scans": ops("Scan parquet"),
+        "pushed": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
+        "nested": ops("BroadcastNestedLoopJoin|CartesianProduct"),
+        "row_python": ops("BatchEvalPython"),
+        "python_rdd": python_rdd_scans(plan),
+        "arrow_udf": ops("ArrowEvalPython|MapInPandas"),
+        "codegen": len(set(re.findall(r"codegen id : (\d+)", plan))),
+    }
+
+
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("plan-audit")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     args = [a for a in sys.argv[1:] if a != "--assert"]
     strict = "--assert" in sys.argv[1:]
-    only = args[0] if args else None
+    queries = harness.entries(args[:1])
+    spark = harness.session("plan-audit", 4)
     violations: list[str] = []
 
-    for name, fn in entry_mod.queries().items():
-        if only and name != only:
-            continue
+    for name, fn in queries.items():
         try:
-            df = fn(spark, SF_DIR)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
+            plan = harness.formatted_plan(fn(spark, SF_DIR))
         except Exception as e:  # noqa: BLE001
             print(f"{name:32s} ERROR {type(e).__name__}: {e}"[:120])
             continue
-        if only:
+        if args:
             print(plan)
             continue
-        def ops(pattern: str) -> int:
-            # formatted explain lists each operator in the tree AND in the
-            # details section — count distinct operator ids
-            return len(set(re.findall(rf"\((\d+)\) (?:{pattern})", plan)))
-
-        n_exchange = ops("Exchange")
-        n_scan = ops("Scan parquet")
-        pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
-        nested = ops("BroadcastNestedLoopJoin|CartesianProduct")
-        py_row = ops("BatchEvalPython")
-        py_rdd = python_rdd_scans(plan)
-        py_arrow = ops("ArrowEvalPython|MapInPandas")
-        wsc = len(set(re.findall(r"codegen id : (\d+)", plan)))
+        c = plan_counts(plan)
         flags = []
-        if nested:
-            flags.append(f"NESTED_LOOP x{nested}")
+        if c["nested"]:
+            flags.append(f"NESTED_LOOP x{c['nested']}")
             if name not in NESTED_LOOP_OK:
                 violations.append(f"{name}: unexpected nested-loop join")
-        if py_row:
-            flags.append(f"ROW_PYTHON_UDF x{py_row}")
+        if c["row_python"]:
+            flags.append(f"ROW_PYTHON_UDF x{c['row_python']}")
             violations.append(f"{name}: row-at-a-time Python UDF")
-        if py_rdd:
-            flags.append(f"PYTHON_RDD_SCAN x{py_rdd}")
+        if c["python_rdd"]:
+            flags.append(f"PYTHON_RDD_SCAN x{c['python_rdd']}")
             violations.append(f"{name}: Python-fed RDD scan")
         print(
-            f"{name:32s} shuffles={n_exchange:2d} scans={n_scan} "
-            f"pushed={pushed} arrow_udf={py_arrow} py_rdd={py_rdd} "
-            f"codegen={wsc:2d} "
+            f"{name:32s} shuffles={c['shuffles']:2d} scans={c['scans']} "
+            f"pushed={c['pushed']} arrow_udf={c['arrow_udf']} "
+            f"py_rdd={c['python_rdd']} codegen={c['codegen']:2d} "
             f"{' '.join(flags)}"
         )
     spark.stop()

@@ -3,6 +3,7 @@
 Runs every ``queries()`` entry at sf0.01 in Spark and its ``oracle_sql()``
 in DuckDB, then compares row count, column names, and order-insensitive
 values (exact, mimicking a value hash). Run:  python scripts/check_oracle.py [names...]
+(``dq_`` prefix optional).
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import harness
 
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
@@ -40,21 +41,9 @@ def normalize(v):
 
 def main():
     import duckdb
-    from pyspark.sql import SparkSession
 
-    import __spark_entry__ as entry_mod
-
-    only = set(sys.argv[1:])
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("oracle-check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    qs = harness.entries(sys.argv[1:])
+    spark = harness.session("oracle-check", 8)
 
     con = duckdb.connect()
     for t in (
@@ -64,12 +53,9 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
+    oracles = harness.entry_mod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR)
@@ -80,14 +66,7 @@ def main():
             failures += 1
             continue
         finally:
-            # isolate entries: internal operator caches (plans/cache.py)
-            # are session-lived — without this, a 169-entry gate run
-            # accumulates every entry's cache residue (same hygiene as
-            # bench.py's per-query clearCache)
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
+            harness.clear_cache(spark)
         if name not in oracles:
             print(f"ok?   {name}: rows-only ({len(spark_rows)} rows, no oracle) "
                   f"[{time.time()-t0:.1f}s]")

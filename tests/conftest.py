@@ -3,24 +3,22 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-from pyspark.sql import SparkSession
+from pyspark_data_quality_spark.sources.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("pyspark-data-quality-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = build_session(
+        "pyspark-data-quality-spark-tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_confs={"spark.ui.enabled": "false", "spark.driver.memory": "4g"},
     )
     yield spark
     spark.stop()

@@ -1,15 +1,8 @@
-"""Mover detection in scripts/ambient_adjust.py."""
+"""Mover detection in scripts/ambient_adjust.py, and the bench-artifact
+reader it shares with bench.py (scripts/harness.py)."""
 
-import importlib.util
-import os
-
-_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "scripts", "ambient_adjust.py",
-)
-_spec = importlib.util.spec_from_file_location("ambient_adjust", _PATH)
-ambient_adjust = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(ambient_adjust)
+import ambient_adjust
+import harness
 
 
 def test_open_movers_flags_both_directions():
@@ -46,21 +39,19 @@ def test_fill_from_full_picks_the_core_count_map(tmp_path):
     bench.write_text(json.dumps({
         "cpus": 8, "parsed": {"sf": 0.1, "queries": {"a": 1.0}},
     }))
-    queries, sf, rnd, cpus = ambient_adjust._load_queries(str(bench))
+    queries, sf, rnd, cpus = harness.load_bench(str(bench))
     assert (queries, sf, rnd, cpus) == ({"dq_a": 1.0}, 0.1, 16, 8)
 
     def fill(c):
-        return ambient_adjust._fill_from_full(
-            {"dq_a": 1.0}, 0.1, 16, str(tmp_path), c
-        )
+        return harness.fill_from_full({"dq_a": 1.0}, 0.1, 16, c, str(tmp_path))
 
     # the BENCH value stays authoritative; the tail comes from the map
     # measured at the same core count
     assert fill(8) == {"dq_a": 1.0, "dq_b": 8.0}
     assert fill(32) == {"dq_a": 1.0, "dq_b": 32.0}
-    assert fill(16) == {"dq_a": 1.0}  # no map at that core count
+    assert fill(16) is None  # no map at that core count
     # a map whose cpus stamp disagrees with its name is not used
     (docs / "bench_full_sf0.1_c8.json").write_text(json.dumps({
         "round": 16, "sf": 0.1, "queries": {"dq_b": 8.0},
     }))
-    assert fill(8) == {"dq_a": 1.0}
+    assert fill(8) is None

@@ -585,6 +585,7 @@ def test_implication_report_fused(spark):
     from pyspark_data_quality_spark.operators.consistency import (
         implication_report,
     )
+    from pyspark_data_quality_spark.plans.telemetry import jobs_during
 
     df = spark.createDataFrame(
         [("R", "F", 10.0), ("R", "F", 5.0), ("R", "O", 1.0),
@@ -607,11 +608,8 @@ def test_implication_report_fused(spark):
     nf = out["never_fires"]
     assert nf["n_antecedent"] == 0 and nf["confidence"] is None
 
-    sc = spark.sparkContext
-    before = sc.statusTracker().getJobIdsForGroup(None)
-    implication_report(df, rules).collect()
-    after = sc.statusTracker().getJobIdsForGroup(None)
-    assert len(after) - len(before) <= 2  # one fused agg (+ AQE stage)
+    _, jobs = jobs_during(spark, implication_report(df, rules).collect)
+    assert len(jobs) <= 2  # one fused agg (+ AQE stage)
 
     with pytest.raises(ValueError, match="distinct"):
         implication_report(df, [("a", "1=1", "1=1"), ("a", "1=1", "1=1")])

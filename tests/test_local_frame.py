@@ -12,22 +12,7 @@ from pyspark_data_quality_spark import DQManager, METRIC_SCHEMA
 from pyspark_data_quality_spark.core.models import MetricResult
 from pyspark_data_quality_spark.operators import CompletenessColRatioRule
 from pyspark_data_quality_spark.plans.local import local_frame
-
-
-def _jobs_during(spark, action):
-    """(result, ids of the Spark jobs ``action()`` started), read from
-    ``statusTracker`` after the listener bus drains on both sides."""
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-    tracker = sc.statusTracker()
-
-    def ids():
-        bus.waitUntilEmpty()
-        return set(tracker.getJobIdsForGroup(None) or [])
-
-    before = ids()
-    out = action()
-    return out, ids() - before
+from pyspark_data_quality_spark.plans.telemetry import jobs_during
 
 
 def _physical_plan(df) -> str:
@@ -49,7 +34,7 @@ def test_metric_results_plan_as_local_table_scan_and_collect_without_jobs(spark)
     metrics = _metrics(spark, [CompletenessColRatioRule(columns=["id", "name"])])
     assert metrics.schema == METRIC_SCHEMA  # nullability included
     assert "LocalTableScan" in _physical_plan(metrics)
-    rows, jobs = _jobs_during(spark, metrics.collect)
+    rows, jobs = jobs_during(spark, metrics.collect)
     assert jobs == set(), f"collect started jobs {sorted(jobs)}"
     assert {r["column"]: r["value_double"] for r in rows} == {
         "id": 1.0,
@@ -61,7 +46,7 @@ def test_metric_results_without_rules_are_an_empty_local_frame(spark):
     metrics = _metrics(spark, [])
     assert metrics.schema == METRIC_SCHEMA
     assert "LocalTableScan" in _physical_plan(metrics)
-    rows, jobs = _jobs_during(spark, metrics.collect)
+    rows, jobs = jobs_during(spark, metrics.collect)
     assert rows == [] and jobs == set()
 
 
@@ -104,13 +89,13 @@ def test_schema_checks_start_no_jobs(spark):
     )
 
     df = spark.range(3).select(F.col("id"), F.col("id").cast("string").alias("s"))
-    ok, jobs = _jobs_during(
+    ok, jobs = jobs_during(
         spark, lambda: schema_ok(df, {"id": "bigint", "s": "string"})
     )
     assert ok is True and jobs == set()
-    bad, jobs = _jobs_during(spark, lambda: schema_ok(df, {"id": "int"}))
+    bad, jobs = jobs_during(spark, lambda: schema_ok(df, {"id": "int"}))
     assert bad is False and jobs == set()
-    compat, jobs = _jobs_during(
+    compat, jobs = jobs_during(
         spark,
         lambda: schema_compat_ok({"a": "int"}, {"a": "bigint", "b": "string"}),
     )

@@ -13,38 +13,15 @@ exchange), not exact counts — the goal is catching +5-shuffle
 regressions, not blocking a ±1 replan.
 """
 
-import importlib.util
-import re
-from pathlib import Path
-
 import pytest
 from pyspark.sql import functions as F
 
-_AUDIT = Path(__file__).resolve().parents[1] / "scripts" / "audit_plans.py"
-_spec = importlib.util.spec_from_file_location("audit_plans", _AUDIT)
-audit_plans = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(audit_plans)
+import audit_plans
+import harness
 
 
 def _counts(df):
-    plan = df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-
-    def ops(pattern: str) -> int:
-        # formatted explain lists operators in the tree AND the details
-        # section — count distinct operator ids (audit_plans.py's rule)
-        return len(set(re.findall(rf"\((\d+)\) (?:{pattern})", plan)))
-
-    return {
-        "shuffles": ops("Exchange"),
-        "scans": ops("Scan parquet"),
-        "row_python": ops("BatchEvalPython"),
-        # driver rows that bypassed plans/local.local_frame
-        "python_rdd": audit_plans.python_rdd_scans(plan),
-    }
+    return audit_plans.plan_counts(harness.formatted_plan(df))
 
 
 @pytest.fixture(scope="module")
@@ -218,11 +195,7 @@ def test_kernel_not_duplicated_around_pushed_filters(spark, docs):
         .filter(F.col("_dg").isNotNull())
         .select("doc_id", F.explode("_dg").alias("g"))
     )
-    plan = q._jdf.queryExecution().explainString(
-        q.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    plan = harness.formatted_plan(q)
     arrow_nodes = set(re.findall(r"\((\d+)\) ArrowEvalPython", plan))
     assert len(arrow_nodes) == 1, plan
 

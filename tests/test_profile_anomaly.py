@@ -12,6 +12,7 @@ from pyspark_data_quality_spark.operators.profile import (
     profile_columns,
     top_values,
 )
+from pyspark_data_quality_spark.plans.telemetry import jobs_during
 
 
 @pytest.fixture
@@ -95,11 +96,8 @@ def test_profile_unknown_strategy_raises(spark, sample):
 
 def test_profile_columns_single_job(spark, sample):
     """The whole profile is ONE aggregation: exactly one Spark job."""
-    sc = spark.sparkContext
-    before = sc.statusTracker().getJobIdsForGroup(None)
-    profile_columns(sample, ["x", "s"]).collect()
-    after = sc.statusTracker().getJobIdsForGroup(None)
-    assert len(after) - len(before) <= 2  # agg job (+ AQE final stage)
+    _, jobs = jobs_during(spark, profile_columns(sample, ["x", "s"]).collect)
+    assert len(jobs) <= 2  # agg job (+ AQE final stage)
 
 
 def test_profile_unknown_column_raises(spark, sample):

@@ -192,7 +192,8 @@ def test_prev_bench_fills_from_full_artifact(tmp_path):
     BENCH file (a stale map from different code must not pollute the
     baseline). The artifact is per-sf so a quick sf0.01 run can never
     clobber the sf0.1 map."""
-    from bench import _bench_full_name, _latest_bench_round, _prev_bench
+    from bench import _latest_bench_round, _prev_bench
+    from harness import bench_full_name as _bench_full_name
 
     (tmp_path / "docs").mkdir()
     bench13 = {
@@ -244,7 +245,8 @@ def test_bench_full_artifact_is_per_cpus(tmp_path):
     serve as the 32-core baseline (and vice versa): the artifact name
     carries a non-default core count, the artifact is stamped with it,
     and _prev_bench matches cpus as well as round and sf."""
-    from bench import _bench_full_name, _prev_bench, _write_full_artifact
+    from bench import _prev_bench, _write_full_artifact
+    from harness import bench_full_name as _bench_full_name
 
     (tmp_path / "docs").mkdir()
     for name, cpus, t in (("BENCH_r16.json", 32, 2.0),
@@ -254,9 +256,9 @@ def test_bench_full_artifact_is_per_cpus(tmp_path):
             "parsed": {"sf": 0.1, "queries": {"slow": t}},
         }))
     p32 = _write_full_artifact(str(tmp_path), 0.1, 32,
-                               {"dq_slow": 2.01, "dq_fast": 0.32}, "all")
+                               {"dq_slow": 2.01, "dq_fast": 0.32}, {}, "all")
     p8 = _write_full_artifact(str(tmp_path), 0.1, 8,
-                              {"dq_slow": 1.01, "dq_fast": 0.18}, "all")
+                              {"dq_slow": 1.01, "dq_fast": 0.18}, {}, "all")
     assert p32 == str(tmp_path / "docs" / "bench_full_sf0.1.json")
     assert p8 == str(tmp_path / "docs" / _bench_full_name(0.1, 8))
     assert p8.endswith("bench_full_sf0.1_c8.json")
@@ -488,9 +490,7 @@ def test_hash_snapshot_refresh_logic(tmp_path, monkeypatch):
     """refresh_hash_snapshot certifies only hash-matched entries of the
     newest round (or everything with seed_all), and drops deleted ones."""
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
     import make_cert_ledger as mcl
 
     monkeypatch.setattr(mcl, "REPO", str(tmp_path))

@@ -290,21 +290,21 @@ def test_ensure_min_partitions_never_executes_upstream(spark):
         ensure_min_partitions,
     )
 
-    tracker = spark.sparkContext.statusTracker()
-
-    def n_jobs():
-        return len(tracker.getJobIdsForGroup(None) or [])
+    from pyspark_data_quality_spark.plans.telemetry import jobs_during
 
     # parquet-backed so the aggregate keeps a real Exchange (a local
     # relation would be constant-folded to another LocalRelation)
     base = spark.read.parquet("/root/testdata/sf0.001/region.parquet")
     agg = base.groupBy("r_regionkey").agg(F.count(F.lit(1)).alias("n"))
-    before = n_jobs()
-    assert ensure_min_partitions(agg, 8) is agg  # shuffle upstream
     small = spark.createDataFrame([(0, "a")], "r_regionkey bigint, lbl string")
     joined = base.join(F.broadcast(small), "r_regionkey", "left")
-    boosted = ensure_min_partitions(joined, 8)
-    assert n_jobs() == before, "guard scheduled Spark jobs while sizing"
+
+    def guard():
+        assert ensure_min_partitions(agg, 8) is agg  # shuffle upstream
+        return ensure_min_partitions(joined, 8)
+
+    boosted, jobs = jobs_during(spark, guard)
+    assert jobs == set(), "guard scheduled Spark jobs while sizing"
     assert boosted is not joined  # 1-split stream side -> still boosts
     assert boosted.rdd.getNumPartitions() == 8
 
