@@ -26,8 +26,8 @@ class Config:
 
     - ``dataset`` (DQ_DATASET): default dataset label on metric rows
       (consulted by ``DQManager``).
-    - ``severity_level`` (DQ_SEVERITY): severity applied by
-      ``DQManager.add_rule`` to rules that did not set one explicitly.
+    - ``severity_level`` (DQ_SEVERITY): severity a ``DQManager`` run
+      reports for rules that did not set one explicitly.
 
     Only keys the engine actually CONSULTS live here — a previous
     revision also carried approx_rsd / max_bucket_size / sf_dir that

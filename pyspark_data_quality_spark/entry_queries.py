@@ -440,7 +440,7 @@ _SQL_LANG_HITS = """
   len(list_filter(toks, t -> list_contains(['的','是','了','在','我','有','和','不'], t))) AS h_zh
 """
 _SQL_LANG_PRED = """
-  CASE WHEN greatest(h_en, h_es, h_de, h_fr, h_zh) = 0 THEN 'und'
+  CASE WHEN coalesce(greatest(h_en, h_es, h_de, h_fr, h_zh), 0) = 0 THEN 'und'
        WHEN h_zh = greatest(h_en, h_es, h_de, h_fr, h_zh) THEN 'zh'
        WHEN h_fr = greatest(h_en, h_es, h_de, h_fr, h_zh) THEN 'fr'
        WHEN h_es = greatest(h_en, h_es, h_de, h_fr, h_zh) THEN 'es'

@@ -52,22 +52,19 @@ class DQManager:
         return self.add_rule(rule)
 
     def add_rule(self, rule: Rule) -> "DQManager":
-        if getattr(rule, "severity_level", None) is None:
-            # the one config key beyond `dataset` the engine consults:
-            # rules without an explicit severity inherit DQ_SEVERITY
-            from .core.enums import SeverityLevel
-
-            try:
-                rule.severity_level = SeverityLevel(
-                    self.config.severity_level
-                )
-            except ValueError:
-                rule.severity_level = self.config.severity_level
         self._rules.append(rule)
         return self
 
     def run(self) -> ResultObj:
         if self._df is None:
             raise NoDataError("call set_data(df) before run()")
-        ctx = RunContext(dataset=self.dataset, run_id=self.run_id)
+        # the one config key beyond `dataset` the engine consults: rules
+        # without an explicit severity report DQ_SEVERITY. It rides the
+        # run's context, never the rule, so a rule shared by two
+        # managers reports each manager's own default.
+        ctx = RunContext(
+            dataset=self.dataset,
+            run_id=self.run_id,
+            severity_level=self.config.severity_level,
+        )
         return ResultObj(self._rules, self._df, self.spark, ctx)

@@ -209,7 +209,7 @@ def metrics_regression(
     fresh aggregate and fell back to a sort-merge join of two tiny
     frames — r15); pass ``broadcast=False`` when ``key_cols`` are
     per-entity high-cardinality series whose baseline would not fit an
-    executor (the escape-hatch contract every persist kwarg follows).
+    executor.
     Baselines use FINITE history values
     only (SCALE.md invariant 8: one NaN run would poison the mean and
     flag the next ``lookback`` runs)."""

@@ -60,8 +60,8 @@ class Rule:
         self.columns = list(columns or [])
         self.threshold = float(threshold)
         self.condition = condition
-        # None = "not set explicitly": DQManager.add_rule fills it from
-        # Config (DQ_SEVERITY); the metric build falls back to MEDIUM
+        # None = "not set explicitly": the metric build falls back to
+        # the run's default (RunContext.severity_level), then MEDIUM
         self.severity_level = severity_level
         self.dataset = dataset
         self.run_id = run_id
@@ -128,6 +128,7 @@ class Rule:
         threshold_result: float | None = None,
         extra: dict[str, str] | None = None,
     ) -> MetricResult:
+        severity = self.severity_level or ctx.severity_level or SeverityLevel.MEDIUM
         return MetricResult(
             dataset=self.dataset or ctx.dataset,
             run_id=self.run_id or ctx.run_id,
@@ -136,9 +137,9 @@ class Rule:
             column=column,
             dimension=self.dimension.value,
             severity_level=(
-                self.severity_level.value
-                if isinstance(self.severity_level, SeverityLevel)
-                else str(self.severity_level or SeverityLevel.MEDIUM.value)
+                severity.value
+                if isinstance(severity, SeverityLevel)
+                else str(severity)
             ),
             threshold_result=threshold_result if threshold_result is not None else value,
             threshold_range=None,
@@ -182,13 +183,23 @@ class Rule:
 
 
 class RunContext:
-    """Per-run identity shared by all rules' metric rows."""
+    """Per-run identity and defaults shared by all rules' metric rows.
 
-    def __init__(self, dataset: str = "", run_id: str = "", run_ts=None):
+    ``severity_level`` is reported by rules that set none
+    (``Config.severity_level`` when a DQManager builds the context)."""
+
+    def __init__(
+        self,
+        dataset: str = "",
+        run_id: str = "",
+        run_ts=None,
+        severity_level: str | None = None,
+    ):
         from datetime import datetime, timezone
 
         self.dataset = dataset
         self.run_id = run_id
+        self.severity_level = severity_level
         # aware UTC (same rationale as core/models._utcnow): a naive
         # value is converted through the DRIVER's OS timezone by
         # TimestampType.toInternal, shifting metric timestamps on any

@@ -260,7 +260,6 @@ def dedup_against_bloom(
     num_bits: int | None = None,
     num_hashes: int | None = None,
     exact_verify: bool = True,
-    persist: bool = True,
 ) -> DataFrame:
     """Incremental dedup of ``df`` against ``reference`` via a broadcast
     Bloom prefilter — same contract as :func:`.dedup.dedup_against`
@@ -333,9 +332,9 @@ def dedup_against_bloom(
     # batch scan + fingerprint + bitmap probe re-execute per consumer.
     # The batch is the SMALL incremental side by contract (the reference
     # stays scan-only), so caching it is bounded; plans/cache.py lifetime.
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
-    probed = maybe_persist(probed, persist)
+    probed = pin(probed)
     cand = probed.filter(F.col("_maybe"))
     cand_fp = cand.select("_fp").distinct()
     # True intersection: reference SCAN semi-joined against the broadcast

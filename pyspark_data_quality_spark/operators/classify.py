@@ -62,7 +62,7 @@ class NBModel:
     class); at most V×C rows where V ≤ ``num_buckets`` when hashing.
     ``classes``: (label, log_prior, log_oov) — C rows.
 
-    A freshly TRAINED model's frames derive from a persisted count
+    A freshly TRAINED model's frames derive from a pinned count
     frame (see train_nb_classifier); call :meth:`unpersist` when done
     with a model you will not score again in this application —
     cached blocks stay reachable (and disk-tier blocks uncollected)
@@ -132,7 +132,6 @@ def train_nb_classifier(
     num_buckets: int | None = None,
     smoothing: float = 1.0,
     min_count: int = 1,
-    persist: bool = True,
 ) -> NBModel:
     """Train on ``df`` (one row per labeled document). NULL-labeled rows
     are excluded (an unlabeled document defines no class); NULL/empty
@@ -154,7 +153,7 @@ def train_nb_classifier(
         F.col(label_col).alias("label"),
         F.explode(_featurize(text_col, num_buckets)).alias("feature"),
     )
-    # persisted: the (label, feature) count frame feeds up to four
+    # pinned: the (label, feature) count frame feeds up to four
     # consumers (hapax filter, vocab size, per-class totals, the model's
     # feature deltas) — without the cache the corpus-sized tokenize +
     # explode + groupBy subtree re-executes per consumer. The cache
@@ -162,20 +161,17 @@ def train_nb_classifier(
     # REACHABLE through the returned model's lineage (memory blocks can
     # demote under pressure, but disk-tier blocks are not collected
     # while referenced) — long-lived callers release it explicitly via
-    # NBModel.unpersist(), or train with persist=False (plans/cache.py
-    # contract: the count subtree then recomputes per consumer).
-    from ..plans.cache import maybe_persist
+    # NBModel.unpersist() (plans/cache.py contract).
+    from ..plans.cache import pin
 
-    cnt = maybe_persist(
-        toks.groupBy("label", "feature")
-        .agg(F.count(F.lit(1)).alias("_cnt")),
-        persist,
+    cnt = pin(
+        toks.groupBy("label", "feature").agg(F.count(F.lit(1)).alias("_cnt"))
     )
     # capture the release handle BEFORE any reassignment: unpersist()
     # only uncaches a plan that sameResults the frame it's called on,
     # so handing _cached the post-semi-join derivative would make the
     # release a silent no-op for min_count > 1 (r12 review)
-    cached = cnt if persist else None
+    cached = cnt
     if min_count > 1:
         keep = (
             cnt.groupBy("feature")
@@ -233,7 +229,6 @@ def train_quality_model(
     min_count: int = 2,
     max_per_class: int | None = None,
     id_col: str | None = None,
-    persist: bool = True,
 ) -> NBModel:
     """CCNet-style weak supervision in one call: label the corpus with
     two heuristic predicates (``good_filter`` / ``bad_filter`` — Column
@@ -293,7 +288,6 @@ def train_quality_model(
         num_buckets=num_buckets,
         smoothing=smoothing,
         min_count=min_count,
-        persist=persist,
     )
 
 
@@ -305,7 +299,6 @@ def score_nb_classifier(
     *,
     broadcast_model: bool = True,
     score_col: str = "score",
-    persist_features: bool = False,
 ) -> DataFrame:
     """Per-(document, class) log-scores: ``id_cols + (label, score)``,
     exactly C rows per input row.
@@ -317,13 +310,8 @@ def score_nb_classifier(
     documents still score on prior + OOV mass alone.
 
     The featurized projection feeds BOTH the explode branch and the
-    spine branch; without persistence Spark computes the tokenize+hash
-    pass once per branch. ``persist_features=True`` caches it
-    (MEMORY_AND_DISK — the projection is ids + token arrays, far
-    smaller than the documents) when the input is expensive to rescan;
-    the cache lives until session end (plans/cache.py contract), so
-    long-lived sessions should keep the default False or unpersist the
-    input themselves.
+    spine branch, so Spark computes the tokenize+hash pass once per
+    branch.
     """
     feats = model.features
     if broadcast_model:
@@ -338,10 +326,6 @@ def score_nb_classifier(
         "_n_tokens",
         F.size(F.coalesce(F.col("_feats"), F.array().cast("array<string>"))),
     )
-    if persist_features:
-        from ..plans.cache import maybe_persist
-
-        base = maybe_persist(base, True)
     matched = (
         base.select(*id_cols, F.explode("_feats").alias("feature"))
         .join(feats, "feature")
@@ -640,7 +624,6 @@ def confident_label_errors(
     class_col: str = "label",
     score_col: str = "score",
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Confident-learning label-error detection (Northcutt et al. 2021)
     over ANY classifier's long-format scores: ``df`` holds one row per
@@ -669,10 +652,10 @@ def confident_label_errors(
     Scale shape: two chained window passes over ONE shuffle keyed by
     the example id (softmax + qualifying-argmax rank) plus one
     class-level aggregate broadcast back — shuffles move (examples x
-    classes) score rows; no data-scale collects, no UDFs. ``persist``
-    caches the softmax frame (it feeds both the threshold aggregate
-    and the probe side; without it the scan + window subtree runs
-    twice) — pass ``persist=False`` to opt out (plans/cache.py)."""
+    classes) score rows; no data-scale collects, no UDFs. The softmax
+    frame is pinned (plans/cache.py): it feeds both the threshold
+    aggregate and the probe side, and without the pin the scan +
+    window subtree runs twice."""
     internal = {"_m", "_e", "_s", "_p", "_t", "_qual", "_rn", "_pg", "_tg"}
     out_names = {"assigned_label", "self_confidence",
                  "assigned_confidence", "threshold", "is_label_issue"}
@@ -686,7 +669,7 @@ def confident_label_errors(
     from pyspark.sql.window import Window
 
     from ..functions.expr import finite
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
     # NaN scores become NULL so max/sum/avg skip them (one NaN would
     # otherwise poison the example's whole softmax AND the class's
@@ -697,14 +680,13 @@ def confident_label_errors(
     w = Window.partitionBy(*id_cols)
     # softmax with max-subtraction (log-scores run to -hundreds; a bare
     # exp underflows every class to 0/0)
-    probs = maybe_persist(
+    probs = pin(
         df.withColumn("_m", F.max(score).over(w))
         .withColumn("_e", F.exp(score - F.col("_m")))
         .withColumn("_p", F.col("_e") / F.sum("_e").over(w))
         .withColumn(
             "_pg", F.max(F.when(cls == given, F.col("_p"))).over(w)
-        ),
-        persist,
+        )
     )
     thresholds = (
         probs.filter(cls.eqNullSafe(given))

@@ -497,7 +497,6 @@ def minhash_near_dup_pairs(
     max_bucket_size: int | None = 1000,
     hash_family: str = "blake2b",
     signatures: DataFrame | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, exact jaccard >= threshold) via
     MinHash banding.
@@ -555,11 +554,9 @@ def minhash_near_dup_pairs(
     An injected frame is read as given — banding and verify are two
     consumers of it, so pin it (persist or checkpoint) before the call.
 
-    ``persist`` (default on) pins the signature frame this call builds
-    with ``MEMORY_AND_DISK`` (plans/cache.py contract): released by
-    ``spark.catalog.clearCache()`` or session end. ``persist=False``
-    leaves no CacheManager entry and may re-run the shingle kernel once
-    per consumer (banding plus each verify side); results are equal.
+    The signature frame this call builds is pinned with
+    ``MEMORY_AND_DISK`` (plans/cache.py contract) until
+    ``spark.catalog.clearCache()`` or session end.
     """
     if hash_family not in ("blake2b", "md5"):
         raise ValueError(
@@ -575,7 +572,7 @@ def minhash_near_dup_pairs(
             f"divisible by num_bands={num_bands} (use lsh_plan to pick "
             "a consistent configuration)"
         )
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
     rows_per_band = num_hashes // num_bands
     if signatures is not None:
@@ -616,7 +613,7 @@ def minhash_near_dup_pairs(
     # banding and verify read ONE materialization and the shingle
     # kernel still runs once. An injected frame is the caller's to pin.
     if signatures is None:
-        base = maybe_persist(base, persist)
+        base = pin(base)
     buckets = base.select(
         "_id",
         F.explode(_bands(F.col("_sig"), num_bands, rows_per_band)).alias("_b"),

@@ -129,16 +129,14 @@ def numeric_drift(
     hi: float | None = None,
     eps: float = DEFAULT_EPS,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Binned PSI for a numeric column: both sides histogrammed with the
     SAME bounds (explicit ``lo``/``hi``, else the REFERENCE side's
     min/max — the convention that makes "new data escaped the old range"
     show up as mass in the clamped edge bins), then the categorical PSI
     formula per bin. Output: ``(bin, p_cur, p_ref, psi_term)``.
-    ``persist`` gates the bounds cache (plans/cache.py contract).
     """
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
     from .profile import histogram
 
     if lo is None or hi is None:
@@ -153,12 +151,11 @@ def numeric_drift(
         # into the edge bins below.
         from ..functions.expr import finite
 
-        b = maybe_persist(
+        b = pin(
             ref.agg(
                 F.min(finite(F.col(col))).cast("double").alias("_blo"),
                 F.max(finite(F.col(col))).cast("double").alias("_bhi"),
-            ),
-            persist,
+            )
         )
         h_ref = _hist_with_bounds(ref, col, bins, b)
         h_cur = _hist_with_bounds(cur, col, bins, b)
@@ -213,7 +210,6 @@ def ks_statistic(
     quantize: int | None = None,
     round_to: int = 6,
     method: str = "partitioned",
-    persist: bool = True,
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic: max |ECDF_cur - ECDF_ref|
     over the combined support. One row: (ks, n_cur, n_ref).
@@ -281,15 +277,13 @@ def ks_statistic(
     # histogram ONCE — without a pin the union-groupBy + range-exchange
     # subtree executes twice, and the range boundaries would be
     # re-sampled per consumer (same fix as ks_by_group, r11). Never the
-    # corpus — only its distinct support. Lifetime: plans/cache.py;
-    # pass persist=False in long-lived looping sessions.
-    from ..plans.cache import pin_partitions
+    # corpus — only its distinct support. Lifetime: plans/cache.py.
+    from ..plans.cache import pin
 
-    ranged = pin_partitions(
+    ranged = pin(
         j.repartitionByRange(F.col("x").asc()).withColumn(
             "_pid", F.spark_partition_id()
-        ),
-        persist,
+        )
     )
     w_local = (
         Window.partitionBy("_pid")
@@ -353,7 +347,6 @@ def ks_by_group(
     quantize: int | None = None,
     round_to: int = 6,
     sort: bool = True,
-    persist: bool = True,
 ) -> DataFrame:
     """Per-SEGMENT two-sample KS: one row per group with the KS
     statistic of ``col`` WITHIN that segment, cur vs ref — the numeric
@@ -375,12 +368,11 @@ def ks_by_group(
     re-SAMPLED independently for each consumer, so a boundary flip
     between the two runs could misalign the offset join. The pin holds
     the collapsed (group, value) histogram, never the input rows;
-    lifetime per plans/cache.py (``persist=False`` in long-lived
-    looping sessions). ``sort=False`` skips the final global sort for
-    composites that re-sort the union themselves
+    lifetime per plans/cache.py. ``sort=False`` skips the final global
+    sort for composites that re-sort the union themselves
     (pipelines/segment_health.py).
     """
-    from ..plans.cache import pin_partitions
+    from ..plans.cache import pin
 
     x = F.col(col)
     v = F.round(x, quantize) if quantize is not None else x
@@ -395,11 +387,10 @@ def ks_by_group(
         )
 
     j = _tagged_counts(side(cur), side(ref), ["grp", "x"], "n_a", "n_b")
-    ranged = pin_partitions(
+    ranged = pin(
         j.repartitionByRange(
             F.col("grp").asc_nulls_first(), F.col("x").asc()
-        ).withColumn("_pid", F.spark_partition_id()),
-        persist,
+        ).withColumn("_pid", F.spark_partition_id())
     )
     w_local = (
         Window.partitionBy("_pid", "grp")
@@ -477,7 +468,6 @@ def wasserstein_1d(
     lo: float | None = None,
     hi: float | None = None,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Binned 1-D Wasserstein-1 (earth-mover) distance between the two
     distributions of ``col``: W1 = bin_width * sum_b |CDF_cur(b) -
@@ -503,14 +493,13 @@ def wasserstein_1d(
         # — without the cache each re-scans ref for min/max. Lifetime:
         # plans/cache.py.
         from ..functions.expr import finite
-        from ..plans.cache import maybe_persist
+        from ..plans.cache import pin
 
-        b = maybe_persist(
+        b = pin(
             ref.agg(
                 F.min(finite(F.col(col))).cast("double").alias("_blo"),
                 F.max(finite(F.col(col))).cast("double").alias("_bhi"),
-            ),
-            persist,
+            )
         )
     else:
         b = local_frame(
@@ -667,7 +656,6 @@ def quantile_drift(
     *,
     quantiles: tuple[float, ...] = (0.1, 0.25, 0.5, 0.75, 0.9),
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Quantile-shift drift report: EXACT interpolated quantiles of both
     sides at each requested level, with absolute and relative shifts —
@@ -693,7 +681,6 @@ def quantile_drift(
     ).unionByName(ref.select(pad.alias("_v_cur"), v.alias("_v_ref")))
     stats = value_histogram_stats(
         combined, ["_v_cur", "_v_ref"], quantiles=quantiles, round_to=None,
-        persist=persist,
     ).filter(F.col("stat") != "distinct_count")
     # conditional-agg pivot, NOT a self-join of the stats frame — a join
     # would duplicate the whole histogram subtree in the plan
@@ -817,7 +804,6 @@ def corpus_divergence(
     group_col: str,
     *,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Per-group KL divergence of the unigram token distribution against
     the WHOLE corpus — "which source/language/shard reads differently from
@@ -834,21 +820,20 @@ def corpus_divergence(
     explode subtree re-executes per consumer (measured: 4 source scans
     for one report, r11). The cache holds distinct (group, token)
     pairs — vocabulary x groups, never the corpus; lifetime per
-    plans/cache.py (``persist=False`` in long-lived looping sessions).
+    plans/cache.py.
     The corpus distribution reduces the cached frame by token; totals
     join back hash-keyed; the grand total broadcasts from a 1-row agg.
     Output one row per group:
     (group, n_tokens, n_distinct_tokens, kl_vs_corpus).
     """
     from ..functions.text import tokenize
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
-    pairs = maybe_persist(
+    pairs = pin(
         df.select(F.col(group_col),
                   F.explode(tokenize(text_col)).alias("_t"))
         .groupBy(group_col, "_t")
-        .agg(F.count(F.lit(1)).alias("_c")),
-        persist,
+        .agg(F.count(F.lit(1)).alias("_c"))
     )
     from ..plans.joins import join_null_safe
 
@@ -884,7 +869,6 @@ def embedding_drift(
     vec_col: str,
     *,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Embedding-space drift between two vector corpora: did the
     representation of the data move? The batch-level complement to the
@@ -913,9 +897,9 @@ def embedding_drift(
         # the corpus (r11). The D+1-row result persists (LAZY,
         # lineage-recomputable, plans/cache.py lifetime) for its two
         # consumers; the mean excludes the NULL-dim bucket.
-        from ..plans.cache import maybe_persist
+        from ..plans.cache import pin
 
-        all_dims = maybe_persist(
+        all_dims = pin(
             df.select(
                 F.posexplode_outer(F.col(vec_col)).alias("dim", "_v")
             )
@@ -923,8 +907,7 @@ def embedding_drift(
             .agg(
                 F.round(F.avg("_v"), round_to).alias(mean_name),
                 F.count(F.lit(1)).alias("_n"),
-            ),
-            persist,
+            )
         )
         d = all_dims.filter(F.col("dim").isNotNull()).drop("_n")
         n = all_dims.agg(
@@ -1088,7 +1071,6 @@ def mmd_drift(
     seed: int = 42,
     weights: str = "rng",
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Kernel two-sample test between two embedding corpora: the squared
     Maximum Mean Discrepancy under a Gaussian RBF kernel, estimated with
@@ -1170,19 +1152,18 @@ def mmd_drift(
         # persists (LAZY, lineage-recomputable, plans/cache.py
         # lifetime) — one Arrow z-pass per side total, where a separate
         # count() consumer used to re-run it (r11)
-        from ..plans.cache import maybe_persist
+        from ..plans.cache import pin
 
         vecs = df.filter(F.col(vec_col).isNotNull()).select(
             rff(F.col(vec_col)).alias("_z")
         )
-        means = maybe_persist(
+        means = pin(
             vecs.select(F.posexplode("_z").alias("feature", "_v"))
             .groupBy("feature")
             .agg(
                 F.avg("_v").alias(mean_name),
                 F.count(F.lit(1)).alias("_n"),
-            ),
-            persist,
+            )
         )
         n = means.agg(
             F.coalesce(F.max("_n"), F.lit(0)).alias(n_name)
@@ -1234,7 +1215,6 @@ def classifier_drift(
     threshold: float = 0.6,
     salt: str = "clsdrift",
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Classifier two-sample drift test (public: Lopez-Paz & Oquab
     2017, "Revisiting classifier two-sample tests"): train a classifier
@@ -1286,7 +1266,7 @@ def classifier_drift(
                 F.lit(name).alias("_side"),
             )
         )
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
     # persisted: the tagged/split union is re-derived by four source-
     # level consumers (NB training reads the fit rows twice — token
@@ -1294,9 +1274,8 @@ def classifier_drift(
     # n_fit count reads fit again); without the cache each one re-scans
     # BOTH input tables (measured: 16 scans for one report, r11). The
     # cache holds the pruned (uid, text, side, part) projection only;
-    # lifetime per plans/cache.py, and the flag threads through to the
-    # NB model's internal count cache too.
-    both = maybe_persist(
+    # lifetime per plans/cache.py.
+    both = pin(
         sides[0].unionByName(sides[1])
         .withColumn(
             "_part",
@@ -1305,15 +1284,13 @@ def classifier_drift(
                 {"fit": train_fraction, "eval": 1 - train_fraction},
                 salt=salt,
             ),
-        ),
-        persist,
+        )
     )
     fit = both.filter(F.col("_part") == "fit")
     ev = both.filter(F.col("_part") == "eval")
     model = train_nb_classifier(
         fit, "_text", "_side",
         num_buckets=num_buckets, smoothing=smoothing, min_count=min_count,
-        persist=persist,
     )
     scored = score_nb_classifier(ev, model, "_text", ["_uid", "_side"])
     # margins are ROUNDED before ranking: a doc's log-score sums in
@@ -1372,7 +1349,6 @@ def drift_screen(
     alpha: float = 0.05,
     eps: float = DEFAULT_EPS,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Wide-table drift SCREENING: binned KS + PSI for MANY numeric
     columns in ONE data shuffle, with Benjamini–Hochberg false-discovery
@@ -1413,7 +1389,7 @@ def drift_screen(
     to the edges, and a constant reference column (width 0) degenerates
     to a single bin — KS 0, PSI 0, p 1, never a divide error.
     """
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
     from .hist import (
         clamped_bin,
         explode_values,
@@ -1426,9 +1402,7 @@ def drift_screen(
 
     # one reference pass for every column's finite bounds -> unpivot the
     # 1-row wide agg to (column, _blo, _bhi); tiny, broadcast below
-    bounds = maybe_persist(
-        unpivot_bounds(finite_bounds(ref, columns), columns), persist
-    )
+    bounds = pin(unpivot_bounds(finite_bounds(ref, columns), columns))
 
     def side(df: DataFrame, a: int) -> DataFrame:
         return explode_values(df, columns).withColumn("_a", F.lit(a))

@@ -64,13 +64,9 @@ def fuzzy_match_pairs(
     max_distance: int = 1,
     q: int = 2,
     lowercase: bool = True,
-    persist: bool = True,
 ) -> DataFrame:
     """All pairs with ``levenshtein <= max_distance`` (exact result,
     blocked plan). Output: (id_a, id_b, distance), id_a < id_b.
-    ``persist`` gates the two self-join input caches (plans/cache.py
-    contract; the ranked-prefix order is a total order, so an
-    unpersisted re-execution is identical, just double work).
     """
     if max_distance < 0:
         raise ValueError("fuzzy_match_pairs: max_distance must be >= 0")
@@ -94,12 +90,12 @@ def fuzzy_match_pairs(
     # global frequency order; ties broken by the gram itself so the rank
     # is total and both sides of a pair agree on it
     freq = grams.groupBy("_g").agg(F.count(F.lit(1)).alias("_f"))
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
     # persisted: the prefix frame self-joins (both sides of the candidate
     # join read it) — without the cache the gram explode + frequency join
     # + rank window execute once per join side; <= prefix rows per id
-    ranked = maybe_persist(
+    ranked = pin(
         grams.join(freq, "_g")
         .withColumn(
             "_rn",
@@ -108,8 +104,7 @@ def fuzzy_match_pairs(
             ),
         )
         .filter(F.col("_rn") <= prefix)
-        .select("_id", "_s", "_len", "_g"),
-        persist,
+        .select("_id", "_s", "_len", "_g")
     )
 
     a, b = ranked.alias("a"), ranked.alias("b")
@@ -130,10 +125,8 @@ def fuzzy_match_pairs(
     )
 
     # persisted for the same reason: the short-string fallback self-joins
-    shorts = maybe_persist(
-        base.filter(F.col("_ng") <= q * k)
-        .select("_id", "_s", "_len"),
-        persist,
+    shorts = pin(
+        base.filter(F.col("_ng") <= q * k).select("_id", "_s", "_len")
     )
     sa, sb = shorts.alias("sa"), shorts.alias("sb")
     short_cands = (

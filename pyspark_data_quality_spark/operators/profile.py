@@ -49,7 +49,6 @@ def profile_columns(
     exact_quantiles: bool = False,
     strategy: str = "fused",
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Profile ``columns`` (default: all leaf columns) in ONE aggregation
     pass. Returns long format ``(column, stat, value)`` sorted by
@@ -74,7 +73,6 @@ def profile_columns(
     if strategy == "pairs":
         return _profile_columns_pairs(
             df, columns, quantiles=quantiles, round_to=round_to,
-            persist=persist,
         )
     if strategy != "fused":
         raise ValueError(f"profile_columns: unknown strategy {strategy!r}")
@@ -140,7 +138,6 @@ def _profile_columns_pairs(
     *,
     quantiles: tuple[float, ...],
     round_to: int,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact profile via the pairs shape (see :func:`profile_columns`).
 
@@ -206,7 +203,7 @@ def _profile_columns_pairs(
 
     # --- branch B: exploded pairs -> per-column value histogram --------
     pairs_stats = value_histogram_stats(
-        df, cols, quantiles=quantiles, round_to=round_to, persist=persist
+        df, cols, quantiles=quantiles, round_to=round_to
     )
 
     return moments.unionByName(pairs_stats).orderBy("column", "stat")
@@ -218,7 +215,6 @@ def value_histogram_stats(
     *,
     quantiles: tuple[float, ...] = (),
     round_to: int | None = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact distinct counts AND exact type-7 interpolated quantiles for
     ``columns`` from ONE exploded-pairs shuffle — no Catalyst Expand, no
@@ -291,19 +287,16 @@ def value_histogram_stats(
     # (local cumulative counts + per-(partition, column) totals):
     # without a pin the scan + explode + histogram + range-exchange
     # subtree executes twice AND the range boundaries re-sample per
-    # consumer (the ks_by_group r11 fix) — which is why persist=False
-    # falls back to a localCheckpoint (eager under AQE, plans/cache.py)
-    # rather than a plain lazy frame. The pinned frame holds the
-    # collapsed histogram, which for
-    # a high-cardinality column can approach |rows|; persist=True lives
-    # until session end, persist=False until the result is GC'd.
-    from ..plans.cache import pin_partitions
+    # consumer (the ks_by_group r11 fix) — so never a plain lazy
+    # frame. The pinned frame holds the collapsed histogram, which for
+    # a high-cardinality column can approach |rows|; it lives until
+    # spark.catalog.clearCache() or session end.
+    from ..plans.cache import pin
 
-    ranged = pin_partitions(
+    ranged = pin(
         hist.repartitionByRange(
             F.col("column").asc(), F.col("d").asc()
-        ).withColumn("_pid", F.spark_partition_id()),
-        persist,
+        ).withColumn("_pid", F.spark_partition_id())
     )
     w_local = (
         Window.partitionBy("_pid", "column")

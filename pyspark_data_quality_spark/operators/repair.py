@@ -237,7 +237,6 @@ def winsorize(
     exact: bool = False,
     suffix: str = "",
     flag_col: str | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Clamp each column to its [``lower``, ``upper``] quantile band —
     the standard heavy-tail repair before a numeric column feeds a model
@@ -270,7 +269,7 @@ def winsorize(
 
         stats = value_histogram_stats(
             df, columns, quantiles=(float(lower), float(upper)),
-            round_to=None, persist=persist,
+            round_to=None,
         )
         bounds = stats.groupBy().agg(
             *[
@@ -874,7 +873,6 @@ def hbos_scores(
     *,
     bins: int = 16,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Histogram-Based Outlier Score (HBOS, Goldstein & Dengel 2012):
     per-row anomaly score ``sum_c ln(max_count_c / count_c(bin(x_c)))``
@@ -903,7 +901,7 @@ def hbos_scores(
     many of ``cols`` actually scored for the row — rank only within
     equal counts, or require completeness upstream).
     """
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
     from .hist import (
         clamped_bin,
         explode_values,
@@ -916,7 +914,7 @@ def hbos_scores(
     if bins < 2:
         raise ValueError("hbos_scores: bins must be >= 2")
 
-    bounds_wide = maybe_persist(finite_bounds(df, cols), persist)
+    bounds_wide = pin(finite_bounds(df, cols))
 
     # one tagged shuffle: every column's histogram from the exploded map
     hist = (
@@ -932,15 +930,14 @@ def hbos_scores(
         .groupBy("column", "bin")
         .agg(F.count(F.lit(1)).alias("_cnt"))
     )
-    hist = maybe_persist(
+    hist = pin(
         hist.withColumn(
             "_s",
             F.log(
                 F.max("_cnt").over(Window.partitionBy("column"))
                 / F.col("_cnt")
             ),
-        ),
-        persist,
+        )
     )
 
     # shuffle-free scoring: the 1-row bounds broadcast in, then each

@@ -524,7 +524,6 @@ def tfidf_top_terms(
     *,
     k: int = 3,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Per-document top-``k`` terms by TF-IDF — the keyword-extraction
     signal for search indexing, near-dup triage, and topic drift.
@@ -546,7 +545,7 @@ def tfidf_top_terms(
     from pyspark.sql.window import Window
 
     from ..functions.text import tokenize
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
     pairs = df.select(
         F.col(id_col), F.explode(tokenize(text_col)).alias("term")
@@ -555,10 +554,9 @@ def tfidf_top_terms(
     # frequency reduction AND the scoring join — without the cache the
     # corpus explode re-executes per consumer (shared-subtree
     # convention, docs/SCALE.md invariant 6); plans/cache.py lifetime
-    tf = maybe_persist(
+    tf = pin(
         pairs.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf")),
-        persist,
+        .agg(F.count(F.lit(1)).alias("tf"))
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("_n"))
@@ -595,7 +593,6 @@ def unigram_logprob(
     *,
     reference: DataFrame | None = None,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Per-document mean unigram negative log-probability — the
     perplexity-style quality signal (CCNet-lineage): documents whose
@@ -614,7 +611,7 @@ def unigram_logprob(
     Output: (id_col, n_tokens, nll) — NULL nll for empty/null docs.
     """
     from ..functions.text import tokenize
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
     ref = reference if reference is not None else df
     ref_toks = ref.select(F.explode(tokenize(text_col)).alias("term"))
@@ -622,10 +619,9 @@ def unigram_logprob(
     # the scoring join — without the cache the reference explode +
     # groupBy re-executes (one extra corpus scan); plans/cache.py
     # lifetime
-    vocab = maybe_persist(
+    vocab = pin(
         ref_toks.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("_rc")),
-        persist,
+        .agg(F.count(F.lit(1)).alias("_rc"))
     )
     totals = vocab.agg(
         F.sum("_rc").alias("_n_ref"),
@@ -674,7 +670,6 @@ def bigram_logprob(
     *,
     reference: DataFrame | None = None,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Per-document mean bigram negative log-probability — the
     context-aware upgrade of :func:`unigram_logprob`: a document whose
@@ -713,16 +708,15 @@ def bigram_logprob(
     ref_big = ref.select(F.explode(_bigrams(text_col)).alias("_bg")).select(
         F.col("_bg.0").alias("_a"), F.col("_bg.1").alias("_b")
     )
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
     # persisted: the |distinct bigrams|-row model feeds the predecessor
     # totals AND the scoring join — without the cache the reference
     # bigram explode + groupBy re-executes per consumer; plans/cache.py
     # lifetime
-    big_counts = maybe_persist(
+    big_counts = pin(
         ref_big.groupBy("_a", "_b")
-        .agg(F.count(F.lit(1)).alias("_rbc")),
-        persist,
+        .agg(F.count(F.lit(1)).alias("_rbc"))
     )
     # predecessor totals derive from the bigram counts — no rescan; the
     # LAST token of each doc never leads a bigram, so this is c(a,·),
@@ -1074,7 +1068,6 @@ def distinctive_terms(
     k: int = 10,
     min_count: int = 2,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """Keyness analysis: the tokens most OVER-represented in each group
     versus the rest of the corpus, ranked by Dunning's log-likelihood
@@ -1100,18 +1093,17 @@ def distinctive_terms(
 
     if k < 1:
         raise ValueError("distinctive_terms: k must be >= 1")
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
     # persisted: the (group, token) count frame feeds four consumers
     # (token marginals, group marginals, grand total, the G2 join) —
     # without the cache the corpus-sized explode subtree re-executes
     # per consumer (same fix as corpus_divergence, r11); plans/cache.py
     # lifetime
-    pairs = maybe_persist(
+    pairs = pin(
         df.select(F.col(group_col), F.explode(tokenize(text_col)).alias("_t"))
         .groupBy(group_col, "_t")
-        .agg(F.count(F.lit(1)).alias("_a")),
-        persist,
+        .agg(F.count(F.lit(1)).alias("_a"))
     )
     tok_totals = pairs.groupBy("_t").agg(F.sum("_a").alias("_ta"))
     grp_totals = pairs.groupBy(group_col).agg(F.sum("_a").alias("_ga"))

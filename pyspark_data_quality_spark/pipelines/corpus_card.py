@@ -18,7 +18,7 @@ time. This composes the existing operators into ONE long-format frame
                stream, ~2% error — exact distinct over a 100 TB corpus'
                vocabulary is a full extra shuffle for a card number)
 
-Scale shape: ONE text_profile pass feeds everything (persisted across
+Scale shape: ONE text_profile pass feeds everything (pinned across
 the three consumers exactly like pipelines/curation.py — without it the
 mapInPandas profile re-runs per consumer); the volume/quality/
 duplication numbers are a single fused aggregate (countDistinct rides
@@ -42,7 +42,6 @@ def corpus_report(
     top_langs: int = 5,
     low_quality_threshold: float = 0.75,
     round_to: int = 6,
-    persist: bool = True,
     exact_vocab: bool = False,
 ) -> DataFrame:
     """One long-format corpus card; see module docstring for sections.
@@ -52,11 +51,14 @@ def corpus_report(
     certification face (the DuckDB oracle can replay an exact count,
     not a sketch). Default stays approximate: an exact distinct over a
     100 TB corpus' vocabulary is a full extra shuffle for a card
-    number whose consumers tolerate ~2% error."""
-    from ..operators.text import text_profile
-    from ..plans.cache import maybe_persist
+    number whose consumers tolerate ~2% error.
 
-    profiled = maybe_persist(text_profile(df, text_col), persist)
+    The profiled frame is pinned until ``spark.catalog.clearCache()``
+    (plans/cache.py contract)."""
+    from ..operators.text import text_profile
+    from ..plans.cache import pin
+
+    profiled = pin(text_profile(df, text_col))
 
     def long_rows(entries: list) -> DataFrame:
         # reshape ONE aggregate over every (section, metric, expr) into

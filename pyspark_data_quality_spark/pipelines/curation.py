@@ -82,7 +82,6 @@ def curate_corpus(
     salt: str = "",
     status_col: str = "curation_status",
     split_col: str = "split",
-    persist: bool = True,
     strip_boilerplate: bool = False,
     segment_k: int = 50,
     segment_min_df: int = 2,
@@ -123,22 +122,20 @@ def curate_corpus(
     ``lang_pred``) matches the target mix at the largest feasible size;
     rows sampled out get status ``rebalanced_out``.
 
-    ``persist`` (default on) caches the profiled frame: the dedup and
+    The profiled frame is pinned (plans/cache.py): the dedup and
     contamination stages are separate consumers of the same expensive
-    mapInPandas profile pass, and without a persist Spark recomputes it
-    once per branch (measured: 8 MapInPandas nodes in the unpersisted
-    plan). MEMORY_AND_DISK, so an executor under memory pressure spills
-    instead of failing; call ``.unpersist()`` on the returned frame's
-    source when the downstream actions are done, or pass
-    ``persist=False`` to keep the plan fully lazy. ``persist`` also
-    reaches :func:`..operators.dedup.minhash_near_dup_pairs`, which
-    pins its signature frame so banding and verify share one kernel
-    pass (with ``persist=False`` the kernel runs once per consumer).
+    mapInPandas profile pass, and without the pin Spark recomputes it
+    once per branch (measured: 8 MapInPandas nodes in the unpinned
+    plan). :func:`..operators.dedup.minhash_near_dup_pairs` pins its
+    signature frame the same way, so banding and verify share one
+    kernel pass. The pins live until ``spark.catalog.clearCache()``:
+    a loop curating batch after batch calls it once each batch's
+    outputs are written.
     """
     from ..operators.dedup import minhash_near_dup_pairs
     from ..operators.split import split_assignment
     from ..operators.text import contamination_pairs, text_profile
-    from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
     if unicode_form is not None:
         # opt-in pre-step (default off so the certified no-normalize
@@ -156,7 +153,7 @@ def curate_corpus(
         # unpersisted list re-runs its whole subtree once per consumer
         # (measured: the MinHash stage executed twice — once for the
         # near-dup join, once inside contamination's input plan).
-        return maybe_persist(small, persist)
+        return pin(small)
 
     # r16 (guide §3, fewer passes over the corpus): each stage used to
     # LEFT-JOIN its drop-list onto the full annotated frame, so the
@@ -167,7 +164,7 @@ def curate_corpus(
     # drops from its own input via an anti join on the pinned id list.
     drop_lists: list[DataFrame] = []
 
-    prof = maybe_persist(text_profile(docs, text_col), persist)
+    prof = pin(text_profile(docs, text_col))
     # quality gates BEFORE language: junk text language-IDs as 'und', and
     # "low_quality" is the actionable status for it, not "wrong_lang"
     gate = (
@@ -316,7 +313,6 @@ def curate_corpus(
         shingle=shingle, shingle_n=shingle_n,
         threshold=near_dup_threshold,
         hash_family=hash_family,
-        persist=persist,
     )
     # A semi join of passed's ids, not pairs.select(greatest).distinct():
     # without CBO the verify joins' static size estimate is the product

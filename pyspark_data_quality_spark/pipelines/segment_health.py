@@ -56,20 +56,17 @@ def segment_health_report(
     ks_col: str | None = None,
     ks_threshold: float = 0.1,
     round_to: int = 6,
-    persist: bool = True,
 ) -> DataFrame:
     """One long-format health report over ``cur``'s segments; drift
     sections (``psi_cols``, ``ks_col``) additionally need ``ref``.
 
-    ``persist=True`` (default) prunes ``cur``/``ref`` to the columns
-    the requested sections actually read, then caches them: each
-    section is a different aggregation shape, so without the cache a
-    k-section report scans the source k times, and without the prune
-    the cache would materialize every column of a wide table. The
-    cache lives until session end (plans/cache.py contract — Spark
-    does NOT LRU-evict cache entries); hold the pruned frames yourself
-    (persist=False + your own persist) when you need deterministic
-    unpersist — same contract as corpus_report.
+    ``cur``/``ref`` are pruned to the columns the requested sections
+    actually read, then pinned: each section is a different
+    aggregation shape, so without the pin a k-section report scans the
+    source k times, and without the prune the pin would materialize
+    every column of a wide table. The pins live until
+    ``spark.catalog.clearCache()`` or session end (plans/cache.py
+    contract).
 
     The completeness, freshness AND uniqueness sections share ONE
     per-segment base aggregate (row count + per-column non-null counts
@@ -91,26 +88,25 @@ def segment_health_report(
         )
     if not any([completeness_cols, ts_col, unique_keys, psi_cols, ks_col]):
         raise ValueError("segment_health_report: no sections requested")
-    if persist:
-        from ..plans.cache import maybe_persist
+    from ..plans.cache import pin
 
-        used = [group_col]
-        for cols in (completeness_cols, unique_keys, psi_cols):
-            used += cols or []
-        if ts_col:
-            used.append(ts_col)
+    used = [group_col]
+    for cols in (completeness_cols, unique_keys, psi_cols):
+        used += cols or []
+    if ts_col:
+        used.append(ts_col)
+    if ks_col:
+        used.append(ks_col)
+    cur_cols = list(dict.fromkeys(c for c in used if c in cur.columns))
+    cur = pin(cur.select(*cur_cols))
+    if ref is not None:
+        ref_used = [group_col] + (psi_cols or [])
         if ks_col:
-            used.append(ks_col)
-        cur_cols = list(dict.fromkeys(c for c in used if c in cur.columns))
-        cur = maybe_persist(cur.select(*cur_cols), True)
-        if ref is not None:
-            ref_used = [group_col] + (psi_cols or [])
-            if ks_col:
-                ref_used.append(ks_col)
-            ref_cols = list(dict.fromkeys(
-                c for c in ref_used if c in ref.columns
-            ))
-            ref = maybe_persist(ref.select(*ref_cols), True)
+            ref_used.append(ks_col)
+        ref_cols = list(dict.fromkeys(
+            c for c in ref_used if c in ref.columns
+        ))
+        ref = pin(ref.select(*ref_cols))
     seg = F.col(group_col).cast("string")
     parts: list[DataFrame] = []
 
@@ -147,15 +143,12 @@ def segment_health_report(
                     F.struct(*[F.col(k) for k in unique_keys])
                 ).alias("_nd")
             )
-        # maybe_persist, not localCheckpoint: base is a plain groupBy
-        # with no load-bearing partition identity, so the cache
-        # contract's lazy persist gives the same single-materialization
-        # guarantee while keeping lineage (a lost executor recomputes
-        # instead of failing) and not firing an eager job at
-        # report-CONSTRUCTION time
-        from ..plans.cache import maybe_persist
-
-        base = maybe_persist(cur.groupBy(group_col).agg(*aggs), persist)
+        # pin, not localCheckpoint: base is a plain groupBy with no
+        # load-bearing partition identity, so the lazy persist gives the
+        # same single-materialization guarantee while keeping lineage (a
+        # lost executor recomputes instead of failing) and not firing an
+        # eager job at report-CONSTRUCTION time
+        base = pin(cur.groupBy(group_col).agg(*aggs))
         # ONE 1-row global frame serves both sections (fused sums +
         # max over the checkpointed base instead of one single-
         # partition aggregate per section); uniqueness is per-segment
@@ -266,8 +259,7 @@ def segment_health_report(
         from ..operators.drift import ks_by_group
 
         ks = ks_by_group(
-            cur, ref, ks_col, group_col, round_to=round_to, sort=False,
-            persist=persist,
+            cur, ref, ks_col, group_col, round_to=round_to, sort=False
         )
         parts.append(
             ks.select(

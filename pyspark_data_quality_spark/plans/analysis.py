@@ -56,18 +56,18 @@ class AnalysisRunner:
         return exprs
 
     @staticmethod
-    def run(df: DataFrame, rules: list["Rule"], ctx: "RunContext") -> list[MetricResult]:
-        for rule in rules:
-            rule.validate(df)
-        # Rules with join-shaped checks (FK membership) transform the frame
-        # first; the fused agg then runs over the prepared plan — broadcast
-        # joins stack into the same stage, so this stays ONE action.
-        for rule in rules:
-            df = rule.prepare(df)
-        exprs = AnalysisRunner.compile_aggregates(df, rules)
+    def run(
+        prepared: DataFrame, rules: list["Rule"], ctx: "RunContext"
+    ) -> list[MetricResult]:
+        """``prepared`` is the input already validated against every
+        rule and folded through every rule's ``prepare`` (ResultObj does
+        both, once): join-shaped checks (FK membership) have added their
+        marker columns, and their broadcast joins stack into the fused
+        aggregate's stage, so this stays ONE action."""
+        exprs = AnalysisRunner.compile_aggregates(prepared, rules)
         slots_by_rule: dict[str, dict[str, object]] = {r.rule_id: {} for r in rules}
         if exprs:
-            row = df.agg(*exprs).first()  # THE single action for all metrics
+            row = prepared.agg(*exprs).first()  # THE single action for all metrics
             for key, value in row.asDict().items():
                 rule_id, _, slot = key.partition("__")
                 slots_by_rule.setdefault(rule_id, {})[slot] = value

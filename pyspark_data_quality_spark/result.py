@@ -136,7 +136,9 @@ class ResultObj:
         the shuffle stage run as their own jobs), then the metric rows as
         a driver-built local relation (``plans/local.py``): collecting
         it runs no Spark job, and no action on it runs a Python task."""
-        metrics = AnalysisRunner.run(self.df, self.rules, self.ctx)
+        metrics = AnalysisRunner.run(
+            self._prepared_df(), self.rules, self.ctx
+        )
         return local_frame(
             self.spark, [m.as_row() for m in metrics], METRIC_SCHEMA
         )

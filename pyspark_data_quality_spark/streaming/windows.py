@@ -338,7 +338,7 @@ def windowed_pass_ratios(
     for r in rules:
         r.validate(df)
     # fold every rule's prepare transform first (same contract as
-    # AnalysisRunner.run): join-shaped rules like ReferentialIntegrityRule
+    # ResultObj._prepared_df): join-shaped rules like ReferentialIntegrityRule
     # add their marker columns here, and their predicates reference them
     for r in rules:
         src = r.prepare(src)

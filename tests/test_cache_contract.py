@@ -1,15 +1,16 @@
-"""The plans/cache.py contract: every operator that caches internally
-takes ``persist``; ``persist=False`` leaves ZERO entries in the SQL
-CacheManager (no session-lived residue for long-lived looping callers)
-and produces identical results to the cached default.
+"""The plans/cache.py contract: an operator that reads a subtree twice
+pins it in the SQL CacheManager, ``spark.catalog.clearCache()`` (or the
+operator's own release handle, ``NBModel.unpersist()``) releases every
+pin, and a run after the release returns the same rows — so a long-lived
+session that loops operators and clears between iterations keeps no
+residue and no stale state.
 
 Driver for the test list: the r11 advice — the round added ~12
 MEMORY_AND_DISK persists with no release handle and docstrings claiming
-LRU eviction Spark does not do. The sweep also guards the escape
-hatch's one correctness hazard: the prefix-sum operators join
-per-partition offsets on ``spark_partition_id``, so their persist=False
-path must PIN partitions (lazy localCheckpoint), never re-execute a
-``repartitionByRange`` per consumer.
+LRU eviction Spark does not do. The sweep also guards the pin's one
+correctness hazard: the prefix-sum operators join per-partition offsets
+on ``spark_partition_id``, so their range-partitioned histogram must be
+pinned, never re-executed per consumer.
 """
 
 import pytest
@@ -81,129 +82,124 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-# every builder forwards **kw to the ONE operator under test
+# every builder calls the ONE operator under test
 CASES = [
-    ("numeric_drift", lambda d, **kw: numeric_drift(
-        d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1"), "score", **kw
+    ("numeric_drift", lambda d: numeric_drift(
+        d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1"), "score"
     )),
-    ("ks_statistic", lambda d, **kw: ks_statistic(
-        d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1"), "score", **kw
+    ("ks_statistic", lambda d: ks_statistic(
+        d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1"), "score"
     )),
-    ("ks_by_group", lambda d, **kw: ks_by_group(
+    ("ks_by_group", lambda d: ks_by_group(
         d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1"),
-        "score", "lang", **kw
+        "score", "lang"
     )),
-    ("wasserstein_1d", lambda d, **kw: wasserstein_1d(
-        d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1"), "score", **kw
+    ("wasserstein_1d", lambda d: wasserstein_1d(
+        d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1"), "score"
     )),
-    ("corpus_divergence", lambda d, **kw: corpus_divergence(
-        d, "text", "lang", **kw
+    ("corpus_divergence", lambda d: corpus_divergence(
+        d, "text", "lang"
     )),
-    ("embedding_drift", lambda d, **kw: embedding_drift(
-        _vecs(d, 0), _vecs(d, 1), "v", **kw
+    ("embedding_drift", lambda d: embedding_drift(
+        _vecs(d, 0), _vecs(d, 1), "v"
     )),
-    ("mmd_drift", lambda d, **kw: mmd_drift(
-        _vecs(d, 0), _vecs(d, 1), "v", num_features=8, dim=2, **kw
+    ("mmd_drift", lambda d: mmd_drift(
+        _vecs(d, 0), _vecs(d, 1), "v", num_features=8, dim=2
     )),
-    ("confident_label_errors", lambda d, **kw: confident_label_errors(
+    ("confident_label_errors", lambda d: confident_label_errors(
         d.select("doc_id", "lang").withColumn(
             "label", F.explode(F.array(F.lit("en"), F.lit("de")))
         ).withColumn(
             "score",
             F.when(F.col("label") == F.col("lang"), 2.0).otherwise(0.0),
         ),
-        id_cols=["doc_id"], label_col="lang", **kw
+        id_cols=["doc_id"], label_col="lang"
     )),
-    ("classifier_drift", lambda d, **kw: classifier_drift(
+    ("classifier_drift", lambda d: classifier_drift(
         d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1"),
-        "text", "doc_id", **kw
+        "text", "doc_id"
     )),
-    ("tfidf_top_terms", lambda d, **kw: tfidf_top_terms(
-        d, "text", "doc_id", **kw
+    ("tfidf_top_terms", lambda d: tfidf_top_terms(
+        d, "text", "doc_id"
     )),
-    ("unigram_logprob", lambda d, **kw: unigram_logprob(
-        d, "text", "doc_id", **kw
+    ("unigram_logprob", lambda d: unigram_logprob(
+        d, "text", "doc_id"
     )),
-    ("bigram_logprob", lambda d, **kw: bigram_logprob(
-        d, "text", "doc_id", **kw
+    ("bigram_logprob", lambda d: bigram_logprob(
+        d, "text", "doc_id"
     )),
-    ("distinctive_terms", lambda d, **kw: distinctive_terms(
-        d, "text", "lang", **kw
+    ("distinctive_terms", lambda d: distinctive_terms(
+        d, "text", "lang"
     )),
-    ("fuzzy_match_pairs", lambda d, **kw: fuzzy_match_pairs(
+    ("fuzzy_match_pairs", lambda d: fuzzy_match_pairs(
         d.select(
             "doc_id",
             F.concat(
                 F.lit("name"), (F.col("doc_id") % 9).cast("string")
             ).alias("s"),
         ),
-        "s", "doc_id", **kw
+        "s", "doc_id"
     )),
     # pins its signature frame: banding and the verify join-back read
     # one materialization of the shingle kernel
-    ("minhash_near_dup_pairs", lambda d, **kw: minhash_near_dup_pairs(
+    ("minhash_near_dup_pairs", lambda d: minhash_near_dup_pairs(
         d, "text", "doc_id", num_hashes=32, num_bands=8, shingle="word",
-        threshold=0.5, **kw
+        threshold=0.5
     )),
-    ("dedup_against_bloom", lambda d, **kw: dedup_against_bloom(
+    ("dedup_against_bloom", lambda d: dedup_against_bloom(
         d.filter("doc_id % 2 = 0"), d.filter("doc_id % 3 = 0"),
-        "text", expected_items=100, **kw
+        "text", expected_items=100
     )),
-    ("value_histogram_stats", lambda d, **kw: value_histogram_stats(
-        d, ["score", "lang"], **kw
+    ("value_histogram_stats", lambda d: value_histogram_stats(
+        d, ["score", "lang"]
     )),
     # transitive cachers (r12 review): public entry points that cache
-    # only through a gated callee must still thread the flag
-    ("train_quality_model", lambda d, **kw: train_quality_model(
+    # only through a callee
+    ("train_quality_model", lambda d: train_quality_model(
         d, "text",
         good_filter=F.col("score") > 6, bad_filter=F.col("score") <= 2,
-        num_buckets=None, **kw
+        num_buckets=None
     ).features),
     # strategy='pairs' is the branch that reaches value_histogram_stats;
     # the default 'fused' strategy is a single agg with nothing to cache
-    ("profile_columns", lambda d, **kw: profile_columns(
-        d, ["score", "lang"], strategy="pairs", **kw
+    ("profile_columns", lambda d: profile_columns(
+        d, ["score", "lang"], strategy="pairs"
     )),
-    ("quantile_drift", lambda d, **kw: quantile_drift(
-        d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1"), "score", **kw
+    ("quantile_drift", lambda d: quantile_drift(
+        d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1"), "score"
     )),
-    ("winsorize_exact", lambda d, **kw: winsorize(
-        d.select("doc_id", "score"), ["score"], exact=True, **kw
+    ("winsorize_exact", lambda d: winsorize(
+        d.select("doc_id", "score"), ["score"], exact=True
     )),
-    ("segment_health_report", lambda d, **kw: segment_health_report(
+    ("segment_health_report", lambda d: segment_health_report(
         d.filter("doc_id % 2 = 0"),
         group_col="lang",
         completeness_cols=["text"],
         ks_col="score",
         ref=d.filter("doc_id % 2 = 1"),
-        **kw
     )),
 ]
 
 
 @pytest.mark.parametrize("name,build", CASES, ids=[c[0] for c in CASES])
 def test_persist_false_no_residue_same_result(spark, docs, name, build):
+    """The operator pins a shared subtree; ``clearCache()`` releases it;
+    a rerun after the release returns identical rows. (The test id
+    predates the pin's single path and is kept so earlier result
+    records still match.)"""
     spark.catalog.clearCache()
-    cached = _rows(build(docs))
+    first = _rows(build(docs))
     assert not _cache_empty(spark), (
-        f"{name}: expected the default path to register a cache entry "
+        f"{name}: expected the operator to register a cache entry "
         "(if the operator stopped caching, drop it from this sweep)"
     )
     spark.catalog.clearCache()
-    uncached = _rows(build(docs, persist=False))
     assert _cache_empty(spark), (
-        f"{name}: persist=False left entries in the SQL CacheManager"
+        f"{name}: clearCache() left entries in the SQL CacheManager"
     )
-    assert cached == uncached, f"{name}: persist flag changed the result"
-
-
-def test_train_nb_classifier_persist_false(spark, docs):
+    rerun = _rows(build(docs))
     spark.catalog.clearCache()
-    m = train_nb_classifier(docs, "text", "lang", persist=False)
-    m.features.collect()
-    m.classes.collect()
-    assert _cache_empty(spark)
-    m.unpersist()  # must be a harmless no-op on an uncached model
+    assert first == rerun, f"{name}: the rerun after the release differs"
 
 
 def test_crossval_nb_releases_fold_caches(spark, docs):
@@ -220,11 +216,11 @@ def test_crossval_nb_releases_fold_caches(spark, docs):
 
 
 def test_pinned_prefix_sum_stress(spark):
-    # the persist=False localCheckpoint pin under the shape where a
+    # the pinned range-partitioned histogram under the shape where a
     # re-sampled repartitionByRange would actually misalign offsets:
     # high-cardinality doubles, one dominant group, and far more range
-    # partitions than the conftest default. Both persist faces must
-    # agree with each other AND with a driver-side exact KS.
+    # partitions than the conftest default. The result must agree with
+    # a driver-side exact KS.
     import bisect
 
     from pyspark.sql import functions as F
@@ -249,16 +245,9 @@ def test_pinned_prefix_sum_stress(spark):
             r["grp"]: r["ks"]
             for r in ks_by_group(cur, ref, "x", "grp").collect()
         }
-        b = {
-            r["grp"]: r["ks"]
-            for r in ks_by_group(
-                cur, ref, "x", "grp", persist=False
-            ).collect()
-        }
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
         spark.catalog.clearCache()
-    assert a == b
     # exact driver-side ECDF model on the dominant group
     cx = sorted(
         r["x"] for r in cur.filter(F.col("grp") == "big").collect()
@@ -287,3 +276,45 @@ def test_nbmodel_unpersist_releases_pruned_path(spark, docs):
         "NBModel.unpersist() must release the persisted count frame "
         "even when min_count pruning derived a new plan from it"
     )
+
+
+def test_no_callable_takes_a_cache_switch():
+    """Pinning has one path (plans/cache.pin): no public callable of the
+    package takes a ``persist`` or ``persist_*`` parameter."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import pyspark_data_quality_spark as pkg
+
+    def params(fn):
+        try:
+            return inspect.signature(fn).parameters
+        except (TypeError, ValueError):
+            return {}
+
+    offenders, seen = [], set()
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        mod = importlib.import_module(info.name)
+        for name, obj in vars(mod).items():
+            if name.startswith("_") or id(obj) in seen:
+                continue
+            if getattr(obj, "__module__", "") != mod.__name__:
+                continue
+            seen.add(id(obj))
+            fns = [(name, obj)] if inspect.isfunction(obj) else []
+            if inspect.isclass(obj):
+                fns = [(name, obj)] + [
+                    (f"{name}.{m}", f)
+                    for m, f in vars(obj).items()
+                    if not m.startswith("_") and callable(f)
+                ]
+            for qual, fn in fns:
+                bad = [
+                    p for p in params(fn)
+                    if p == "persist" or p.startswith("persist_")
+                ]
+                if bad:
+                    offenders.append(f"{mod.__name__}.{qual}{bad}")
+    assert len(seen) > 100, "the walk found too few callables to mean much"
+    assert not offenders, offenders

@@ -125,7 +125,7 @@ def test_curate_corpus_incremental_reference(spark):
     )
     out = curate_corpus(
         batch, reference=ref, languages=None, min_quality=0.0,
-        near_dup_threshold=0.99, persist=False,
+        near_dup_threshold=0.99,
     )
     by_id = {r["doc_id"]: r["curation_status"] for r in out.collect()}
     assert by_id[1] == "ref_dup"
@@ -137,7 +137,7 @@ def test_curate_corpus_incremental_reference(spark):
     # no reference: same batch, no ref_dup status anywhere
     out2 = curate_corpus(
         batch, languages=None, min_quality=0.0,
-        near_dup_threshold=0.99, persist=False,
+        near_dup_threshold=0.99,
     )
     assert "ref_dup" not in {r["curation_status"] for r in out2.collect()}
 
@@ -507,7 +507,7 @@ def test_curation_model_quality_gate(spark):
     )
     out = curate_corpus(
         batch, languages=None, min_quality=0.0,
-        near_dup_threshold=0.99, persist=False,
+        near_dup_threshold=0.99,
         quality_model=model, model_keep_labels=("good",),
     )
     by_id = {r["doc_id"]: r["curation_status"] for r in out.collect()}
@@ -520,7 +520,7 @@ def test_curation_model_quality_gate(spark):
 
     # keep-labels validation
     with pytest.raises(ValueError, match="model_keep_labels"):
-        curate_corpus(batch, quality_model=model, persist=False)
+        curate_corpus(batch, quality_model=model)
 
 
 def test_curation_ref_dups_do_not_influence_near_dedup(spark):
@@ -544,7 +544,6 @@ def test_curation_ref_dups_do_not_influence_near_dedup(spark):
     out = curate_corpus(
         batch, reference=ref, languages=None, min_quality=0.0,
         near_dup_threshold=0.5, shingle="word", shingle_n=2,
-        persist=False,
     )
     by_id = {r["doc_id"]: r["curation_status"] for r in out.collect()}
     assert by_id[1] == "ref_dup"
@@ -576,15 +575,12 @@ def test_curation_compression_gate(spark):
         languages=None,
         min_quality=0.0,
         compression_band=(0.2, 1.2),
-        persist=False,
     )
     st = {r["doc_id"]: r["curation_status"] for r in out.collect()}
     assert st[3] == "bad_compression"
     assert st[1] == "kept" and st[2] == "kept"
     # default off: no bad_compression status, identical statuses otherwise
-    off = curate_corpus(
-        docs, languages=None, min_quality=0.0, persist=False
-    )
+    off = curate_corpus(docs, languages=None, min_quality=0.0)
     st_off = {r["doc_id"]: r["curation_status"] for r in off.collect()}
     assert st_off[3] != "bad_compression"
     # stats roll the new status like any other
@@ -595,7 +591,7 @@ def test_curation_compression_gate(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="compression_band"):
-        curate_corpus(docs, compression_band=(0.9, 0.5), persist=False)
+        curate_corpus(docs, compression_band=(0.9, 0.5))
 
 
 def test_rebalance_salt_decorrelated_from_split(spark):

@@ -154,6 +154,38 @@ def test_env_config(spark, monkeypatch):
     assert DQManager(spark, dataset="explicit").dataset == "explicit"
 
 
+def test_shared_rule_reports_each_managers_severity(spark, people):
+    # the config default resolves per run, never by mutating the rule: a
+    # rule shared by two managers reports each manager's own severity
+    from pyspark_data_quality_spark.core.config import Config
+    from pyspark_data_quality_spark.core.enums import SeverityLevel
+
+    rule = CompletenessColRatioRule(columns=["name"], threshold=0.5)
+    high = DQManager(spark, config=Config(severity_level="high"))
+    low = DQManager(spark, config=Config(severity_level="low"))
+    high.set_data(people).add_rule(rule)
+    low.set_data(people).add_rule(rule)
+
+    def severities(mgr):
+        return {
+            r["severity_level"]
+            for r in mgr.run().get_metric_results().collect()
+        }
+
+    assert severities(high) == {"high"}
+    assert severities(low) == {"low"}
+    assert rule.severity_level is None
+    # an explicit rule severity still wins over the manager default
+    pinned = CompletenessColRatioRule(
+        columns=["name"], severity_level=SeverityLevel.CRITICAL
+    )
+    assert severities(
+        DQManager(spark, config=Config(severity_level="low"))
+        .set_data(people)
+        .add_rule(pinned)
+    ) == {"critical"}
+
+
 def test_unique_rule_hll_default(spark):
     # default estimator is an HLL sketch: scale-safe, no Expand; value
     # must land within the configured rsd of the exact ratio

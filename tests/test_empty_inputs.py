@@ -276,7 +276,7 @@ def test_components_and_curation_empty(spark, empty_docs, tmp_path):
     # including the persisted-state path against a virgin state dir
     out = curate_corpus(
         empty_docs, languages=None, near_dup_threshold=1.5,
-        state_dir=str(tmp_path / "virgin"), persist=False,
+        state_dir=str(tmp_path / "virgin"),
     )
     assert out.count() == 0
     assert "curation_status" in out.columns and "split" in out.columns

@@ -199,10 +199,7 @@ def test_curate_corpus_reads_persisted_state(spark, tmp_path):
         ],
         ["doc_id", "text"],
     )
-    kw = dict(
-        min_quality=0.0, languages=None, near_dup_threshold=1.5,
-        persist=False,
-    )
+    kw = dict(min_quality=0.0, languages=None, near_dup_threshold=1.5)
 
     state_dir = str(tmp_path / "state")
     # day 1: virgin state directory behaves as "no history"

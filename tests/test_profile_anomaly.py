@@ -954,10 +954,11 @@ def test_hbos_scoring_is_shuffle_free(spark):
         (F.col("id") % 37).cast("double").alias("x"),
         (F.col("id") % 11).cast("double").alias("y"),
     )
-    out = hbos_scores(df, ["x", "y"], bins=8, persist=False)
+    out = hbos_scores(df, ["x", "y"], bins=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # every join the scored rows flow through must be a broadcast join
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    assert "BroadcastHashJoin" in plan
     assert len(out.collect()) == 500
 
 

@@ -1284,8 +1284,7 @@ def test_drift_screen_single_shuffle_plan(spark):
     cur = ref.select(
         (F.col("a") + 10.0).alias("a"), "b", "c", "d"
     )
-    out = drift_screen(cur, ref, ["a", "b", "c", "d"], bins=16,
-                       persist=False)
+    out = drift_screen(cur, ref, ["a", "b", "c", "d"], bins=16)
     plan = out._jdf.queryExecution().executedPlan().toString()
     import re
 
@@ -1293,7 +1292,7 @@ def test_drift_screen_single_shuffle_plan(spark):
                                 plan))
     # 1 data shuffle (column,bin groupBy) + bounded ordered stages:
     # per-column windows + final agg + BH ranking
-    assert n_exchange <= 5, f"{n_exchange} exchanges:\n{plan[:2000]}"
+    assert 1 <= n_exchange <= 5, f"{n_exchange} exchanges:\n{plan[:2000]}"
     assert len(out.collect()) == 4
 
 

@@ -10,6 +10,18 @@ from pyspark_data_quality_spark.plans.telemetry import (
 )
 
 
+def _collect_counting_shuffle(spark, df):
+    """``(rows, shuffle records)`` of ``df.collect()``, the records
+    summed over every stage of the jobs it ran. Unlike the plan walk,
+    this counts the shuffles that materialize a pinned subtree, which
+    the returned plan shows only as an InMemoryTableScan leaf."""
+    from test_sinks_skew import _route_shape
+
+    rows = []
+    shuffles, _ = _route_shape(spark, lambda: rows.extend(df.collect()))
+    return rows, sum(shuffles)
+
+
 def test_harvest_walks_aqe_and_stages(spark):
     df = spark.range(10_000).groupBy((F.col("id") % 7).alias("k")).count()
     rows, metrics = measured_collect(df)
@@ -391,12 +403,14 @@ def test_drift_screen_shuffle_is_row_count_invariant(spark):
             (F.col("id") % 13).cast("double").alias("b"),
         )
         cur = ref.select((F.col("a") + 5.0).alias("a"), "b")
-        out = drift_screen(cur, ref, ["a", "b"], bins=16, persist=False)
-        rows, metrics = measured_collect(out)
+        out = drift_screen(cur, ref, ["a", "b"], bins=16)
+        rows, records = _collect_counting_shuffle(spark, out)
+        spark.catalog.clearCache()
         assert len(rows) == 2
-        return summarize_metrics(metrics)["shuffle_records_written"]
+        return records
 
     small, big = run(2_000), run(20_000)
+    assert small > 0 and big > 0
     # map-side combine emits at most (map partitions) x cols x bins
     # partials; both sides union before the exchange
     maps = 2 * spark.sparkContext.defaultParallelism
@@ -419,12 +433,14 @@ def test_hbos_scoring_shuffles_only_histogram_partials(spark):
             (F.col("id") % 53).cast("double").alias("x"),
             (F.col("id") % 11).cast("double").alias("y"),
         )
-        out = hbos_scores(df, ["x", "y"], bins=8, persist=False)
-        rows, metrics = measured_collect(out)
+        out = hbos_scores(df, ["x", "y"], bins=8)
+        rows, records = _collect_counting_shuffle(spark, out)
+        spark.catalog.clearCache()
         assert len(rows) == n
-        return summarize_metrics(metrics)["shuffle_records_written"]
+        return records
 
     small, big = run(2_000), run(20_000)
+    assert small > 0 and big > 0
     maps = spark.sparkContext.defaultParallelism
     cap = maps * 2 * 8 + 128
     assert small <= cap and big <= cap, (small, big, cap)

@@ -231,7 +231,7 @@ def test_warc_to_curation_end_to_end(spark, tmp_path):
 
     out = curate_corpus(
         docs, id_col="doc_id", languages=None, min_quality=0.0,
-        near_dup_threshold=0.99, persist=False,
+        near_dup_threshold=0.99,
     )
     by_url = {r["url"]: r["curation_status"] for r in out.collect()}
     assert by_url["http://c.com/other"] == "kept"
