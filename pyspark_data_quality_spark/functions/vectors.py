@@ -138,6 +138,83 @@ def hyperplane_keys_seq_np(tables: list[list[list[float]]]):
     return pandas_udf(keys, "array<long>").asNondeterministic()
 
 
+def _text_shingle_hasher(shingle: str, n: int, seed: int, hash_family: str):
+    """The one per-text shingling routine of the Arrow kernels: returns
+    ``f(text) -> int64 ndarray | None``, the 64-bit hashes of the text's
+    DISTINCT shingles, or None when the text yields no shingle.
+
+    Normalization matches :func:`..functions.text.normalize_text`
+    (lower, collapse whitespace, trim); shingles are ``n``-word joins
+    (``shingle='word'``) or char n-grams (``shingle='char'``).
+    ``hash_family``:
+
+    - ``'blake2b'`` (the scale path): salted blake2b-8 (deterministic
+      across workers, unlike Python's ``hash``).
+    - ``'md5'``: the engine-portable certification family — h(s) =
+      first 15 hex chars of ``md5("{seed}:" + s)`` as a non-negative
+      60-bit BIGINT, replayable verbatim in DuckDB as
+      ``CAST(concat('0x', substr(md5(concat('{seed}:', s)), 1, 15))
+      AS BIGINT)`` (same trade as mmd_drift's ``weights='md5'``:
+      slower hashing bought full SQL-oracle certification).
+
+    Settings are checked here, when the kernel is built, so every
+    caller rejects them before a job runs: an unknown ``shingle`` name
+    must not fall through to char n-grams, and ``n < 1`` would hash
+    every non-empty text to the same single shingle (every pair at
+    Jaccard 1.0) — either silently changes recall.
+    """
+    import hashlib
+    from functools import partial
+
+    import numpy as np
+
+    from .text import py_normalize_text, py_tokenize
+
+    if hash_family not in ("blake2b", "md5"):
+        raise ValueError(
+            f"shingle hashing: hash_family must be 'blake2b' or 'md5', "
+            f"got {hash_family!r}"
+        )
+    if shingle not in ("word", "char"):
+        raise ValueError(
+            f"shingle hashing: shingle must be 'word' or 'char', got {shingle!r}"
+        )
+    if n < 1:
+        raise ValueError(f"shingle hashing: shingle n must be >= 1, got {n!r}")
+
+    # Per text, the salt or "{seed}:" prefix is hashed once and each
+    # shingle continues a copy. Digests decode in one numpy call:
+    # blake2b's 8 bytes little-endian signed, md5's first 15 hex chars
+    # as the top 60 bits of its first 8 bytes big-endian.
+    if hash_family == "md5":
+        prefix, new, dtype, shift = f"{seed}:".encode(), hashlib.md5, ">u8", 4
+    else:
+        prefix = seed.to_bytes(8, "little", signed=True)
+        new, dtype, shift = partial(hashlib.blake2b, digest_size=8), "<i8", 0
+
+    def hashes(t: str) -> np.ndarray | None:
+        if shingle == "word":
+            toks = py_tokenize(t)
+            if len(toks) < n:
+                return None
+            items = {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
+        else:
+            norm = py_normalize_text(t)
+            if len(norm) < n:
+                return None
+            items = {norm[j : j + n] for j in range(len(norm) - n + 1)}
+        base = new(prefix)
+        digests = []
+        for s in items:
+            h = base.copy()
+            h.update(s.encode("utf-8"))
+            digests.append(h.digest()[:8])
+        packed = np.frombuffer(b"".join(digests), dtype=dtype)
+        return (packed >> shift).astype(np.int64)
+
+    return hashes
+
+
 def shingle_hashes_np(
     shingle: str = "word",
     n: int = 3,
@@ -146,121 +223,115 @@ def shingle_hashes_np(
 ):
     """Arrow-vectorized shingling: a pandas_udf mapping a text column to
     the DISTINCT 64-bit shingle hashes (``array<long>``; NULL when the text
-    yields no shingles).
+    yields no shingles). Shingling, hashing and the settings check are
+    :func:`_text_shingle_hasher`'s.
 
-    Normalization matches :func:`..functions.text.normalize_text` (lower,
-    collapse whitespace, trim); shingles are ``n``-word joins or char
-    n-grams. Why a UDF: building shingle STRINGS with
-    slice/array_join expressions is interpreted per element and dominated
-    the MinHash pipeline; here the strings never materialize in the plan —
-    downstream MinHash and Jaccard verification run on the hash arrays.
-
-    ``hash_family``:
-
-    - ``'blake2b'`` (default, the scale path): salted blake2b-8
-      (deterministic across workers, unlike Python's ``hash``).
-    - ``'md5'``: the engine-portable certification family — h(s) =
-      first 15 hex chars of ``md5("{seed}:" + s)`` as a non-negative
-      60-bit BIGINT, replayable verbatim in DuckDB as
-      ``CAST(concat('0x', substr(md5(concat('{seed}:', s)), 1, 15))
-      AS BIGINT)`` (same trade as mmd_drift's ``weights='md5'``:
-      slower hashing bought full SQL-oracle certification).
+    Why a UDF: building shingle STRINGS with slice/array_join
+    expressions is interpreted per element and dominated the MinHash
+    pipeline; here the strings never materialize in the plan —
+    downstream Jaccard verification runs on the hash arrays.
     """
-    import hashlib
-
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    if hash_family not in ("blake2b", "md5"):
-        raise ValueError(
-            f"shingle_hashes_np: hash_family must be 'blake2b' or 'md5', "
-            f"got {hash_family!r}"
-        )
-    from .text import py_normalize_text, py_tokenize
-
-    salt = seed.to_bytes(8, "little", signed=True)
-    md5_prefix = f"{seed}:".encode()
-
-    if hash_family == "md5":
-        def one_hash(s: str) -> int:
-            return int(
-                hashlib.md5(md5_prefix + s.encode("utf-8")).hexdigest()[:15],
-                16,
-            )
-    else:
-        def one_hash(s: str) -> int:
-            return int.from_bytes(
-                hashlib.blake2b(
-                    salt + s.encode("utf-8"), digest_size=8
-                ).digest(),
-                "little",
-                signed=True,
-            )
+    hashes = _text_shingle_hasher(shingle, n, seed, hash_family)
 
     def f(texts):
-        out = [None] * len(texts)
-        for i, t in enumerate(texts):
-            if t is None:
-                continue
-            if shingle == "word":
-                toks = py_tokenize(t)
-                if len(toks) < n:
-                    continue
-                items = {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
-            else:
-                norm = py_normalize_text(t)
-                if len(norm) < n:
-                    continue
-                items = {norm[j : j + n] for j in range(len(norm) - n + 1)}
-            out[i] = [one_hash(s) for s in items]
-        return pd.Series(out)
+        return pd.Series([None if t is None else hashes(t) for t in texts])
 
     f.__annotations__ = {"texts": pd.Series, "return": pd.Series}
     # deterministic in fact; see hyperplane_keys_np for why it's marked
     return pandas_udf(f, "array<long>").asNondeterministic()
 
 
-def minhash_md5_np(num_hashes: int = 24, seed: int = 42):
-    """Engine-portable MinHash signature from md5-family shingle hashes:
-    a pandas_udf mapping ``array<long>`` (md5-family hashes from
-    :func:`shingle_hashes_np` with ``hash_family='md5'``) to the
-    ``array<long>`` signature with ``sig[i] = min over h of
-    md5int("{seed}:{i}:{h}")`` where ``md5int`` = first 15 hex chars as
-    BIGINT and ``{h}`` is the decimal string of the shingle hash.
+def _md5_signer(num_hashes: int, seed: int):
+    """Engine-portable MinHash signature of md5-family shingle hashes:
+    ``sig[i] = min over h of md5int("{seed}:{i}:{h}")`` where ``md5int``
+    = first 15 hex chars as BIGINT and ``{h}`` is the decimal string of
+    the shingle hash.
 
     Every step is replayable in DuckDB SQL (list comprehension over
     ``range(num_hashes)`` + ``md5(concat(...))``), which is the whole
     point: the full signature→banding→candidate→verify pipeline gets a
     value-level DuckDB oracle instead of recall floors. ~num_hashes
     md5 calls per shingle — bound the input (the certification entries
-    use a fixed 500-doc subset); the scale path stays
-    :func:`minhash_rehash_np`.
+    use a fixed 500-doc subset); the scale path is
+    :func:`_rehash_signer`.
     """
     import hashlib
 
+    prefixes = [f"{seed}:{i}:".encode() for i in range(num_hashes)]
+
+    def sign(hs) -> list[int]:
+        encoded = [str(h).encode() for h in hs.tolist()]
+        return [
+            min(int(hashlib.md5(p + e).hexdigest()[:15], 16) for e in encoded)
+            for p in prefixes
+        ]
+
+    return sign
+
+
+def _rehash_signer(num_hashes: int, seed: int):
+    """MinHash signature of 64-bit shingle hashes by the standard
+    multiply-shift rehash: h_i = a_i * h + b_i over Z_2^64 (odd a_i) —
+    one hash of the string, num_hashes integer mixes, all in one numpy
+    broadcast per row."""
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    a = (rng.randint(0, 2**63, size=num_hashes).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
+    b = rng.randint(0, 2**63, size=num_hashes).astype(np.uint64)
+
+    def sign(hs) -> list[int]:
+        hh = hs.astype(np.uint64)
+        with np.errstate(over="ignore"):
+            mixed = a[:, None] * hh[None, :] + b[:, None]  # wraps mod 2^64
+        return mixed.min(axis=1).astype(np.int64).tolist()
+
+    return sign
+
+
+def minhash_signature_np(
+    shingle: str = "word",
+    n: int = 3,
+    seed: int = 42,
+    hash_family: str = "blake2b",
+    num_hashes: int = 64,
+):
+    """The MinHash kernel: a pandas_udf mapping a text column to
+    ``struct<_h: array<bigint>, _sig: array<bigint>>`` — the distinct
+    shingle hashes (:func:`_text_shingle_hasher`) and the
+    ``num_hashes``-wide signature computed from that same in-memory
+    hash list, in ONE Arrow pass. Both fields are NULL when the text
+    yields no shingle.
+
+    The signature is the multiply-shift rehash (:func:`_rehash_signer`)
+    for ``hash_family='blake2b'`` and the engine-portable md5 signature
+    (:func:`_md5_signer`) for ``'md5'``. Signing inside the shingling
+    pass keeps the hash arrays from a second round trip through Arrow.
+    """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    prefixes = [f"{seed}:{i}:".encode() for i in range(num_hashes)]
+    hashes = _text_shingle_hasher(shingle, n, seed, hash_family)
+    sign = (
+        _md5_signer(num_hashes, seed)
+        if hash_family == "md5"
+        else _rehash_signer(num_hashes, seed)
+    )
 
-    def sig(hashes):
-        out = [None] * len(hashes)
-        for row, hs in enumerate(hashes):
-            if hs is None or len(hs) == 0:
-                continue
-            encoded = [str(int(h)).encode() for h in hs]
-            out[row] = [
-                min(
-                    int(hashlib.md5(p + e).hexdigest()[:15], 16)
-                    for e in encoded
-                )
-                for p in prefixes
-            ]
-        return pd.Series(out)
+    def f(texts):
+        hs = [None if t is None else hashes(t) for t in texts]
+        return pd.DataFrame(
+            {"_h": hs, "_sig": [None if h is None else sign(h) for h in hs]}
+        )
 
-    sig.__annotations__ = {"hashes": pd.Series, "return": pd.Series}
+    f.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
     # deterministic in fact; see hyperplane_keys_np for why it's marked
-    return pandas_udf(sig, "array<long>").asNondeterministic()
+    return pandas_udf(
+        f, "struct<_h: array<bigint>, _sig: array<bigint>>"
+    ).asNondeterministic()
 
 
 def simhash_np(seed: int = 42, hash_family: str = "blake2b"):
@@ -329,40 +400,6 @@ def simhash_np(seed: int = 42, hash_family: str = "blake2b"):
     f.__annotations__ = {"texts": pd.Series, "return": pd.Series}
     # deterministic in fact; see hyperplane_keys_np for why it's marked
     return pandas_udf(f, "long").asNondeterministic()
-
-
-def minhash_rehash_np(num_hashes: int = 64, seed: int = 42):
-    """Arrow-vectorized MinHash from pre-hashed shingles: a pandas_udf
-    mapping ``array<bigint>`` (one 64-bit hash per shingle, from
-    :func:`shingle_hashes_np`) to the ``array<bigint>`` signature.
-
-    Hash family: h_i = a_i * h + b_i over Z_2^64 (odd a_i), the standard
-    multiply-shift rehash — one hash of the string, num_hashes integer
-    mixes, all in one numpy broadcast per row instead of num_hashes
-    interpreted tree-walks per shingle.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    rng = np.random.RandomState(seed)
-    a = (rng.randint(0, 2**63, size=num_hashes).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
-    b = rng.randint(0, 2**63, size=num_hashes).astype(np.uint64)
-
-    def sig(hashes):
-        out = [None] * len(hashes)
-        with np.errstate(over="ignore"):
-            for i, h in enumerate(hashes):
-                if h is None or len(h) == 0:
-                    continue
-                hh = np.asarray(h, dtype=np.int64).astype(np.uint64)
-                mixed = a[:, None] * hh[None, :] + b[:, None]  # wraps mod 2^64
-                out[i] = mixed.min(axis=1).astype(np.int64).tolist()
-        return pd.Series(out)
-
-    sig.__annotations__ = {"hashes": pd.Series, "return": pd.Series}
-    # deterministic in fact; see hyperplane_keys_np for why it's marked
-    return pandas_udf(sig, "array<long>").asNondeterministic()
 
 
 def md5_uniform(tag: str) -> float:

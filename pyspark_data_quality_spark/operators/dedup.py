@@ -456,31 +456,33 @@ def minhash_signatures(
     column's metadata records ``num_hashes`` for that check. The
     operator bands over ``_sig`` and verifies candidate pairs by
     joining back to ``_h``, so every call reads this frame at least
-    twice: the caller pins it (``localCheckpoint(eager=False)`` or a
-    persist) so all consumers read one materialization; the operator
-    pins the frame it builds itself."""
-    from ..functions.vectors import (
-        minhash_md5_np,
-        minhash_rehash_np,
-        shingle_hashes_np,
-    )
+    twice: the caller pins it (``plans.cache.pin``) so all consumers
+    read one materialization; the operator pins the frame it builds
+    itself.
+
+    Both columns come from ONE Arrow pass
+    (:func:`..functions.vectors.minhash_signature_np`): the signature is
+    computed from the shingle hashes while they are still in the
+    Python worker. Documents with no shingle (NULL text, or fewer than
+    ``shingle_n`` words/characters) are dropped. ``shingle`` other than
+    ``'word'``/``'char'`` or ``shingle_n < 1`` raises ValueError."""
+    from ..functions.vectors import minhash_signature_np
     from ..plans.parallelism import ensure_min_partitions
 
-    df = ensure_min_partitions(df)
-    hash_base = df.select(
-        F.col(id_col).alias("_id"),
-        shingle_hashes_np(shingle, shingle_n, seed, hash_family)(
-            F.col(text_col)
-        ).alias("_h"),
-    ).filter(F.col("_h").isNotNull())
-    sig_udf = (
-        minhash_md5_np(num_hashes, seed)
-        if hash_family == "md5"
-        else minhash_rehash_np(num_hashes, seed)
+    kernel = minhash_signature_np(
+        shingle, shingle_n, seed, hash_family, num_hashes
     )
-    # the width rides in the schema: checkable without running a job
-    sig = sig_udf(F.col("_h")).alias("_sig", metadata={"num_hashes": num_hashes})
-    return hash_base.withColumn("_sig", sig)
+    return (
+        ensure_min_partitions(df)
+        .select(F.col(id_col).alias("_id"), kernel(F.col(text_col)).alias("_hs"))
+        .filter(F.col("_hs._h").isNotNull())
+        .select(
+            "_id",
+            F.col("_hs._h").alias("_h"),
+            # the width rides in the schema: checkable without running a job
+            F.col("_hs._sig").alias("_sig", metadata={"num_hashes": num_hashes}),
+        )
+    )
 
 
 def minhash_near_dup_pairs(
@@ -524,23 +526,24 @@ def minhash_near_dup_pairs(
     :func:`cap_buckets`) — run :func:`exact_dedup` first so identical-text
     clusters never reach the LSH stage.
 
-    Shingling + hashing happen in ONE Arrow-vectorized pass
-    (:func:`..functions.vectors.shingle_hashes_np` — shingle strings
-    never materialize in the plan), the signature is a numpy
-    multiply-shift rehash over the hash set, and the exact-Jaccard
-    verify runs on the 64-bit hash arrays (codegen ``array_intersect``).
+    Shingling, hashing and signing happen in ONE Arrow-vectorized pass
+    (:func:`..functions.vectors.minhash_signature_np` — shingle strings
+    never materialize in the plan, and the hash set never makes a
+    second trip to Python: the signature is a numpy multiply-shift
+    rehash over the in-memory hash list), and the exact-Jaccard verify
+    runs on the 64-bit hash arrays (codegen ``array_intersect``).
     A pure-expression form measured ~4x slower: higher-order-function
     expressions evaluate INTERPRETED, so building ~70 shingle strings
     and 64 hash minima per doc as expression trees dominated the whole
     pipeline.
 
-    ``hash_family='md5'`` swaps both hash kernels
+    ``hash_family='md5'`` swaps the shingle hash and the signature
     for the engine-portable md5 family
-    (:func:`..functions.vectors.minhash_md5_np`) so a DuckDB oracle can
-    replay the ENTIRE pipeline — signature, banding, bucket cap,
-    candidate pairs, exact-jaccard verify — value-for-value
+    (:func:`..functions.vectors.minhash_signature_np`) so a DuckDB
+    oracle can replay the ENTIRE pipeline — signature, banding, bucket
+    cap, candidate pairs, exact-jaccard verify — value-for-value
     (dq_minhash_pairs). Banding/verify code is byte-identical across
-    families; only the two pandas_udf kernels differ. md5 costs
+    families; only the hashing inside the one kernel differs. md5 costs
     ~num_hashes digests per shingle: bound the input (the entry uses a
     fixed 500-doc subset) and keep blake2b for production corpora.
 
@@ -552,7 +555,7 @@ def minhash_near_dup_pairs(
     A frame whose ``_sig`` width (stamped in its column metadata by
     ``minhash_signatures``) is not ``num_hashes`` raises ValueError.
     An injected frame is read as given — banding and verify are two
-    consumers of it, so pin it (persist or checkpoint) before the call.
+    consumers of it, so pin it (``plans.cache.pin``) before the call.
 
     The signature frame this call builds is pinned with
     ``MEMORY_AND_DISK`` (plans/cache.py contract) until

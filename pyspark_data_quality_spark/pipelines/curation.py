@@ -46,18 +46,8 @@ no cross joins.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-@dataclass(frozen=True)
-class CurationStats:
-    """Column names of the curation annotations."""
-
-    status_col: str = "curation_status"
-    split_col: str = "split"
 
 
 def curate_corpus(
@@ -436,9 +426,16 @@ def curation_stats(
 ) -> DataFrame:
     """One-shuffle summary of a :func:`curate_corpus` result:
     ``(curation_status, split, n)`` — kept rows broken out per split,
-    dropped rows per reason (split NULL)."""
+    dropped rows per reason (split NULL), ordered by status then split.
+
+    The aggregate is the one shuffle; its output is bounded by
+    statuses x splits at any scale, so it is sorted in a single task
+    (``coalesce(1)`` + ``sortWithinPartitions``) instead of a global
+    ``orderBy``, whose range-partition sample and sort exchange cost two
+    extra jobs to order a dozen rows."""
     return (
         curated.groupBy(status_col, split_col)
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(status_col, split_col)
+        .coalesce(1)
+        .sortWithinPartitions(status_col, split_col)
     )

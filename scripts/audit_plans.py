@@ -126,7 +126,9 @@ def main() -> None:
     spark = harness.session("plan-audit", 4)
     violations: list[str] = []
 
-    for name, fn in queries.items():
+    # by name, not certification order: an oracle edit must not
+    # reorder the committed snapshot
+    for name, fn in sorted(queries.items()):
         try:
             plan = harness.formatted_plan(fn(spark, SF_DIR))
         except Exception as e:  # noqa: BLE001

@@ -627,3 +627,27 @@ def test_rebalance_salt_decorrelated_from_split(spark):
     # the DOWN-SAMPLED stratum (web, kept at ~half) must still receive
     # val/test rows, not train-only
     assert "val" in splits["web"] or "test" in splits["web"], splits
+
+
+def test_curation_stats_sorts_in_one_task(spark, sf_dir):
+    """After the write, the summary costs the aggregate's shuffle plus a
+    single-task sort (<= 3 jobs; a global orderBy added a range-partition
+    sample and a sort exchange: 5), with the rows and order of
+    ``orderBy(status, split)``."""
+    from pyspark_data_quality_spark.plans.telemetry import jobs_during
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    curated = curate_corpus(docs, languages=None, min_quality=0.0)
+    curated.write.format("noop").mode("overwrite").save()
+    rows, jobs = jobs_during(spark, lambda: curation_stats(curated).collect())
+    assert len(jobs) <= 3, sorted(jobs)
+    expected = (
+        curated.groupBy("curation_status", "split")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy("curation_status", "split")
+        .collect()
+    )
+    assert rows == expected
+    # several statuses and splits, so the order is actually checked
+    assert len(rows) >= 4, rows
+    spark.catalog.clearCache()

@@ -172,6 +172,44 @@ def test_composite_entry_plan_budgets(spark, sf_dir, name):
     spark.catalog.clearCache()
 
 
+#: Arrow passes (ArrowEvalPython + MapInPandas) per entry, exact
+#: ceilings: one pass per kernel over the same text. A second Python
+#: round trip (the shingle hashes shipped back out to be signed) fails
+#: here instead of showing up only as a slower benchmark.
+_ARROW_UDF_CEILINGS = {
+    "dq_minhash_pairs": 1,   # the MinHash kernel
+    "dq_curation_exact": 2,  # text profile + the MinHash kernel
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ARROW_UDF_CEILINGS))
+def test_entry_arrow_pass_ceilings(spark, sf_dir, name):
+    from pyspark_data_quality_spark.entry_queries import ENTRY_QUERIES
+
+    c = _counts(ENTRY_QUERIES[name](spark, sf_dir))
+    assert c["arrow_udf"] <= _ARROW_UDF_CEILINGS[name], (name, c)
+    spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("family", ["blake2b", "md5"])
+def test_minhash_signatures_one_arrow_pass(spark, docs, family):
+    """Shingle hashes and signature come out of ONE ArrowEvalPython:
+    the struct kernel's two fields are projected from a single
+    evaluation, and the NULL-hash filter sits above it instead of
+    planning a second copy."""
+    import re
+
+    from pyspark_data_quality_spark.operators.dedup import minhash_signatures
+
+    sigs = minhash_signatures(
+        docs, "text", "doc_id", num_hashes=16, shingle="word",
+        hash_family=family,
+    )
+    plan = harness.formatted_plan(sigs)
+    assert len(set(re.findall(r"\((\d+)\) ArrowEvalPython", plan))) == 1, plan
+    assert "MapInPandas" not in plan, plan
+
+
 def test_kernel_not_duplicated_around_pushed_filters(spark, docs):
     """r15-opt pin: explode()'s implicit size>0 condition used to be
     pushed below the exchange as a filter ON the kernel output, planning
