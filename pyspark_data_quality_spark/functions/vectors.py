@@ -293,11 +293,7 @@ def _rehash_signer(num_hashes: int, seed: int):
 
 
 def minhash_signature_np(
-    shingle: str = "word",
-    n: int = 3,
-    seed: int = 42,
-    hash_family: str = "blake2b",
-    num_hashes: int = 64,
+    shingle: str, n: int, seed: int, hash_family: str, num_hashes: int
 ):
     """The MinHash kernel: a pandas_udf mapping a text column to
     ``struct<_h: array<bigint>, _sig: array<bigint>>`` — the distinct

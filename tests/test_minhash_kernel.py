@@ -152,7 +152,7 @@ def test_invalid_shingle_settings_rejected_by_shared_kernels(spark):
         with pytest.raises(ValueError, match="shingle"):
             shingle_hashes_np(shingle, n)
         with pytest.raises(ValueError, match="shingle"):
-            minhash_signature_np(shingle, n)
+            minhash_signature_np(shingle, n, 42, "blake2b", 64)
     df = spark.createDataFrame(ROWS, "doc_id long, text string")
     with pytest.raises(ValueError, match="shingle"):
         contamination_pairs(df, df, "text", "doc_id", n=0)
