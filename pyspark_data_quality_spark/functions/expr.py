@@ -7,6 +7,8 @@ from typing import Callable, Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..plans.compile import and_sql, ident
+
 
 def let_bind(value: Column, body: Callable[[Column], Column]) -> Column:
     """Let-binding for expression trees: evaluate ``value`` once per row
@@ -65,18 +67,21 @@ def hll_lg_k(rsd: float) -> int:
 
 
 def approx_distinct(
-    cols: Sequence[str | Column], rsd: float, scope: Column | None = None
-) -> Column:
-    """Approximate ``COUNT(DISTINCT cols...)`` as a DataSketches HLL
-    aggregate: ``hll_sketch_estimate(hll_sketch_agg(h, hll_lg_k(rsd)))``
-    over one 64-bit ``xxhash64`` of the key per row.
+    cols: Sequence[str], rsd: float, scope: str | None = None
+) -> str:
+    """Approximate ``COUNT(DISTINCT cols...)`` as DataSketches HLL
+    aggregate SQL text:
+    ``hll_sketch_estimate(hll_sketch_agg(h, hll_lg_k(rsd)))`` over one
+    64-bit ``xxhash64`` of the key per row. Text like every rule
+    aggregate (``plans/compile``): the fused metrics pass parses it
+    in its one ``selectExpr``; Column callers wrap it in ``F.expr``.
 
-    ``h`` is NULL when the row is out of ``scope`` (a NULL scope counts
-    as out) or any key part is NULL, and the sketch skips NULLs — SQL
-    multi-column DISTINCT semantics, as the exact ``count_distinct``
-    path. ``xxhash64`` hashes -0.0 as 0.0 and every NaN alike, the same
-    normalization the exact path's grouping applies. Empty input
-    estimates 0.
+    ``h`` is NULL when the row is out of ``scope`` (SQL text; a NULL
+    scope counts as out) or any key part is NULL, and the sketch skips
+    NULLs — SQL multi-column DISTINCT semantics, as the exact
+    ``count(DISTINCT ...)`` path. ``xxhash64`` hashes -0.0 as 0.0 and
+    every NaN alike, the same normalization the exact path's grouping
+    applies. Empty input estimates 0.
 
     Why not ``approx_count_distinct``: Spark's HLL++ keeps every register
     word as its own aggregate-buffer attribute (1,639 longs at rsd 0.01),
@@ -86,10 +91,10 @@ def approx_distinct(
     estimate is exact at small counts.
     """
     lg_k = hll_lg_k(rsd)
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    keep = scope
-    for c in cs:
-        keep = c.isNotNull() if keep is None else (keep & c.isNotNull())
-    return F.hll_sketch_estimate(
-        F.hll_sketch_agg(F.when(keep, F.xxhash64(*cs)), lg_k)
+    keys = [ident(c) for c in cols]
+    nonnull = [f"{k} IS NOT NULL" for k in keys]
+    keep = and_sql(nonnull if scope is None else [scope, *nonnull])
+    return (
+        f"hll_sketch_estimate(hll_sketch_agg("
+        f"CASE WHEN {keep} THEN xxhash64({', '.join(keys)}) END, {lg_k}))"
     )

@@ -6,6 +6,18 @@ A rule is a *spec*, not an executor: it contributes
   (c) a translator from the fused-agg result row into MetricResult rows,
   (d) optionally a group-level diagnostic DataFrame (e.g. duplicate groups).
 
+Spec contract: (a) and (b), and the scope, violation and scoped-pass
+predicates derived from them, are Spark SQL TEXT built from the rule's
+own config (``plans/compile``: identifiers quoted by ``ident``, values
+typed by ``sql_literal``) — no DataFrame argument, no JVM call. A run
+(``ResultObj``) compiles them once: one ``selectExpr`` for every
+aggregate, one ``F.expr`` for the annotation, one ``filter(text)`` per
+split side. A ``Column`` or callable condition (or ``PredicateRule``
+predicate) is not text: ``prepare`` binds it once as a boolean
+:data:`MARKER_PREFIX` column, the way the FK rule binds its membership
+marker, and the text names that column. Constructing a rule never
+calls the JVM.
+
 This replaces the reference's ``AbstractCheck``/``BaseCheck``
 (``checks/base_check.py:9-120``), whose design ran one-or-more Spark
 actions *per check* and shared a process-global count cache
@@ -20,12 +32,18 @@ from __future__ import annotations
 import itertools
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..core.enums import CheckStatus, Dimension, SeverityLevel
 from ..core.models import MetricResult
-from ..plans.compile import ConditionLike, require_columns, to_condition
+from ..plans.compile import (
+    ConditionLike,
+    bind_condition,
+    condition_sql,
+    needs_marker,
+    null_safe_sql,
+    require_columns,
+)
 
 _rule_counter = itertools.count()
 
@@ -59,6 +77,7 @@ class Rule:
     ):
         self.columns = list(columns or [])
         self.threshold = float(threshold)
+        needs_marker(condition)  # an unsupported type raises here
         self.condition = condition
         # None = "not set explicitly": the metric build falls back to
         # the run's default (RunContext.severity_level), then MEDIUM
@@ -75,33 +94,52 @@ class Rule:
     def required_columns(self) -> list[str]:
         return self.columns
 
-    def validate(self, df: DataFrame) -> None:
-        """Analysis-time schema check; raises ColumnNotFoundError."""
-        require_columns(df, self.required_columns())
+    def validate(self, columns: list[str]) -> None:
+        """Analysis-time schema check against the input's column names
+        (read once per run); raises ColumnNotFoundError."""
+        require_columns(columns, self.required_columns())
 
-    def scope(self, df: DataFrame) -> Column:
-        return to_condition(self.condition, df)
+    def _bindings(self) -> dict[str, ConditionLike]:
+        """Marker column name -> the condition ``prepare`` binds to it
+        when it is a Column or callable."""
+        return {self._marker_name("scope"): self.condition}
+
+    def _marker_name(self, role: str) -> str:
+        return f"{MARKER_PREFIX}{self.rule_id}_{role}"
+
+    def markers(self) -> list[str]:
+        """The helper columns ``prepare`` adds (ResultObj strips them)."""
+        return [m for m, c in self._bindings().items() if needs_marker(c)]
+
+    def scope(self) -> str:
+        """SQL text: True iff the row is in scope. A NULL scope counts as
+        out of scope."""
+        return condition_sql(self.condition, self._marker_name("scope"))
 
     def prepare(self, df: DataFrame) -> DataFrame:
-        """Optional plan transform applied to the input BEFORE predicates
-        and the fused agg are compiled — the hook for rules whose check
-        requires more than a scalar expression (e.g. referential integrity
-        adds a membership marker via one broadcast left join). Helper
-        columns must be prefixed with :data:`MARKER_PREFIX` so ResultObj
-        can strip them. Default: identity. Still zero Spark actions."""
+        """Plan transform applied to the input BEFORE predicates and the
+        fused agg are compiled: binds Column/callable conditions as
+        marker columns, and is the hook for rules whose check requires
+        more than a scalar expression (e.g. referential integrity adds a
+        membership marker via one broadcast join). Helper columns are
+        prefixed with :data:`MARKER_PREFIX` and listed by
+        :meth:`markers` so ResultObj can strip them. Identity for
+        rules whose conditions are all SQL text. Zero Spark actions."""
+        for marker, cond in self._bindings().items():
+            df = bind_condition(df, cond, marker)
         return df
 
-    def row_predicate(self, df: DataFrame) -> Optional[Column]:
-        """Boolean Column: True iff the row passes this rule.
+    def row_predicate(self) -> Optional[str]:
+        """SQL text: True iff the row passes this rule.
 
-        Out-of-scope rows must evaluate True (they are not judged).
+        Judged on in-scope rows only (see :meth:`row_violation`).
         Return None for rules with no row-level notion (dataset-level only).
-        ``df`` is the output of every rule's ``prepare`` fold.
+        May name the marker columns of every rule's ``prepare`` fold.
         """
         return None
 
-    def aggregates(self, df: DataFrame) -> dict[str, Column]:
-        """Slot-name -> aggregate expression, fused into the single agg job.
+    def aggregates(self) -> dict[str, str]:
+        """Slot-name -> aggregate SQL text, fused into the single agg job.
 
         Slot names are namespaced by the runner as ``{rule_id}__{slot}``.
         """
@@ -155,31 +193,28 @@ class Rule:
             return CheckStatus.FAILURE
         return CheckStatus.SUCCESS if value >= self.threshold else CheckStatus.FAILURE
 
-    def scoped_pass_predicate(self, df: DataFrame) -> Optional[Column]:
+    def scoped_pass_predicate(self) -> Optional[str]:
         """row_predicate lifted over scope: out-of-scope rows pass.
 
         The whole expression is coalesced to True: a NULL scope (e.g. a
         condition over a NULL column) means OUT of scope. Without the
-        coalesce, ``~NULL | ...`` is NULL and a downstream filter DROPS
-        the row — while the violation path (``scope & ~pred`` = NULL)
-        counts the same row as passing, so get_deduplicated_df would
-        silently lose rows get_valid_df keeps."""
-        pred = self.row_predicate(df)
+        coalesce, ``NOT NULL OR ...`` is NULL and a downstream filter
+        DROPS the row — while the violation path (``scope AND NOT pred``
+        = NULL) counts the same row as passing, so get_deduplicated_df
+        would silently lose rows get_valid_df keeps."""
+        pred = self.row_predicate()
         if pred is None:
             return None
-        scope = self.scope(df)
-        return F.coalesce(
-            ~scope | F.coalesce(pred, F.lit(False)), F.lit(True)
-        )
+        return f"coalesce((NOT ({self.scope()})) OR ({null_safe_sql(pred)}), true)"
 
-    def row_violation(self, df: DataFrame) -> Optional[Column]:
-        """Boolean Column: True iff the row *fails* this rule (in scope and
+    def row_violation(self) -> Optional[str]:
+        """SQL text: True iff the row *fails* this rule (in scope and
         predicate false/NULL). None when the rule has no row-level notion.
         Overridden by group-shaped rules (e.g. uniqueness via window count)."""
-        pred = self.row_predicate(df)
+        pred = self.row_predicate()
         if pred is None:
             return None
-        return self.scope(df) & ~F.coalesce(pred, F.lit(False))
+        return f"({self.scope()}) AND (NOT {null_safe_sql(pred)})"
 
 
 class RunContext:

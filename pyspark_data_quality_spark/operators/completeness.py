@@ -13,7 +13,7 @@ Parity targets (semantics, not code):
   ``ratio >= threshold`` as intended.
 
 Both rules are pure specs: metrics ride the fused single-pass agg
-(one ``avg(when(scope, isNotNull))`` expression per column — exactly the
+(one ``avg(CASE WHEN scope THEN ... IS NOT NULL END)`` text per column — exactly the
 one-pass multi-column shape the reference used per-check, now shared
 across ALL rules), and the valid/invalid split is a predicate fold that
 Catalyst pushes into the scan.
@@ -21,13 +21,14 @@ Catalyst pushes into the scan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
 from ..core.enums import Dimension
 from ..core.models import MetricResult
-from ..plans.compile import and_fold, ratio_agg
+from ..plans.compile import and_sql, ident, ratio_sql
 from .base import Rule, RunContext
+
+
+def _all_not_null(columns: list[str]) -> str:
+    return and_sql([f"{ident(c)} IS NOT NULL" for c in columns])
 
 
 class CompletenessColRatioRule(Rule):
@@ -36,15 +37,15 @@ class CompletenessColRatioRule(Rule):
     dimension = Dimension.COMPLETENESS
     metric_name = "completeness_col_ratio"
 
-    def row_predicate(self, df: DataFrame) -> Column:
+    def row_predicate(self) -> str:
         # Rows pass iff every target column is non-null
         # (reference `valid`, completeness_col_ratio_check.py:78-89).
-        return and_fold([F.col(c).isNotNull() for c in self.columns])
+        return _all_not_null(self.columns)
 
-    def aggregates(self, df: DataFrame) -> dict[str, Column]:
-        scope = self.scope(df)
+    def aggregates(self) -> dict[str, str]:
+        scope = self.scope()
         return {
-            c: F.avg(F.when(scope, F.col(c).isNotNull().cast("double")))
+            c: f"avg(CASE WHEN ({scope}) THEN CAST({ident(c)} IS NOT NULL AS DOUBLE) END)"
             for c in self.columns
         }
 
@@ -77,14 +78,13 @@ class CompletenessRawRatioRule(Rule):
     dimension = Dimension.COMPLETENESS
     metric_name = "completeness_raw_ratio"
 
-    def row_predicate(self, df: DataFrame) -> Column:
-        return and_fold([F.col(c).isNotNull() for c in self.columns])
+    def row_predicate(self) -> str:
+        return _all_not_null(self.columns)
 
-    def aggregates(self, df: DataFrame) -> dict[str, Column]:
-        scope = self.scope(df)
+    def aggregates(self) -> dict[str, str]:
         # One expression instead of the reference's four count() actions
         # (completeness_raw_check.py:95-96).
-        return {"ratio": ratio_agg(scope, self.row_predicate(df), "ratio")}
+        return {"ratio": ratio_sql(self.scope(), self.row_predicate())}
 
     def metrics(self, slots: dict[str, object], ctx: RunContext) -> list[MetricResult]:
         v = slots.get("ratio")

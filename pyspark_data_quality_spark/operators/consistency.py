@@ -30,7 +30,7 @@ from pyspark.sql.window import Window
 from ..core.enums import Dimension
 from ..core.errors import RuleConfigurationError
 from ..core.models import MetricResult
-from ..plans.compile import or_fold, ratio_agg, require_columns
+from ..plans.compile import ident, null_safe_sql, or_sql, ratio_sql, require_columns
 from ..plans.local import local_frame
 from .base import Rule, RunContext
 
@@ -60,14 +60,22 @@ class ReferentialIntegrityRule(Rule):
             raise RuleConfigurationError(
                 "columns and ref_columns must have equal length"
             )
-        require_columns(ref_df, self.ref_columns)
         self.ref_df = ref_df
         self.ignore_nulls = ignore_nulls
         self.broadcast = broadcast
         self.name = kw.get("name") or f"fk({','.join(self.columns)})"
-        self._marker = f"_dq_{self.rule_id}_ok"
+        self._marker = self._marker_name("ok")
 
     # -- spec surface ------------------------------------------------------
+
+    def validate(self, columns: list[str]) -> None:
+        """Also checks the reference columns (the reference frame's
+        schema is read once per frame)."""
+        super().validate(columns)
+        require_columns(self.ref_df, self.ref_columns)
+
+    def markers(self) -> list[str]:
+        return [*super().markers(), self._marker]
 
     def prepare(self, df: DataFrame) -> DataFrame:
         """Add one boolean marker column: an IN-subquery probe of the FK
@@ -78,25 +86,25 @@ class ReferentialIntegrityRule(Rule):
         into per-column join keys, so a NULL in any part of a key never
         matches, as with a column-wise ``=`` join. ``row_predicate``
         counts a NULL marker as a failure."""
-        ref = self.ref_df.select(*self.ref_columns)
+        df = super().prepare(df)
+        ref = self.ref_df.selectExpr(*[ident(c) for c in self.ref_columns])
         if self.broadcast:
             ref = F.broadcast(ref)
-        probe = (
-            F.col(self.columns[0])
-            if len(self.columns) == 1
-            else F.struct(*self.columns)
-        )
+        # a struct built by F.struct: the IN-subquery splits it into
+        # per-column join keys, where SQL text's struct() stays one value
+        keys = [F.expr(ident(c)) for c in self.columns]
+        probe = keys[0] if len(keys) == 1 else F.struct(*keys)
         return df.withColumn(self._marker, probe.isin(ref))
 
-    def row_predicate(self, df: DataFrame) -> Column:
-        ok = F.coalesce(F.col(self._marker), F.lit(False))
+    def row_predicate(self) -> str:
+        ok = null_safe_sql(ident(self._marker))
         if self.ignore_nulls:
-            any_null = or_fold([F.col(c).isNull() for c in self.columns])
-            return F.when(any_null, F.lit(True)).otherwise(ok)
+            any_null = or_sql([f"{ident(c)} IS NULL" for c in self.columns])
+            return f"CASE WHEN ({any_null}) THEN true ELSE {ok} END"
         return ok
 
-    def aggregates(self, df: DataFrame) -> dict[str, Column]:
-        return {"ratio": ratio_agg(self.scope(df), self.row_predicate(df), "ratio")}
+    def aggregates(self) -> dict[str, str]:
+        return {"ratio": ratio_sql(self.scope(), self.row_predicate())}
 
     def metrics(self, slots: dict[str, object], ctx: RunContext) -> list[MetricResult]:
         v = slots.get("ratio")
@@ -125,12 +133,10 @@ class ReferentialIntegrityRule(Rule):
     def orphan_keys(self, df: DataFrame) -> DataFrame:
         """Distinct violating FK tuples with multiplicities (group-level
         diagnostic, one extra job when asked for)."""
-        prepared = self.prepare(df)
         return (
-            prepared.filter(
-                self.scope(prepared) & ~F.coalesce(F.col(self._marker), F.lit(False))
-            )
-            .groupBy(*self.columns)
+            self.prepare(df)
+            .filter(f"({self.scope()}) AND (NOT {null_safe_sql(ident(self._marker))})")
+            .groupBy(*[F.col(ident(c)) for c in self.columns])
             .agg(F.count(F.lit(1)).alias("count"))
         )
 

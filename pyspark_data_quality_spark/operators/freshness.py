@@ -19,11 +19,12 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.enums import CheckStatus, Dimension, FRESHNESS_PERIOD_SECONDS, FreshnessPeriod
 from ..core.models import MetricResult
+from ..plans.compile import ident, sql_literal
 from .base import Rule, RunContext
 
 
@@ -57,24 +58,22 @@ class FreshnessRule(Rule):
         self._now_epoch = now.timestamp()
         self.name = kw.get("name") or f"{self.metric_name}({column})"
 
-    def row_predicate(self, df: DataFrame) -> Column:
+    def row_predicate(self) -> str:
         # A row is "fresh" iff its timestamp is within the age bound.
         # Epoch comparison (timestamp -> double = epoch seconds, an absolute
-        # instant) — independent of spark.sql.session.timeZone, unlike
-        # F.lit(naive datetime) which Spark reads in the session tz.
+        # instant) — independent of spark.sql.session.timeZone, unlike a
+        # naive timestamp literal, which Spark reads in the session tz.
         bound_sec = self.max_age * FRESHNESS_PERIOD_SECONDS[self.period]
         cutoff_epoch = self._now_epoch - bound_sec
-        return F.col(self.column).cast("timestamp").cast("double") >= F.lit(
-            cutoff_epoch
+        return (
+            f"CAST(CAST({ident(self.column)} AS TIMESTAMP) AS DOUBLE) "
+            f">= {sql_literal(cutoff_epoch)}"
         )
 
-    def aggregates(self, df: DataFrame) -> dict[str, Column]:
-        scope = self.scope(df)
-        return {
-            "max_ts": F.max(
-                F.when(scope, F.col(self.column).cast("timestamp"))
-            ).cast("long")  # epoch seconds
-        }
+    def aggregates(self) -> dict[str, str]:
+        # epoch seconds of the newest in-scope timestamp
+        ts = f"CAST({ident(self.column)} AS TIMESTAMP)"
+        return {"max_ts": f"CAST(max(CASE WHEN ({self.scope()}) THEN {ts} END) AS BIGINT)"}
 
     def metrics(self, slots: dict[str, object], ctx: RunContext) -> list[MetricResult]:
         max_epoch = slots.get("max_ts")

@@ -162,7 +162,7 @@ def candidate_keys(
         # DISTINCT semantics; approx_distinct drops NULL-bearing keys)
         n_distinct = (
             F.count_distinct(*[F.col(c) for c in combo]) if exact
-            else approx_distinct(combo, rsd)
+            else F.expr(approx_distinct(combo, rsd))
         )
         aggs.append(n_distinct.alias(f"_nd{i}"))
     row = df.agg(*aggs)

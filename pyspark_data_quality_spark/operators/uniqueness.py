@@ -33,12 +33,13 @@ separate from group diagnostics (SURVEY.md §7 hard-part (b)).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.enums import Dimension
 from ..core.models import MetricResult
 from ..functions.expr import approx_distinct, hll_lg_k
+from ..plans.compile import ident
 from .base import Rule, RunContext
 
 
@@ -59,16 +60,17 @@ class UniqueRule(Rule):
         #: sketch size for the approx path; raises on an unsupported rsd
         self.lg_k = None if exact else hll_lg_k(rsd)
 
-    def aggregates(self, df: DataFrame) -> dict[str, Column]:
-        scope = self.scope(df)
+    def aggregates(self) -> dict[str, str]:
+        scope = self.scope()
         if self.exact:
-            distinct = F.count_distinct(
-                *[F.when(scope, F.col(c)) for c in self.columns]
+            keys = ", ".join(
+                f"CASE WHEN ({scope}) THEN {ident(c)} END" for c in self.columns
             )
+            distinct = f"count(DISTINCT {keys})"
         else:
             # HLL sketch: mergeable, no Expand, bounded memory at any scale.
             distinct = approx_distinct(self.columns, self.rsd, scope)
-        total = F.count(F.when(scope, F.lit(1)))
+        total = f"count(CASE WHEN ({scope}) THEN 1 END)"
         return {"distinct": distinct, "total": total}
 
     def metrics(self, slots: dict[str, object], ctx: RunContext) -> list[MetricResult]:
@@ -102,27 +104,32 @@ class UniqueRule(Rule):
 
     # -- row-set surfaces (reference `valid` / `invalid`) -------------------
 
-    def row_violation(self, df: DataFrame) -> Column:
+    def row_violation(self) -> str:
         """A row violates uniqueness iff it is in scope and its key occurs
         more than once among in-scope rows. One window count = one hash
         shuffle on the key columns (shared by all rows, AQE-skew-aware);
         this is the unavoidable cost of row-level uniqueness classification."""
-        from pyspark.sql.window import Window
-
-        scope = self.scope(df)
-        w = Window.partitionBy(*[F.col(c) for c in self.columns])
-        in_scope_multiplicity = F.sum(scope.cast("long")).over(w)
-        return scope & (in_scope_multiplicity > 1)
+        scope = self.scope()
+        keys = ", ".join(ident(c) for c in self.columns)
+        return (
+            f"({scope}) AND "
+            f"(sum(CAST(({scope}) AS BIGINT)) OVER (PARTITION BY {keys}) > 1)"
+        )
 
     def transform_valid(self, df: DataFrame) -> DataFrame:
         """Reference-style dedup for `get_deduplicated_df`: keep one survivor
-        per key among in-scope rows; out-of-scope rows pass through."""
+        per key among in-scope rows; out-of-scope rows pass through.
+        ``df`` carries this rule's markers (``prepare``)."""
         if self.condition is None:
             return df.dropDuplicates(self.columns)
-        scope = self.scope(df)
-        return df.filter(~scope).unionByName(
+        scope = self.scope()
+        return df.filter(f"NOT ({scope})").unionByName(
             df.filter(scope).dropDuplicates(self.columns)
         )
+
+    def _in_scope(self, df: DataFrame) -> DataFrame:
+        """``df``'s in-scope rows, this rule's markers bound."""
+        return self.prepare(df).filter(self.scope())
 
     def deduplicated(
         self, df: DataFrame, order_by: list[str] | None = None
@@ -137,27 +144,30 @@ class UniqueRule(Rule):
         first row per key under that ordering (nulls first), via one
         row_number window — same single shuffle on the keys, plus a
         partition sort."""
-        scoped = df.filter(self.scope(df))
+        scoped = self._in_scope(df)
         if order_by is None:
-            return scoped.dropDuplicates(self.columns)
-        from pyspark.sql.window import Window
+            out = scoped.dropDuplicates(self.columns)
+        else:
+            from pyspark.sql.window import Window
 
-        w = Window.partitionBy(*[F.col(c) for c in self.columns]).orderBy(
-            *[F.col(c).asc_nulls_first() for c in order_by]
-        )
-        return (
-            scoped.withColumn("_dq_rn", F.row_number().over(w))
-            .filter(F.col("_dq_rn") == 1)
-            .drop("_dq_rn")
-        )
+            w = Window.partitionBy(*[F.col(ident(c)) for c in self.columns]).orderBy(
+                *[F.col(ident(c)).asc_nulls_first() for c in order_by]
+            )
+            out = (
+                scoped.withColumn("_dq_rn", F.row_number().over(w))
+                .filter(F.col("_dq_rn") == 1)
+                .drop("_dq_rn")
+            )
+        markers = self.markers()
+        return out.drop(*markers) if markers else out
 
     def group_diagnostics(self, df: DataFrame) -> DataFrame:
         """Duplicate key groups with multiplicities (reference `invalid`,
         ``unique_chek.py:84-87``): ``cols + count`` where count > 1.
         Partial (map-side) aggregation shrinks the shuffle to distinct keys."""
-        scoped = df.filter(self.scope(df))
         return (
-            scoped.groupBy(*self.columns)
+            self._in_scope(df)
+            .groupBy(*[F.col(ident(c)) for c in self.columns])
             .agg(F.count(F.lit(1)).alias("count"))
             .filter(F.col("count") > 1)
         )

@@ -13,28 +13,36 @@ ratio aggregate — and typed conveniences:
 - :class:`SetMembershipRule` — column value in an allowed set (validity).
 
 All of them ride the single fused analysis job (one
-``avg(when(scope, pred))`` expression each) and contribute a row predicate
-to the valid/invalid split; none adds a job, a shuffle, or a UDF — the
-predicates stay inside whole-stage codegen.
+``avg(CASE WHEN scope THEN pred END)`` text each) and contribute a row
+predicate to the valid/invalid split; none adds a job, a shuffle, or a
+UDF — the predicates stay inside whole-stage codegen. The typed
+conveniences state their predicates as SQL text (quoted column, literals
+typed as ``F.lit`` types them), so building one calls no JVM.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
 from ..core.enums import Dimension
 from ..core.errors import RuleConfigurationError
 from ..core.models import MetricResult
-from ..plans.compile import ConditionLike, ratio_agg, to_condition
+from ..plans.compile import (
+    ConditionLike,
+    and_sql,
+    condition_sql,
+    ident,
+    needs_marker,
+    ratio_sql,
+    sql_literal,
+)
 from .base import Rule, RunContext
 
 
 class PredicateRule(Rule):
     """Fraction of in-scope rows satisfying an arbitrary boolean predicate.
 
-    ``predicate`` accepts the same forms as scope conditions: SQL string
-    (compiled via ``F.expr``), ``Column``, or ``Callable[[DataFrame], Column]``.
+    ``predicate`` accepts the same forms as scope conditions: SQL string,
+    ``Column``, or ``Callable[[DataFrame], Column]`` (the last two bound
+    once as a marker column by ``prepare``).
     NULL-evaluating predicates count as failures (no silent three-valued
     escape). ``dimension`` defaults to CONSISTENCY (cross-column checks);
     accuracy checks pass ``dimension=Dimension.ACCURACY``.
@@ -47,6 +55,7 @@ class PredicateRule(Rule):
         super().__init__(**kw)
         if predicate is None:
             raise RuleConfigurationError("PredicateRule requires a predicate")
+        needs_marker(predicate)  # an unsupported type raises here
         self.predicate = predicate
         if dimension is not None:
             self.dimension = dimension
@@ -59,11 +68,14 @@ class PredicateRule(Rule):
         # explicitly declared `columns` are pre-validated driver-side.
         return self.columns
 
-    def row_predicate(self, df: DataFrame) -> Column:
-        return to_condition(self.predicate, df)
+    def _bindings(self):
+        return {**super()._bindings(), self._marker_name("pred"): self.predicate}
 
-    def aggregates(self, df: DataFrame) -> dict[str, Column]:
-        return {"ratio": ratio_agg(self.scope(df), self.row_predicate(df), "ratio")}
+    def row_predicate(self) -> str:
+        return condition_sql(self.predicate, self._marker_name("pred"))
+
+    def aggregates(self) -> dict[str, str]:
+        return {"ratio": ratio_sql(self.scope(), self.row_predicate())}
 
     def metrics(self, slots: dict[str, object], ctx: RunContext) -> list[MetricResult]:
         v = slots.get("ratio")
@@ -97,7 +109,7 @@ class RegexMatchRule(PredicateRule):
         pat = f"^(?:{pattern})$" if full else pattern
         kw.setdefault("columns", [column])
         super().__init__(
-            predicate=lambda df: F.col(column).rlike(pat),
+            predicate=f"{ident(column)} RLIKE {sql_literal(pat)}",
             dimension=Dimension.VALIDITY,
             **kw,
         )
@@ -115,14 +127,12 @@ class RangeRule(PredicateRule):
             raise RuleConfigurationError("RangeRule needs min_value and/or max_value")
         conds = []
         if min_value is not None:
-            conds.append(F.col(column) >= F.lit(min_value))
+            conds.append(f"{ident(column)} >= {sql_literal(min_value)}")
         if max_value is not None:
-            conds.append(F.col(column) <= F.lit(max_value))
-        from ..plans.compile import and_fold
-
+            conds.append(f"{ident(column)} <= {sql_literal(max_value)}")
         kw.setdefault("columns", [column])
         super().__init__(
-            predicate=lambda df: and_fold(conds),
+            predicate=and_sql(conds),
             dimension=Dimension.VALIDITY,
             **kw,
         )
@@ -144,8 +154,9 @@ class SetMembershipRule(PredicateRule):
         if not allowed:
             raise RuleConfigurationError("SetMembershipRule needs a non-empty set")
         kw.setdefault("columns", [column])
+        members = ", ".join(sql_literal(v) for v in allowed)
         super().__init__(
-            predicate=lambda df: F.col(column).isin(list(allowed)),
+            predicate=f"{ident(column)} IN ({members})",
             dimension=Dimension.VALIDITY,
             **kw,
         )

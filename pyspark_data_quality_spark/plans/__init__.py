@@ -1,12 +1,21 @@
 from .analysis import AnalysisRunner
-from .compile import and_fold, null_safe, or_fold, ratio_agg, require_columns, to_condition
+from .compile import (
+    and_sql,
+    ident,
+    null_safe_sql,
+    or_sql,
+    ratio_sql,
+    require_columns,
+    sql_literal,
+)
 
 __all__ = [
     "AnalysisRunner",
-    "and_fold",
-    "null_safe",
-    "or_fold",
-    "ratio_agg",
+    "and_sql",
+    "ident",
+    "null_safe_sql",
+    "or_sql",
+    "ratio_sql",
     "require_columns",
-    "to_condition",
+    "sql_literal",
 ]

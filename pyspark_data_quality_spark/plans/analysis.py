@@ -10,11 +10,15 @@ completeness check ``completeness_col_ratio_check.py:110``, four
 ``.count()`` actions for the raw-ratio check
 ``completeness_raw_check.py:95-96``): N checks -> N+ full input scans.
 
-Here every rule contributes conditional-aggregate expressions
-(``F.avg(F.when(scope, pred))``, ``F.count``, ``F.count_distinct`` …) that
-are concatenated into a single ``df.agg(...)`` — the Deequ "analysis run"
-pattern. One scan, map-side partial aggregation, one tiny shuffle to a
-single reducer row, whatever the rule count. At 100 TB this is the
+Here every rule contributes conditional-aggregate SQL text
+(``avg(CASE WHEN scope THEN pred END)``, ``count``, ``count(DISTINCT …)``
+…, see ``operators/base``'s spec contract) that is parsed once, in a
+single ``selectExpr(...)`` over the prepared frame — a global aggregate,
+the Deequ "analysis run" pattern. Text, not Column trees: composing the
+fused aggregate of perfbench's seven rules as Columns cost ~700 py4j
+commands (PySpark 4.1 captures a call-site origin per Column operator),
+the text list one call. One scan, map-side partial aggregation, one
+tiny shuffle to a single reducer row, whatever the rule count. At 100 TB this is the
 difference between hours and minutes; no custom Catalyst rule is needed
 because plain conditional aggregates already fuse.
 
@@ -42,32 +46,38 @@ if TYPE_CHECKING:
     from ..operators.base import Rule, RunContext
 
 from ..core.models import MetricResult
+from .compile import ident
 
 
 class AnalysisRunner:
     """Compile rules -> one fused aggregate action -> MetricResult rows."""
 
     @staticmethod
-    def compile_aggregates(df: DataFrame, rules: list["Rule"]) -> list:
-        exprs = []
-        for rule in rules:
-            for slot, col in rule.aggregates(df).items():
-                exprs.append(col.alias(f"{rule.rule_id}__{slot}"))
-        return exprs
+    def compile_aggregates(rules: list["Rule"]) -> list[str]:
+        """Every rule's aggregate texts, each aliased ``{rule_id}__{slot}``."""
+        return [
+            f"{text} AS {ident(f'{rule.rule_id}__{slot}')}"
+            for rule in rules
+            for slot, text in rule.aggregates().items()
+        ]
 
     @staticmethod
     def run(
-        prepared: DataFrame, rules: list["Rule"], ctx: "RunContext"
+        prepared: DataFrame,
+        aggregates: list[str],
+        rules: list["Rule"],
+        ctx: "RunContext",
     ) -> list[MetricResult]:
         """``prepared`` is the input already validated against every
-        rule and folded through every rule's ``prepare`` (ResultObj does
-        both, once): join-shaped checks (FK membership) have added their
-        marker columns, and their broadcast joins stack into the fused
-        aggregate's stage, so this stays ONE action."""
-        exprs = AnalysisRunner.compile_aggregates(prepared, rules)
+        rule and folded through every rule's ``prepare``, and
+        ``aggregates`` is :meth:`compile_aggregates` of ``rules``
+        (ResultObj compiles both once per run): join-shaped checks (FK
+        membership) have added their marker columns, and their broadcast
+        joins stack into the fused aggregate's stage, so this stays ONE
+        action."""
         slots_by_rule: dict[str, dict[str, object]] = {r.rule_id: {} for r in rules}
-        if exprs:
-            row = prepared.agg(*exprs).first()  # THE single action for all metrics
+        if aggregates:
+            row = prepared.selectExpr(*aggregates).first()  # THE single action for all metrics
             for key, value in row.asDict().items():
                 rule_id, _, slot = key.partition("__")
                 slots_by_rule.setdefault(rule_id, {})[slot] = value

@@ -14,27 +14,63 @@ fixes (SURVEY.md §2 F12/F13):
   :meth:`get_group_diagnostics`; reference-style dedup output lives in
   :meth:`get_deduplicated_df`.
 
-Execution shape: the whole classification is ONE ``withColumn`` over a
-predicate array — Catalyst collapses it with downstream filters and pushes
-scan-level predicates into parquet. Uniqueness row-classification needs
-per-key multiplicities, i.e. one hash-partition shuffle per distinct key
-set (window count); rules that don't need it add zero shuffles. The
-metrics DataFrame is the fused aggregate's result re-emitted as a
-driver-built local relation (``plans/local.py``): collecting it runs no
-Spark job, and writing it runs no Python-worker task.
+Execution shape: each run is compiled ONCE, on first use, into the
+prepared frame (the input folded through every rule's ``prepare``:
+FK membership probes, Column/callable conditions bound as markers),
+the aggregate texts and the violation texts (``operators/base``'s SQL
+text spec contract), and every output is built from that compile:
+
+- metrics: one ``prepared.selectExpr(*aggregates)`` action;
+- annotation: one ``F.expr("array_compact(array(CASE WHEN v THEN
+  'rule' END, ...))")`` column over the prepared frame;
+- valid rows: the pushdown conjunction as one ``filter(text)``;
+- invalid rows and both sides of the quarantine route: text filters
+  over the annotation.
+
+Each SQL text is parsed once where ``Column`` operators would cost a
+py4j round trip apiece (about ten under PySpark 4.1's origin capture):
+composing the metrics aggregate plus the annotation for perfbench's
+seven rules fell from ~1,350 py4j commands to ~50. Catalyst sees the
+same trees, so it collapses the classification with downstream filters
+and pushes scan-level predicates into parquet as before. Uniqueness
+row-classification needs per-key multiplicities, i.e. one
+hash-partition shuffle per distinct key set (window count); rules that
+don't need it add zero shuffles. The metrics DataFrame is the fused
+aggregate's result re-emitted as a driver-built local relation
+(``plans/local.py``): collecting it runs no Spark job, and writing it
+runs no Python-worker task.
 """
 
 from __future__ import annotations
+
+from functools import cached_property
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .core.models import METRIC_SCHEMA
-from .operators.base import MARKER_PREFIX, Rule, RunContext
+from .operators.base import Rule, RunContext
 from .plans.analysis import AnalysisRunner
+from .plans.compile import and_sql, ident, sql_literal
 from .plans.local import local_frame
 
 FAILED_RULES_COL = "failed_rules"
+#: SQL filters over the annotated frame: rows passing every rule / failing one
+ALL_PASS = f"size({ident(FAILED_RULES_COL)}) = 0"
+ANY_FAIL = f"size({ident(FAILED_RULES_COL)}) > 0"
+
+
+class _Compiled(NamedTuple):
+    """One run's compile: every output is built from these."""
+
+    prepared: DataFrame
+    #: helper columns the rules' ``prepare`` added (stripped from outputs)
+    markers: list[str]
+    #: AnalysisRunner.compile_aggregates(rules)
+    aggregates: list[str]
+    #: (rule name, violation text) for every rule with a row-level notion
+    violations: list[tuple[str, str]]
 
 
 class ResultObj:
@@ -51,40 +87,47 @@ class ResultObj:
         self.df = df
         self.spark = spark
         self.ctx = ctx or RunContext()
+        columns = df.columns  # one schema read validates every rule
         for rule in self.rules:
-            rule.validate(df)
+            rule.validate(columns)
+
+    @cached_property
+    def _compiled(self) -> _Compiled:
+        """Fold the input through every rule's ``prepare`` (identity for
+        most rules; FK rules chain broadcast joins here — N FK rules are
+        still one scan of the fact table, joins stacked in one stage) and
+        collect every rule's texts. No Spark action."""
+        prepared = self.df
+        for rule in self.rules:
+            prepared = rule.prepare(prepared)
+        return _Compiled(
+            prepared,
+            [m for rule in self.rules for m in rule.markers()],
+            AnalysisRunner.compile_aggregates(self.rules),
+            [
+                (rule.name, v)
+                for rule in self.rules
+                if (v := rule.row_violation()) is not None
+            ],
+        )
+
+    def _strip_markers(self, df: DataFrame) -> DataFrame:
+        markers = self._compiled.markers
+        return df.drop(*markers) if markers else df
 
     # -- row classification --------------------------------------------------
 
-    def _prepared_df(self) -> DataFrame:
-        """Fold the input through every rule's ``prepare`` (identity for
-        most rules; FK rules chain broadcast joins here — N FK rules are
-        still one scan of the fact table, joins stacked in one stage)."""
-        df = self.df
-        for rule in self.rules:
-            df = rule.prepare(df)
-        return df
-
-    @staticmethod
-    def _strip_markers(df: DataFrame) -> DataFrame:
-        helpers = [c for c in df.columns if c.startswith(MARKER_PREFIX)]
-        return df.drop(*helpers) if helpers else df
-
     def annotated_df(self) -> DataFrame:
         """Input df + ``failed_rules: array<string>`` (empty = all pass)."""
-        prepared = self._prepared_df()
-        entries = []
-        for rule in self.rules:
-            violation = rule.row_violation(prepared)
-            if violation is not None:
-                entries.append(F.when(violation, F.lit(rule.name)))
-        if not entries:
-            return self._strip_markers(
-                prepared.withColumn(FAILED_RULES_COL, F.array().cast("array<string>"))
+        c = self._compiled
+        if c.violations:
+            tags = ", ".join(
+                f"CASE WHEN {v} THEN {sql_literal(name)} END" for name, v in c.violations
             )
-        return self._strip_markers(
-            prepared.withColumn(FAILED_RULES_COL, F.array_compact(F.array(*entries)))
-        )
+            failed = f"array_compact(array({tags}))"
+        else:
+            failed = "CAST(array() AS ARRAY<STRING>)"
+        return self._strip_markers(c.prepared.withColumn(FAILED_RULES_COL, F.expr(failed)))
 
     def get_valid_df(self) -> DataFrame:
         """Rows passing every rule (original schema).
@@ -104,28 +147,18 @@ class ResultObj:
         frame, so their presence falls back to the annotation path (their
         per-key shuffle dominates that plan anyway).
         """
-        from .plans.compile import and_fold
-
         if any(getattr(r, "violation_is_analytic", False) for r in self.rules):
-            ann = self.annotated_df()
-            return ann.filter(F.size(FAILED_RULES_COL) == 0).drop(FAILED_RULES_COL)
-
-        prepared = self._prepared_df()
-        violations = [
-            v
-            for v in (r.row_violation(prepared) for r in self.rules)
-            if v is not None
-        ]
-        if not violations:
+            return self.annotated_df().filter(ALL_PASS).drop(FAILED_RULES_COL)
+        c = self._compiled
+        if not c.violations:
             return self.df
-        keep = and_fold([F.coalesce(~v, F.lit(True)) for v in violations])
-        return self._strip_markers(prepared.filter(keep))
+        keep = and_sql([f"coalesce(NOT ({v}), true)" for _, v in c.violations])
+        return self._strip_markers(c.prepared.filter(keep))
 
     def get_invalid_df(self, with_reasons: bool = True) -> DataFrame:
         """Rows failing at least one rule; keeps ``failed_rules`` unless
         ``with_reasons=False``."""
-        ann = self.annotated_df()
-        out = ann.filter(F.size(FAILED_RULES_COL) > 0)
+        out = self.annotated_df().filter(ANY_FAIL)
         return out if with_reasons else out.drop(FAILED_RULES_COL)
 
     # -- dataset-level outputs -------------------------------------------------
@@ -136,9 +169,8 @@ class ResultObj:
         the shuffle stage run as their own jobs), then the metric rows as
         a driver-built local relation (``plans/local.py``): collecting
         it runs no Spark job, and no action on it runs a Python task."""
-        metrics = AnalysisRunner.run(
-            self._prepared_df(), self.rules, self.ctx
-        )
+        c = self._compiled
+        metrics = AnalysisRunner.run(c.prepared, c.aggregates, self.rules, self.ctx)
         return local_frame(
             self.spark, [m.as_row() for m in metrics], METRIC_SCHEMA
         )
@@ -149,21 +181,18 @@ class ResultObj:
         single fused filter (not the window-based duplicate classification —
         dedup *keeps* one row per duplicate group), then each uniqueness
         rule's dedup transform."""
-        from .plans.compile import and_fold
-
-        prepared = self._prepared_df()
+        c = self._compiled
         preds = [
             p
-            for p in (r.scoped_pass_predicate(prepared) for r in self.rules)
+            for p in (r.scoped_pass_predicate() for r in self.rules)
             if p is not None
         ]
-        out = prepared.filter(and_fold(preds)) if preds else prepared
-        out = self._strip_markers(out)
+        out = c.prepared.filter(and_sql(preds)) if preds else c.prepared
         for rule in self.rules:
             transform = getattr(rule, "transform_valid", None)
             if transform is not None:
                 out = transform(out)
-        return out
+        return self._strip_markers(out)
 
     def get_group_diagnostics(self) -> dict[str, DataFrame]:
         """Rule-name -> group-level diagnostic DataFrame (e.g. duplicate

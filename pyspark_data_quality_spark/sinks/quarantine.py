@@ -5,7 +5,8 @@ The standard production pattern the reference never closed the loop on:
 its ResultObj exposed the two frames but nothing persisted them. The
 batch is classified ONCE: the annotated frame (input + ``failed_rules``)
 is materialized with an eager ``localCheckpoint``, and the two sinks are
-complementary filters of that one frame. The source is scanned and every
+complementary SQL-text filters (``ALL_PASS`` / ``ANY_FAIL``) of that
+one frame. The source is scanned and every
 rule evaluated once — including a uniqueness rule's window shuffle and
 an FK rule's broadcast probe — and both sides come from the same
 classification by construction, even if the source changes between the
@@ -27,10 +28,9 @@ apply to both sides (e.g. an ingest-date column keeps replays pruned).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..plans.cache import checkpointed
-from ..result import FAILED_RULES_COL, ResultObj
+from ..result import ALL_PASS, ANY_FAIL, FAILED_RULES_COL, ResultObj
 
 
 def _route_classified(
@@ -49,10 +49,9 @@ def _route_classified(
     base = base_path.rstrip("/")
     paths = {"valid": f"{base}/valid", "invalid": f"{base}/invalid"}
     with checkpointed(result.annotated_df()) as ann:
-        n_failed = F.size(FAILED_RULES_COL)
         sides = {
-            "valid": ann.filter(n_failed == 0).drop(FAILED_RULES_COL),
-            "invalid": ann.filter(n_failed > 0),
+            "valid": ann.filter(ALL_PASS).drop(FAILED_RULES_COL),
+            "invalid": ann.filter(ANY_FAIL),
         }
         for name, df in sides.items():
             if extra:

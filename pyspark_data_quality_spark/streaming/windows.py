@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.base import Rule
-from ..plans.compile import null_safe
+from ..plans.compile import ident, ratio_sql
 
 
 def _with_watermark(df: DataFrame, ts_col: str, watermark: str | None) -> DataFrame:
@@ -329,17 +329,19 @@ def windowed_pass_ratios(
     its row predicate — the declarative rules' streaming surface.
 
     ONE fused windowed aggregation (same design as the batch
-    AnalysisRunner): each rule contributes ``avg(predicate)`` into a single
-    groupBy(window), so N rules still cost one stateful operator.
+    AnalysisRunner): each rule contributes the batch pass-ratio text
+    (``plans/compile.ratio_sql`` over its scope and row predicate) into a
+    single groupBy(window), so N rules still cost one stateful operator.
     Output: window_start, window_end, n_rows, then one ``<rule.name>_ratio``
     column per rule (rounded to 6).
     """
     src = _with_watermark(df, ts_col, watermark)
+    columns = df.columns
     for r in rules:
-        r.validate(df)
-    # fold every rule's prepare transform first (same contract as
-    # ResultObj._prepared_df): join-shaped rules like ReferentialIntegrityRule
-    # add their marker columns here, and their predicates reference them
+        r.validate(columns)
+    # fold every rule's prepare transform first (as ResultObj's compile
+    # does): join-shaped rules like ReferentialIntegrityRule add their
+    # marker columns here, and their predicates reference them
     for r in rules:
         src = r.prepare(src)
     win = F.window(F.col(ts_col), duration, slide) if slide else F.window(
@@ -347,17 +349,13 @@ def windowed_pass_ratios(
     )
     aggs: list[Column] = [F.count(F.lit(1)).alias("n_rows")]
     for r in rules:
-        pred = r.row_predicate(src)
+        pred = r.row_predicate()
         if pred is None:
             continue
-        scoped = r.scope(src)
-        # Same null semantics as the batch ratio_agg: NULL-evaluating
-        # predicates count as failures, out-of-scope rows don't contribute.
-        aggs.append(
-            F.round(
-                F.avg(F.when(scoped, null_safe(pred).cast("double"))), 6
-            ).alias(f"{r.name}_ratio")
-        )
+        # the batch ratio formula itself: NULL-evaluating predicates count
+        # as failures, out-of-scope rows don't contribute
+        ratio = ratio_sql(r.scope(), pred)
+        aggs.append(F.expr(f"round({ratio}, 6) AS {ident(f'{r.name}_ratio')}"))
     return (
         src.groupBy(win.alias("_w"))
         .agg(*aggs)

@@ -4,7 +4,13 @@ query and flag scale smells.
 Usage::
 
     python scripts/audit_plans.py              # summary table
+    python scripts/audit_plans.py --assert     # ... and gate it
     python scripts/audit_plans.py NAME         # full formatted plan
+
+The summary is compared line by line with the committed snapshot
+(:data:`SNAPSHOT`); every differing line is printed, and under
+``--assert`` any differing line fails the gate, so a change that moves a
+plan must commit the regenerated snapshot with it.
 
 Smells checked per plan:
 
@@ -32,6 +38,9 @@ import sys
 import harness
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+#: the committed summary the live one must reproduce
+SNAPSHOT = os.path.join(harness.REPO, "docs", "plan_audit_r17.txt")
 
 #: entries whose nested-loop joins are documented and bounded: either the
 #: deliberate O(n²)/O(n·q) oracle baselines over fixed subsets, or
@@ -119,12 +128,30 @@ def plan_counts(plan: str) -> dict[str, int]:
     }
 
 
+def snapshot_diff(lines: list[str], snapshot: str = SNAPSHOT) -> list[str]:
+    """The entries whose summary line differs from ``snapshot``'s (trailing
+    blanks ignored), or that only one side has, as ``-``/``+`` pairs."""
+
+    def by_name(ls):
+        return {ln.split()[0]: ln.rstrip() for ln in ls if ln.strip()}
+
+    with open(snapshot) as f:
+        old = by_name(f)
+    new = by_name(lines)
+    out = []
+    for name in sorted(old.keys() | new.keys()):
+        if old.get(name) != new.get(name):
+            out += [f"- {old.get(name, '(absent)')}", f"+ {new.get(name, '(absent)')}"]
+    return out
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--assert"]
     strict = "--assert" in sys.argv[1:]
     queries = harness.entries(args[:1])
     spark = harness.session("plan-audit", 4)
     violations: list[str] = []
+    summary: list[str] = []
 
     # by name, not certification order: an oracle edit must not
     # reorder the committed snapshot
@@ -132,7 +159,8 @@ def main() -> None:
         try:
             plan = harness.formatted_plan(fn(spark, SF_DIR))
         except Exception as e:  # noqa: BLE001
-            print(f"{name:32s} ERROR {type(e).__name__}: {e}"[:120])
+            summary.append(f"{name:32s} ERROR {type(e).__name__}: {e}"[:120])
+            print(summary[-1])
             continue
         if args:
             print(plan)
@@ -149,13 +177,25 @@ def main() -> None:
         if c["python_rdd"]:
             flags.append(f"PYTHON_RDD_SCAN x{c['python_rdd']}")
             violations.append(f"{name}: Python-fed RDD scan")
-        print(
+        summary.append(
             f"{name:32s} shuffles={c['shuffles']:2d} scans={c['scans']} "
             f"pushed={c['pushed']} arrow_udf={c['arrow_udf']} "
             f"py_rdd={c['python_rdd']} codegen={c['codegen']:2d} "
             f"{' '.join(flags)}"
         )
+        print(summary[-1])
     spark.stop()
+    if not args:
+        diff = snapshot_diff(summary)
+        print(
+            f"SNAPSHOT {os.path.relpath(SNAPSHOT, harness.REPO)}: "
+            f"{len(diff) // 2} differing line(s)",
+            file=sys.stderr,
+        )
+        for ln in diff:
+            print(ln, file=sys.stderr)
+        if diff:
+            violations.append(f"{len(diff) // 2} line(s) differ from the snapshot")
     if strict and violations:
         print("PLAN GATE FAILED:")
         for v in violations:

@@ -127,7 +127,7 @@ def test_fused_single_job(spark, people):
         CompletenessRawRatioRule(columns=["name", "city"]),
         UniqueRule(columns=["name_id"]),
     ]
-    exprs = AnalysisRunner.compile_aggregates(people, rules)
+    exprs = AnalysisRunner.compile_aggregates(rules)
     # 2 (per-col) + 1 (raw ratio) + 2 (distinct+total) slots, one agg call.
     assert len(exprs) == 5
 

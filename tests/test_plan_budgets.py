@@ -360,7 +360,7 @@ def test_distinct_keys_plan_hll_sketch_not_hll_plus_plus(spark, orders):
             condition="o_orderstatus = 'F'",
         ),
     ]
-    fused = orders.agg(*AnalysisRunner.compile_aggregates(orders, rules))
+    fused = orders.selectExpr(*AnalysisRunner.compile_aggregates(rules))
     keys = candidate_keys(
         orders, ["o_orderkey", "o_custkey", "o_orderstatus"], max_width=2
     )

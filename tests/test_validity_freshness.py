@@ -120,13 +120,13 @@ def test_freshness_tz_independent(spark, items):
             column="updated", max_age=3.0, period=FreshnessPeriod.DAY,
             now=datetime(2026, 1, 5),
         )
-        n_fresh = items.filter(rule.row_predicate(items)).count()
+        n_fresh = items.filter(rule.row_predicate()).count()
         utc_rule = FreshnessRule(
             column="updated", max_age=3.0, period=FreshnessPeriod.DAY,
             now=datetime(2026, 1, 5, tzinfo=timezone.utc),
         )
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        assert items.filter(utc_rule.row_predicate(items)).count() == n_fresh
+        assert items.filter(utc_rule.row_predicate()).count() == n_fresh
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
 
