@@ -7765,18 +7765,20 @@ def dq_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalize_columns): ONE fused stats agg per l_returnflag group,
     broadcast back, pure-expression apply. min/max are exact (no
     reduction-order drift), so every scaled row matches the oracle
-    bit-for-bit before the presentation round."""
+    bit-for-bit before the presentation round, which this entry applies
+    to the two output columns (the operator returns full precision)."""
+    from .functions.expr import DIGITS
     from .operators.repair import normalize_columns
 
     li = load_table(spark, "lineitem", sf_dir)
     out = normalize_columns(
         li, ["l_quantity", "l_extendedprice"],
-        method="minmax", group_by=["l_returnflag"], round_to=6,
+        method="minmax", group_by=["l_returnflag"],
     )
     return out.select(
         "l_orderkey", "l_linenumber",
-        F.col("l_quantity_norm").alias("q_norm"),
-        F.col("l_extendedprice_norm").alias("p_norm"),
+        F.round("l_quantity_norm", DIGITS).alias("q_norm"),
+        F.round("l_extendedprice_norm", DIGITS).alias("p_norm"),
     )  # no final orderBy (r16, §2.4): cosmetic data-scale sort dropped
 
 

@@ -2,12 +2,46 @@
 
 from __future__ import annotations
 
+import math
 from typing import Callable, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..plans.compile import and_sql, ident
+
+#: decimal places of every reported statistic: each operator rounds its
+#: output once, with ``F.round(x, DIGITS)`` — the oracles' ``round(x, 6)``
+DIGITS = 6
+
+
+def _round_like_spark(arr, nd: int):
+    """Replicate ``F.round`` on doubles for values rounded in Python
+    (the streaming faces' display columns, driver-side ratios): Java
+    rounds HALF_UP over the SHORTEST-DECIMAL representation
+    (``BigDecimal.valueOf(double)``). ``np.round`` and Python ``round``
+    are half-to-even, and the ``floor(abs*scale+0.5)`` trick rounds the
+    BINARY value (0.285*100 = 28.4999... → 0.28 where Spark shows 0.29)
+    — all diverge from F.round at decimal half-boundaries. Python
+    ``repr(float)`` is the same shortest round-trip decimal as
+    ``Double.toString``, so ``Decimal(repr(x))`` + ``ROUND_HALF_UP``
+    (ties away from zero, like Java) reproduces F.round exactly.
+    Per-element Decimal, deliberately: the inputs are bounded (metric
+    streams, one-row reports), and parity with the JVM face beats
+    vectorizing a cosmetic column."""
+    import numpy as np
+    from decimal import ROUND_HALF_UP, Decimal
+
+    q = Decimal(1).scaleb(-nd)
+    out = np.empty(len(arr), dtype=float)
+    for i, v in enumerate(arr):
+        fv = float(v)
+        out[i] = (
+            fv
+            if math.isnan(fv) or math.isinf(fv)
+            else float(Decimal(repr(fv)).quantize(q, rounding=ROUND_HALF_UP))
+        )
+    return out
 
 
 def let_bind(value: Column, body: Callable[[Column], Column]) -> Column:

@@ -31,7 +31,7 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-from .expr import let_bind as _let
+from .expr import DIGITS, let_bind as _let
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -395,10 +395,10 @@ def gopher_signals(col: Column | str) -> Column:
     )
     frac = lambda num, den: F.when(den > 0, num / den).otherwise(F.lit(0.0))
     return F.struct(
-        F.round(frac(alpha, n_tok), 6).alias("alpha_word_ratio"),
-        F.round(frac(bullets, n_lines), 6).alias("bullet_line_ratio"),
-        F.round(frac(ellipsis, n_lines), 6).alias("ellipsis_line_ratio"),
-        F.round(frac(symbols, n_tok), 6).alias("symbol_word_ratio"),
+        F.round(frac(alpha, n_tok), DIGITS).alias("alpha_word_ratio"),
+        F.round(frac(bullets, n_lines), DIGITS).alias("bullet_line_ratio"),
+        F.round(frac(ellipsis, n_lines), DIGITS).alias("ellipsis_line_ratio"),
+        F.round(frac(symbols, n_tok), DIGITS).alias("symbol_word_ratio"),
     )
 
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
+
 
 def ab_test_report(
     df: DataFrame,
@@ -32,7 +34,6 @@ def ab_test_report(
     success_col: str | Column | None = None,
     *,
     critical: float = 1.96,
-    round_to: int = 6,
 ) -> DataFrame:
     """One-row A/B report comparing EXACTLY two variants.
 
@@ -116,13 +117,13 @@ def ab_test_report(
         F.col("variant_b"),
         F.col("n_a"),
         F.col("n_b"),
-        F.round("mean_a", round_to).alias("mean_a"),
-        F.round("mean_b", round_to).alias("mean_b"),
-        F.round(F.col("mean_a") - F.col("mean_b"), round_to).alias(
+        F.round("mean_a", DIGITS).alias("mean_a"),
+        F.round("mean_b", DIGITS).alias("mean_b"),
+        F.round(F.col("mean_a") - F.col("mean_b"), DIGITS).alias(
             "mean_diff"
         ),
-        F.round(welch_t, round_to).alias("welch_t"),
-        F.round(welch_df, round_to).alias("welch_df"),
+        F.round(welch_t, DIGITS).alias("welch_t"),
+        F.round(welch_df, DIGITS).alias("welch_df"),
     ]
     if success_col is not None:
         p_a = F.col("succ_a") / F.col("n_rows_a")
@@ -137,10 +138,10 @@ def ab_test_report(
         )
         z = F.try_divide(p_a - p_b, F.when(z_den > 0, F.sqrt(z_den)))
         out += [
-            F.round(p_a, round_to).alias("rate_a"),
-            F.round(p_b, round_to).alias("rate_b"),
-            F.round(p_a - p_b, round_to).alias("rate_diff"),
-            F.round(z, round_to).alias("prop_z"),
+            F.round(p_a, DIGITS).alias("rate_a"),
+            F.round(p_b, DIGITS).alias("rate_b"),
+            F.round(p_a - p_b, DIGITS).alias("rate_diff"),
+            F.round(z, DIGITS).alias("prop_z"),
         ]
     out.append((F.abs(welch_t) > F.lit(critical)).alias("significant"))
     return j.select(*out)

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.expr import DIGITS
+
 #: Minimum trailing points before a verdict is attempted; earlier rows
 #: get is_anomaly = false (not enough history to judge).
 DEFAULT_MIN_PERIODS = 3
@@ -53,7 +55,6 @@ def zscore_anomalies(
     lookback: int = 7,
     threshold: float = 3.0,
     min_periods: int = DEFAULT_MIN_PERIODS,
-    round_to: int = 6,
 ) -> DataFrame:
     """Flag values more than ``threshold`` trailing standard deviations
     from the trailing mean. Adds columns: baseline_mean, baseline_stddev,
@@ -75,9 +76,9 @@ def zscore_anomalies(
     n = F.count(xf).over(tw)
     z = F.try_divide(x - mean, std)
     return (
-        df.withColumn("baseline_mean", F.round(mean, round_to))
-        .withColumn("baseline_stddev", F.round(std, round_to))
-        .withColumn("zscore", F.round(z, round_to))
+        df.withColumn("baseline_mean", F.round(mean, DIGITS))
+        .withColumn("baseline_stddev", F.round(std, DIGITS))
+        .withColumn("zscore", F.round(z, DIGITS))
         .withColumn(
             "is_anomaly",
             F.coalesce(
@@ -96,7 +97,6 @@ def iqr_anomalies(
     lookback: int = 14,
     k: float = 1.5,
     min_periods: int = DEFAULT_MIN_PERIODS,
-    round_to: int = 6,
 ) -> DataFrame:
     """Tukey-fence outliers: x outside [q1 - k*iqr, q3 + k*iqr] of the
     trailing window's exact quartiles. Adds fence_lo, fence_hi,
@@ -115,8 +115,8 @@ def iqr_anomalies(
     lo, hi = q1 - F.lit(k) * iqr, q3 + F.lit(k) * iqr
     n = F.count(xf).over(tw)
     return (
-        df.withColumn("fence_lo", F.round(lo, round_to))
-        .withColumn("fence_hi", F.round(hi, round_to))
+        df.withColumn("fence_lo", F.round(lo, DIGITS))
+        .withColumn("fence_hi", F.round(hi, DIGITS))
         .withColumn(
             "is_anomaly",
             F.coalesce((n >= min_periods) & ((x < lo) | (x > hi)), F.lit(False)),
@@ -131,7 +131,6 @@ def rate_of_change_anomalies(
     *,
     partition_cols: list[str] | None = None,
     max_change: float = 0.5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Flag period-over-period changes beyond ``max_change`` (fractional:
     0.5 = ±50%). Adds prev_value, change_ratio, is_anomaly. The first
@@ -146,7 +145,7 @@ def rate_of_change_anomalies(
     ratio = F.try_divide(x - prev, prev)
     return (
         df.withColumn("prev_value", prev)
-        .withColumn("change_ratio", F.round(ratio, round_to))
+        .withColumn("change_ratio", F.round(ratio, DIGITS))
         .withColumn(
             "is_anomaly",
             F.coalesce(
@@ -170,7 +169,6 @@ def metrics_regression(
     threshold: float = 3.0,
     min_periods: int = DEFAULT_MIN_PERIODS,
     direction: str = "both",
-    round_to: int = 6,
     broadcast: bool = True,
 ) -> DataFrame:
     """Run-over-run DQ metric regression monitor — the Deequ
@@ -297,11 +295,11 @@ def metrics_regression(
             F.broadcast(base) if broadcast else base,
             on=list(key_cols), how="left",
         )
-        .withColumn("baseline_mean", F.round(F.col("_mean"), round_to))
-        .withColumn("baseline_stddev", F.round(F.col("_std"), round_to))
+        .withColumn("baseline_mean", F.round(F.col("_mean"), DIGITS))
+        .withColumn("baseline_stddev", F.round(F.col("_std"), DIGITS))
         .withColumn("n_baseline", F.coalesce("n_baseline", F.lit(0)))
-        .withColumn("zscore", F.round(z, round_to))
-        .withColumn("change_ratio", F.round(change, round_to))
+        .withColumn("zscore", F.round(z, DIGITS))
+        .withColumn("change_ratio", F.round(change, DIGITS))
         .withColumn("status", status)
         .withColumn("is_regression", status == "regression")
         .drop("_mean", "_std")
@@ -319,7 +317,6 @@ def seasonal_anomalies(
     lookback_cycles: int = 4,
     threshold: float = 3.0,
     min_cycles: int = 2,
-    round_to: int = 6,
 ) -> DataFrame:
     """Seasonality-aware z-score: each value is judged against the SAME
     PHASE of previous cycles (Monday vs past Mondays, 3am vs past 3ams)
@@ -393,9 +390,9 @@ def seasonal_anomalies(
     z = F.try_divide(x - mean, std)
     scored = F.when((n >= min_cycles) & (std > 0), z)
     return (
-        with_phase.withColumn("baseline_mean", F.round(mean, round_to))
-        .withColumn("baseline_stddev", F.round(std, round_to))
-        .withColumn("seasonal_zscore", F.round(scored, round_to))
+        with_phase.withColumn("baseline_mean", F.round(mean, DIGITS))
+        .withColumn("baseline_stddev", F.round(std, DIGITS))
+        .withColumn("seasonal_zscore", F.round(scored, DIGITS))
         .withColumn(
             "is_anomaly",
             F.coalesce(F.abs(scored) > threshold, F.lit(False)),

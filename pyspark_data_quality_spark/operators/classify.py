@@ -38,6 +38,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.expr import DIGITS
 from ..functions.text import tokenize
 from ..plans.local import local_frame
 
@@ -490,7 +491,6 @@ def calibration_report(
     label_col: str,
     *,
     bins: int = 10,
-    round_to: int = 6,
 ) -> DataFrame:
     """Reliability diagram + expected calibration error (ECE) for a
     probabilistic score against a binary outcome — "when the filter
@@ -595,9 +595,9 @@ def calibration_report(
     detail = binned.select(
         "bin",
         "n",
-        F.round("_ms", round_to).alias("mean_score"),
-        F.round("_pr", round_to).alias("positive_rate"),
-        F.round("_gap", round_to).alias("abs_gap"),
+        F.round("_ms", DIGITS).alias("mean_score"),
+        F.round("_pr", DIGITS).alias("positive_rate"),
+        F.round("_gap", DIGITS).alias("abs_gap"),
     )
     if not rows:
         return detail  # empty input -> empty report, same schema
@@ -605,12 +605,12 @@ def calibration_report(
         F.lit(-1).cast("long").alias("bin"),
         F.sum("n").alias("n"),
         F.round(F.try_divide(F.sum(F.col("_ms") * F.col("n")),
-                             F.sum("n")), round_to).alias("mean_score"),
+                             F.sum("n")), DIGITS).alias("mean_score"),
         F.round(F.try_divide(F.sum(F.col("_pr") * F.col("n")),
-                             F.sum("n")), round_to).alias("positive_rate"),
+                             F.sum("n")), DIGITS).alias("positive_rate"),
         F.round(
             F.try_divide(F.sum(F.col("_gap") * F.col("n")), F.sum("n")),
-            round_to,
+            DIGITS,
         ).alias("abs_gap"),
     )
     return detail.unionByName(ece).orderBy("bin")
@@ -623,7 +623,6 @@ def confident_label_errors(
     label_col: str,
     class_col: str = "label",
     score_col: str = "score",
-    round_to: int = 6,
 ) -> DataFrame:
     """Confident-learning label-error detection (Northcutt et al. 2021)
     over ANY classifier's long-format scores: ``df`` holds one row per
@@ -717,14 +716,14 @@ def confident_label_errors(
         *id_cols,
         given.alias(label_col),
         assigned.alias("assigned_label"),
-        F.round("_pg", round_to).alias("self_confidence"),
+        F.round("_pg", DIGITS).alias("self_confidence"),
         F.round(
             F.when(F.col("_qual"), F.col("_p")).otherwise(F.col("_pg")),
-            round_to,
+            DIGITS,
         ).alias("assigned_confidence"),
         F.round(
             F.when(F.col("_qual"), F.col("_t")).otherwise(F.col("_tg")),
-            round_to,
+            DIGITS,
         ).alias("threshold"),
         F.coalesce(issue, F.lit(False)).alias("is_label_issue"),
     )

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 from ..core.enums import Dimension
 from ..core.errors import RuleConfigurationError
 from ..core.models import MetricResult
+from ..functions.expr import DIGITS
 from ..plans.compile import ident, null_safe_sql, or_sql, ratio_sql, require_columns
 from ..plans.local import local_frame
 from .base import Rule, RunContext
@@ -247,7 +248,6 @@ def monotonicity_report(
     *,
     group_cols: list[str],
     direction: str = "nondecreasing",
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group order audit: does ``value_col`` move monotonically when
     the group's rows are sorted by ``order_col``? The consistency check
@@ -301,7 +301,7 @@ def monotonicity_report(
             "n_violations",
             F.round(
                 F.try_divide(F.col("n_violations"), F.col("n_rows") - 1),
-                round_to,
+                DIGITS,
             ).alias("violation_rate"),
             (F.col("n_violations") == 0).alias("is_monotonic"),
         )
@@ -550,8 +550,6 @@ def scd_chain_audit(
     key_cols: list[str],
     start_col: str,
     end_col: str,
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Slowly-changing-dimension (SCD2) validity-chain audit: one row
     per key summarizing whether its version history is a clean chain —
@@ -638,7 +636,7 @@ def scd_chain_audit(
         F.sum(F.coalesce(F.col("_ovl"), F.lit(False)).cast("long"))
         .alias("n_overlaps"),
         F.count("_gap").alias("n_gaps"),
-        F.round(F.coalesce(F.sum("_gap"), F.lit(0.0)), round_to)
+        F.round(F.coalesce(F.sum("_gap"), F.lit(0.0)), DIGITS)
         .alias("gap_total"),
     )
     return agg.withColumn(
@@ -653,8 +651,6 @@ def scd_chain_audit(
 def implication_report(
     df: DataFrame,
     rules: list[tuple[str, str, str]],
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Cross-field implication audit: for each rule
     ``(name, antecedent_sql, consequent_sql)``, how often does
@@ -708,14 +704,14 @@ def implication_report(
         .withColumn(
             "support",
             F.round(F.try_divide(F.col("n_antecedent"), F.col("n_rows")),
-                    round_to),
+                    DIGITS),
         )
         .withColumn(
             "confidence",
             F.round(
                 1.0
                 - F.try_divide(F.col("n_violations"), F.col("n_antecedent")),
-                round_to,
+                DIGITS,
             ),
         )
         .orderBy("rule")
@@ -726,8 +722,6 @@ def agreement_report(
     df: DataFrame,
     col_a: str,
     col_b: str,
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Inter-rater agreement between two categorical label columns —
     Cohen's kappa (public: Cohen 1960), the standard chance-corrected
@@ -788,7 +782,7 @@ def agreement_report(
     )
     out = po.crossJoin(pe).select(
         "n_rows",
-        F.round(F.try_divide(F.col("_n_agree"), F.col("n_rows")), round_to)
+        F.round(F.try_divide(F.col("_n_agree"), F.col("n_rows")), DIGITS)
         .alias("observed_agreement"),
         F.try_divide(
             F.col("_pe_num"),
@@ -799,10 +793,10 @@ def agreement_report(
     return out.select(
         "n_rows",
         "observed_agreement",
-        F.round("_pe", round_to).alias("expected_agreement"),
+        F.round("_pe", DIGITS).alias("expected_agreement"),
         F.round(
             F.try_divide(F.col("_po") - F.col("_pe"), 1.0 - F.col("_pe")),
-            round_to,
+            DIGITS,
         ).alias("kappa"),
     )
 
@@ -810,8 +804,6 @@ def agreement_report(
 def fd_confidence(
     df: DataFrame,
     pairs: list[tuple[str, str]],
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Approximate functional-dependency DISCOVERY over a family of
     candidate column pairs: for each ``(determinant, dependent)`` pair,
@@ -870,7 +862,7 @@ def fd_confidence(
             F.coalesce(
                 F.try_divide(F.sum("_mx"), F.sum("_n")), F.lit(1.0)
             ),
-            round_to,
+            DIGITS,
         ).alias("confidence"),
     )
     spine = local_frame(

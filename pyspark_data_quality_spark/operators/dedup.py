@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 
 import threading
 
-from ..functions.expr import let_bind as _let
+from ..functions.expr import DIGITS, _round_like_spark, let_bind as _let
 from ..plans.local import local_frame
 
 from ..functions.text import (
@@ -633,7 +633,9 @@ def minhash_near_dup_pairs(
             base.select(F.col("_id").alias("id_b"), F.col("_h").alias("_pb")),
             "id_b",
         )
-        .withColumn("jaccard", F.round(jaccard(F.col("_pa"), F.col("_pb")), 6))
+        .withColumn(
+            "jaccard", F.round(jaccard(F.col("_pa"), F.col("_pb")), DIGITS)
+        )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -861,7 +863,7 @@ def ngram_jaccard_pairs(
         .select(
             F.col("l._id").alias("id_a"),
             F.col("r._id").alias("id_b"),
-            F.round(jac, 6).alias("jaccard"),
+            F.round(jac, DIGITS).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -963,7 +965,7 @@ def embedding_near_dup_pairs(
                         dot(F.col("l._v"), F.col("r._v"))
                         / (F.col("l._n") * F.col("r._n")),
                     ),
-                    6,
+                    DIGITS,
                 ).alias("cosine"),
             )
             .filter(F.col("cosine") >= threshold)
@@ -1005,7 +1007,8 @@ def embedding_near_dup_pairs(
     )
     return (
         pairs.withColumn(
-            "cosine", F.round(cosine_similarity(F.col("_pa"), F.col("_pb")), 6)
+            "cosine",
+            F.round(cosine_similarity(F.col("_pa"), F.col("_pb")), DIGITS),
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -1168,7 +1171,6 @@ def set_similarity_join(
     id_col: str,
     *,
     threshold: float = 0.7,
-    round_to: int = 6,
 ) -> DataFrame:
     """EXACT set-similarity self-join (AllPairs/PPJoin prefix filtering,
     Bayardo et al. WWW'07): all pairs with Jaccard >= ``threshold`` over
@@ -1244,7 +1246,9 @@ def set_similarity_join(
         .dropDuplicates(["id_a", "id_b"])
     )
     return (
-        cands.withColumn("jaccard", F.round(jaccard(F.col("_sa"), F.col("_sb")), round_to))
+        cands.withColumn(
+            "jaccard", F.round(jaccard(F.col("_sa"), F.col("_sb")), DIGITS)
+        )
         .filter(F.col("jaccard") >= t)
         .select("id_a", "id_b", "jaccard")
     )
@@ -1329,7 +1333,8 @@ def semantic_dedup(
             max_bucket_size=max_cluster_size,
         )
         .withColumn(
-            "cosine", F.round(cosine_similarity(F.col("_pa"), F.col("_pb")), 6)
+            "cosine",
+            F.round(cosine_similarity(F.col("_pa"), F.col("_pb")), DIGITS),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -1416,7 +1421,7 @@ def segment_dedup_profile(
         )
         .withColumn(
             "dup_segment_ratio",
-            F.round(F.col("n_dup_segments") / F.col("n_segments"), 6),
+            F.round(F.col("n_dup_segments") / F.col("n_segments"), DIGITS),
         )
         .orderBy(id_col)
     )
@@ -1539,7 +1544,6 @@ def near_dup_eval(
     *,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    round_to: int = 6,
 ) -> DataFrame:
     """Precision/recall of an approximate near-dup pair set against the
     exact ground truth — the tuning harness for ``num_bands`` /
@@ -1547,7 +1551,8 @@ def near_dup_eval(
     committing an LSH config to the full corpus.
 
     Pairs are canonicalized (min, max) so orientation never miscounts.
-    One row: (n_approx, n_exact, n_hit, precision, recall, f1). Shape:
+    One row: (n_approx, n_exact, n_hit, precision, recall, f1), the
+    ratios rounded on the driver exactly as ``F.round`` would. Shape:
     ONE job — two pair-set distincts feeding one null-safe full-outer
     join on the (a, b) spine, folded by a single 1-row aggregate. (The
     previous three-count shape re-ran the approximate PAIR GENERATION
@@ -1583,14 +1588,13 @@ def near_dup_eval(
         if prec is not None and rec is not None and (prec + rec) > 0
         else None
     )
+    ratios = [
+        None if v is None else float(_round_like_spark([v], DIGITS)[0])
+        for v in (prec, rec, f1)
+    ]
     return local_frame(
         approx_pairs.sparkSession,
-        [(
-            n_a, n_e, n_h,
-            round(prec, round_to) if prec is not None else None,
-            round(rec, round_to) if rec is not None else None,
-            round(f1, round_to) if f1 is not None else None,
-        )],
+        [(n_a, n_e, n_h, *ratios)],
         "n_approx long, n_exact long, n_hit long, "
         "precision double, recall double, f1 double",
     )

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
+
 #: Row-status labels emitted by :func:`table_diff`.
 STATUSES = ("added", "removed", "changed", "unchanged")
 
@@ -101,7 +103,6 @@ def reconcile_aggregates(
     *,
     agg: str = "sum",
     tolerance: float = 0.0,
-    round_to: int = 6,
     only_mismatches: bool = False,
 ) -> DataFrame:
     """Hierarchical-consistency check: does a summary table still equal
@@ -162,9 +163,9 @@ def reconcile_aggregates(
     ).select(
         *keys,
         "measure",
-        F.round("detail_value", round_to).alias("detail_value"),
-        F.round("summary_value", round_to).alias("summary_value"),
-        F.round(F.col("detail_value") - F.col("summary_value"), round_to).alias(
+        F.round("detail_value", DIGITS).alias("detail_value"),
+        F.round("summary_value", DIGITS).alias("summary_value"),
+        F.round(F.col("detail_value") - F.col("summary_value"), DIGITS).alias(
             "diff"
         ),
         F.coalesce(
@@ -204,7 +205,7 @@ def table_diff_columns(
     ).select(
         "column",
         "n_changed",
-        F.round(F.try_divide(F.col("n_changed"), F.col("_n_both")), 6).alias(
-            "change_ratio"
-        ),
+        F.round(
+            F.try_divide(F.col("n_changed"), F.col("_n_both")), DIGITS
+        ).alias("change_ratio"),
     )

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.expr import DIGITS
 from ..plans.local import local_frame
 
 DEFAULT_EPS = 1e-6
@@ -62,7 +63,6 @@ def categorical_drift(
     columns: list[str],
     *,
     eps: float = DEFAULT_EPS,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-(column, value) drift detail:
     ``(column, value, p_cur, p_ref, psi_term)`` where ``psi_term =
@@ -77,6 +77,19 @@ def categorical_drift(
     totals ride a window over the same hash partitioning. Map values
     keep real NULLs (no 'NULL'-string sentinel): a genuine NULL bucket
     can never collide with a literal 'NULL' value."""
+    return _categorical_drift(cur, ref, columns, eps, DIGITS)
+
+
+def _categorical_drift(
+    cur: DataFrame,
+    ref: DataFrame,
+    columns: list[str],
+    eps: float,
+    digits: int,
+) -> DataFrame:
+    """:func:`categorical_drift` rounded to ``digits`` decimals —
+    :func:`psi_summary` sums the terms at 12 so the total does not
+    accumulate per-term rounding."""
 
     def side(df: DataFrame) -> DataFrame:
         return df.select(
@@ -113,9 +126,9 @@ def categorical_drift(
     return joined.select(
         "column",
         "value",
-        F.round("p_cur", round_to).alias("p_cur"),
-        F.round("p_ref", round_to).alias("p_ref"),
-        F.round((pc - pr) * F.log(pc / pr), round_to).alias("psi_term"),
+        F.round("p_cur", digits).alias("p_cur"),
+        F.round("p_ref", digits).alias("p_ref"),
+        F.round((pc - pr) * F.log(pc / pr), digits).alias("psi_term"),
     )
 
 
@@ -128,7 +141,6 @@ def numeric_drift(
     lo: float | None = None,
     hi: float | None = None,
     eps: float = DEFAULT_EPS,
-    round_to: int = 6,
 ) -> DataFrame:
     """Binned PSI for a numeric column: both sides histogrammed with the
     SAME bounds (explicit ``lo``/``hi``, else the REFERENCE side's
@@ -178,9 +190,9 @@ def numeric_drift(
     pr = F.greatest(F.col("p_ref"), F.lit(eps))
     return joined.select(
         "bin",
-        F.round("p_cur", round_to).alias("p_cur"),
-        F.round("p_ref", round_to).alias("p_ref"),
-        F.round((pc - pr) * F.log(pc / pr), round_to).alias("psi_term"),
+        F.round("p_cur", DIGITS).alias("p_cur"),
+        F.round("p_ref", DIGITS).alias("p_ref"),
+        F.round((pc - pr) * F.log(pc / pr), DIGITS).alias("psi_term"),
     ).orderBy("bin")
 
 
@@ -208,7 +220,6 @@ def ks_statistic(
     col: str,
     *,
     quantize: int | None = None,
-    round_to: int = 6,
     method: str = "partitioned",
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic: max |ECDF_cur - ECDF_ref|
@@ -263,7 +274,7 @@ def ks_statistic(
                 F.col("n_b").alias("_nb"),
             )
             .agg(
-                F.round(F.max("_d"), round_to).alias("ks"),
+                F.round(F.max("_d"), DIGITS).alias("ks"),
                 F.sum("_na").alias("n_cur"),
                 F.sum("_nb").alias("n_ref"),
             )
@@ -331,7 +342,7 @@ def ks_statistic(
             F.col("n_b").alias("_nb"),
         )
         .agg(
-            F.round(F.max("_d"), round_to).alias("ks"),
+            F.round(F.max("_d"), DIGITS).alias("ks"),
             F.sum("_na").alias("n_cur"),
             F.sum("_nb").alias("n_ref"),
         )
@@ -345,7 +356,6 @@ def ks_by_group(
     group_col: str,
     *,
     quantize: int | None = None,
-    round_to: int = 6,
     sort: bool = True,
 ) -> DataFrame:
     """Per-SEGMENT two-sample KS: one row per group with the KS
@@ -451,7 +461,7 @@ def ks_by_group(
         )
         .groupBy("grp")
         .agg(
-            F.round(F.max("_d"), round_to).alias("ks"),
+            F.round(F.max("_d"), DIGITS).alias("ks"),
             F.sum("_na").alias("n_cur"),
             F.sum("_nb").alias("n_ref"),
         )
@@ -467,7 +477,6 @@ def wasserstein_1d(
     bins: int = 10,
     lo: float | None = None,
     hi: float | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Binned 1-D Wasserstein-1 (earth-mover) distance between the two
     distributions of ``col``: W1 = bin_width * sum_b |CDF_cur(b) -
@@ -537,7 +546,7 @@ def wasserstein_1d(
         )
         .join(F.broadcast(b))
         .agg(
-            F.round(F.sum(F.col("_d") * width), round_to).alias("w1"),
+            F.round(F.sum(F.col("_d") * width), DIGITS).alias("w1"),
             F.sum("_na").alias("n_cur"),
             F.sum("_nb").alias("n_ref"),
         )
@@ -551,18 +560,15 @@ def psi_summary(
     *,
     eps: float = DEFAULT_EPS,
     threshold: float = 0.25,
-    round_to: int = 6,
 ) -> DataFrame:
     """One row per column: total PSI and a drifted flag at ``threshold``.
 
     The unrounded per-value terms are re-derived and summed so the total
     doesn't accumulate per-term rounding."""
-    detail = categorical_drift(
-        cur, ref, columns, eps=eps, round_to=12  # keep precision for the sum
-    )
+    detail = _categorical_drift(cur, ref, columns, eps, 12)
     return (
         detail.groupBy("column")
-        .agg(F.round(F.sum("psi_term"), round_to).alias("psi"))
+        .agg(F.round(F.sum("psi_term"), DIGITS).alias("psi"))
         .withColumn("drifted", F.col("psi") > threshold)
     )
 
@@ -575,7 +581,6 @@ def psi_by_group(
     *,
     eps: float = DEFAULT_EPS,
     threshold: float = 0.25,
-    round_to: int = 6,
     sort: bool = True,
 ) -> DataFrame:
     """Per-SEGMENT PSI: one row per (group, column) with the PSI of that
@@ -643,7 +648,7 @@ def psi_by_group(
     out = (
         joined.withColumn("_term", (pc - pr) * F.log(pc / pr))
         .groupBy("grp", "column")
-        .agg(F.round(F.sum("_term"), round_to).alias("psi"))
+        .agg(F.round(F.sum("_term"), DIGITS).alias("psi"))
         .withColumn("drifted", F.col("psi") > threshold)
     )
     return out.orderBy("grp", "column") if sort else out
@@ -655,7 +660,6 @@ def quantile_drift(
     col: str,
     *,
     quantiles: tuple[float, ...] = (0.1, 0.25, 0.5, 0.75, 0.9),
-    round_to: int = 6,
 ) -> DataFrame:
     """Quantile-shift drift report: EXACT interpolated quantiles of both
     sides at each requested level, with absolute and relative shifts —
@@ -680,7 +684,7 @@ def quantile_drift(
         v.alias("_v_cur"), pad.alias("_v_ref")
     ).unionByName(ref.select(pad.alias("_v_cur"), v.alias("_v_ref")))
     stats = value_histogram_stats(
-        combined, ["_v_cur", "_v_ref"], quantiles=quantiles, round_to=None,
+        combined, ["_v_cur", "_v_ref"], quantiles=quantiles
     ).filter(F.col("stat") != "distinct_count")
     # conditional-agg pivot, NOT a self-join of the stats frame — a join
     # would duplicate the whole histogram subtree in the plan
@@ -695,12 +699,12 @@ def quantile_drift(
     q_level = F.substring("stat", 2, 32).cast("double")
     return out.select(
         q_level.alias("q"),
-        F.round("ref_q", round_to).alias("ref_q"),
-        F.round("cur_q", round_to).alias("cur_q"),
-        F.round(F.col("cur_q") - F.col("ref_q"), round_to).alias("shift"),
+        F.round("ref_q", DIGITS).alias("ref_q"),
+        F.round("cur_q", DIGITS).alias("cur_q"),
+        F.round(F.col("cur_q") - F.col("ref_q"), DIGITS).alias("shift"),
         F.round(
             F.try_divide(F.col("cur_q") - F.col("ref_q"), F.abs("ref_q")),
-            round_to,
+            DIGITS,
         ).alias("rel_shift"),
     ).orderBy("q")
 
@@ -712,7 +716,6 @@ def quantile_shift_by_group(
     group_col: str,
     *,
     quantiles: tuple[float, ...] = (0.25, 0.5, 0.75),
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-SEGMENT quantile-shift drift via mergeable KLL sketches: one
     row per (group, q) with each side's quantile estimate and the
@@ -786,12 +789,12 @@ def quantile_shift_by_group(
     return long.select(
         "grp",
         "q",
-        F.round("cur_q", round_to).alias("cur_q"),
-        F.round("ref_q", round_to).alias("ref_q"),
-        F.round(F.col("cur_q") - F.col("ref_q"), round_to).alias("shift"),
+        F.round("cur_q", DIGITS).alias("cur_q"),
+        F.round("ref_q", DIGITS).alias("ref_q"),
+        F.round(F.col("cur_q") - F.col("ref_q"), DIGITS).alias("shift"),
         F.round(
             F.try_divide(F.col("cur_q") - F.col("ref_q"), F.abs("ref_q")),
-            round_to,
+            DIGITS,
         ).alias("rel_shift"),
         F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
         F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
@@ -802,8 +805,6 @@ def corpus_divergence(
     df: DataFrame,
     text_col: str,
     group_col: str,
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group KL divergence of the unigram token distribution against
     the WHOLE corpus — "which source/language/shard reads differently from
@@ -857,7 +858,7 @@ def corpus_divergence(
         .agg(
             F.max("_gt").alias("n_tokens"),
             F.count(F.lit(1)).alias("n_distinct_tokens"),
-            F.round(F.sum("_term"), round_to).alias("kl_vs_corpus"),
+            F.round(F.sum("_term"), DIGITS).alias("kl_vs_corpus"),
         )
         .orderBy(group_col)
     )
@@ -867,8 +868,6 @@ def embedding_drift(
     cur: DataFrame,
     ref: DataFrame,
     vec_col: str,
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Embedding-space drift between two vector corpora: did the
     representation of the data move? The batch-level complement to the
@@ -885,9 +884,10 @@ def embedding_drift(
     Shape: each side collapses via ONE posexplode -> groupBy(dim) mean —
     map-side combine reduces the shuffle to |dim| rows per partition, so
     100 TB of vectors exchange a few KB — then a |dim|-row join computes
-    the metrics as expressions. Per-dim means are rounded to ``round_to``
-    BEFORE combining so the result is reduction-order stable (engine-
-    portable, same contract as the scalar drift oracles).
+    the metrics as expressions. Per-dim means are rounded to the output
+    precision (``functions.expr.DIGITS``) BEFORE combining so the result
+    is reduction-order stable (engine-portable, same contract as the
+    scalar drift oracles).
     """
     def _dims(df: DataFrame, mean_name: str, n_name: str):
         # posexplode_OUTER so the row count rides the same scan as the
@@ -905,7 +905,7 @@ def embedding_drift(
             )
             .groupBy("dim")
             .agg(
-                F.round(F.avg("_v"), round_to).alias(mean_name),
+                F.round(F.avg("_v"), DIGITS).alias(mean_name),
                 F.count(F.lit(1)).alias("_n"),
             )
         )
@@ -945,11 +945,11 @@ def embedding_drift(
                 F.try_divide(
                     F.col("_dot"), F.sqrt("_cc") * F.sqrt("_rr")
                 ),
-                round_to,
+                DIGITS,
             ).alias("centroid_cosine"),
-            F.round(F.sqrt("_dd"), round_to).alias("centroid_shift_l2"),
-            F.round(F.sqrt("_cc"), round_to).alias("centroid_norm_cur"),
-            F.round(F.sqrt("_rr"), round_to).alias("centroid_norm_ref"),
+            F.round(F.sqrt("_dd"), DIGITS).alias("centroid_shift_l2"),
+            F.round(F.sqrt("_cc"), DIGITS).alias("centroid_norm_cur"),
+            F.round(F.sqrt("_rr"), DIGITS).alias("centroid_norm_ref"),
         )
     )
 
@@ -958,8 +958,6 @@ def value_set_drift(
     cur: DataFrame,
     ref: DataFrame,
     cols: list[str],
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Categorical VALUE-SET drift: which enum values appeared or
     vanished between two snapshots, per column. PSI answers "did the
@@ -1019,7 +1017,7 @@ def value_set_drift(
                     F.sum((in_cur & in_ref).cast("long")),
                     F.count(F.lit(1)),
                 ),
-                round_to,
+                DIGITS,
             ).alias("jaccard"),
         )
         .orderBy("column")
@@ -1070,7 +1068,6 @@ def mmd_drift(
     dim: int | None = None,
     seed: int = 42,
     weights: str = "rng",
-    round_to: int = 6,
 ) -> DataFrame:
     """Kernel two-sample test between two embedding corpora: the squared
     Maximum Mean Discrepancy under a Gaussian RBF kernel, estimated with
@@ -1184,8 +1181,8 @@ def mmd_drift(
             "n_cur",
             "n_ref",
             F.lit(num_features).alias("num_features"),
-            F.round(F.lit(float(g)), round_to).alias("gamma"),
-            F.round(F.col("_mmd2"), round_to).alias("mmd2"),
+            F.round(F.lit(float(g)), DIGITS).alias("gamma"),
+            F.round(F.col("_mmd2"), DIGITS).alias("mmd2"),
             # guard the NULL case (one side empty of vectors when `dim`
             # was passed, so the loud probe never ran): greatest() SKIPS
             # NULLs, so sqrt(greatest(NULL, 0)) would report mmd=0.0 —
@@ -1196,7 +1193,7 @@ def mmd_drift(
                     F.col("_mmd2").isNotNull(),
                     F.sqrt(F.greatest(F.col("_mmd2"), F.lit(0.0))),
                 ),
-                round_to,
+                DIGITS,
             ).alias("mmd"),
         )
     )
@@ -1214,7 +1211,6 @@ def classifier_drift(
     min_count: int = 1,
     threshold: float = 0.6,
     salt: str = "clsdrift",
-    round_to: int = 6,
 ) -> DataFrame:
     """Classifier two-sample drift test (public: Lopez-Paz & Oquab
     2017, "Revisiting classifier two-sample tests"): train a classifier
@@ -1296,13 +1292,13 @@ def classifier_drift(
     # margins are ROUNDED before ranking: a doc's log-score sums in
     # nondeterministic partial-agg order, so unrounded low bits would
     # break ties differently run to run (and engine to engine in the
-    # oracle replay); at round_to decimals equal-content docs tie
+    # oracle replay); at the output precision equal-content docs tie
     # exactly and the midrank correction applies deterministically
     margins = scored.groupBy("_uid", "_side").agg(
         F.round(
             F.max(F.when(F.col("label") == "cur", F.col("score")))
             - F.max(F.when(F.col("label") == "ref", F.col("score"))),
-            round_to,
+            DIGITS,
         ).alias("_margin")
     )
     # tied-rank Mann-Whitney AUC: rank() gives the tie group's minimum
@@ -1328,7 +1324,7 @@ def classifier_drift(
         F.try_divide(
             F.col("_rsum") - nc * (nc + 1) / 2.0, (nc * nr).cast("double")
         ),
-        round_to,
+        DIGITS,
     )
     return (
         agg.crossJoin(F.broadcast(n_fit))
@@ -1348,7 +1344,6 @@ def drift_screen(
     bins: int = 32,
     alpha: float = 0.05,
     eps: float = DEFAULT_EPS,
-    round_to: int = 6,
 ) -> DataFrame:
     """Wide-table drift SCREENING: binned KS + PSI for MANY numeric
     columns in ONE data shuffle, with Benjamini–Hochberg false-discovery
@@ -1518,11 +1513,11 @@ def drift_screen(
         "column",
         "n_cur",
         "n_ref",
-        F.round("_ks", round_to).alias("ks"),
-        F.round("_psi", round_to).alias("psi"),
-        F.round("_p", round_to).alias("p_value"),
+        F.round("_ks", DIGITS).alias("ks"),
+        F.round("_psi", DIGITS).alias("psi"),
+        F.round("_p", DIGITS).alias("p_value"),
         "bh_rank",
-        F.round("_crit", round_to).alias("bh_crit"),
+        F.round("_crit", DIGITS).alias("bh_crit"),
         F.coalesce(
             F.col("bh_rank") <= k_max, F.lit(False)
         ).alias("drifted"),

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
+
 __all__ = ["event_transitions", "funnel", "funnel_users", "sessionize"]
 
 
@@ -117,7 +119,6 @@ def funnel(
     *,
     horizon_seconds: int | None = None,
     segment_col: str | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Funnel summary: one row per step with ``step_index``,
     ``step_name``, ``n_users`` (users reaching the step in order),
@@ -169,10 +170,10 @@ def funnel(
         "step_index",
         "step_name",
         F.col("_n").cast("bigint").alias("n_users"),
-        F.round(F.try_divide(F.col("_n"), F.col("_start")), round_to).alias(
+        F.round(F.try_divide(F.col("_n"), F.col("_start")), DIGITS).alias(
             "conversion_from_start"
         ),
-        F.round(F.try_divide(F.col("_n"), F.col("_prev")), round_to).alias(
+        F.round(F.try_divide(F.col("_n"), F.col("_prev")), DIGITS).alias(
             "conversion_from_prev"
         ),
     ).orderBy(*lead, "step_index")
@@ -186,7 +187,6 @@ def event_transitions(
     *,
     id_col: str | None = None,
     include_terminal: bool = False,
-    round_to: int = 6,
 ) -> DataFrame:
     """First-order Markov transition matrix over per-key event
     sequences: for every observed (from_state, to_state) pair, the
@@ -251,7 +251,7 @@ def event_transitions(
     )
     return counts.withColumn(
         "prob",
-        F.round(F.try_divide(F.col("n_transitions"), total), round_to),
+        F.round(F.try_divide(F.col("n_transitions"), total), DIGITS),
     ).orderBy("from_state", "to_state")
 
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
+
 
 def join_diagnosis(
     left: DataFrame,
@@ -119,7 +121,7 @@ def join_diagnosis(
                     ),
                     F.lit(0.0),
                 ),
-                6,
+                DIGITS,
             ).alias("value"),
         )
     )

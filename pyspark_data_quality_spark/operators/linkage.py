@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
+
 __all__ = ["field_similarity", "record_linkage"]
 
 _METHODS = ("exact", "levenshtein", "token_jaccard", "numeric")
@@ -106,7 +108,6 @@ def record_linkage(
     threshold: float = 0.8,
     keep_all: bool = False,
     broadcast: bool = False,
-    round_to: int = 6,
 ) -> DataFrame:
     """Match records across ``a`` and ``b``. ``blocking`` is a list of
     (a_col, b_col) equi-join keys; ``comparators`` a list of dicts with
@@ -280,7 +281,7 @@ def record_linkage(
                     c["method"],
                     scale=c.get("scale"),
                 ),
-                round_to,
+                DIGITS,
             ).alias(sim_names[i])
         )
     out = joined.select(
@@ -293,7 +294,7 @@ def record_linkage(
     for name, w in zip(sim_names, weights):
         term = F.col(name) * (w / total_w)
         score = term if score is None else (score + term)
-    out = out.withColumn("score", F.round(score, round_to)).withColumn(
+    out = out.withColumn("score", F.round(score, DIGITS)).withColumn(
         "is_match", F.col("score") >= threshold
     )
     if not keep_all:

@@ -41,6 +41,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
 from ..plans.local import local_frame
 
 __all__ = [
@@ -96,7 +97,6 @@ def corpus_overlap(
     col: str,
     *,
     k: int = 1024,
-    round_to: int = 6,
 ) -> DataFrame:
     """One-row overlap report between the DISTINCT value sets of
     ``a[col]`` and ``b[col]``: ``n_a_est`` / ``n_b_est`` /
@@ -112,9 +112,7 @@ def corpus_overlap(
     spark = SparkSession.getActiveSession() or a.sparkSession
     sa = bottom_k_sketch(a, col, k)
     sb = bottom_k_sketch(b, col, k)
-    return overlap_from_sketches(
-        spark, sa, sb, k, build_k=k, round_to=round_to
-    )
+    return overlap_from_sketches(spark, sa, sb, k, build_k=k)
 
 
 def _estimate(
@@ -153,7 +151,6 @@ def overlap_from_sketches(
     k: int,
     *,
     build_k: int | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """The estimator tail of :func:`corpus_overlap`, over two
     already-built sketches — the INCREMENTAL shape: persist each
@@ -187,7 +184,7 @@ def overlap_from_sketches(
         "containment_a double, containment_b double",
     )
     # round JVM-side (HALF_UP, oracle-matching) — never in Python
-    return row.select(*[F.round(c, round_to).alias(c) for c in row.columns])
+    return row.select(*[F.round(c, DIGITS).alias(c) for c in row.columns])
 
 
 def joinability_report(
@@ -195,7 +192,6 @@ def joinability_report(
     tables: list[tuple[str, DataFrame, str]],
     *,
     k: int = 1024,
-    round_to: int = 6,
 ) -> DataFrame:
     """Join-column discovery across a data lake: for every ordered pair
     of (table, column) candidates, how much of A's value set is
@@ -245,9 +241,9 @@ def joinability_report(
         "jaccard_est double, containment double",
     ).select(
         "a", "b",
-        F.round("n_a_est", round_to).alias("n_a_est"),
-        F.round("n_b_est", round_to).alias("n_b_est"),
-        F.round("jaccard_est", round_to).alias("jaccard_est"),
-        F.round("containment", round_to).alias("containment"),
+        F.round("n_a_est", DIGITS).alias("n_a_est"),
+        F.round("n_b_est", DIGITS).alias("n_b_est"),
+        F.round("jaccard_est", DIGITS).alias("jaccard_est"),
+        F.round("containment", DIGITS).alias("containment"),
     )
     return out.orderBy(F.desc("containment"), "a", "b")

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..core.errors import RuleConfigurationError
+from ..functions.expr import DIGITS
 from ..plans.compile import require_columns
 
 __all__ = [
@@ -132,7 +133,7 @@ def _ladder(
             F.col("_p.rb").alias(f"rows_below_{label}"),
             F.col("_p.cb").alias(f"classes_below_{label}"),
             F.round(
-                F.try_divide(F.col("_p.rb"), F.col("n_rows")), 6
+                F.try_divide(F.col("_p.rb"), F.col("n_rows")), DIGITS
             ).alias(f"pct_rows_below_{label}"),
         )
         .orderBy(label)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 from pyspark.sql.window import Window
 
+from ..functions.expr import DIGITS
 from ..plans.local import local_frame
 
 #: Stats emitted for every profiled column.
@@ -48,7 +49,6 @@ def profile_columns(
     exact_distinct: bool = False,
     exact_quantiles: bool = False,
     strategy: str = "fused",
-    round_to: int = 6,
 ) -> DataFrame:
     """Profile ``columns`` (default: all leaf columns) in ONE aggregation
     pass. Returns long format ``(column, stat, value)`` sorted by
@@ -71,9 +71,7 @@ def profile_columns(
     implied and ignored).
     """
     if strategy == "pairs":
-        return _profile_columns_pairs(
-            df, columns, quantiles=quantiles, round_to=round_to,
-        )
+        return _profile_columns_pairs(df, columns, quantiles=quantiles)
     if strategy != "fused":
         raise ValueError(f"profile_columns: unknown strategy {strategy!r}")
     cols = columns if columns is not None else df.columns
@@ -119,7 +117,7 @@ def profile_columns(
             F.struct(
                 F.lit(c).alias("column"),
                 F.lit(s).alias("stat"),
-                F.round(F.col(f"`{c} {s}`"), round_to).alias("value"),
+                F.round(F.col(f"`{c} {s}`"), DIGITS).alias("value"),
             )
             for c, stats in stats_per_col.items()
             for s in stats
@@ -137,7 +135,6 @@ def _profile_columns_pairs(
     columns: list[str] | None,
     *,
     quantiles: tuple[float, ...],
-    round_to: int,
 ) -> DataFrame:
     """Exact profile via the pairs shape (see :func:`profile_columns`).
 
@@ -189,7 +186,7 @@ def _profile_columns_pairs(
             F.struct(
                 F.lit(c).alias("column"),
                 F.lit(s).alias("stat"),
-                F.round(F.col(f"`{c} {s}`"), round_to).alias("value"),
+                F.col(f"`{c} {s}`").alias("value"),
             )
             for c, stats in stats_per_col.items()
             for s in stats
@@ -202,11 +199,13 @@ def _profile_columns_pairs(
     )
 
     # --- branch B: exploded pairs -> per-column value histogram --------
-    pairs_stats = value_histogram_stats(
-        df, cols, quantiles=quantiles, round_to=round_to
-    )
+    pairs_stats = value_histogram_stats(df, cols, quantiles=quantiles)
 
-    return moments.unionByName(pairs_stats).orderBy("column", "stat")
+    return (
+        moments.unionByName(pairs_stats)
+        .select("column", "stat", F.round("value", DIGITS).alias("value"))
+        .orderBy("column", "stat")
+    )
 
 
 def value_histogram_stats(
@@ -214,7 +213,6 @@ def value_histogram_stats(
     columns: list[str],
     *,
     quantiles: tuple[float, ...] = (),
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Exact distinct counts AND exact type-7 interpolated quantiles for
     ``columns`` from ONE exploded-pairs shuffle — no Catalyst Expand, no
@@ -235,8 +233,10 @@ def value_histogram_stats(
     (spine join).
 
     Output: long format ``(column, stat, value)`` with stat in
-    ``distinct_count`` + ``q{q}``. Shared by ``profile_columns(
-    strategy='pairs')`` and ``repair.winsorize(exact=True)``.
+    ``distinct_count`` + ``q{q}``, at full precision: each caller
+    rounds its own output once (rounding twice would drift off the
+    oracle). Shared by ``profile_columns(strategy='pairs')``,
+    ``drift.quantile_drift`` and ``repair.winsorize(exact=True)``.
     """
     types = dict(df.dtypes)
     fields = {f.name: f.dataType for f in df.schema.fields}
@@ -354,15 +354,10 @@ def value_histogram_stats(
         F.broadcast(h.groupBy("column").agg(*q_aggs)), "column", "left"
     )
 
-    def rnd(expr):
-        # round_to=None: full precision (callers like winsorize re-round
-        # downstream; double rounding would drift off the oracle)
-        return expr if round_to is None else F.round(expr, round_to)
-
     stat_structs = [
         F.struct(
             F.lit("distinct_count").alias("stat"),
-            rnd(F.coalesce(F.col("distinct_count"), F.lit(0.0))).alias("value"),
+            F.coalesce(F.col("distinct_count"), F.lit(0.0)).alias("value"),
         )
     ]
     for i, q in enumerate(quantiles):
@@ -372,7 +367,7 @@ def value_histogram_stats(
         stat_structs.append(
             F.struct(
                 F.lit(f"q{q}").alias("stat"),
-                rnd(v).alias("value"),
+                v.alias("value"),
             )
         )
     return (
@@ -441,7 +436,7 @@ def histogram(
     )
 
 
-def vector_profile(df: DataFrame, vec_col: str, *, round_to: int = 6) -> DataFrame:
+def vector_profile(df: DataFrame, vec_col: str) -> DataFrame:
     """Embedding-column quality report, grouped by vector dimensionality:
     ``(dim, n, n_null_vec, n_nan, n_zero_norm, avg_norm)``.
 
@@ -468,7 +463,7 @@ def vector_profile(df: DataFrame, vec_col: str, *, round_to: int = 6) -> DataFra
             # NaN norms are excluded (reported via n_nan) so one corrupt
             # vector can't poison the corpus-level mean
             F.round(
-                F.avg(F.when(~F.isnan(nrm), nrm)), round_to
+                F.avg(F.when(~F.isnan(nrm), nrm)), DIGITS
             ).alias("avg_norm"),
         )
         .orderBy("dim")
@@ -523,7 +518,7 @@ def top_values(
 
 
 def column_entropy(
-    df: DataFrame, columns: list[str], *, round_to: int = 6
+    df: DataFrame, columns: list[str]
 ) -> DataFrame:
     """Shannon entropy (bits) of each column's value distribution — the
     profiler's uniformity/informativeness signal (0 = constant column,
@@ -550,7 +545,7 @@ def column_entropy(
         counted.withColumn("_plogp", -p * F.log2(p))
         .groupBy("column")
         .agg(
-            F.round(F.sum("_plogp"), round_to).alias("entropy"),
+            F.round(F.sum("_plogp"), DIGITS).alias("entropy"),
             F.count(F.lit(1)).alias("n_distinct"),
         )
         .orderBy("column")
@@ -558,7 +553,7 @@ def column_entropy(
 
 
 def correlation_matrix(
-    df: DataFrame, cols: list[str], *, round_to: int = 6
+    df: DataFrame, cols: list[str]
 ) -> DataFrame:
     """Pairwise Pearson correlations of numeric columns, long format:
     ``(col_a, col_b, corr)`` for every i < j pair.
@@ -591,11 +586,11 @@ def correlation_matrix(
     )
     return wide.selectExpr(
         f"stack({len(pairs)}, {stacked}) as (col_a, col_b, corr)"
-    ).select("col_a", "col_b", F.round("corr", round_to).alias("corr"))
+    ).select("col_a", "col_b", F.round("corr", DIGITS).alias("corr"))
 
 
 def benford_profile(
-    df: DataFrame, col: str, *, round_to: int = 6
+    df: DataFrame, col: str
 ) -> DataFrame:
     """First-digit (Benford's-law) distribution of ``|col|``: one row per
     digit 1-9 with observed count/ratio, the Benford expectation
@@ -633,9 +628,9 @@ def benford_profile(
     return dense.select(
         "digit",
         "n",
-        F.round(p_obs, round_to).alias("p_obs"),
-        F.round(p_exp, round_to).alias("p_exp"),
-        F.round(p_obs - p_exp, round_to).alias("deviation"),
+        F.round(p_obs, DIGITS).alias("p_obs"),
+        F.round(p_exp, DIGITS).alias("p_exp"),
+        F.round(p_obs - p_exp, DIGITS).alias("deviation"),
     ).orderBy("digit")
 
 
@@ -645,7 +640,6 @@ def sketch_rollup(
     *,
     group_by: list[str],
     quantiles: tuple[float, ...] = (0.25, 0.5, 0.75),
-    round_to: int = 6,
 ) -> DataFrame:
     """Mergeable-sketch profile per group PLUS the merged grand total —
     the incremental shape for 100 TB statistics: per-partition (per-day,
@@ -677,7 +671,7 @@ def sketch_rollup(
     )
     q_cols = [
         F.round(
-            F.kll_sketch_get_quantile_double("_ks", F.lit(float(q))), round_to
+            F.kll_sketch_get_quantile_double("_ks", F.lit(float(q))), DIGITS
         ).alias(f"q{q}")
         for q in quantiles
     ]
@@ -705,7 +699,7 @@ def sketch_rollup(
         *[
             F.round(
                 F.kll_sketch_get_quantile_double(merged_ks, F.lit(float(q))),
-                round_to,
+                DIGITS,
             ).alias(f"q{q}")
             for q in quantiles
         ],
@@ -726,8 +720,6 @@ def completeness_by_group(
     df: DataFrame,
     cols: list[str],
     group_cols: list[str],
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-segment completeness matrix: non-null ratio of each column
     WITHIN each group, against the global ratio — missingness that is
@@ -782,9 +774,9 @@ def completeness_by_group(
         *group_cols,
         "column",
         "n_rows",
-        F.round(F.col("_v.r"), round_to).alias("ratio"),
-        F.round(F.col("_v.g"), round_to).alias("global_ratio"),
-        F.round(F.col("_v.r") - F.col("_v.g"), round_to).alias("lift"),
+        F.round(F.col("_v.r"), DIGITS).alias("ratio"),
+        F.round(F.col("_v.g"), DIGITS).alias("global_ratio"),
+        F.round(F.col("_v.r") - F.col("_v.g"), DIGITS).alias("lift"),
     ).orderBy(*group_cols, "column")
 
 
@@ -890,8 +882,6 @@ def heavy_hitters(
 def association_matrix(
     df: DataFrame,
     cols: list[str],
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Categorical association audit: chi-square and Cramér's V for
     every pair of the given (low-cardinality) columns — "are these two
@@ -988,13 +978,13 @@ def association_matrix(
         F.split_part("pid", F.lit("\x1f"), F.lit(1)).alias("col_a"),
         F.split_part("pid", F.lit("\x1f"), F.lit(2)).alias("col_b"),
         F.col("n"),
-        F.round("_chi2", round_to).alias("chi2"),
+        F.round("_chi2", DIGITS).alias("chi2"),
         ((F.col("_r") - 1) * (F.col("_c") - 1)).alias("dof"),
         F.round(
             F.when(
                 k > 0, F.sqrt(F.col("_chi2") / (F.col("n") * k))
             ),
-            round_to,
+            DIGITS,
         ).alias("cramers_v"),
     )
     return out.orderBy("col_a", "col_b")
@@ -1054,7 +1044,7 @@ def pattern_profile(
     )
     w_col = Window.partitionBy("column")
     out = counted.withColumn(
-        "ratio", F.round(F.col("n") / F.sum("n").over(w_col), 6)
+        "ratio", F.round(F.col("n") / F.sum("n").over(w_col), DIGITS)
     )
     if k is not None:
         w = Window.partitionBy("column").orderBy(
@@ -1071,8 +1061,6 @@ def concentration_report(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group share concentration of a non-negative quantity: Gini
     coefficient, top-decile share, and max single-row share — "how much
@@ -1122,7 +1110,7 @@ def concentration_report(
             *group_cols,
             F.col("n"),
             F.col("n_null"),
-            F.round("_total", round_to).alias("total"),
+            F.round("_total", DIGITS).alias("total"),
             # try_divide: an all-zero or all-NULL group (total 0 / n 0)
             # reports NULL shares instead of an ANSI divide-by-zero
             F.round(
@@ -1136,21 +1124,21 @@ def concentration_report(
                 - F.try_divide(
                     F.col("n") + F.lit(1.0), F.when(F.col("n") > 0, F.col("n"))
                 ),
-                round_to,
+                DIGITS,
             ).alias("gini"),
             F.round(
                 F.try_divide(
                     F.col("_top"),
                     F.when(F.col("_total") != 0, F.col("_total")),
                 ),
-                round_to,
+                DIGITS,
             ).alias("top_decile_share"),
             F.round(
                 F.try_divide(
                     F.col("_max"),
                     F.when(F.col("_total") != 0, F.col("_total")),
                 ),
-                round_to,
+                DIGITS,
             ).alias("max_share"),
         )
         .orderBy(*group_cols)

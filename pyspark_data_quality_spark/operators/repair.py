@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.expr import DIGITS
 from ..plans.joins import join_null_safe
 
 _STRATEGIES = ("mean", "median", "mode", "constant")
@@ -127,7 +128,6 @@ def flag_outliers(
     group_by: list[str] | None = None,
     flag_col: str = "is_outlier",
     score_col: str | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Row-level outlier annotation: adds ``flag_col`` (boolean; NULL
     values are never flagged) and optionally ``score_col``.
@@ -197,7 +197,7 @@ def flag_outliers(
         )
         out = out.withColumn(flag_col, flag)
         if score_col is not None:
-            out = out.withColumn(score_col, F.round(score, round_to))
+            out = out.withColumn(score_col, F.round(score, DIGITS))
         return out.drop("_med", "_mad")
     if method == "zscore":
         stat_exprs = {"_m": F.avg(xf), "_s": F.stddev_samp(xf)}
@@ -224,7 +224,7 @@ def flag_outliers(
         out = df.crossJoin(F.broadcast(agg))
     out = out.withColumn(flag_col, flag)
     if score_col is not None:
-        out = out.withColumn(score_col, F.round(score, round_to))
+        out = out.withColumn(score_col, F.round(score, DIGITS))
     return out.drop(*stat_exprs)
 
 
@@ -268,8 +268,7 @@ def winsorize(
         from .profile import value_histogram_stats
 
         stats = value_histogram_stats(
-            df, columns, quantiles=(float(lower), float(upper)),
-            round_to=None,
+            df, columns, quantiles=(float(lower), float(upper))
         )
         bounds = stats.groupBy().agg(
             *[
@@ -474,7 +473,6 @@ def mahalanobis_outliers(
     cols: list[str],
     *,
     threshold: float = 3.0,
-    round_to: int = 6,
 ) -> DataFrame:
     """Multivariate outlier flagging: Mahalanobis distance of each row's
     ``cols`` vector from the column means, under the sample covariance —
@@ -558,7 +556,7 @@ def mahalanobis_outliers(
         d2.isNotNull(), F.sqrt(F.greatest(d2, F.lit(0.0)))
     )
     return df.withColumn(
-        "mahalanobis", F.round(score, round_to)
+        "mahalanobis", F.round(score, DIGITS)
     ).withColumn(
         "is_outlier",
         F.coalesce(F.col("mahalanobis") > threshold, F.lit(False)),
@@ -572,7 +570,6 @@ def normalize_columns(
     method: str = "zscore",
     group_by: list[str] | None = None,
     suffix: str = "_norm",
-    round_to: int | None = None,
 ) -> DataFrame:
     """Feature scaling as a repair transform: append ``<col><suffix>``
     with ``zscore`` ((x-mean)/stddev_samp), ``minmax`` ((x-min)/
@@ -652,8 +649,6 @@ def normalize_columns(
                 F.col(c) - F.col(f"_lo_{c}"),
                 F.col(f"_hi_{c}") - F.col(f"_lo_{c}"),
             )
-        if round_to is not None:
-            expr = F.round(expr, round_to)
         out = out.withColumn(f"{c}{suffix}", expr)
     drop = [f.name for f in stats.schema.fields if f.name.startswith("_")]
     return out.drop(*drop)
@@ -872,7 +867,6 @@ def hbos_scores(
     cols: list[str],
     *,
     bins: int = 16,
-    round_to: int = 6,
 ) -> DataFrame:
     """Histogram-Based Outlier Score (HBOS, Goldstein & Dengel 2012):
     per-row anomaly score ``sum_c ln(max_count_c / count_c(bin(x_c)))``
@@ -971,6 +965,6 @@ def hbos_scores(
         scored = n if scored is None else scored + n
     return out.select(
         *df.columns,
-        F.round(score, round_to).alias("hbos"),
+        F.round(score, DIGITS).alias("hbos"),
         scored.alias("hbos_cols"),
     )

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
+
 __all__ = ["retention_matrix"]
 
 
@@ -50,7 +52,6 @@ def retention_matrix(
     ts_col: str = "ts",
     period_days: int = 7,
     max_offset: int | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Cohort retention matrix over an event log.
 
@@ -108,7 +109,7 @@ def retention_matrix(
             "n_cohort",
             "n_active",
             F.round(
-                F.try_divide(F.col("n_active"), F.col("n_cohort")), round_to
+                F.try_divide(F.col("n_active"), F.col("n_cohort")), DIGITS
             ).alias("retention"),
         )
         .orderBy("cohort", "period_offset")

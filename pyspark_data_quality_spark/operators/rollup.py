@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.expr import DIGITS
+
 #: granularities accepted by date_trunc in both Spark and DuckDB
 SUPPORTED_LEVELS = ("minute", "hour", "day", "week", "month", "quarter", "year")
 
@@ -75,7 +77,6 @@ def rolling_stats(
     *,
     group_cols: list[str] | None = None,
     window: str = "1 hour",
-    round_to: int = 6,
 ) -> DataFrame:
     """Time-based trailing-window statistics per row: count / mean /
     stddev of ``value_col`` over the last ``window`` of event time within
@@ -122,10 +123,10 @@ def rolling_stats(
     )
     return (
         df.withColumn("n_window", F.count(value_col).over(w))
-        .withColumn("mean_window", F.round(F.avg(value_col).over(w), round_to))
+        .withColumn("mean_window", F.round(F.avg(value_col).over(w), DIGITS))
         .withColumn(
             "stddev_window",
-            F.round(F.stddev_samp(value_col).over(w), round_to),
+            F.round(F.stddev_samp(value_col).over(w), DIGITS),
         )
     )
 
@@ -175,7 +176,6 @@ def trend_fit(
     y_col: str,
     *,
     group_cols: list[str] | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group ordinary-least-squares trend: is this segment's metric
     drifting up or down, and how linearly? One row per group with
@@ -217,9 +217,9 @@ def trend_fit(
         df.groupBy(*(group_cols or []))
         .agg(
             F.regr_count(y, x).alias("n"),
-            F.round(F.regr_slope(y, x), round_to).alias("slope"),
-            F.round(F.regr_intercept(y, x), round_to).alias("intercept"),
-            F.round(F.regr_r2(y, x), round_to).alias("r2"),
+            F.round(F.regr_slope(y, x), DIGITS).alias("slope"),
+            F.round(F.regr_intercept(y, x), DIGITS).alias("intercept"),
+            F.round(F.regr_r2(y, x), DIGITS).alias("r2"),
         )
     )
     return out.orderBy(*(group_cols or [])) if group_cols else out
@@ -229,8 +229,6 @@ def interarrival_stats(
     df: DataFrame,
     key_cols: list[str],
     ts_col: str,
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-key inter-arrival statistics: gap mean / sample stddev /
     coefficient of variation / max over consecutive event gaps — the
@@ -272,16 +270,16 @@ def interarrival_stats(
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.count("_gap").alias("n_gaps"),
-            F.round(F.avg("_gap"), round_to).alias("mean_gap_s"),
-            F.round(F.stddev_samp("_gap"), round_to).alias("sd_gap_s"),
+            F.round(F.avg("_gap"), DIGITS).alias("mean_gap_s"),
+            F.round(F.stddev_samp("_gap"), DIGITS).alias("sd_gap_s"),
             F.round(
                 F.try_divide(
                     F.stddev_samp("_gap"),
                     F.when(F.avg("_gap") != 0.0, F.avg("_gap")),
                 ),
-                round_to,
+                DIGITS,
             ).alias("cv"),
-            F.round(F.max("_gap"), round_to).alias("max_gap_s"),
+            F.round(F.max("_gap"), DIGITS).alias("max_gap_s"),
         )
         .orderBy(*[F.col(k).asc_nulls_first() for k in key_cols])
     )
@@ -296,7 +294,6 @@ def acf_profile(
     bucket_seconds: int = 3600,
     value_col: str | None = None,
     agg: str = "sum",
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-key autocorrelation of the event-count series — does this
     feed have a real periodicity (daily ACF spike), sticky load
@@ -317,8 +314,8 @@ def acf_profile(
     non-null series; a NULL level left in would inflate the variance
     denominator and bias acf toward 0). Float caveat applies:
     summed doubles are aggregation-order-sensitive at the ulp level,
-    which round_to absorbs in practice but is not bit-certifiable the
-    way counts are. For each requested lag k:
+    which the 6-decimal output rounding absorbs in practice but is not
+    bit-certifiable the way counts are. For each requested lag k:
 
         acf_k = Σ_t (x_t − μ)(x_{t+k} − μ) / Σ_t (x_t − μ)²
 
@@ -413,6 +410,6 @@ def acf_profile(
         "n_pairs",
         F.round(
             F.try_divide(F.col("_num"), F.when(F.col("_ss") > 0, F.col("_ss"))),
-            round_to,
+            DIGITS,
         ).alias("acf"),
     ).orderBy(*key_cols, "lag")

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.expr import DIGITS
 from ..plans.local import local_frame
 
 #: status values, in report order
@@ -79,7 +80,6 @@ def candidate_keys(
     exact: bool = False,
     rsd: float = 0.01,
     max_combos: int = 64,
-    round_to: int = 6,
 ) -> DataFrame:
     """Candidate-key discovery: for every column combination up to
     ``max_width``, how close is it to uniquely identifying a row? The
@@ -188,7 +188,7 @@ def candidate_keys(
                     F.col("n_distinct"),
                     F.col("n_rows") - F.col("n_null_rows"),
                 ),
-                round_to,
+                DIGITS,
             ),
         )
         .withColumn(

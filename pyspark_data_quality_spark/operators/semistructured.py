@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
+
 #: Types accepted in a field spec (value of the ``fields`` dict).
 CASTABLE_TYPES = ("bigint", "double", "boolean", "string", "timestamp")
 
@@ -30,8 +32,6 @@ def json_field_profile(
     df: DataFrame,
     json_col: str,
     fields: dict[str, str],
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-field quality report over a JSON string column.
 
@@ -92,10 +92,10 @@ def json_field_profile(
         F.col("_n_json_null").alias("n_json_null"),
         "n_present",
         "n_typed",
-        F.round(F.try_divide(F.col("n_present"), denom), round_to).alias(
+        F.round(F.try_divide(F.col("n_present"), denom), DIGITS).alias(
             "present_ratio"
         ),
-        F.round(F.try_divide(F.col("n_typed"), denom), round_to).alias(
+        F.round(F.try_divide(F.col("n_typed"), denom), DIGITS).alias(
             "typed_ratio"
         ),
     )

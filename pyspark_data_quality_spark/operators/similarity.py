@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.expr import DIGITS
 from ..functions.vectors import cosine_similarity
 
 
@@ -84,7 +85,7 @@ def brute_force_topk(
                 & (F.col("_cn") * F.col("_qn") < F.lit(float("inf"))),
                 dot(F.col("_cv"), F.col("_qv")) / (F.col("_cn") * F.col("_qn")),
             ),
-            6,
+            DIGITS,
         ).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -221,7 +222,9 @@ def lsh_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_similarity(F.col("_cv"), F.col("_qv")), 6).alias("cosine"),
+            F.round(
+                cosine_similarity(F.col("_cv"), F.col("_qv")), DIGITS
+            ).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -426,7 +429,9 @@ def ivf_topk(
     scored = cb.join(F.broadcast(qb), "_c").select(
         "query_id",
         "neighbor_id",
-        F.round(cosine_similarity(F.col("_cv"), F.col("_qv")), 6).alias("cosine"),
+        F.round(
+            cosine_similarity(F.col("_cv"), F.col("_qv")), DIGITS
+        ).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
 from ..functions.text import doc_fingerprint, doc_md5
 
 
@@ -30,9 +31,9 @@ def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     df = ensure_min_partitions(df)
     return (
         _profile_signals_np(df, text_col)
-        .withColumn("stopword_ratio", F.round(F.col("_sw_raw"), 6))
-        .withColumn("punct_ratio", F.round(F.col("_punct_raw"), 6))
-        .withColumn("mean_word_len", F.round(F.col("_mwl_raw"), 6))
+        .withColumn("stopword_ratio", F.round(F.col("_sw_raw"), DIGITS))
+        .withColumn("punct_ratio", F.round(F.col("_punct_raw"), DIGITS))
+        .withColumn("mean_word_len", F.round(F.col("_mwl_raw"), DIGITS))
         .drop("_sw_raw", "_punct_raw", "_mwl_raw")
         .withColumn("fingerprint", doc_fingerprint(text_col))
         .withColumn("fingerprint_md5", doc_md5(text_col))
@@ -126,12 +127,12 @@ def quality_summary(df: DataFrame, text_col: str = "text", group_col: str | None
     aggs = [
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("token_count").alias("total_tokens"),
-        F.round(F.avg("token_count"), 6).alias("avg_tokens"),
-        F.round(F.avg("quality_score"), 6).alias("avg_quality"),
+        F.round(F.avg("token_count"), DIGITS).alias("avg_tokens"),
+        F.round(F.avg("quality_score"), DIGITS).alias("avg_quality"),
         F.round(
-            F.avg((F.col("quality_score") < 0.75).cast("double")), 6
+            F.avg((F.col("quality_score") < 0.75).cast("double")), DIGITS
         ).alias("low_quality_share"),
-        F.round(F.avg("stopword_ratio"), 6).alias("avg_stopword_ratio"),
+        F.round(F.avg("stopword_ratio"), DIGITS).alias("avg_stopword_ratio"),
     ]
     if group_col:
         return profiled.groupBy(group_col).agg(*aggs)
@@ -184,7 +185,6 @@ def contamination_pairs(
     *,
     n: int = 8,
     threshold: float = 0.2,
-    round_to: int = 6,
     prefilter: str = "auto",
     broadcast: bool | None = None,
 ) -> DataFrame:
@@ -255,7 +255,7 @@ def contamination_pairs(
         )
         return _containment_from_gram_index(
             d.select("doc_id", F.explode("_dg").alias("_g")),
-            p_idx, broadcast, threshold, round_to,
+            p_idx, broadcast, threshold,
         )
 
     import numpy as np
@@ -282,7 +282,7 @@ def contamination_pairs(
         pandas_udf(score, "double").asNondeterministic()(
             F.col("_dg"), F.col("_pg")
         ),
-        round_to,
+        DIGITS,
     )
     return (
         d.crossJoin(F.broadcast(p))
@@ -296,7 +296,6 @@ def _containment_from_gram_index(
     probe_index: DataFrame,
     broadcast: bool | None,
     threshold: float,
-    round_to: int,
 ) -> DataFrame:
     """Shared exact scoring tail of :func:`contamination_pairs`
     (prefilter='index') and :func:`contamination_bloom` — ONE place so
@@ -320,7 +319,7 @@ def _containment_from_gram_index(
             "probe_id",
             F.round(
                 F.try_divide(F.col("_shared").cast("double"), F.col("_pn")),
-                round_to,
+                DIGITS,
             ).alias("containment"),
         )
         .filter(F.col("containment") >= threshold)
@@ -340,7 +339,6 @@ def contamination_bloom(
     num_bits: int | None = None,
     num_hashes: int | None = None,
     broadcast: bool | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """:func:`contamination_pairs` for probe sets too big to index-join
     comfortably — decontaminating against ANOTHER CORPUS (millions of
@@ -422,8 +420,7 @@ def contamination_bloom(
     # the full exact index to every executor — the OOM this operator's
     # scale contract forbids
     return _containment_from_gram_index(
-        survivors, p, False if broadcast is None else broadcast,
-        threshold, round_to,
+        survivors, p, False if broadcast is None else broadcast, threshold
     )
 
 
@@ -457,7 +454,6 @@ def split_leakage(
     *,
     n: int = 8,
     threshold: float = 0.5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Train/holdout leakage audit — THE pre-training split check: how
     much of the eval set is already in the training set, exactly or
@@ -505,14 +501,14 @@ def split_leakage(
                 F.try_divide(F.col("n_exact_leaked"), F.col("n_holdout")),
                 F.lit(0.0),
             ),
-            round_to,
+            DIGITS,
         ).alias("exact_leak_rate"),
         F.round(
             F.coalesce(
                 F.try_divide(F.col("n_near_leaked"), F.col("n_holdout")),
                 F.lit(0.0),
             ),
-            round_to,
+            DIGITS,
         ).alias("near_leak_rate"),
     )
 
@@ -523,7 +519,6 @@ def tfidf_top_terms(
     id_col: str = "doc_id",
     *,
     k: int = 3,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-document top-``k`` terms by TF-IDF — the keyword-extraction
     signal for search indexing, near-dup triage, and topic drift.
@@ -571,7 +566,7 @@ def tfidf_top_terms(
                     F.log((1 + F.col("_n")) / (1 + F.col("_df")))
                     + F.lit(1.0)
                 ),
-                round_to,
+                DIGITS,
             ),
         )
     )
@@ -592,7 +587,6 @@ def unigram_logprob(
     id_col: str = "doc_id",
     *,
     reference: DataFrame | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-document mean unigram negative log-probability — the
     perplexity-style quality signal (CCNet-lineage): documents whose
@@ -647,7 +641,7 @@ def unigram_logprob(
     per_doc = scored.groupBy(id_col).agg(
         F.sum("_tf").alias("n_tokens"),
         F.round(
-            F.sum(F.col("_nll") * F.col("_tf")) / F.sum("_tf"), round_to
+            F.sum(F.col("_nll") * F.col("_tf")) / F.sum("_tf"), DIGITS
         ).alias("nll"),
     )
     # empty/null-text docs have no token rows: spine them back with NULLs
@@ -669,7 +663,6 @@ def bigram_logprob(
     id_col: str = "doc_id",
     *,
     reference: DataFrame | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-document mean bigram negative log-probability — the
     context-aware upgrade of :func:`unigram_logprob`: a document whose
@@ -751,7 +744,7 @@ def bigram_logprob(
     per_doc = scored.groupBy(id_col).agg(
         F.sum("_tf").alias("n_bigrams"),
         F.round(
-            F.sum(F.col("_nll") * F.col("_tf")) / F.sum("_tf"), round_to
+            F.sum(F.col("_nll") * F.col("_tf")) / F.sum("_tf"), DIGITS
         ).alias("nll"),
     )
     spine = df.select(F.col(id_col)).distinct()
@@ -767,8 +760,7 @@ def bigram_logprob(
 
 
 def repetition_signals(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", *,
-    round_to: int = 6,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Gopher-style repetition quality signals per document:
 
@@ -798,7 +790,7 @@ def repetition_signals(
                 ),
                 F.lit(0.0),
             ),
-            round_to,
+            DIGITS,
         ).alias("dup_line_frac"),
     )
     tok_counts = (
@@ -808,7 +800,7 @@ def repetition_signals(
     )
     tok_stats = tok_counts.groupBy(id_col).agg(
         F.sum("_n").alias("n_tokens"),
-        F.round(F.try_divide(F.max("_n"), F.sum("_n")), round_to).alias(
+        F.round(F.try_divide(F.max("_n"), F.sum("_n")), DIGITS).alias(
             "top_token_frac"
         ),
     )
@@ -830,7 +822,6 @@ def zipf_profile(
     group_col: str | None = None,
     *,
     min_count: int = 1,
-    round_to: int = 6,
 ) -> DataFrame:
     """Zipf's-law fit of the token frequency distribution: the slope (and
     fit quality) of ln(frequency) ~ ln(rank) over the vocabulary. Natural
@@ -871,10 +862,10 @@ def zipf_profile(
         F.sum("_c").alias("n_tokens"),
         F.count(F.lit(1)).alias("vocab_size"),
         F.round(
-            F.regr_slope(F.log("_c"), F.log("_r")), round_to
+            F.regr_slope(F.log("_c"), F.log("_r")), DIGITS
         ).alias("zipf_slope"),
         F.round(
-            F.regr_r2(F.log("_c"), F.log("_r")), round_to
+            F.regr_r2(F.log("_c"), F.log("_r")), DIGITS
         ).alias("zipf_r2"),
     )
     return out.orderBy(*keys) if keys else out
@@ -886,7 +877,6 @@ def ngram_diversity(
     group_col: str | None = None,
     *,
     ns: tuple[int, ...] = (1, 2, 3),
-    round_to: int = 6,
 ) -> DataFrame:
     """Distinct-n diversity per group: for each n in ``ns``, the fraction
     of n-gram occurrences that are distinct (``distinct-1/2/3`` of the
@@ -954,7 +944,7 @@ def ngram_diversity(
         F.sum("_c").alias("total_ngrams"),
         F.count(F.lit(1)).alias("distinct_ngrams"),
         F.round(
-            F.count(F.lit(1)) / F.sum("_c"), round_to
+            F.count(F.lit(1)) / F.sum("_c"), DIGITS
         ).alias("diversity"),
     )
     return out.orderBy(*keys, "n")
@@ -964,8 +954,6 @@ def vocab_richness(
     df: DataFrame,
     text_col: str = "text",
     group_col: str | None = None,
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Chao1 vocabulary-richness estimate per group: how much vocabulary
     the corpus slice has NOT yet surfaced. From the token frequency
@@ -1004,10 +992,10 @@ def vocab_richness(
             F.count(F.lit(1))
             + (f1 * (f1 - F.lit(1)))
             / (F.lit(2.0) * (f2 + F.lit(1))),
-            round_to,
+            DIGITS,
         ).alias("chao1"),
         F.round(
-            F.lit(1.0) - F.try_divide(f1, F.sum("_c")), round_to
+            F.lit(1.0) - F.try_divide(f1, F.sum("_c")), DIGITS
         ).alias("coverage"),
     )
     return out.orderBy(*keys) if keys else out
@@ -1067,7 +1055,6 @@ def distinctive_terms(
     *,
     k: int = 10,
     min_count: int = 2,
-    round_to: int = 6,
 ) -> DataFrame:
     """Keyness analysis: the tokens most OVER-represented in each group
     versus the rest of the corpus, ranked by Dunning's log-likelihood
@@ -1135,8 +1122,8 @@ def distinctive_terms(
             broadcast=True,
         )
         .crossJoin(F.broadcast(grand))
-        .withColumn("_g2", F.round(g2, round_to))
-        .withColumn("_ratio", F.round(ratio, round_to))
+        .withColumn("_g2", F.round(g2, DIGITS))
+        .withColumn("_ratio", F.round(ratio, DIGITS))
         .filter(
             F.col("_ratio").isNull() | (F.col("_ratio") > 1.0)
         )  # over-represented only (NULL ratio = token absent from rest)
@@ -1164,8 +1151,6 @@ def language_mix(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-document LINE-level language profile — the code-switching /
     mixed-language detector a document-level ``lang_id`` hides: a page
@@ -1219,11 +1204,11 @@ def language_mix(
         id_col,
         "n_lines",
         "top_lang",
-        F.round(F.col("_top_n") / F.col("n_lines"), round_to).alias(
+        F.round(F.col("_top_n") / F.col("n_lines"), DIGITS).alias(
             "top_lang_share"
         ),
         F.round(
-            F.log("n_lines") - F.col("_nlogn") / F.col("n_lines"), round_to
+            F.log("n_lines") - F.col("_nlogn") / F.col("n_lines"), DIGITS
         ).alias("lang_entropy"),
     )
     spine = df.select(id_col)
@@ -1236,8 +1221,6 @@ def readability_profile(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    *,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-document readability: Flesch reading ease and
     Flesch-Kincaid grade (public: Flesch 1948 / Kincaid et al. 1975),
@@ -1298,10 +1281,10 @@ def readability_profile(
             "n_words",
             "n_syllables",
             F.round(
-                F.lit(206.835) - 1.015 * wps - 84.6 * spw, round_to
+                F.lit(206.835) - 1.015 * wps - 84.6 * spw, DIGITS
             ).alias("flesch_reading_ease"),
             F.round(
-                0.39 * wps + 11.8 * spw - F.lit(15.59), round_to
+                0.39 * wps + 11.8 * spw - F.lit(15.59), DIGITS
             ).alias("fk_grade"),
         )
     )

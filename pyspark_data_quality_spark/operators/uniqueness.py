@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..core.enums import Dimension
 from ..core.models import MetricResult
-from ..functions.expr import approx_distinct, hll_lg_k
+from ..functions.expr import DIGITS, approx_distinct, hll_lg_k
 from ..plans.compile import ident
 from .base import Rule, RunContext
 
@@ -119,11 +119,12 @@ class UniqueRule(Rule):
     def transform_valid(self, df: DataFrame) -> DataFrame:
         """Reference-style dedup for `get_deduplicated_df`: keep one survivor
         per key among in-scope rows; out-of-scope rows pass through.
+        A NULL scope is out of scope, as in the valid/invalid split.
         ``df`` carries this rule's markers (``prepare``)."""
         if self.condition is None:
             return df.dropDuplicates(self.columns)
-        scope = self.scope()
-        return df.filter(f"NOT ({scope})").unionByName(
+        scope = f"coalesce(({self.scope()}), false)"
+        return df.filter(f"NOT {scope}").unionByName(
             df.filter(scope).dropDuplicates(self.columns)
         )
 
@@ -178,7 +179,6 @@ def dup_rate_by_group(
     key_cols: list[str],
     group_cols: list[str],
     *,
-    round_to: int = 6,
     sort: bool = True,
 ) -> DataFrame:
     """Per-segment duplicate rate of ``key_cols``: one row per group
@@ -213,7 +213,7 @@ def dup_rate_by_group(
         .withColumn(
             "dup_ratio",
             F.round(
-                F.lit(1.0) - F.col("n_distinct") / F.col("n_rows"), round_to
+                F.lit(1.0) - F.col("n_distinct") / F.col("n_rows"), DIGITS
             ),
         )
     )

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
 from ..functions.text import gopher_pass as _gopher_pass
 
 
@@ -41,7 +42,6 @@ def corpus_report(
     *,
     top_langs: int = 5,
     low_quality_threshold: float = 0.75,
-    round_to: int = 6,
     exact_vocab: bool = False,
 ) -> DataFrame:
     """One long-format corpus card; see module docstring for sections.
@@ -85,7 +85,7 @@ def corpus_report(
         ).select(
             "_r.section",
             "_r.metric",
-            F.round("_r.value", round_to).alias("value"),
+            F.round("_r.value", DIGITS).alias("value"),
             F.lit(None).cast("string").alias("text_value"),
         )
 
@@ -136,7 +136,7 @@ def corpus_report(
         .select(
             F.lit("language").alias("section"),
             F.coalesce(F.col("lang_pred"), F.lit("unknown")).alias("metric"),
-            F.round(F.col("_n") / F.col("_total"), round_to).alias("value"),
+            F.round(F.col("_n") / F.col("_total"), DIGITS).alias("value"),
             F.col("lang_pred").alias("text_value"),
         )
     )

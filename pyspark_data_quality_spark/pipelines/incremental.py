@@ -40,6 +40,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
 from ..functions.text import doc_fingerprint, tokenize
 
 _FP = "fingerprints"
@@ -280,7 +281,7 @@ def batch_vs_history(
         )
         .select(
             id_col,
-            F.round(F.col("_nov") / F.col("_nt"), 6).alias(
+            F.round(F.col("_nov") / F.col("_nt"), DIGITS).alias(
                 "novel_token_ratio"
             ),
         )
@@ -310,7 +311,7 @@ def history_summary(spark: SparkSession, state_dir: str) -> DataFrame:
         F.hll_sketch_estimate("hll").alias("distinct_est"),
         *[
             F.round(
-                F.kll_sketch_get_quantile_double("kll", F.lit(q)), 6
+                F.kll_sketch_get_quantile_double("kll", F.lit(q)), DIGITS
             ).alias(f"len_q{q}")
             for q in (0.25, 0.5, 0.75)
         ],
@@ -325,7 +326,7 @@ def history_summary(spark: SparkSession, state_dir: str) -> DataFrame:
         "distinct_est",
         *[
             F.round(
-                F.kll_sketch_get_quantile_double("_kll", F.lit(q)), 6
+                F.kll_sketch_get_quantile_double("_kll", F.lit(q)), DIGITS
             ).alias(f"len_q{q}")
             for q in (0.25, 0.5, 0.75)
         ],

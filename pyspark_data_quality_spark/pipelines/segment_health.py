@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
+
 _SCHEMA = (
     "segment string, check string, column string, value double, "
     "threshold double, flag boolean"
@@ -55,7 +57,6 @@ def segment_health_report(
     psi_threshold: float = 0.25,
     ks_col: str | None = None,
     ks_threshold: float = 0.1,
-    round_to: int = 6,
 ) -> DataFrame:
     """One long-format health report over ``cur``'s segments; drift
     sections (``psi_cols``, ``ks_col``) additionally need ``ref``.
@@ -175,7 +176,7 @@ def segment_health_report(
             lift = F.round(
                 F.col(f"_nn_{c}") / F.col("_n")
                 - F.col(f"_g_{c}") / F.col("_gn"),
-                round_to,
+                DIGITS,
             )
             row_structs.append(
                 F.struct(
@@ -194,7 +195,7 @@ def segment_health_report(
                 F.struct(
                     F.lit("freshness").alias("check"),
                     F.lit(ts_col).alias("column"),
-                    F.round(lag, round_to).alias("value"),
+                    F.round(lag, DIGITS).alias("value"),
                     F.lit(float(stale_after_seconds)).alias("threshold"),
                     (lag > stale_after_seconds).alias("flag"),
                 )
@@ -207,7 +208,7 @@ def segment_health_report(
             # off the shared base instead of a second two-level
             # aggregation pass over the source
             dup = F.round(
-                F.lit(1.0) - F.col("_nd") / F.col("_n"), round_to
+                F.lit(1.0) - F.col("_nd") / F.col("_n"), DIGITS
             )
             row_structs.append(
                 F.struct(
@@ -242,7 +243,7 @@ def segment_health_report(
 
         psi = psi_by_group(
             cur, ref, psi_cols, group_col,
-            threshold=psi_threshold, round_to=round_to, sort=False,
+            threshold=psi_threshold, sort=False,
         )
         parts.append(
             psi.select(
@@ -258,9 +259,7 @@ def segment_health_report(
     if ks_col is not None:
         from ..operators.drift import ks_by_group
 
-        ks = ks_by_group(
-            cur, ref, ks_col, group_col, round_to=round_to, sort=False
-        )
+        ks = ks_by_group(cur, ref, ks_col, group_col, sort=False)
         parts.append(
             ks.select(
                 F.col("grp").alias("segment"),

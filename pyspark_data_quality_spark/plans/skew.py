@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
 from .local import local_frame
 
 
@@ -165,7 +166,7 @@ def salted_join(
 
 
 def skew_report(
-    df: DataFrame, columns: list[str], *, round_to: int = 6
+    df: DataFrame, columns: list[str]
 ) -> DataFrame:
     """Key-skew diagnosis for shuffle planning: for each candidate
     join/group key column, how lopsided is its value distribution?
@@ -224,8 +225,8 @@ def skew_report(
         (F.col("_n_rows_nn") + F.col("null_count")).alias("n_rows"),
         "n_keys",
         "max_count",
-        F.round(avg, round_to).alias("avg_count"),
-        F.round(F.try_divide(F.col("max_count"), avg), round_to).alias(
+        F.round(avg, DIGITS).alias("avg_count"),
+        F.round(F.try_divide(F.col("max_count"), avg), DIGITS).alias(
             "skew_ratio"
         ),
         "top_key",

@@ -26,35 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.expr import DIGITS, _round_like_spark
+
 DEFAULT_MIN_PERIODS = 5
-
-
-def _round_like_spark(arr, nd: int):
-    """Replicate ``F.round`` on doubles for the streaming faces' display
-    columns: Java rounds HALF_UP over the SHORTEST-DECIMAL representation
-    (``BigDecimal.valueOf(double)``). ``np.round`` is half-to-even, and
-    the ``floor(abs*scale+0.5)`` trick rounds the BINARY value (0.285*100
-    = 28.4999... → 0.28 where Spark shows 0.29) — both diverge from the
-    batch face at decimal half-boundaries. Python ``repr(float)`` is the
-    same shortest round-trip decimal as ``Double.toString``, so
-    ``Decimal(repr(x))`` + ``ROUND_HALF_UP`` (ties away from zero, like
-    Java) reproduces F.round exactly. Per-element Decimal, deliberately:
-    metric streams are bounded, and stream/batch display parity beats
-    vectorizing a cosmetic column. Alarms everywhere compare UNROUNDED
-    values, so only the displayed columns are at stake."""
-    import numpy as np
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-nd)
-    out = np.empty(len(arr), dtype=float)
-    for i, v in enumerate(arr):
-        fv = float(v)
-        out[i] = (
-            fv
-            if math.isnan(fv) or math.isinf(fv)
-            else float(Decimal(repr(fv)).quantize(q, rounding=ROUND_HALF_UP))
-        )
-    return out
 
 
 def streaming_zscore(
@@ -66,7 +40,6 @@ def streaming_zscore(
     threshold: float = 3.0,
     min_periods: int = DEFAULT_MIN_PERIODS,
     watermark: str | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Score every event's ``value_col`` against the running mean/stddev
     of its key's PRIOR events. Output: the key columns + ``ts_col`` +
@@ -95,7 +68,7 @@ def streaming_zscore(
             *keys,
             ts_col,
             value_col,
-            F.round(z, round_to).alias("zscore"),
+            F.round(z, DIGITS).alias("zscore"),
             F.coalesce(
                 (n >= min_periods) & (F.abs(z) > threshold), F.lit(False)
             ).alias("is_anomaly"),
@@ -136,7 +109,7 @@ def streaming_zscore(
             ok = valid & (pn >= 2) & (std > 0)
             flag = ok & (pn >= min_periods) & (np.abs(z) > threshold)
             out = pdf[[*keys, ts_col, value_col]].copy()
-            zr = pd.array(_round_like_spark(z, round_to), dtype="Float64")
+            zr = pd.array(_round_like_spark(z, DIGITS), dtype="Float64")
             zr[~ok] = pd.NA
             out["zscore"] = zr
             out["is_anomaly"] = flag
@@ -163,7 +136,6 @@ def streaming_ewma(
     alpha: float = 0.2,
     L: float = 3.0,
     watermark: str | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-key EWMA control chart (Roberts 1959) — the third classic
     sibling of the z-score (point outliers) and CUSUM (sustained
@@ -232,8 +204,8 @@ def streaming_ewma(
             *keys,
             ts_col,
             value_col,
-            F.round(z, round_to).alias("ewma"),
-            F.round(band, round_to).alias("band"),
+            F.round(z, DIGITS).alias("ewma"),
+            F.round(band, DIGITS).alias("band"),
             F.coalesce(
                 F.abs(z - F.lit(target)) > band, F.lit(False)
             ).alias("is_alarm"),
@@ -273,9 +245,9 @@ def streaming_ewma(
         # _round_like_spark: F.round-faithful HALF_UP so the displayed
         # ewma/band match the batch face bit-for-bit (alarms compare
         # unrounded values either way)
-        ewr = pd.array(_round_like_spark(ew, round_to), dtype="Float64")
+        ewr = pd.array(_round_like_spark(ew, DIGITS), dtype="Float64")
         ewr[~valid] = pd.NA
-        br = pd.array(_round_like_spark(band, round_to), dtype="Float64")
+        br = pd.array(_round_like_spark(band, DIGITS), dtype="Float64")
         br[~valid] = pd.NA
         out["ewma"] = ewr
         out["band"] = br
@@ -302,7 +274,6 @@ def streaming_cusum(
     slack: float = 0.5,
     threshold: float = 5.0,
     watermark: str | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-key CUSUM mean-shift detector (Page 1954): cumulative upper/
     lower sums of deviations from ``target`` with ``slack`` allowance;
@@ -350,8 +321,8 @@ def streaming_cusum(
             *keys,
             ts_col,
             value_col,
-            F.round(s_pos, round_to).alias("s_pos"),
-            F.round(s_neg, round_to).alias("s_neg"),
+            F.round(s_pos, DIGITS).alias("s_pos"),
+            F.round(s_neg, DIGITS).alias("s_neg"),
             (
                 valid_row
                 & (
@@ -386,8 +357,8 @@ def streaming_cusum(
         sp = cu - np.minimum(np.minimum.accumulate(cu), 0.0)
         sn = cn - np.minimum(np.minimum.accumulate(cn), 0.0)
         out = pdf[[*keys, ts_col, value_col]].copy()
-        out["s_pos"] = _round_like_spark(sp, round_to)
-        out["s_neg"] = _round_like_spark(sn, round_to)
+        out["s_pos"] = _round_like_spark(sp, DIGITS)
+        out["s_neg"] = _round_like_spark(sn, DIGITS)
         out["is_alarm"] = valid & ((sp > threshold) | (sn > threshold))
         state.update((float(sp[-1]) if len(sp) else sp0,
                       float(sn[-1]) if len(sn) else sn0))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expr import DIGITS
 from ..operators.base import Rule
 from ..plans.compile import ident, ratio_sql
 
@@ -59,8 +60,8 @@ def windowed_counts(
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if value_col:
         aggs += [
-            F.round(F.avg(value_col), 6).alias("avg_value"),
-            F.round(F.sum(value_col), 6).alias("sum_value"),
+            F.round(F.avg(value_col), DIGITS).alias("avg_value"),
+            F.round(F.sum(value_col), DIGITS).alias("sum_value"),
         ]
     return (
         src.groupBy(win.alias("_w"), *(group_cols or []))
@@ -177,7 +178,6 @@ def windowed_psi(
     watermark: str = "10 minutes",
     eps: float = 1e-6,
     threshold: float = 0.25,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-window Population Stability Index of a categorical column
     against a FIXED reference distribution — the streaming drift monitor:
@@ -226,7 +226,7 @@ def windowed_psi(
         F.try_divide(F.col("n_events") - known, F.col("n_events")), F.lit(eps)
     )
     terms.append((p_other - F.lit(eps)) * F.log(p_other / F.lit(eps)))
-    psi = F.round(sum(terms[1:], terms[0]), round_to)
+    psi = F.round(sum(terms[1:], terms[0]), DIGITS)
     return agged.select(
         F.col("_w.start").alias("window_start"),
         F.col("_w.end").alias("window_end"),
@@ -248,7 +248,6 @@ def windowed_numeric_psi(
     watermark: str = "10 minutes",
     eps: float = 1e-6,
     threshold: float = 0.25,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-window binned PSI of a NUMERIC column against fixed
     reference bin masses — :func:`windowed_psi`'s numeric sibling for
@@ -293,7 +292,6 @@ def windowed_numeric_psi(
         watermark=watermark,
         eps=eps,
         threshold=threshold,
-        round_to=round_to,
     )
 
 
@@ -355,7 +353,9 @@ def windowed_pass_ratios(
         # the batch ratio formula itself: NULL-evaluating predicates count
         # as failures, out-of-scope rows don't contribute
         ratio = ratio_sql(r.scope(), pred)
-        aggs.append(F.expr(f"round({ratio}, 6) AS {ident(f'{r.name}_ratio')}"))
+        aggs.append(
+            F.expr(f"round({ratio}, {DIGITS}) AS {ident(f'{r.name}_ratio')}")
+        )
     return (
         src.groupBy(win.alias("_w"))
         .agg(*aggs)

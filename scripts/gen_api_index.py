@@ -14,6 +14,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 PKG = "pyspark_data_quality_spark"
+PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "docs",
+    "API.md",
+)
 
 
 def first_line(obj) -> str:
@@ -22,7 +27,8 @@ def first_line(obj) -> str:
     return line
 
 
-def main() -> None:
+def render() -> str:
+    """The index text ``main`` writes to docs/API.md."""
     root = importlib.import_module(PKG)
     out = [
         "# API index",
@@ -66,14 +72,13 @@ def main() -> None:
             out.append(f"## {short}\n")
             out.extend(rows)
             out.append("")
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "docs",
-        "API.md",
-    )
-    with open(path, "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"wrote {path}: {len(modules)} modules")
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
+    with open(PATH, "w") as f:
+        f.write(render())
+    print(f"wrote {PATH}")
 
 
 if __name__ == "__main__":

@@ -280,7 +280,9 @@ def test_nbmodel_unpersist_releases_pruned_path(spark, docs):
 
 def test_no_callable_takes_a_cache_switch():
     """Pinning has one path (plans/cache.pin): no public callable of the
-    package takes a ``persist`` or ``persist_*`` parameter."""
+    package takes a ``persist`` or ``persist_*`` parameter. Output
+    precision has one setting too (functions/expr.DIGITS): none takes
+    a ``round_to`` parameter."""
     import importlib
     import inspect
     import pkgutil
@@ -312,7 +314,8 @@ def test_no_callable_takes_a_cache_switch():
             for qual, fn in fns:
                 bad = [
                     p for p in params(fn)
-                    if p == "persist" or p.startswith("persist_")
+                    if p in ("persist", "round_to")
+                    or p.startswith("persist_")
                 ]
                 if bad:
                     offenders.append(f"{mod.__name__}.{qual}{bad}")

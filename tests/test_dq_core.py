@@ -370,6 +370,34 @@ def test_dedup_keeps_rows_with_null_scope(spark):
     assert dedup_ids == valid_ids
 
 
+def test_unique_dedup_keeps_rows_with_null_scope(spark):
+    """UniqueRule's own dedup split: a row whose scope is NULL is out of
+    scope and passes through get_deduplicated_df, as it passes
+    get_valid_df — splitting on ``NOT scope`` / ``scope`` dropped it
+    from both sides."""
+    from pyspark_data_quality_spark.manager import DQManager
+    from pyspark_data_quality_spark.operators import UniqueRule
+
+    df = spark.createDataFrame(
+        [(1, 1, "a"), (2, 1, "a"), (3, 2, None), (4, 3, "b")],
+        "id int, k int, s string",
+    )
+    res = (
+        DQManager(spark)
+        .set_data(df)
+        .add_rule(UniqueRule(columns=["k"], condition="s = 'a'"))
+        .run()
+    )
+    valid_ids = sorted(r["id"] for r in res.get_valid_df().collect())
+    dedup_ids = sorted(
+        r["id"] for r in res.get_deduplicated_df().collect()
+    )
+    assert valid_ids == [3, 4]
+    # one survivor of the in-scope duplicate pair, plus rows 3 and 4
+    assert len(dedup_ids) == 3 and dedup_ids[1:] == [3, 4]
+    assert dedup_ids[0] in (1, 2)
+
+
 def test_run_suite_with_monitor_block(spark, tmp_path):
     """The whole config-driven Deequ loop: N healthy runs through
     run_suite (rules + monitor block), then a degraded run — the

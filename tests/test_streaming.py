@@ -805,28 +805,30 @@ def test_round_like_spark_matches_f_round(spark):
 
 
 def test_ewma_stream_rounding_half_up(spark, tmp_path):
-    """Both faces round like F.round: x=5/alpha=.5/target=0 puts the
-    ewma EXACTLY on 2.5 (binary half — np.round would emit 2.0, batch
-    3.0), and target=x=0.285/round_to=2 plants a DECIMAL half (binary
-    0.28499..., shortest repr '0.285' — the naive floor(abs*100+.5)
-    trick would emit 0.28, F.round 0.29)."""
+    """Both faces round like F.round at the 6-digit output precision:
+    x=0.015625/alpha=.5/target=0 puts the ewma EXACTLY on 0.0078125 (a
+    binary half — np.round would emit 0.007812, batch 0.007813), and
+    target=x=0.0019955 plants a DECIMAL half (binary 0.00199549...,
+    shortest repr '0.0019955' — the naive floor(abs*1e6+.5) trick would
+    emit 0.001995, F.round 0.001996)."""
     from pyspark_data_quality_spark.streaming import streaming_ewma
 
     src = spark.createDataFrame(
-        [("a", "2024-01-01 00:00:00", 5.0),
-         ("a", "2024-01-01 00:01:00", -10.0)],
+        [("a", "2024-01-01 00:00:00", 0.015625),
+         ("a", "2024-01-01 00:01:00", -0.0546875)],
         ["k", "ts", "v"],
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     path = str(tmp_path / "ewma_half")
     src.write.parquet(path)
 
-    kw = dict(target=0.0, sigma=1.0, alpha=0.5, L=3.0, round_to=0)
+    kw = dict(target=0.0, sigma=1.0, alpha=0.5, L=3.0)
     batch = {str(r["ts"])[14:16]: r["ewma"] for r in streaming_ewma(
         spark.read.parquet(path), ["k"], "v", "ts", **kw
     ).collect()}
-    # z_1 = 2.5 -> 3.0 half-up; z_2 = .5*(-10)+.5*2.5 = -3.75 -> -4.0
-    # (away from zero on the negative side too)
-    assert batch == {"00": 3.0, "01": -4.0}
+    # z_1 = 0.0078125 -> 0.007813 half-up; z_2 = .5*(-0.0546875) +
+    # .5*0.0078125 = -0.0234375 -> -0.023438 (away from zero on the
+    # negative side too)
+    assert batch == {"00": 0.007813, "01": -0.023438}
     out = _run_stream(spark, streaming_ewma(
         spark.readStream.schema(src.schema).parquet(path),
         ["k"], "v", "ts", **kw,
@@ -836,15 +838,15 @@ def test_ewma_stream_rounding_half_up(spark, tmp_path):
 
     # decimal half-boundary: z_1 = .5*target + .5*x = target exactly
     src2 = spark.createDataFrame(
-        [("a", "2024-01-01 00:00:00", 0.285)], ["k", "ts", "v"]
+        [("a", "2024-01-01 00:00:00", 0.0019955)], ["k", "ts", "v"]
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     path2 = str(tmp_path / "ewma_half2")
     src2.write.parquet(path2)
-    kw2 = dict(target=0.285, sigma=1.0, alpha=0.5, L=3.0, round_to=2)
+    kw2 = dict(target=0.0019955, sigma=1.0, alpha=0.5, L=3.0)
     b2 = streaming_ewma(
         spark.read.parquet(path2), ["k"], "v", "ts", **kw2
     ).collect()[0]["ewma"]
-    assert b2 == 0.29  # F.round(0.285, 2) — shortest-decimal HALF_UP
+    assert b2 == 0.001996  # F.round(0.0019955, 6): shortest-decimal HALF_UP
     s2 = _run_stream(spark, streaming_ewma(
         spark.readStream.schema(src2.schema).parquet(path2),
         ["k"], "v", "ts", **kw2,

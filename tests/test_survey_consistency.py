@@ -90,3 +90,17 @@ def test_survey_impl_references_resolve():
         f"SURVEY.md §2.3 Impl cells reference code that does not "
         f"resolve: {sorted(set(misses))}"
     )
+
+
+def test_api_index_is_fresh():
+    """docs/API.md is what scripts/gen_api_index.py renders from the
+    live package: a renamed, added or removed public callable, or a
+    reworded first docstring line, fails here until the index is
+    regenerated (``python scripts/gen_api_index.py``)."""
+    import gen_api_index  # scripts/ is on sys.path (conftest)
+
+    with open(os.path.join(REPO, "docs", "API.md")) as f:
+        committed = f.read()
+    assert committed == gen_api_index.render(), (
+        "docs/API.md is stale — run python scripts/gen_api_index.py"
+    )

@@ -1893,6 +1893,31 @@ def test_near_dup_eval(spark):
     assert r2["n_approx"] == 0 and r2["precision"] is None
 
 
+def test_near_dup_eval_rounds_like_f_round(spark):
+    """The driver-side ratios round as F.round does (HALF_UP): precision
+    1/128 = 0.0078125 sits on a binary half, where Python's round()
+    (half-to-even) gives 0.007812 and F.round 0.007813."""
+    from pyspark_data_quality_spark.operators.dedup import near_dup_eval
+
+    exact = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    # 128 distinct pairs, of which only (0, 1) is a true duplicate
+    approx = spark.range(128).select(
+        F.col("id").alias("id_a"),
+        F.when(F.col("id") == 0, 1).otherwise(F.col("id") + 1000)
+        .alias("id_b"),
+    )
+    r = near_dup_eval(approx, exact).first()
+    assert (r["n_approx"], r["n_exact"], r["n_hit"]) == (128, 1, 1)
+    want = spark.range(1).select(
+        F.round(F.lit(1 / 128), 6).alias("p"),
+        F.round(F.lit(1.0), 6).alias("r"),
+        F.round(F.lit(2 / 129), 6).alias("f1"),
+    ).first()
+    assert r["precision"] == want["p"] == 0.007813
+    assert r["recall"] == want["r"] == 1.0
+    assert r["f1"] == want["f1"]
+
+
 def test_near_dup_eval_on_minhash(spark, sf_dir):
     """End-to-end: MinHash pairs vs the exact n-gram ground truth on the
     fixture subset — the documented LSH-tuning workflow."""
