@@ -44,6 +44,12 @@ def _round_like_spark(arr, nd: int):
     return out
 
 
+def _round_value(x: float, nd: int = DIGITS) -> float:
+    """One driver-side value rounded as ``F.round`` rounds it (see
+    :func:`_round_like_spark`)."""
+    return float(_round_like_spark([x], nd)[0])
+
+
 def let_bind(value: Column, body: Callable[[Column], Column]) -> Column:
     """Let-binding for expression trees: evaluate ``value`` once per row
     and pass it to ``body`` as a lambda variable (O(1) lookup per
@@ -52,6 +58,11 @@ def let_bind(value: Column, body: Callable[[Column], Column]) -> Column:
     lambdas, so an expression referenced N times is computed N times —
     binding via a single-element ``transform`` caps that at once.
     Nesting is fine (inner lambdas may reference outer variables).
+
+    Expressions composed as SQL text bind the same way with a SQL
+    lambda, ``element_at(transform(array(v), x -> ...), 1)`` — one
+    parse instead of a py4j round trip per operator
+    (:func:`..operators.dedup.jaccard_sql`).
     """
     return F.element_at(F.transform(F.array(value), body), 1)
 

@@ -38,7 +38,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.expr import DIGITS
+from ..functions.expr import DIGITS, _round_value
 from ..functions.text import tokenize
 from ..plans.local import local_frame
 
@@ -477,7 +477,7 @@ def crossval_nb(
         # session-lived cache entries (plans/cache.py contract)
         model.unpersist()
         n, c = stats["n_docs"], stats["n_correct"] or 0
-        out.append((i, n, c, round(c / n, 6) if n else None))
+        out.append((i, n, c, _round_value(c / n) if n else None))
     return local_frame(
         df.sparkSession,
         out,

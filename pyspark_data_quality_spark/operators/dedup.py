@@ -28,7 +28,8 @@ from pyspark.sql.window import Window
 
 import threading
 
-from ..functions.expr import DIGITS, _round_like_spark, let_bind as _let
+from ..functions.expr import DIGITS, _round_value, let_bind as _let
+from ..plans.compile import ident, sql_literal
 from ..plans.local import local_frame
 
 from ..functions.text import (
@@ -113,37 +114,29 @@ def _bucket_pairs(
     ``payload_col`` is set; de-duplicated across buckets.
     """
     if payload_col is not None:
-        elem = F.struct(F.col(id_col).alias("i"), F.col(payload_col).alias("p"))
+        elem = f"struct({ident(id_col)} AS i, {ident(payload_col)} AS p)"
     else:
-        elem = F.col(id_col)
+        elem = ident(id_col)
     grouped = buckets.groupBy(*key_cols).agg(
-        F.sort_array(F.collect_list(elem)).alias("_es")
+        F.expr(f"sort_array(collect_list({elem})) AS _es")
     )
-    size_ok = F.size("_es") >= 2
+    size_ok = "size(_es) >= 2"
     if max_bucket_size is not None:
-        size_ok = size_ok & (F.size("_es") <= max_bucket_size)
-    grouped = grouped.filter(size_ok)
-    n = F.size(F.col("_es"))
-    pairs = F.flatten(
-        F.transform(
-            F.col("_es"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_es"), i + 2, F.greatest(n - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
+        size_ok += f" AND size(_es) <= {sql_literal(max_bucket_size)}"
+    # SQL lambdas: x (index i) pairs with every later member y
+    pairs = (
+        "flatten(transform(_es, (x, i) -> transform("
+        "slice(_es, i + 2, greatest(size(_es) - i - 1, 0)), "
+        "y -> struct(x AS a, y AS b))))"
     )
-    out = grouped.select(F.explode(pairs).alias("_p"))
+    out = grouped.filter(size_ok).selectExpr(f"explode({pairs}) AS _p")
     if payload_col is not None:
-        return out.select(
-            F.col("_p.a.i").alias("id_a"),
-            F.col("_p.b.i").alias("id_b"),
-            F.col("_p.a.p").alias("_pa"),
-            F.col("_p.b.p").alias("_pb"),
-        ).dropDuplicates(["id_a", "id_b"])
-    return out.select(
-        F.col("_p.a").alias("id_a"), F.col("_p.b").alias("id_b")
-    ).dropDuplicates(["id_a", "id_b"])
+        out = out.selectExpr(
+            "_p.a.i AS id_a", "_p.b.i AS id_b", "_p.a.p AS _pa", "_p.b.p AS _pb"
+        )
+    else:
+        out = out.selectExpr("_p.a AS id_a", "_p.b AS id_b")
+    return out.dropDuplicates(["id_a", "id_b"])
 
 
 def cap_buckets(
@@ -306,43 +299,42 @@ def exact_dup_groups(
 # ---------------------------------------------------------------------------
 
 
-def _bands(sig: Column, num_bands: int, rows_per_band: int) -> Column:
-    """array<struct<band:int, key:bigint>> — one LSH bucket key per band
+def _bands(sig: str, num_bands: int, rows_per_band: int) -> str:
+    """SQL text of ``array<struct<band:int, key:bigint>>`` over the
+    signature array ``sig`` (SQL text) — one LSH bucket key per band
     (hash of the band's signature slice)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.xxhash64(
-                F.slice(sig, b * rows_per_band + 1, rows_per_band).cast(
-                    "array<bigint>"
-                )
-            ).alias("key"),
-        ),
+    return (
+        f"transform(sequence(0, {num_bands - 1}), b -> struct("
+        f"CAST(b AS INT) AS band, xxhash64(CAST(slice({sig}, "
+        f"b * {rows_per_band} + 1, {rows_per_band}) AS ARRAY<BIGINT>)) AS key))"
     )
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard similarity of two arrays (as sets).
+def jaccard_sql(a: str, b: str) -> str:
+    """SQL text of the exact Jaccard similarity of two arrays (as sets),
+    ``a`` and ``b`` SQL expressions.
 
-    Each distinct-set and the intersection size are let-bound so they are
+    Each distinct set and the intersection size are let-bound — a
+    one-element ``transform`` whose lambda variable stands for the value
+    (``element_at(transform(array(v), x -> ...), 1)``) — so each is
     evaluated once per row (|A∪B| = |A|+|B|−|A∩B|, no separate
-    array_union set-build) — interpreted expression evaluation would
-    otherwise recompute each per reference, which dominates pair-verify
-    loops."""
-    return _let(
-        F.array_distinct(a),
-        lambda da: _let(
-            F.array_distinct(b),
-            lambda db: _let(
-                F.size(F.array_intersect(da, db)),
-                lambda i: F.when(
-                    F.size(da) + F.size(db) - i > 0,
-                    i.cast("double") / (F.size(da) + F.size(db) - i),
-                ).otherwise(F.lit(0.0)),
-            ),
-        ),
-    )
+    array_union set-build): interpreted higher-order-function evaluation
+    has no common-subexpression elimination, and recomputing each per
+    reference dominates pair-verify loops. Empty ∩ empty is 0.0, and so
+    is a NULL array (its size is NULL, so the ``CASE`` takes its
+    ``ELSE``). ``b`` is read inside the lambda that binds ``_jda``, so it
+    must not name a column ``_jda``."""
+    n = "size(_jda) + size(_jdb) - _jdi"
+    body = f"CASE WHEN {n} > 0 THEN CAST(_jdi AS DOUBLE) / ({n}) ELSE 0.0D END"
+    inter = f"element_at(transform(array(size(array_intersect(_jda, _jdb))), _jdi -> {body}), 1)"
+    inner = f"element_at(transform(array(array_distinct({b})), _jdb -> {inter}), 1)"
+    return f"element_at(transform(array(array_distinct({a})), _jda -> {inner}), 1)"
+
+
+def jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard similarity of the arrays in columns ``a`` and ``b``
+    (as sets): the :func:`jaccard_sql` text, parsed once."""
+    return F.expr(jaccard_sql(ident(a), ident(b)))
 
 
 def lsh_plan(
@@ -409,9 +401,9 @@ def lsh_plan(
             "num_hashes": n,
             "num_bands": b,
             "rows_per_band": r,
-            "recall_at_threshold": round(candidate_prob(threshold, r, b), 6),
-            "candidate_rate_at_reject": round(candidate_prob(s0, r, b), 6),
-            "s_star": round((1.0 / b) ** (1.0 / r), 6),
+            "recall_at_threshold": _round_value(candidate_prob(threshold, r, b)),
+            "candidate_rate_at_reject": _round_value(candidate_prob(s0, r, b)),
+            "s_star": _round_value((1.0 / b) ** (1.0 / r)),
         }
         if (
             best is None
@@ -474,11 +466,14 @@ def minhash_signatures(
     )
     return (
         ensure_min_partitions(df)
-        .select(F.col(id_col).alias("_id"), kernel(F.col(text_col)).alias("_hs"))
-        .filter(F.col("_hs._h").isNotNull())
+        .select(
+            F.expr(f"{ident(id_col)} AS _id"),
+            kernel(ident(text_col)).alias("_hs"),
+        )
+        .filter("_hs._h IS NOT NULL")
         .select(
             "_id",
-            F.col("_hs._h").alias("_h"),
+            F.expr("_hs._h AS _h"),
             # the width rides in the schema: checkable without running a job
             F.col("_hs._sig").alias("_sig", metadata={"num_hashes": num_hashes}),
         )
@@ -518,6 +513,11 @@ def minhash_near_dup_pairs(
     the network at most once per verified side instead of once per band
     (AQE broadcasts the sets when they are small and sort-merge-joins
     them at scale). ``id_col`` must be unique.
+    The band keys (:func:`_bands`), the in-bucket pair expansion
+    (:func:`_bucket_pairs`) and the verify projection
+    (:func:`jaccard_sql`) are composed as SQL text with SQL lambdas: one
+    parse per projection, where ``Column`` lambdas cost py4j round
+    trips for every operator inside them.
     With b bands of r rows the candidate recall at similarity s is
     1-(1-s^r)^b — 32 bands x 4 rows catches s>=0.7 with >99.9% probability;
     :func:`lsh_plan` picks (num_hashes, num_bands) for a target
@@ -617,27 +617,20 @@ def minhash_near_dup_pairs(
     # kernel still runs once. An injected frame is the caller's to pin.
     if signatures is None:
         base = pin(base)
-    buckets = base.select(
-        "_id",
-        F.explode(_bands(F.col("_sig"), num_bands, rows_per_band)).alias("_b"),
-    ).select("_id", F.col("_b.band").alias("_band"), F.col("_b.key").alias("_key"))
+    buckets = base.selectExpr(
+        "_id", f"explode({_bands('_sig', num_bands, rows_per_band)}) AS _b"
+    ).selectExpr("_id", "_b.band AS _band", "_b.key AS _key")
     candidates = _bucket_pairs(
         buckets, ["_band", "_key"], max_bucket_size=max_bucket_size
     )
     return (
-        candidates.join(
-            base.select(F.col("_id").alias("id_a"), F.col("_h").alias("_pa")),
-            "id_a",
+        candidates.join(base.selectExpr("_id AS id_a", "_h AS _pa"), "id_a")
+        .join(base.selectExpr("_id AS id_b", "_h AS _pb"), "id_b")
+        .selectExpr(
+            "id_a", "id_b",
+            f"round({jaccard_sql('_pa', '_pb')}, {DIGITS}) AS jaccard",
         )
-        .join(
-            base.select(F.col("_id").alias("id_b"), F.col("_h").alias("_pb")),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard", F.round(jaccard(F.col("_pa"), F.col("_pb")), DIGITS)
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .filter(f"jaccard >= {sql_literal(threshold)}")
     )
 
 
@@ -1246,11 +1239,11 @@ def set_similarity_join(
         .dropDuplicates(["id_a", "id_b"])
     )
     return (
-        cands.withColumn(
-            "jaccard", F.round(jaccard(F.col("_sa"), F.col("_sb")), DIGITS)
+        cands.selectExpr(
+            "id_a", "id_b",
+            f"round({jaccard_sql('_sa', '_sb')}, {DIGITS}) AS jaccard",
         )
-        .filter(F.col("jaccard") >= t)
-        .select("id_a", "id_b", "jaccard")
+        .filter(f"jaccard >= {sql_literal(t)}")
     )
 
 
@@ -1589,7 +1582,7 @@ def near_dup_eval(
         else None
     )
     ratios = [
-        None if v is None else float(_round_like_spark([v], DIGITS)[0])
+        None if v is None else _round_value(v)
         for v in (prec, rec, f1)
     ]
     return local_frame(

@@ -1276,7 +1276,7 @@ def classifier_drift(
         .withColumn(
             "_part",
             split_assignment(
-                F.col("_uid"),
+                "_uid",
                 {"fit": train_fraction, "eval": 1 - train_fraction},
                 salt=salt,
             ),

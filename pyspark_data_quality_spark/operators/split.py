@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.compile import ident, sql_literal
+
 _BUCKETS = 10000
 
 
@@ -34,36 +36,39 @@ def _check_reserved(df: DataFrame, reserved: set[str], fn_name: str) -> None:
         )
 
 
-def split_assignment(
-    id_col: Column | str, weights: dict[str, float], *, salt: str = ""
-) -> Column:
-    """Column mapping each id to a split name per ``weights`` (need not
-    sum to 1 — they are normalized). Assignment = hash-bucket of
-    ``md5(id || salt)`` against cumulative weight boundaries."""
+def split_sql(id_sql: str, weights: dict[str, float], *, salt: str = "") -> str:
+    """SQL text mapping the SQL expression ``id_sql`` to a split name per
+    ``weights`` (need not sum to 1 — they are normalized): the md5 bucket
+    of ``id || salt`` against the cumulative weight boundaries, one
+    ``CASE`` branch per split but the last."""
     if not weights:
         raise ValueError("split_assignment: weights must be non-empty")
     total = sum(weights.values())
     if total <= 0:
         raise ValueError("split_assignment: weights must sum > 0")
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
+    # the first 8 hex chars of md5(id || salt) as an integer
     bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(c.cast("string"), F.lit(salt))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % _BUCKETS
+        f"CAST(conv(substring(md5(concat(CAST({id_sql} AS STRING), "
+        f"{sql_literal(salt)})), 1, 8), 16, 10) AS BIGINT) % {_BUCKETS}"
     )
     names = list(weights)
     acc = 0.0
-    expr = None
+    branches = []
     for name in names[:-1]:
         acc += weights[name] / total
         bound = int(round(acc * _BUCKETS))
-        cond = bucket < bound
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    last = F.lit(names[-1])
-    return last if expr is None else expr.otherwise(last)
+        branches.append(f"WHEN {bucket} < {bound} THEN {sql_literal(name)}")
+    last = sql_literal(names[-1])
+    return f"CASE {' '.join(branches)} ELSE {last} END" if branches else last
+
+
+def split_assignment(
+    id_col: str, weights: dict[str, float], *, salt: str = ""
+) -> Column:
+    """Column mapping the ids in column ``id_col`` to a split name per
+    ``weights`` (need not sum to 1 — they are normalized): the
+    :func:`split_sql` text, parsed once."""
+    return F.expr(split_sql(ident(id_col), weights, salt=salt))
 
 
 def deterministic_split(

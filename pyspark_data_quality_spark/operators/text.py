@@ -12,7 +12,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.expr import DIGITS
-from ..functions.text import doc_fingerprint, doc_md5
+from ..functions.text import doc_fingerprint_sql, doc_md5_sql
+from ..plans.compile import ident
+
+#: the raw ratios the profile pass emits, and the rounded columns they
+#: become
+_RAW_RATIOS = {
+    "_sw_raw": "stopword_ratio",
+    "_punct_raw": "punct_ratio",
+    "_mwl_raw": "mean_word_len",
+}
 
 
 def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -24,19 +33,36 @@ def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     bottleneck at fixture scale. Hashing (xxhash64/md5 of the normalized
     text) and the round(,6) stay JVM-side: native string expressions are
     codegen-fast, and Spark's HALF_UP rounding must not be replaced by
-    Python's banker's rounding (oracle parity).
+    Python's banker's rounding (oracle parity). They are one
+    ``selectExpr`` of SQL text over the pass's output, so composing the
+    profile costs a few py4j commands, not one round trip per function;
+    a derived column replaces an input column of the same name in place,
+    as ``withColumn`` would.
     """
     from ..plans.parallelism import ensure_min_partitions
 
     df = ensure_min_partitions(df)
-    return (
-        _profile_signals_np(df, text_col)
-        .withColumn("stopword_ratio", F.round(F.col("_sw_raw"), DIGITS))
-        .withColumn("punct_ratio", F.round(F.col("_punct_raw"), DIGITS))
-        .withColumn("mean_word_len", F.round(F.col("_mwl_raw"), DIGITS))
-        .drop("_sw_raw", "_punct_raw", "_mwl_raw")
-        .withColumn("fingerprint", doc_fingerprint(text_col))
-        .withColumn("fingerprint_md5", doc_md5(text_col))
+    # mapInPandas resolves its inputs as df[name], which reads "." and
+    # "`" as name syntax: such columns ride the pass under stand-in
+    # names, and the projection below gives the names back
+    names = {
+        c: f"_tp_in{i}" if "." in c or "`" in c else c
+        for i, c in enumerate(df.columns)
+    }
+    if any(c != n for c, n in names.items()):
+        df = df.selectExpr(*(f"{ident(c)} AS {n}" for c, n in names.items()))
+    signals = _profile_signals_np(df, names[text_col])
+    out = {c: ident(n) for c, n in names.items()}
+    for c in signals.columns[len(names):]:
+        if c not in _RAW_RATIOS:
+            out[c] = ident(c)
+    for raw, name in _RAW_RATIOS.items():
+        out[name] = f"round({raw}, {DIGITS})"
+    t = ident(names[text_col])
+    out["fingerprint"] = doc_fingerprint_sql(t)
+    out["fingerprint_md5"] = doc_md5_sql(t)
+    return signals.selectExpr(
+        *(e if e == ident(c) else f"{e} AS {ident(c)}" for c, e in out.items())
     )
 
 

@@ -123,9 +123,10 @@ def curate_corpus(
     outputs are written.
     """
     from ..operators.dedup import minhash_near_dup_pairs
-    from ..operators.split import split_assignment
+    from ..operators.split import split_sql
     from ..operators.text import contamination_pairs, text_profile
     from ..plans.cache import pin
+    from ..plans.compile import ident, sql_literal
 
     if unicode_form is not None:
         # opt-in pre-step (default off so the certified no-normalize
@@ -153,32 +154,30 @@ def curate_corpus(
     # join of their (id, reason) union; each stage still excludes prior
     # drops from its own input via an anti join on the pinned id list.
     drop_lists: list[DataFrame] = []
+    # every expression below is SQL text over quoted names (plans/compile):
+    # one parse per projection instead of a py4j round trip per operator
+    idq, textq, statusq = ident(id_col), ident(text_col), ident(status_col)
 
     prof = pin(text_profile(docs, text_col))
     # quality gates BEFORE language: junk text language-IDs as 'und', and
     # "low_quality" is the actionable status for it, not "wrong_lang"
-    gate = (
-        F.when(F.col(text_col).isNull(), F.lit("null_text"))
-        .when(F.col("quality_score") < min_quality, F.lit("low_quality"))
-        .when(
-            F.lit(languages is not None)
-            & ~F.col("lang_pred").isin(*(languages or ("",))),
-            F.lit("wrong_lang"),
-        )
-    )
-    annotated = prof.withColumn(status_col, gate)
-    passed = annotated.filter(F.col(status_col).isNull())
+    gates = [
+        f"WHEN {textq} IS NULL THEN 'null_text'",
+        f"WHEN quality_score < {sql_literal(min_quality)} THEN 'low_quality'",
+    ]
+    if languages is not None:
+        langs = ", ".join(sql_literal(lang) for lang in languages or ("",))
+        gates.append(f"WHEN NOT lang_pred IN ({langs}) THEN 'wrong_lang'")
+    annotated = prof.withColumn(status_col, F.expr(f"CASE {' '.join(gates)} END"))
+    passed = annotated.filter(f"{statusq} IS NULL")
 
     def _drop_stage(ids: DataFrame, reason: str) -> None:
         """Pin a stage's drop-list (ids only, never payloads) and
         exclude it from every later stage's input."""
         nonlocal passed
-        d = _pin(
-            ids.select(F.col(id_col))
-            .withColumn("_drop_reason", F.lit(reason))
-        )
+        d = _pin(ids.selectExpr(idq, f"{sql_literal(reason)} AS _drop_reason"))
         drop_lists.append(d)
-        passed = passed.join(d.select(id_col), id_col, "left_anti")
+        passed = passed.join(d.selectExpr(idq), id_col, "left_anti")
 
     # optional model-based quality gate (default off): a trained NB
     # classifier (operators/classify.py) scores the rows that survived
@@ -223,9 +222,7 @@ def curate_corpus(
                 "curate_corpus: compression_band must be (lo, hi) "
                 "with 0 <= lo < hi"
             )
-        ratio = compression_profile(
-            passed.select(F.col(id_col), F.col(text_col)), text_col
-        )
+        ratio = compression_profile(passed.selectExpr(idq, textq), text_col)
         _drop_stage(
             ratio.filter(
                 F.col("compression_ratio").isNotNull()
@@ -269,7 +266,7 @@ def curate_corpus(
             )
     if ref_fp is not None:
         _drop_stage(
-            passed.select(F.col(id_col), "fingerprint")
+            passed.selectExpr(idq, "fingerprint")
             .join(ref_fp, "fingerprint", "semi"),
             "ref_dup",
         )
@@ -282,15 +279,10 @@ def curate_corpus(
     # combines locally instead of funneling into one straggler task the
     # way Window.partitionBy("fingerprint") would (skew-immune; same
     # shape as operators/dedup.py exact_dedup).
-    survivors = (
-        passed.select(F.col(id_col), "fingerprint")
-        .groupBy("fingerprint")
-        .agg(F.min(id_col).alias(id_col))
-    )
+    keyed = passed.selectExpr(idq, "fingerprint")
+    survivors = keyed.groupBy("fingerprint").agg(F.expr(f"min({idq}) AS {idq}"))
     _drop_stage(
-        passed.select(F.col(id_col), "fingerprint")
-        .join(survivors, ["fingerprint", id_col], "anti"),
-        "exact_dup",
+        keyed.join(survivors, ["fingerprint", id_col], "anti"), "exact_dup"
     )
 
     # near dups: greedy min-id survivor over banded MinHash pairs.
@@ -311,8 +303,8 @@ def curate_corpus(
     # merge join that shuffles the whole annotated corpus. A semi
     # join's estimate is its left side, so the list stays broadcastable.
     _drop_stage(
-        passed.select(id_col).join(
-            pairs.select(F.col("id_b").alias(id_col)), id_col, "left_semi"
+        passed.selectExpr(idq).join(
+            pairs.selectExpr(f"id_b AS {idq}"), id_col, "left_semi"
         ),
         "near_dup",
     )
@@ -349,8 +341,7 @@ def curate_corpus(
             threshold=contamination_threshold,
         )
         _drop_stage(
-            cont.select(F.col("doc_id").alias(id_col)).distinct(),
-            "contaminated",
+            cont.selectExpr(f"doc_id AS {idq}").distinct(), "contaminated"
         )
 
     # optional mix rebalancing (default off): downsample the SURVIVORS
@@ -371,50 +362,38 @@ def curate_corpus(
                 passed, id_col, rebalance_col, rebalance_target,
                 salt=salt + "|rebalance",
             )
-            .select(id_col)
-            .withColumn("_rebal_keep", F.lit(True))
+            .selectExpr(idq, "TRUE AS _rebal_keep")
         )
         annotated = annotated.join(keep_ids, id_col, "left")
-    else:
-        annotated = annotated.withColumn(
-            "_rebal_keep", F.lit(None).cast("boolean")
-        )
 
     # ONE corpus-wide join annotates every stage's outcome: the pinned
     # (id, reason) lists are disjoint, so their union left-joined once
     # replaces the former per-stage join chain (the stats consumer now
     # reads prof + 1 join instead of prof + k joins).
+    outcomes = [statusq]
     if drop_lists:
         all_drops = drop_lists[0]
         for d in drop_lists[1:]:
             all_drops = all_drops.unionByName(d)
         annotated = annotated.join(all_drops, id_col, "left")
-    else:
-        annotated = annotated.withColumn(
-            "_drop_reason", F.lit(None).cast("string")
-        )
-
-    status = F.coalesce(
-        F.col(status_col),
-        F.col("_drop_reason"),
-        F.when(
-            F.lit(rebalance_target is not None)
-            & F.col("_rebal_keep").isNull(),
-            F.lit("rebalanced_out"),
-        ),
-        F.lit("kept"),
-    )
+        outcomes.append("_drop_reason")
+    if rebalance_target is not None:
+        outcomes.append("CASE WHEN _rebal_keep IS NULL THEN 'rebalanced_out' END")
+    status = f"coalesce({', '.join(outcomes)}, 'kept')"
+    temps = ("_drop_reason", "_rebal_keep")
     weights = split_weights or {"train": 0.9, "val": 0.05, "test": 0.05}
-    return (
-        annotated.withColumn(status_col, status)
-        .withColumn(
-            split_col,
-            F.when(
-                F.col(status_col) == "kept",
-                split_assignment(id_col, weights, salt=salt),
-            ),
+    # two projections, as two withColumn calls would plan them: the split
+    # reads the final status, and the optimizer keeps the status coalesce
+    # in its own projection rather than computing it twice
+    return annotated.selectExpr(
+        *(
+            f"{status} AS {statusq}" if c == status_col else ident(c)
+            for c in annotated.columns
+            if c not in temps
         )
-        .drop("_drop_reason", "_rebal_keep")
+    ).withColumn(
+        split_col,
+        F.expr(f"CASE WHEN {statusq} = 'kept' THEN {split_sql(idq, weights, salt=salt)} END"),
     )
 
 

@@ -21,12 +21,17 @@ count).
 
 :func:`jobs_during` counts the Spark jobs an action starts — the fixed
 per-job cost is what dominates at small scale, so tests pin job counts
-with it.
+with it. :func:`py4j_commands` counts the py4j commands the driver sends
+— the cost of composing a frame before any job starts, which tests pin
+as a budget.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import threading
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from types import SimpleNamespace
 from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +43,7 @@ __all__ = [
     "harvest_plan_metrics",
     "summarize_metrics",
     "jobs_during",
+    "py4j_commands",
 ]
 
 
@@ -145,3 +151,36 @@ def summarize_metrics(metric_rows: list[dict[str, Any]]) -> dict[str, int]:
         if "Scan" in node and "InMemory" not in node:
             totals["scan_output_rows"] += int(m.get("numOutputRows", 0))
     return totals
+
+
+@contextmanager
+def py4j_commands(spark: SparkSession) -> Iterator[SimpleNamespace]:
+    """Count the py4j commands the calling thread sends to the JVM inside
+    the ``with`` block: ``with py4j_commands(spark) as sent: ...`` leaves
+    the count in ``sent.n`` (readable inside the block too).
+
+    Every JVM call, attribute lookup and reflection query is one
+    command, so the count measures the driver-side cost of composing a
+    frame independently of host speed. Only the calling thread counts:
+    the releases of garbage-collected Java objects, which py4j sends
+    from its own thread whenever Python's collector runs, would make
+    the count depend on timing."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    shadowed = "send_command" in vars(client)  # an enclosing counter's
+    caller = threading.get_ident()
+    sent = SimpleNamespace(n=0)
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == caller:
+            sent.n += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        if shadowed:
+            client.send_command = send
+        else:
+            del client.send_command

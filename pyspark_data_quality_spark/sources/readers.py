@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
+from ..functions.expr import _round_value
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -90,7 +92,7 @@ def corrupt_stats(df: DataFrame) -> dict:
         return {
             "n_rows": n,
             "n_corrupt": c,
-            "corrupt_ratio": round(c / n, 6) if n else 0.0,
+            "corrupt_ratio": _round_value(c / n) if n else 0.0,
         }
     finally:
         df.unpersist()

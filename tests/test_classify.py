@@ -274,6 +274,30 @@ def test_crossval_nb_generalization(spark, planted):
         crossval_nb(planted, "text", "label", "doc_id", folds=1)
 
 
+def test_crossval_accuracy_rounds_like_f_round(spark):
+    """A held-out fold with 1 correct prediction in 128 reads 0.007813,
+    as F.round (HALF_UP) rounds 1/128 = 0.0078125 — Python's round()
+    (half-to-even) would give 0.007812."""
+    import hashlib
+
+    from pyspark_data_quality_spark.operators.classify import crossval_nb
+
+    def fold(i: int) -> int:
+        # the md5 bucket of deterministic_split: weights 0.5/0.5 put
+        # buckets below 5000 in fold 0
+        return int(int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % 10000 >= 5000)
+
+    held = [i for i in range(1000) if fold(i) == 0][:128]
+    train = [i for i in range(1000) if fold(i) == 1][:20]
+    rows = [(i, "alpha alpha", "a" if i == held[0] else "b") for i in held]
+    rows += [(i, "alpha" if k % 2 else "beta", "a" if k % 2 else "b")
+             for k, i in enumerate(train)]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string, label string")
+    cv = {r.fold: r for r in crossval_nb(docs, "text", "label", "doc_id", folds=2).collect()}
+    assert (cv[0].n_docs, cv[0].n_correct) == (128, 1)
+    assert cv[0].accuracy == 0.007813
+
+
 def test_crossval_excludes_null_labels(spark, planted):
     from pyspark_data_quality_spark.operators.classify import crossval_nb
 

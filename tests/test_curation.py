@@ -651,3 +651,38 @@ def test_curation_stats_sorts_in_one_task(spark, sf_dir):
     # several statuses and splits, so the order is actually checked
     assert len(rows) >= 4, rows
     spark.catalog.clearCache()
+
+
+def test_curate_corpus_quotes_column_names(spark, sf_dir):
+    """Every name reaches the composed SQL text quoted: an id column
+    named ``doc.id`` and a text column holding a backtick give each row
+    the (status, split) the plain names give."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # copies of every 50th document, so the exact-dup stage drops some
+    docs = docs.unionByName(
+        docs.filter("doc_id % 50 = 0").withColumn("doc_id", F.col("doc_id") + 10**6)
+    )
+    odd = docs.withColumnRenamed("doc_id", "doc.id").withColumnRenamed(
+        "text", "te`xt"
+    )
+    kw = {"min_quality": 0.8}
+    plain = {
+        r[0]: (r[1], r[2])
+        for r in curate_corpus(docs, **kw)
+        .select("doc_id", "curation_status", "split")
+        .collect()
+    }
+    got = {
+        r[0]: (r[1], r[2])
+        for r in curate_corpus(odd, text_col="te`xt", id_col="doc.id", **kw)
+        .select("`doc.id`", "curation_status", "split")
+        .collect()
+    }
+    assert got == plain
+    # both gates, both dedup stages and the split all decided something
+    assert set(plain.values()) >= {
+        ("kept", "train"), ("kept", "val"), ("kept", "test"),
+        ("low_quality", None), ("wrong_lang", None),
+        ("exact_dup", None), ("near_dup", None),
+    }, set(plain.values())
+    spark.catalog.clearCache()

@@ -74,15 +74,32 @@ def test_jaccard_matches_set_model(spark, pairs):
     )
     got = {
         r["i"]: r["j"]
-        for r in df.select(
-            "i", jaccard(F.col("a"), F.col("b")).alias("j")
-        ).collect()
+        for r in df.select("i", jaccard("a", "b").alias("j")).collect()
     }
     for i, (a, b) in enumerate(pairs):
         sa, sb = set(a), set(b)
         expected = len(sa & sb) / len(sa | sb) if sa | sb else 0.0
         assert abs(got[i] - expected) < 1e-12
         assert 0.0 <= got[i] <= 1.0
+
+
+def test_jaccard_edge_cases(spark):
+    """Fixed cases beside the set model: a NULL array on either side
+    reads 0.0 (as the former Column-tree form did under ANSI mode, where
+    ``size(NULL)`` is NULL), empty ∩ empty reads 0.0, and repeated
+    elements count once."""
+    df = spark.createDataFrame(
+        [
+            (0, None, ["a"]),
+            (1, ["a"], None),
+            (2, [], []),
+            (3, ["a", "a", "b"], ["b", "b", "c", "c"]),
+            (4, ["x", "x"], ["x"]),
+        ],
+        "i int, a array<string>, b array<string>",
+    )
+    got = {r["i"]: r["j"] for r in df.select("i", jaccard("a", "b").alias("j")).collect()}
+    assert got == {0: 0.0, 1: 0.0, 2: 0.0, 3: 1 / 3, 4: 1.0}
 
 
 @settings(max_examples=5, deadline=None)

@@ -31,6 +31,7 @@ from pyspark_data_quality_spark.operators import (
     UniqueRule,
 )
 from pyspark_data_quality_spark.plans.compile import ident, sql_literal
+from pyspark_data_quality_spark.plans.telemetry import py4j_commands
 
 ESCAPES = "spark.sql.parser.escapedStringLiterals"
 
@@ -298,22 +299,12 @@ def test_compose_py4j_budget(spark, sf_dir):
     from perfbench.workloads import _rules
 
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    client = spark.sparkContext._gateway._gateway_client
-    sent = [0]
-    send = client.send_command
-
-    def counting(*a, **k):
-        sent[0] += 1
-        return send(*a, **k)
-
     counts = []
     for _ in range(2):
         batch = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-        client.send_command = counting
-        try:
-            sent[0] = 0
+        with py4j_commands(spark) as sent:
             rules = _rules(orders)
-            built = sent[0]
+            built = sent.n
             mgr = DQManager(spark, dataset="b").set_data(batch)
             for r in rules:
                 mgr.add_rule(r)
@@ -321,9 +312,61 @@ def test_compose_py4j_budget(spark, sf_dir):
             compiled = res._compiled
             compiled.prepared.selectExpr(*compiled.aggregates)
             res.annotated_df()
-            counts.append((built, sent[0]))
-        finally:
-            client.send_command = send
+        counts.append((built, sent.n))
     built, total = counts[-1]
     assert built == 0, counts
     assert total <= COMPOSE_BUDGET, counts
+
+
+#: py4j commands allowed for composing one warmed ``curate_corpus`` call
+#: with the quality and language gates off. Readings in fresh sessions:
+#: 454 with the curation path composed as SQL text; 2,041 as Column
+#: trees (PySpark captures each function call's origin in ~7 round trips).
+CURATION_BUDGET = 800
+
+
+def test_curation_compose_py4j_budget(spark, sf_dir):
+    """Composing the curation pipeline (profile, exact and MinHash dedup,
+    split) over the fixture documents stays within CURATION_BUDGET py4j
+    commands once warmed."""
+    from pyspark_data_quality_spark.pipelines import curate_corpus
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    counts = []
+    for _ in range(2):
+        with py4j_commands(spark) as sent:
+            curate_corpus(docs, languages=None, min_quality=0.0)
+        counts.append(sent.n)
+        spark.catalog.clearCache()  # the pinned stage frames
+    assert counts[-1] <= CURATION_BUDGET, counts
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_split_assignment_salt_literals(spark, escaped):
+    """The salt rides in split_assignment's SQL text as a literal: with a
+    quote, a non-ASCII character or a backslash in it, every id lands
+    where a Python replay of the md5 bucket puts it."""
+    from hashlib import md5
+
+    from pyspark_data_quality_spark.operators.split import split_assignment
+
+    weights = {"train": 0.8, "val": 0.15, "test": 0.05}
+    bounds = [("train", 8000), ("val", 9500)]
+
+    def replay(i: int, salt: str) -> str:
+        bucket = int(md5(f"{i}{salt}".encode()).hexdigest()[:8], 16) % 10000
+        return next((name for name, b in bounds if bucket < b), "test")
+
+    ids = spark.range(400)
+    prev = spark.conf.get(ESCAPES)
+    spark.conf.set(ESCAPES, escaped)
+    try:
+        for salt in ("", "a'b", "ü\\"):
+            got = dict(
+                ids.select("id", split_assignment("id", weights, salt=salt)).collect()
+            )
+            want = {i: replay(i, salt) for i in range(400)}
+            assert got == want, salt
+            assert set(got.values()) == {"train", "val", "test"}
+    finally:
+        spark.conf.set(ESCAPES, prev)

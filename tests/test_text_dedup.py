@@ -1406,7 +1406,7 @@ def test_set_similarity_join_exact_vs_bruteforce(spark):
             )
             .select(
                 "id_a", "id_b",
-                F.round(jaccard(F.col("sa"), F.col("sb")), 6).alias("j"),
+                F.round(jaccard("sa", "sb"), 6).alias("j"),
             )
             .filter(F.col("j") >= t)
         )
@@ -1918,6 +1918,23 @@ def test_near_dup_eval_rounds_like_f_round(spark):
     assert r["f1"] == want["f1"]
 
 
+def test_lsh_plan_picks_are_pinned():
+    """The configs lsh_plan picks for its defaults and for a 64-hash
+    budget, with their HALF_UP-rounded diagnostics."""
+    from pyspark_data_quality_spark.operators.dedup import lsh_plan
+
+    assert lsh_plan(0.7) == {
+        "num_hashes": 378, "num_bands": 54, "rows_per_band": 7,
+        "recall_at_threshold": 0.990352,
+        "candidate_rate_at_reject": 0.34527, "s_star": 0.565608,
+    }
+    assert lsh_plan(0.8, max_hashes=64) == {
+        "num_hashes": 60, "num_bands": 12, "rows_per_band": 5,
+        "recall_at_threshold": 0.991471,
+        "candidate_rate_at_reject": 0.621446, "s_star": 0.608364,
+    }
+
+
 def test_near_dup_eval_on_minhash(spark, sf_dir):
     """End-to-end: MinHash pairs vs the exact n-gram ground truth on the
     fixture subset — the documented LSH-tuning workflow."""
@@ -2364,14 +2381,14 @@ def _payload_minhash_pairs(base, *, num_bands, rows_per_band,
     buckets = base.select(
         "_id",
         F.col("_h").alias("_vp"),
-        F.explode(_bands(F.col("_sig"), num_bands, rows_per_band)).alias("_b"),
+        F.explode(F.expr(_bands("_sig", num_bands, rows_per_band))).alias("_b"),
     ).select("_id", "_vp", F.col("_b.band").alias("_band"),
              F.col("_b.key").alias("_key"))
     cands = _bucket_pairs(buckets, ["_band", "_key"], payload_col="_vp",
                           max_bucket_size=max_bucket_size)
     return (
         cands.withColumn("jaccard",
-                         F.round(jaccard(F.col("_pa"), F.col("_pb")), 6))
+                         F.round(jaccard("_pa", "_pb"), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
