@@ -44,10 +44,10 @@ def _round_like_spark(arr, nd: int):
     return out
 
 
-def _round_value(x: float, nd: int = DIGITS) -> float:
-    """One driver-side value rounded as ``F.round`` rounds it (see
-    :func:`_round_like_spark`)."""
-    return float(_round_like_spark([x], nd)[0])
+def _round_value(x: float) -> float:
+    """One driver-side value rounded to :data:`DIGITS` as ``F.round``
+    rounds it (see :func:`_round_like_spark`)."""
+    return float(_round_like_spark([x], DIGITS)[0])
 
 
 def let_bind(value: Column, body: Callable[[Column], Column]) -> Column:
@@ -62,7 +62,7 @@ def let_bind(value: Column, body: Callable[[Column], Column]) -> Column:
     Expressions composed as SQL text bind the same way with a SQL
     lambda, ``element_at(transform(array(v), x -> ...), 1)`` — one
     parse instead of a py4j round trip per operator
-    (:func:`..operators.dedup.jaccard_sql`).
+    (:func:`..operators.dedup._jaccard_sql`).
     """
     return F.element_at(F.transform(F.array(value), body), 1)
 

@@ -2,10 +2,10 @@
 language ID, PII and Gopher signals.
 
 Everything here returns ``Column`` expressions — JVM-side, whole-stage-
-codegen friendly, no Python UDFs in any hot path. The normalization and
-fingerprint helpers also come as SQL text (``*_sql``) for callers that
-compose a whole projection as one ``selectExpr``; their ``Column`` forms
-wrap that same text in ``F.expr``. These are the building blocks for the
+codegen friendly, no Python UDFs in any hot path. The fingerprint
+helpers wrap private SQL-text builders (``_doc_fingerprint_sql``,
+``_doc_md5_sql``) in ``F.expr``; operators that compose a whole
+projection as one ``selectExpr`` use that text directly. These are the building blocks for the
 text-analysis and near-dedup operators (north-star extensions; the
 reference had no text processing at all).
 """
@@ -40,21 +40,16 @@ from .expr import DIGITS, let_bind as _let
 _WS_RUN = r"\s+"
 
 
-def normalize_text_sql(text: str) -> str:
+def _normalize_text_sql(text: str) -> str:
     """SQL text of :func:`normalize_text` over the SQL expression
     ``text``: lowercase, collapse whitespace runs to one space, trim."""
     return f"trim(regexp_replace(lower({text}), {sql_literal(_WS_RUN)}, ' '))"
 
 
 def normalize_text(col: Column | str) -> Column:
-    """Lowercase, collapse whitespace, trim — canonical form for hashing.
-
-    A column name compiles to :func:`normalize_text_sql` text (one parse,
-    no per-operator py4j round trips); a ``Column`` (a lambda variable,
-    a derived value) gets the same three functions as a ``Column`` tree."""
-    if isinstance(col, str):
-        return F.expr(normalize_text_sql(ident(col)))
-    return F.trim(F.regexp_replace(F.lower(col), _WS_RUN, " "))
+    """Lowercase, collapse whitespace, trim — canonical form for hashing."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.trim(F.regexp_replace(F.lower(c), _WS_RUN, " "))
 
 
 # python-side twins of normalize_text/tokenize for Arrow kernels — ONE
@@ -161,28 +156,28 @@ def lang_id(col: Column | str, markers: dict[str, list[str]] | None = None) -> C
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def doc_fingerprint_sql(text: str) -> str:
+def _doc_fingerprint_sql(text: str) -> str:
     """SQL text of :func:`doc_fingerprint` over the SQL expression ``text``."""
-    return f"xxhash64({normalize_text_sql(text)})"
+    return f"xxhash64({_normalize_text_sql(text)})"
 
 
-def doc_md5_sql(text: str) -> str:
+def _doc_md5_sql(text: str) -> str:
     """SQL text of :func:`doc_md5` over the SQL expression ``text``."""
-    return f"md5({normalize_text_sql(text)})"
+    return f"md5({_normalize_text_sql(text)})"
 
 
 def doc_fingerprint(col: str) -> Column:
     """Deterministic 64-bit content fingerprint of the normalized text of
     column ``col`` (xxhash64 — JVM intrinsic, no UDF). Equal fingerprints
     = exact dup (modulo normalization)."""
-    return F.expr(doc_fingerprint_sql(ident(col)))
+    return F.expr(_doc_fingerprint_sql(ident(col)))
 
 
 def doc_md5(col: str) -> Column:
     """MD5 hex of the normalized text of column ``col`` — cross-engine-
     stable fingerprint (DuckDB md5() produces the identical hex, so
     oracles can verify)."""
-    return F.expr(doc_md5_sql(ident(col)))
+    return F.expr(_doc_md5_sql(ident(col)))
 
 
 def winnow_fingerprints(

@@ -12,8 +12,31 @@ per batch instead of interpreted per-element lambdas.
 
 from __future__ import annotations
 
+import sys
+import zipimport
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _drop_archive_importers() -> None:
+    """Forget the zip-archive importers a Python worker has cached; a
+    kernel calls this as its task starts (a scalar pandas UDF, once per
+    batch: the loop costs microseconds).
+
+    PySpark calls ``importlib.invalidate_caches()`` before every Python
+    task, and under CPython 3.11 each cached ``zipimporter`` then
+    re-reads its archive's whole directory: the workers' ``sys.path``
+    carries ``pyspark.zip``, the py4j zip and the spark-core jar, with
+    16 importers over them (one per imported package), 100-300 ms per
+    task on a 4-core host. The archives do not change while a worker
+    lives, and an import that needs one again rebuilds its importer
+    from the directory ``zipimport`` keeps cached, so dropping them
+    changes no import and spares every later task of this (reused)
+    worker the re-reads."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
 
 
 def vector_dim(df: DataFrame, vec_col: str, dim: int | None = None) -> int | None:
@@ -318,6 +341,7 @@ def minhash_signature_np(
     )
 
     def f(texts):
+        _drop_archive_importers()
         hs = [None if t is None else hashes(t) for t in texts]
         return pd.DataFrame(
             {"_h": hs, "_sig": [None if h is None else sign(h) for h in hs]}

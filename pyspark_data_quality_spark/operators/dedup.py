@@ -310,7 +310,7 @@ def _bands(sig: str, num_bands: int, rows_per_band: int) -> str:
     )
 
 
-def jaccard_sql(a: str, b: str) -> str:
+def _jaccard_sql(a: str, b: str) -> str:
     """SQL text of the exact Jaccard similarity of two arrays (as sets),
     ``a`` and ``b`` SQL expressions.
 
@@ -333,8 +333,8 @@ def jaccard_sql(a: str, b: str) -> str:
 
 def jaccard(a: str, b: str) -> Column:
     """Exact Jaccard similarity of the arrays in columns ``a`` and ``b``
-    (as sets): the :func:`jaccard_sql` text, parsed once."""
-    return F.expr(jaccard_sql(ident(a), ident(b)))
+    (as sets): the :func:`_jaccard_sql` text, parsed once."""
+    return F.expr(_jaccard_sql(ident(a), ident(b)))
 
 
 def lsh_plan(
@@ -515,7 +515,7 @@ def minhash_near_dup_pairs(
     them at scale). ``id_col`` must be unique.
     The band keys (:func:`_bands`), the in-bucket pair expansion
     (:func:`_bucket_pairs`) and the verify projection
-    (:func:`jaccard_sql`) are composed as SQL text with SQL lambdas: one
+    (:func:`_jaccard_sql`) are composed as SQL text with SQL lambdas: one
     parse per projection, where ``Column`` lambdas cost py4j round
     trips for every operator inside them.
     With b bands of r rows the candidate recall at similarity s is
@@ -628,7 +628,7 @@ def minhash_near_dup_pairs(
         .join(base.selectExpr("_id AS id_b", "_h AS _pb"), "id_b")
         .selectExpr(
             "id_a", "id_b",
-            f"round({jaccard_sql('_pa', '_pb')}, {DIGITS}) AS jaccard",
+            f"round({_jaccard_sql('_pa', '_pb')}, {DIGITS}) AS jaccard",
         )
         .filter(f"jaccard >= {sql_literal(threshold)}")
     )
@@ -1241,7 +1241,7 @@ def set_similarity_join(
     return (
         cands.selectExpr(
             "id_a", "id_b",
-            f"round({jaccard_sql('_sa', '_sb')}, {DIGITS}) AS jaccard",
+            f"round({_jaccard_sql('_sa', '_sb')}, {DIGITS}) AS jaccard",
         )
         .filter(f"jaccard >= {sql_literal(t)}")
     )

@@ -36,7 +36,7 @@ def _check_reserved(df: DataFrame, reserved: set[str], fn_name: str) -> None:
         )
 
 
-def split_sql(id_sql: str, weights: dict[str, float], *, salt: str = "") -> str:
+def _split_sql(id_sql: str, weights: dict[str, float], *, salt: str = "") -> str:
     """SQL text mapping the SQL expression ``id_sql`` to a split name per
     ``weights`` (need not sum to 1 — they are normalized): the md5 bucket
     of ``id || salt`` against the cumulative weight boundaries, one
@@ -67,8 +67,8 @@ def split_assignment(
 ) -> Column:
     """Column mapping the ids in column ``id_col`` to a split name per
     ``weights`` (need not sum to 1 — they are normalized): the
-    :func:`split_sql` text, parsed once."""
-    return F.expr(split_sql(ident(id_col), weights, salt=salt))
+    :func:`_split_sql` text, parsed once."""
+    return F.expr(_split_sql(ident(id_col), weights, salt=salt))
 
 
 def deterministic_split(

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.expr import DIGITS
-from ..functions.text import doc_fingerprint_sql, doc_md5_sql
+from ..functions.text import _doc_fingerprint_sql, _doc_md5_sql
 from ..plans.compile import ident
 
 #: the raw ratios the profile pass emits, and the rounded columns they
@@ -59,8 +59,8 @@ def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     for raw, name in _RAW_RATIOS.items():
         out[name] = f"round({raw}, {DIGITS})"
     t = ident(names[text_col])
-    out["fingerprint"] = doc_fingerprint_sql(t)
-    out["fingerprint_md5"] = doc_md5_sql(t)
+    out["fingerprint"] = _doc_fingerprint_sql(t)
+    out["fingerprint_md5"] = _doc_md5_sql(t)
     return signals.selectExpr(
         *(e if e == ident(c) else f"{e} AS {ident(c)}" for c, e in out.items())
     )
@@ -78,6 +78,7 @@ def _profile_signals_np(df: DataFrame, text_col: str) -> DataFrame:
     from pyspark.sql import types as T
 
     from ..functions.text import LANG_MARKERS, STOPWORDS_EN
+    from ..functions.vectors import _drop_archive_importers
 
     out_schema = T.StructType(
         list(df.schema.fields)
@@ -98,6 +99,7 @@ def _profile_signals_np(df: DataFrame, text_col: str) -> DataFrame:
     markers = {lang: frozenset(ws) for lang, ws in LANG_MARKERS.items()}
 
     def gen(batches):
+        _drop_archive_importers()
         for pdf in batches:
             tc, bpe, sw, punct, mwl, qual, lang = [], [], [], [], [], [], []
             for text in pdf[text_col]:

@@ -123,7 +123,7 @@ def curate_corpus(
     outputs are written.
     """
     from ..operators.dedup import minhash_near_dup_pairs
-    from ..operators.split import split_sql
+    from ..operators.split import _split_sql
     from ..operators.text import contamination_pairs, text_profile
     from ..plans.cache import pin
     from ..plans.compile import ident, sql_literal
@@ -393,7 +393,7 @@ def curate_corpus(
         )
     ).withColumn(
         split_col,
-        F.expr(f"CASE WHEN {statusq} = 'kept' THEN {split_sql(idq, weights, salt=salt)} END"),
+        F.expr(f"CASE WHEN {statusq} = 'kept' THEN {_split_sql(idq, weights, salt=salt)} END"),
     )
 
 

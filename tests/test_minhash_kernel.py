@@ -156,3 +156,38 @@ def test_invalid_shingle_settings_rejected_by_shared_kernels(spark):
     df = spark.createDataFrame(ROWS, "doc_id long, text string")
     with pytest.raises(ValueError, match="shingle"):
         contamination_pairs(df, df, "text", "doc_id", n=0)
+
+
+def test_dropped_archive_importers_still_import(tmp_path, monkeypatch):
+    """The kernels drop a worker's cached zip importers at the top of each
+    task (``functions/vectors._drop_archive_importers``): none is left
+    afterwards, and a module not yet imported from the same archive still
+    imports after ``importlib.invalidate_caches()``, as PySpark calls it
+    before the next task."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from pyspark_data_quality_spark.functions.vectors import (
+        _drop_archive_importers,
+    )
+
+    archive = tmp_path / "probe.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("_dq_zip_probe_a.py", "X = 1\n")
+        z.writestr("_dq_zip_probe_b.py", "Y = 2\n")
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        assert importlib.import_module("_dq_zip_probe_a").X == 1
+        assert isinstance(sys.path_importer_cache[str(archive)], zipimport.zipimporter)
+        _drop_archive_importers()
+        assert not any(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        importlib.invalidate_caches()
+        assert importlib.import_module("_dq_zip_probe_b").Y == 2
+    finally:
+        for name in ("_dq_zip_probe_a", "_dq_zip_probe_b"):
+            sys.modules.pop(name, None)
